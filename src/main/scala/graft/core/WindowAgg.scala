@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *  - every aggregate here is a hash aggregate with map-side partial
   *    aggregation; the shuffle key is (minute, type) whose cardinality is
   *    tiny (minutes × |vocab|), so the reduce side is never the bottleneck;
-  *  - `retained` computes the global max minute as a 1-row broadcast join,
-  *    not a driver collect — it stays distributed at any input size.
+  *  - `retained` brings one value to the driver, the global max minute,
+  *    once when the frame is built.
   */
 object WindowAgg {
 
@@ -41,18 +41,20 @@ object WindowAgg {
       .cast("double")
 
   /** A4: rolling retention — keep only rows whose minute is within
-    * `retentionMinutes` of the global max minute
-    * (`analytical_server.py:13,48-61`). Implemented as a broadcast join
-    * against the 1-row max, so it is a single extra stage at any scale.
+    * `minutes` of the global max minute (`analytical_server.py:13,48-61`).
+    *
+    * The horizon is fixed when the frame is built: building runs the
+    * max-minute aggregate once, and every later action filters against
+    * that constant. A file-backed frame already snapshots its file
+    * listing the same way; rebuild the frame to move the horizon. Over
+    * empty input the max is null, so the filter keeps no rows.
     */
   def retained(df: DataFrame, tsCol: String = "ts",
                minutes: Int = Schemas.retentionMinutes): DataFrame = {
     val withM = withMinute(df, tsCol)
-    val maxM = withM.agg(max(col("minute")).as("max_minute"))
-    withM
-      .join(broadcast(maxM),
-        col("minute") >= col("max_minute") - expr(s"INTERVAL $minutes MINUTES"))
-      .drop("max_minute")
+    val maxMicros = withM.agg(unix_micros(max(col("minute")))).head().get(0)
+    withM.filter(col("minute") >=
+      timestamp_micros(lit(maxMicros).cast("long")) - expr(s"INTERVAL $minutes MINUTES"))
   }
 
   /** A5+A6+A7: window stats — total events, per-type breakdown handled by

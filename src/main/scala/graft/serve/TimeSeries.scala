@@ -1,7 +1,9 @@
 package graft.serve
 
-import org.apache.spark.sql.DataFrame
+import com.fasterxml.jackson.core.io.JsonStringEncoder
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Schemas
 
@@ -12,60 +14,79 @@ import graft.core.Schemas
   * already contains the open minute's partial counts, which is exactly the
   * reference's W7 "flush current minute before answering" behavior.
   *
-  * Scale note: the JSON document is assembled by Catalyst expressions
-  * (`collect_list` → `map_from_entries` → `to_json`) over the RETAINED
-  * aggregate — a few minutes × vocabulary rows, constant-size regardless
-  * of input volume. Only the final one-row JSON string reaches the driver;
-  * the raw stream is never collected.
+  * Each endpoint collects the minute-grain rows in one action (type,
+  * formatted minute, count) and builds the JSON document on the driver,
+  * as the reference does from its in-memory counters. The rows reaching
+  * the driver are the count frame itself: over a `WindowAgg.retained`
+  * input that is at most (retention + 1) minutes × vocabulary, whatever
+  * the input volume; the raw stream is never collected. The documents
+  * match Spark's `to_json`: keys in UTF-8 byte order, each series ordered
+  * by (timestamp, count), strings escaped by Jackson. Minute, key and
+  * count must be non-null, and counts integral.
   */
 object TimeSeries {
 
   private val isoMinute = "yyyy-MM-dd'T'HH:mm:ss"
 
-  /** Adapter: streaming `window(...)` aggregate → minute-grain frame. */
+  /** Spark's string order: by UTF-8 bytes. */
+  private val byUtf8: Ordering[String] =
+    (a: String, b: String) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
+  /** Adapter: streaming `window(...)` aggregate → minute-grain frame.
+    * An update-mode memory sink appends a window's row again on every
+    * batch that touches it, and a window's count only grows, so the
+    * latest row of each (window, emoji) is the one with the max count. */
   def windowedToMinute(df: DataFrame, countCol: String = "count"): DataFrame =
-    df.select(
-      col("window.start").as("minute"),
-      col("emoji_type"),
-      col(countCol).as("cnt"))
+    df.groupBy(col("window.start").as("minute"), col("emoji_type"))
+      .agg(max(col(countCol)).as("cnt"))
+
+  private def collectRows(df: DataFrame): Array[Row] = {
+    val rows = df.collect()
+    rows.foreach(r => require(!r.anyNull, s"null minute, key or count in dashboard row $r"))
+    rows
+  }
+
+  private def quote(s: String): String = {
+    val sb = new java.lang.StringBuilder("\"")
+    JsonStringEncoder.getInstance().quoteAsString(s, sb)
+    sb.append('"').toString
+  }
+
+  /** `[{timestamp, count}…]` ordered by (timestamp, count). */
+  private def series(points: Seq[(String, Long)]): String =
+    points.sorted(Ordering.Tuple2(byUtf8, Ordering.Long))
+      .map { case (ts, n) => s"""{"timestamp":"$ts","count":$n}""" }
+      .mkString("[", ",", "]")
+
+  /** `{key: value…}` with keys in UTF-8 order. */
+  private def keyed[V](entries: Map[String, V])(value: V => String): String =
+    entries.toSeq.sortBy(_._1)(byUtf8)
+      .map { case (k, v) => s"${quote(k)}:${value(v)}" }
+      .mkString("{", ",", "}")
 
   /** `/api/emoji-data` (`analytical_server.py:67-81`):
     * `{emoji: [{timestamp, count}…]…}`, series in time order. */
   def emojiDataJson(minuteCounts: DataFrame, typeCol: String = "emoji_type"): String = {
-    val series = minuteCounts
-      .groupBy(col(typeCol))
-      .agg(sort_array(collect_list(struct(
-        date_format(col("minute"), isoMinute).as("timestamp"),
-        col("cnt").as("count")))).as("series"))
-    val doc = series
-      .agg(collect_list(struct(col(typeCol), col("series"))).as("entries"))
-      .select(to_json(map_from_entries(sort_array(col("entries")))).as("j"))
-    doc.collect()(0).getString(0)
+    val rows = collectRows(minuteCounts.select(
+      col(typeCol), date_format(col("minute"), isoMinute), col("cnt").cast("long")))
+    keyed(rows.groupBy(_.getString(0)))(rs => series(rs.map(r => (r.getString(1), r.getLong(2)))))
   }
 
   /** `/api/total-data` (`analytical_server.py:83-94`):
     * `[{timestamp, count}…]` in time order. */
   def totalDataJson(minuteTotals: DataFrame, countCol: String = "total_count"): String =
-    minuteTotals
-      .agg(sort_array(collect_list(struct(
-        date_format(col("minute"), isoMinute).as("timestamp"),
-        col(countCol).as("count")))).as("series"))
-      .select(to_json(col("series")).as("j"))
-      .collect()(0).getString(0)
+    series(collectRows(minuteTotals.select(
+        date_format(col("minute"), isoMinute), col(countCol).cast("long")))
+      .map(r => (r.getString(0), r.getLong(1))))
 
   /** `/api/stats` (`analytical_server.py:96-109`):
-    * `{total_emojis, emoji_breakdown: {emoji: n}, window_minutes}`. */
+    * `{total_emojis, emoji_breakdown: {emoji: n}, window_minutes}`;
+    * an empty window totals 0. */
   def statsJson(minuteCounts: DataFrame, typeCol: String = "emoji_type",
-                windowMinutes: Int = Schemas.retentionMinutes): String =
-    minuteCounts
-      .groupBy(col(typeCol)).agg(sum(col("cnt")).as("n"))
-      .agg(
-        sum(col("n")).as("total_emojis"),
-        map_from_entries(sort_array(collect_list(struct(col(typeCol), col("n")))))
-          .as("emoji_breakdown"))
-      .select(to_json(struct(
-        col("total_emojis"),
-        col("emoji_breakdown"),
-        lit(windowMinutes).as("window_minutes"))).as("j"))
-      .collect()(0).getString(0)
+                windowMinutes: Int = Schemas.retentionMinutes): String = {
+    val byType = collectRows(minuteCounts.select(col(typeCol), col("cnt").cast("long")))
+      .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
+    s"""{"total_emojis":${byType.values.sum},"emoji_breakdown":${keyed(byType)(_.toString)},""" +
+      s""""window_minutes":$windowMinutes}"""
+  }
 }

@@ -1,13 +1,21 @@
 package graft.serve
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.SparkSpec
-import graft.core.WindowAgg
+import graft.core.{Tables, WindowAgg}
 
 /** Payload-shape parity with the reference's three JSON endpoints
-  * (`analytical_server.py:67-109`), asserted on parsed JSON. */
+  * (`analytical_server.py:67-109`), asserted on parsed JSON, plus
+  * byte-exact pins of the documents and a guard on the jobs one read
+  * runs. */
 class TimeSeriesSpec extends SparkSpec {
 
   // minute 100: a×2, b×1; minute 101: a×1  (epoch-seconds fixture)
@@ -64,5 +72,114 @@ class TimeSeriesSpec extends SparkSpec {
     val json = JsonMethods.parse(TimeSeries.emojiDataJson(TimeSeries.windowedToMinute(w)))
     val JArray(s) = json \ "a"
     s.map(p => (p \ "count").values) shouldBe List(2L)
+  }
+
+  // Minute-grain frames built directly, so one series can hold two
+  // points with the same timestamp. The keys cover non-ASCII emoji (U+2764
+  // carries its variation selector U+FE0F), a pair whose UTF-16 and UTF-8
+  // orders differ (U+FF5A sorts after U+1F600 in UTF-16, before it in
+  // UTF-8), JSON metacharacters and control characters.
+  private def minuteCounts(rows: Seq[(Long, String, Long)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("secs", "emoji_type", "cnt")
+      .select(timestamp_seconds(col("secs")).as("minute"), col("emoji_type"), col("cnt"))
+  }
+
+  private def minuteTotals(rows: Seq[(Long, Long)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("secs", "total_count")
+      .select(timestamp_seconds(col("secs")).as("minute"), col("total_count"))
+  }
+
+  private val pinRows = Seq(
+    (6000L, "\uD83D\uDC4D", 2L), (6060L, "\uD83D\uDC4D", 1L), (6000L, "\u2764\uFE0F", 3L),
+    (6060L, "\uFF5A", 1L), (6000L, "\uD83D\uDE00", 4L), (6000L, "q\"b\\s", 5L),
+    (6060L, "t\tn\n\u0001", 6L), (6120L, "a", 7L), (6120L, "a", 2L), (6060L, "a", 9L))
+
+  test("emoji-data: byte-exact document, keys in UTF-8 order, equal timestamps by count") {
+    TimeSeries.emojiDataJson(minuteCounts(pinRows)) shouldBe
+      "{\"a\":[{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":9}," +
+      "{\"timestamp\":\"1970-01-01T01:42:00\",\"count\":2}," +
+      "{\"timestamp\":\"1970-01-01T01:42:00\",\"count\":7}]," +
+      "\"q\\\"b\\\\s\":[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":5}]," +
+      "\"t\\tn\\n\\u0001\":[{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":6}]," +
+      "\"\u2764\uFE0F\":[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":3}]," +
+      "\"\uFF5A\":[{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":1}]," +
+      "\"\uD83D\uDC4D\":[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":2}," +
+      "{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":1}]," +
+      "\"\uD83D\uDE00\":[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":4}]}"
+  }
+
+  test("total-data: byte-exact document, equal timestamps by count") {
+    TimeSeries.totalDataJson(minuteTotals(Seq((6060L, 5L), (6000L, 3L), (6060L, 1L)))) shouldBe
+      "[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":3}," +
+      "{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":1}," +
+      "{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":5}]"
+  }
+
+  test("stats: byte-exact document, breakdown keys in UTF-8 order") {
+    TimeSeries.statsJson(minuteCounts(pinRows)) shouldBe
+      "{\"total_emojis\":40,\"emoji_breakdown\":{\"a\":18,\"q\\\"b\\\\s\":5," +
+      "\"t\\tn\\n\\u0001\":6,\"\u2764\uFE0F\":3,\"\uFF5A\":1,\"\uD83D\uDC4D\":3," +
+      "\"\uD83D\uDE00\":4},\"window_minutes\":3}"
+  }
+
+  test("empty frames: {}, [] and a zero total_emojis") {
+    TimeSeries.emojiDataJson(minuteCounts(Seq.empty)) shouldBe "{}"
+    TimeSeries.totalDataJson(minuteTotals(Seq.empty)) shouldBe "[]"
+    // the reference's A5 sum over an empty window is 0, not absent
+    TimeSeries.statsJson(minuteCounts(Seq.empty)) shouldBe
+      "{\"total_emojis\":0,\"emoji_breakdown\":{},\"window_minutes\":3}"
+  }
+
+  test("a null key, minute or count fails the read") {
+    val counts = minuteCounts(Seq((6000L, "a", 1L)))
+    for (bad <- Seq(
+        counts.withColumn("emoji_type", lit(null).cast("string")),
+        counts.withColumn("minute", lit(null).cast("timestamp")),
+        counts.withColumn("cnt", lit(null).cast("long"))))
+      an[IllegalArgumentException] should be thrownBy TimeSeries.emojiDataJson(bad)
+  }
+
+  /** Spark jobs started by `body` on this thread. */
+  private def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("a dashboard read runs at most 2 jobs; building the retained frame runs 2") {
+    // Building runs the max-minute aggregate once: its map stage and its
+    // result stage are one job each under adaptive execution. Each read
+    // is then one collect over the (minute, type) aggregate, the same two
+    // jobs. A horizon resolved lazily, or JSON assembled in Catalyst,
+    // shows up here as extra jobs per read.
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts-jobs").toString
+    eventsDf((0L until 600L by 7L).map(s => (6000L + s, if (s % 2 == 0) "a" else "b")))
+      .write.parquet(s"$dir/events.parquet")
+    val events = Tables.events(spark, dir)
+    var ret: DataFrame = null
+    jobsOf { ret = WindowAgg.retained(events) } shouldBe 2
+    val counts = WindowAgg.minuteTypeCounts(ret, "event_type")
+    val totals = WindowAgg.minuteTotals(ret)
+    for (_ <- 0 until 2) { // the first read plans and compiles cold
+      jobsOf(TimeSeries.emojiDataJson(counts, "event_type")) should be <= 2
+      jobsOf(TimeSeries.totalDataJson(totals)) should be <= 2
+      jobsOf(TimeSeries.statsJson(counts, "event_type")) should be <= 2
+    }
   }
 }

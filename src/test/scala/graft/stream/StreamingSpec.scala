@@ -302,6 +302,31 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("serve integration: an update-mode sink re-emitting a window counts it once") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val in = MemoryStream[String]
+    val agg = Pipeline.parse(in.toDF())
+      .withWatermark("event_time", "1 minute")
+      .groupBy(window(col("event_time"), "1 minute"), col("emoji_type"))
+      .agg(count(lit(1)).as("count"))
+    val q = Sinks.memory(agg, "serve_sink_2b", OutputMode.Update())
+    try {
+      // two batches touch window 20:00, so the sink holds its row twice
+      // (count 2, then 3)
+      in.addData(envelope("u1", "👍", "20:00:05"), envelope("u2", "👍", "20:00:15"))
+      q.processAllAvailable()
+      in.addData(envelope("u3", "👍", "20:00:40"))
+      q.processAllAvailable()
+      val minuteCounts = graft.serve.TimeSeries.windowedToMinute(spark.table("serve_sink_2b"))
+      val emoji = JsonMethods.parse(graft.serve.TimeSeries.emojiDataJson(minuteCounts))
+      val JArray(thumbs) = emoji \ "👍"
+      thumbs.map(p => (p \ "count").values) shouldBe List(3L)
+      val stats = JsonMethods.parse(graft.serve.TimeSeries.statsJson(minuteCounts))
+      (stats \ "total_emojis").values shouldBe 3L
+    } finally q.stop()
+  }
+
   test("file source + checkpoint: aggregation state survives stop/restart") {
     val inDir = java.nio.file.Files.createTempDirectory("graft-in").toString
     val ckDir = java.nio.file.Files.createTempDirectory("graft-ck").toString

@@ -24,7 +24,7 @@ fi
 
 echo "== [2/3] Verify dump @ sf0.001 =="
 out=$(mktemp -d /tmp/smoke001.XXXX)
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
   sbt -batch "runMain graft.Verify /root/testdata/sf0.001 $out" 2>&1 | tail -2
 
 echo "== [3/3] DuckDB compare @ sf0.001 =="
@@ -34,7 +34,7 @@ rm -rf "$out"
 if [[ "${1:-}" == "full" ]]; then
   echo "== [full] Verify + compare @ sf0.01 (the driver's gate SF) =="
   out=$(mktemp -d /tmp/smoke01.XXXX)
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
     sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" 2>&1 | tail -2
   python3 tools/compare.py /root/testdata/sf0.01 "$out"
   rm -rf "$out"
