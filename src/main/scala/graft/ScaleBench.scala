@@ -241,7 +241,7 @@ object ScaleBench {
           def bands(d: DataFrame) = Dedup.bandTable(d)
             .select(col("doc_id"),
               concat_ws(":", col("band"), col("bucket")).as("key"))
-          if (!Dedup.ndiServes(spark, tierPath, fp))
+          if (!Dedup.nearDupTier(spark, tierPath).serves(fp))
             Dedup.buildNearDupIndex(spark, tierPath, bands(docs), fp)
           // arrivals: 100 source docs re-keyed ABOVE every indexed id,
           // so each probe's smaller-id match set is the whole tier
@@ -267,7 +267,7 @@ object ScaleBench {
         "lex_probe" -> (() => {
           val fp = s"scale:lex:v5:m${graft.ext.Lex.LexPrunedM}:retok1"
           val tierPath = s"/tmp/graft-scale/lex_x$k"
-          if (!graft.ext.Lex.lexServes(spark, tierPath, fp))
+          if (!graft.ext.Lex.tier(spark, tierPath).serves(fp))
             graft.ext.Lex.buildLexIndex(spark, tierPath, docs, fp)
           val arrivals = docs.filter(col("doc_id") < 100)
             .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
@@ -284,7 +284,7 @@ object ScaleBench {
         "lex_probe_wand" -> (() => {
           val fp = s"scale:lex:v5:m${graft.ext.Lex.LexPrunedM}:retok1"
           val tierPath = s"/tmp/graft-scale/lex_x$k"
-          if (!graft.ext.Lex.lexServes(spark, tierPath, fp))
+          if (!graft.ext.Lex.tier(spark, tierPath).serves(fp))
             graft.ext.Lex.buildLexIndex(spark, tierPath, docs, fp)
           val arrivals = docs.filter(col("doc_id") < 100)
             .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
@@ -313,7 +313,7 @@ object ScaleBench {
           val fp = s"scale:lex:v5:m${graft.ext.Lex.LexPrunedM}:retok1"
           val tierPath = s"/tmp/graft-scale/lexdiv_x$k"
           val ddocs = spark.read.parquet(divPath)
-          if (!graft.ext.Lex.lexServes(spark, tierPath, fp))
+          if (!graft.ext.Lex.tier(spark, tierPath).serves(fp))
             graft.ext.Lex.buildLexIndex(spark, tierPath, ddocs, fp)
           val arrivals = ddocs.filter(col("doc_id") < 100)
             .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
@@ -333,7 +333,7 @@ object ScaleBench {
           val fp = s"scale:lex:v5:m${graft.ext.Lex.LexPrunedM}:retok1"
           val tierPath = s"/tmp/graft-scale/lexdiv_x$k"
           val ddocs = spark.read.parquet(divPath)
-          if (!graft.ext.Lex.lexServes(spark, tierPath, fp))
+          if (!graft.ext.Lex.tier(spark, tierPath).serves(fp))
             graft.ext.Lex.buildLexIndex(spark, tierPath, ddocs, fp)
           val arrivals = ddocs.filter(col("doc_id") < 100)
             .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
@@ -344,7 +344,7 @@ object ScaleBench {
         "lex_probe_pruned" -> (() => {
           val fp = s"scale:lex:v5:m${graft.ext.Lex.LexPrunedM}:retok1"
           val tierPath = s"/tmp/graft-scale/lex_x$k"
-          if (!graft.ext.Lex.lexServes(spark, tierPath, fp))
+          if (!graft.ext.Lex.tier(spark, tierPath).serves(fp))
             graft.ext.Lex.buildLexIndex(spark, tierPath, docs, fp)
           val arrivals = docs.filter(col("doc_id") < 100)
             .select((col("doc_id") + lit(1000000000L)).as("doc_id"),
@@ -372,7 +372,7 @@ object ScaleBench {
             ("diverse", divPath, s"/tmp/graft-scale/lexdiv_x$k"))) {
           val fp = s"scale:lex:v5:m${graft.ext.Lex.LexPrunedM}:retok1"
           val d = spark.read.parquet(dPath)
-          if (!graft.ext.Lex.lexServes(spark, tPath, fp))
+          if (!graft.ext.Lex.tier(spark, tPath).serves(fp))
             graft.ext.Lex.buildLexIndex(spark, tPath, d, fp)
           val arrivals = d.filter(col("doc_id") < 100)
             .select((col("doc_id") + lit(1000000000L)).as("doc_id"), col("text"))
@@ -398,8 +398,9 @@ object ScaleBench {
           val (dfT, stats) = graft.ext.Lex.lexTierStats(spark, tPath)
           val admitted = dfT.crossJoin(broadcast(stats.select("n")))
             .filter(expr(s"df * 100 <= $maxDf * n")).select("t")
-          val nPrefixRows = graft.ext.Lex.lexGens(spark, tPath)
-            .map(g => spark.read.parquet(s"$tPath/lex_delta/gen=$g/postings_pruned"))
+          val lexTier = graft.ext.Lex.tier(spark, tPath)
+          val nPrefixRows = lexTier.gens
+            .map(g => spark.read.parquet(s"${lexTier.genPath(g)}/postings_pruned"))
             .foldLeft(spark.read.parquet(s"$tPath/postings_pruned"))(_ unionByName _)
             .join(ptok, "t").join(admitted, "t")
             .filter(col("doc_id") =!= col("probe_id")).count()

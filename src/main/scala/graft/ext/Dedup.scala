@@ -179,9 +179,9 @@ object Dedup {
       * on ANY topology, two equi-joins + a set-equality check per round.
       * The DEFAULT for the distributed regime: its round bound does not
       * depend on component diameter. Isolated A/B (fresh JVM per
-      * algorithm, pairs pre-materialized — `graft.CcBench`, numbers in
-      * PERF_NOTES.md) shows star ≈ min-label at test scale (0.98 s vs
-      * 1.09 s warm median on the `dedup_groups` pairs at sf0.1; the
+      * algorithm, pairs pre-materialized; numbers in PERF_NOTES.md)
+      * shows star ≈ min-label at test scale (0.98 s vs 1.09 s warm
+      * median on the `dedup_groups` pairs at sf0.1; the
       * earlier "star ~3× faster" reading was run-order contamination in
       * the shared-JVM bench, withdrawn in round 6). The tie-break is the
       * worst-case bound: min-label is O(diameter) rounds, star is
@@ -277,8 +277,8 @@ object Dedup {
       case CcAlgo.MinLabel => ccMinLabelFrom(base, maxIters, checkEvery)
       // star gets per-round probes regardless of checkEvery, measured in
       // BOTH regimes: at tiny edge counts batching 2-3 ADDED ~1 s/query
-      // (sf0.1, round 5), and at 2.2M edges CcBench measured 8.1 s
-      // (per-round) vs 10.8 s (batch 2) vs 18.4 s (batch 3) — dup
+      // (sf0.1), and at 2.2M edges the isolated CC A/B (PERF_NOTES)
+      // measured 8.1 s (per-round) vs 10.8 s (batch 2) vs 18.4 s (batch 3) — dup
       // topologies converge in ~2 composite rounds, so a batch's wasted
       // post-fixpoint rounds (6 shuffle stages each) always cost more
       // than the probe they skip. ccStar keeps the batching knob for
@@ -523,7 +523,7 @@ object Dedup {
       // limit(1) matters: an unchanged round is the RARE case, so the
       // probe short-circuits after the first mismatching row instead of
       // iterating the full join output (replacing it with a counting
-      // aggregate measured 50 s vs 20 s on the 24.75M-edge CcBench set).
+      // aggregate measured 50 s vs 20 s on the 24.75M-edge CC A/B set).
       val prev = edges.select(col("u").as("pu"), col("v").as("pv"))
       converged = next.join(prev,
           col("u") === col("pu") && col("v") === col("pv"), "full_outer")
@@ -1072,34 +1072,15 @@ object Dedup {
   // engine-neutral md5 pipeline (which the DuckDB oracle replays)
   // share the lifecycle code.
 
-  /** Completion marker for the near-dup band tier. Its CONTENT is a
-    * banding fingerprint ([[ndiServes]]) — the lesson the PQ tier
-    * taught: an existence-only marker lets a tier banded with different
-    * parameters (or a different hash family) serve forever, because the
-    * root is keyed by corpus identity, not by how the keys were cut. */
-  val NdiCompleteMarker = "_GRAFT_NDI_COMPLETE"
-
-  /** Per-generation completion marker — written strictly LAST, so a
-    * crashed upsert leaves an invisible generation, never half-written
-    * band files that a query would join against. */
-  val NdiDeltaMarker = "_GRAFT_NDI_DELTA_COMPLETE"
-
-  private def ndiDeltaRoot(path: String) = s"$path/ndi_delta"
-  private def ndiGenPath(path: String, gen: Int) =
-    DeltaGens.genPath(ndiDeltaRoot(path), gen)
-
-  /** Completed delta generations, ascending — the [[DeltaGens]]
-    * marker discipline; a marker-less slot is reclaimed by the next
-    * upsert's overwrite or by [[dropNdiDeltas]]. */
-  private def completedNdiGens(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Seq[Int] =
-    DeltaGens.completed(spark, ndiDeltaRoot(path), NdiDeltaMarker)
-
-  /** True iff a complete band tier whose marker carries exactly this
-    * banding fingerprint is present at `path` ([[Markers]]). */
-  def ndiServes(spark: org.apache.spark.sql.SparkSession, path: String,
-                fingerprint: String): Boolean =
-    Markers.matches(spark, s"$path/$NdiCompleteMarker", fingerprint)
+  /** The band tier at `path`. Its marker carries the banding
+    * fingerprint: an existence-only marker would let a tier banded with
+    * different parameters (or a different hash family) serve forever,
+    * because the root is keyed by corpus identity, not by how the keys
+    * were cut. Arrival batches land as `ndi_delta/gen=N` generations,
+    * and the compaction ratio counts band rows. */
+  def nearDupTier(spark: org.apache.spark.sql.SparkSession, path: String): Tier =
+    new Tier(spark, path, "_GRAFT_NDI_COMPLETE", Some(Tier.Gens(
+      "ndi_delta", "_GRAFT_NDI_DELTA_COMPLETE", "bands", "bands")))
 
   /** Persist the base band table: `keyRows` must be (`idCol`, key)
     * rows from the caller's banding pipeline. A fresh build drops any
@@ -1108,27 +1089,23 @@ object Dedup {
   def buildNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                         keyRows: DataFrame, fingerprint: String,
                         idCol: String = "doc_id"): Unit = {
-    Markers.delete(spark, s"$path/$NdiCompleteMarker")
-    DeltaGens.drop(spark, ndiDeltaRoot(path))
-    // BASE segment gets the heavy layout (the Lex `base = true`
-    // convention, ported round 18): range-sorted by band key, so every
-    // parquet row group's key min/max is tight and a probe's bounded
-    // `In(key, …)` pushdown skips the (corpus − probed-buckets) rest.
-    // Without it the probe join scans the WHOLE band table — measured
-    // as the 1000× ladder knee (8.97 s at 5M docs vs 1.3 s at 500k;
-    // SCALEBENCH_r18). Delta generations stay plain writes: they are
-    // arrival-batch-sized, and compaction folds them into the laid-out
-    // base. Same rows either way — serves are hash-identical.
-    graft.core.Layout.writeRangeSorted(
-      keyRows.select(col(idCol), col("key")), s"$path/bands", "key",
-      math.min(32, math.max(1, spark.sparkContext.defaultParallelism)))
-    Markers.write(spark, s"$path/$NdiCompleteMarker", fingerprint)
+    val t = nearDupTier(spark, path)
+    t.rewrite(fingerprint) {
+      t.dropGens()
+      // BASE segment gets the heavy layout (the Lex `base = true`
+      // convention, ported round 18): range-sorted by band key, so every
+      // parquet row group's key min/max is tight and a probe's bounded
+      // `In(key, …)` pushdown skips the (corpus − probed-buckets) rest.
+      // Without it the probe join scans the WHOLE band table — measured
+      // as the 1000× ladder knee (8.97 s at 5M docs vs 1.3 s at 500k;
+      // SCALEBENCH_r18). Delta generations stay plain writes: they are
+      // arrival-batch-sized, and compaction folds them into the laid-out
+      // base. Same rows either way — serves are hash-identical.
+      graft.core.Layout.writeRangeSorted(
+        keyRows.select(col(idCol), col("key")), s"$path/bands", "key",
+        math.min(32, math.max(1, spark.sparkContext.defaultParallelism)))
+    }
   }
-
-  /** Drop all delta generations (replay idempotence — the
-    * [[Similarity.dropGraphDelta]] twin for the band tier). */
-  def dropNdiDeltas(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    DeltaGens.drop(spark, ndiDeltaRoot(path))
 
   /** Append one arrival batch's band rows as a NEW numbered generation
     * — banding is per-document, so the merged tier is IDENTICAL however
@@ -1143,13 +1120,10 @@ object Dedup {
   def upsertNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                          keyRows: DataFrame, fingerprint: String,
                          idCol: String = "doc_id"): Unit = {
-    require(ndiServes(spark, path, fingerprint),
-      s"upsertNearDupIndex: no serving band tier at $path for this banding")
-    val gen = ndiGenPath(path,
-      DeltaGens.next(spark, ndiDeltaRoot(path), NdiDeltaMarker))
-    keyRows.select(col(idCol), col("key"))
-      .write.mode("overwrite").parquet(s"$gen/bands")
-    DeltaGens.markComplete(spark, gen, NdiDeltaMarker)
+    val t = nearDupTier(spark, path)
+    t.require("upsertNearDupIndex", fingerprint)
+    t.append(gen => keyRows.select(col(idCol), col("key"))
+      .write.mode("overwrite").parquet(s"$gen/bands"))
   }
 
   /** The full indexed band table: base plus every completed generation.
@@ -1158,10 +1132,9 @@ object Dedup {
     * same id is the caller's bug, not a tier state). */
   def nearDupTierBands(spark: org.apache.spark.sql.SparkSession, path: String,
                        idCol: String = "doc_id"): DataFrame = {
-    val base = spark.read.parquet(s"$path/bands")
-    completedNdiGens(spark, path)
-      .map(g => spark.read.parquet(s"${ndiGenPath(path, g)}/bands"))
-      .foldLeft(base)(_ unionByName _)
+    val t = nearDupTier(spark, path)
+    t.gens.map(g => spark.read.parquet(s"${t.genPath(g)}/bands"))
+      .foldLeft(spark.read.parquet(s"$path/bands"))(_ unionByName _)
   }
 
   /** Probe the tier: which indexed documents share ≥ 1 band key with
@@ -1227,49 +1200,36 @@ object Dedup {
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                           fingerprint: String,
                           idCol: String = "doc_id"): Unit = {
-    require(ndiServes(spark, path, fingerprint),
-      s"compactNearDupIndex: no serving band tier at $path for this banding")
-    if (completedNdiGens(spark, path).isEmpty) return
+    val t = nearDupTier(spark, path)
+    t.require("compactNearDupIndex", fingerprint)
+    if (t.gens.isEmpty) return
     // materialize the union BEFORE the overwrite — Spark refuses to
     // overwrite a path an active plan still reads (the
     // compactGraphIndex discipline)
     val all = nearDupTierBands(spark, path, idCol).localCheckpoint(true)
-    Markers.delete(spark, s"$path/$NdiCompleteMarker")
-    // the compacted base IS the new base segment — it gets the same
-    // range-sorted-by-key layout [[buildNearDupIndex]] writes (round 18
-    // consistency fix: the layout landed on the build path only, so the
-    // first compaction silently degraded every later probe back to the
-    // corpus-sized scan the layout exists to avoid; the Lex twin
-    // re-writes `base = true` layouts on compaction for the same
-    // reason). One range shuffle per compaction, same rows.
-    graft.core.Layout.writeRangeSorted(all, s"$path/bands", "key",
-      math.min(32, math.max(1, spark.sparkContext.defaultParallelism)))
-    dropNdiDeltas(spark, path)
-    org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(all)
-    Markers.write(spark, s"$path/$NdiCompleteMarker", fingerprint)
+    t.rewrite(fingerprint) {
+      // the compacted base IS the new base segment, so it gets the same
+      // range-sorted-by-key layout [[buildNearDupIndex]] writes (a plain
+      // write here would degrade every later probe back to the
+      // corpus-sized scan the layout exists to avoid). One range shuffle
+      // per compaction, same rows.
+      graft.core.Layout.writeRangeSorted(all, s"$path/bands", "key",
+        math.min(32, math.max(1, spark.sparkContext.defaultParallelism)))
+      t.dropGens()
+      org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(all)
+    }
   }
 
-  /** The auto-compaction policy ([[Similarity.maybeCompactGraphIndex]]'s
-    * twin): fire when completed generations reach `maxGens` or the
-    * delta/base band-row ratio reaches `maxRatio`. Returns whether it
-    * fired — the streaming replay pins exactly-once firing. */
+  /** Auto-compaction ([[Tier.compactionDue]] over band rows): fire when
+    * completed generations reach `maxGens` or the delta/base ratio
+    * reaches `maxRatio`. Returns whether it fired — the streaming
+    * replay pins exactly-once firing. */
   def maybeCompactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                                path: String, fingerprint: String,
                                maxGens: Int = 4, maxRatio: Double = 0.25,
                                idCol: String = "doc_id"): Boolean = {
-    val gens = completedNdiGens(spark, path)
-    val fire = DeltaGens.shouldCompact(gens, maxGens, maxRatio) {
-      val nDelta = gens.map(g => spark.read
-        .parquet(s"${ndiGenPath(path, g)}/bands").count()).sum
-      val nBase = spark.read.parquet(s"$path/bands").count()
-      if (nBase == 0) Double.MaxValue else nDelta.toDouble / nBase
-    }
+    val fire = nearDupTier(spark, path).compactionDue(maxGens, maxRatio)
     if (fire) compactNearDupIndex(spark, path, fingerprint, idCol)
     fire
   }
-
-  /** Test-only: completed generation numbers at `path`. */
-  private[graft] def ndiGensForTest(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): Seq[Int] =
-    completedNdiGens(spark, path)
 }

@@ -231,28 +231,28 @@ object Lex {
   }
 
   // ------------------------------------------------------------------ //
-  //  Tier lifecycle (the near-dup band tier's marker discipline)        //
+  //  Tier lifecycle                                                    //
   // ------------------------------------------------------------------ //
 
-  /** Completion marker; CONTENT is the tokenizer fingerprint
-    * ([[Markers]]) — a re-cut tokenizer reads as "no tier", never
-    * serves postings cut the old way. */
-  val LexCompleteMarker = "_GRAFT_LEX_COMPLETE"
+  /** The posting tier at `path`. Its marker carries the tokenizer
+    * fingerprint, so a re-cut tokenizer reads as "no tier" and never
+    * serves postings cut the old way; arrival batches land as
+    * `lex_delta/gen=N` generations, and the compaction ratio counts
+    * posting rows. */
+  def tier(spark: org.apache.spark.sql.SparkSession, path: String): Tier =
+    new Tier(spark, path, "_GRAFT_LEX_COMPLETE", Some(Tier.Gens(
+      "lex_delta", "_GRAFT_LEX_DELTA_COMPLETE", "postings", "postings")))
 
-  /** Per-generation marker, written strictly LAST. */
-  val LexDeltaMarker = "_GRAFT_LEX_DELTA_COMPLETE"
-
-  private def deltaRoot(path: String) = s"$path/lex_delta"
-  private def genPath(path: String, gen: Int) =
-    DeltaGens.genPath(deltaRoot(path), gen)
-
-  private def completedGens(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Seq[Int] =
-    DeltaGens.completed(spark, deltaRoot(path), LexDeltaMarker)
-
-  def lexServes(spark: org.apache.spark.sql.SparkSession, path: String,
-                fingerprint: String): Boolean =
-    Markers.matches(spark, s"$path/$LexCompleteMarker", fingerprint)
+  /** `table` over the base and the generations `gens`, unioned; the
+    * base reads `baseTable`. */
+  private def folded(spark: org.apache.spark.sql.SparkSession, path: String,
+                     gens: Seq[Int], table: String,
+                     baseTable: String = ""): DataFrame = {
+    val t = tier(spark, path)
+    gens.map(g => spark.read.parquet(s"${t.genPath(g)}/$table"))
+      .foldLeft(spark.read.parquet(
+        s"$path/${if (baseTable.isEmpty) table else baseTable}"))(_ unionByName _)
+  }
 
   /** Write one generation's four tables (facts + statistics) under
     * `dir`. The facts are materialized once (localCheckpoint) so the
@@ -376,16 +376,13 @@ object Lex {
   def buildLexIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     docs: DataFrame, fingerprint: String,
                     idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    Markers.delete(spark, s"$path/$LexCompleteMarker")
-    DeltaGens.drop(spark, deltaRoot(path))
-    val (postings, dlen) = factTables(docs, idCol, textCol)
-    writeGenTables(path, postings, dlen, base = true)
-    Markers.write(spark, s"$path/$LexCompleteMarker", fingerprint)
+    val t = tier(spark, path)
+    t.rewrite(fingerprint) {
+      t.dropGens()
+      val (postings, dlen) = factTables(docs, idCol, textCol)
+      writeGenTables(path, postings, dlen, base = true)
+    }
   }
-
-  /** Drop all delta generations (replay idempotence). */
-  def dropLexDeltas(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    DeltaGens.drop(spark, deltaRoot(path))
 
   /** Append one arrival batch as a new numbered generation —
     * tokenization is per-document, and global stats are recomputed at
@@ -394,13 +391,12 @@ object Lex {
   def upsertLexIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      batch: DataFrame, fingerprint: String,
                      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    require(lexServes(spark, path, fingerprint),
-      s"upsertLexIndex: no serving lexical tier at $path for this tokenizer")
-    val gen = genPath(path,
-      DeltaGens.next(spark, deltaRoot(path), LexDeltaMarker))
-    val (postings, dlen) = factTables(batch, idCol, textCol)
-    writeGenTables(gen, postings, dlen, base = false)
-    DeltaGens.markComplete(spark, gen, LexDeltaMarker)
+    val t = tier(spark, path)
+    t.require("upsertLexIndex", fingerprint)
+    t.append { gen =>
+      val (postings, dlen) = factTables(batch, idCol, textCol)
+      writeGenTables(gen, postings, dlen, base = false)
+    }
   }
 
   /** The merged fact tables: base plus every completed generation.
@@ -411,15 +407,12 @@ object Lex {
     * counting documents whose postings are never scanned). */
   def lexTierTables(spark: org.apache.spark.sql.SparkSession, path: String):
       (DataFrame, DataFrame) =
-    lexTierTablesAt(spark, path, completedGens(spark, path))
+    lexTierTablesAt(spark, path, tier(spark, path).gens)
 
   private def lexTierTablesAt(spark: org.apache.spark.sql.SparkSession,
                               path: String, gens: Seq[Int]):
       (DataFrame, DataFrame) =
-    (gens.map(g => spark.read.parquet(s"${genPath(path, g)}/postings"))
-       .foldLeft(spark.read.parquet(s"$path/postings"))(_ unionByName _),
-      gens.map(g => spark.read.parquet(s"${genPath(path, g)}/dlen"))
-        .foldLeft(spark.read.parquet(s"$path/dlen"))(_ unionByName _))
+    (folded(spark, path, gens, "postings"), folded(spark, path, gens, "dlen"))
 
   /** The tier's FOLDED statistics — (t, df) and 1-row (sdl, n) —
     * summed over base + every completed generation (round 15):
@@ -431,7 +424,7 @@ object Lex {
     * table — at 100 TB that aggregation was a corpus scan per query. */
   def lexTierStats(spark: org.apache.spark.sql.SparkSession, path: String):
       (DataFrame, DataFrame) =
-    lexTierStatsAt(spark, path, completedGens(spark, path))
+    lexTierStatsAt(spark, path, tier(spark, path).gens)
 
   private def lexTierStatsAt(spark: org.apache.spark.sql.SparkSession,
                              path: String, gens: Seq[Int]):
@@ -439,12 +432,10 @@ object Lex {
     // df/sdl/n fold by exact integer addition (disjoint documents);
     // max_tf/min_dl fold by max/min — also exact, and identical to a
     // fresh full build's per-token aggregate by the same disjointness
-    val dfT = gens.map(g => spark.read.parquet(s"${genPath(path, g)}/df"))
-      .foldLeft(spark.read.parquet(s"$path/df"))(_ unionByName _)
+    val dfT = folded(spark, path, gens, "df")
       .groupBy("t").agg(sum(col("df")).as("df"),
         max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
-    val stats = gens.map(g => spark.read.parquet(s"${genPath(path, g)}/stats"))
-      .foldLeft(spark.read.parquet(s"$path/stats"))(_ unionByName _)
+    val stats = folded(spark, path, gens, "stats")
       .agg(sum(col("sdl")).as("sdl"), sum(col("n")).as("n"))
     (dfT, stats)
   }
@@ -458,8 +449,7 @@ object Lex {
     * wouldn't meaningfully shrink (see [[writeGenTablesFrom]]). */
   private def lexTierForwardAt(spark: org.apache.spark.sql.SparkSession,
                                path: String, gens: Seq[Int]): DataFrame =
-    gens.map(g => spark.read.parquet(s"${genPath(path, g)}/postings"))
-      .foldLeft(spark.read.parquet(s"$path/forward"))(_ unionByName _)
+    folded(spark, path, gens, "postings", baseTable = "forward")
 
   /** Loud guard on the driver-side bounded collects below: a probe
     * batch's distinct vocabulary past this is not an arrival batch —
@@ -567,7 +557,7 @@ object Lex {
   def queryLexIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     probeDocs: DataFrame, maxDfPct: Int,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val gens = completedGens(spark, path) // ONE snapshot for all tables
+    val gens = tier(spark, path).gens // ONE snapshot for all tables
     val (postings, dlen) = lexTierTablesAt(spark, path, gens)
     val (ptok, toks, _) = probeTokens(probeDocs, idCol, textCol)
     bm25Scores(tokenScanFilter(postings, toks), dlen, ptok,
@@ -585,10 +575,7 @@ object Lex {
                                path: String, gens: Seq[Int], ptok: DataFrame,
                                toks: Seq[String], ptokPairs: Long,
                                idCol: String): (DataFrame, Seq[Any]) = {
-    val prefix = tokenScanFilter(gens
-      .map(g => spark.read.parquet(s"${genPath(path, g)}/postings_pruned"))
-      .foldLeft(spark.read.parquet(s"$path/postings_pruned"))(_ unionByName _),
-      toks)
+    val prefix = tokenScanFilter(folded(spark, path, gens, "postings_pruned"), toks)
     val cands = prefix.join(broadcast(ptok), "t")
       .filter(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol))
@@ -636,7 +623,7 @@ object Lex {
   def queryLexIndexPruned(spark: org.apache.spark.sql.SparkSession, path: String,
                           probeDocs: DataFrame, maxDfPct: Int,
                           idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val gens = completedGens(spark, path) // ONE snapshot for all tables
+    val gens = tier(spark, path).gens // ONE snapshot for all tables
     val (ptok, toks, nPairs) = probeTokens(probeDocs, idCol, textCol)
     val (cands, candDocs) =
       prefixCandidates(spark, path, gens, ptok, toks, nPairs, idCol)
@@ -713,7 +700,7 @@ object Lex {
                         probeDocs: DataFrame, maxDfPct: Int, topK: Int,
                         idCol: String = "doc_id", textCol: String = "text",
                         dispatch: Boolean = true): DataFrame = {
-    val gens = completedGens(spark, path) // ONE snapshot for all tables
+    val gens = tier(spark, path).gens // ONE snapshot for all tables
     val (ptok, toks, _) = probeTokens(probeDocs, idCol, textCol)
     // LAZY-CHECKPOINT the frames the dispatch job and the serve job
     // BOTH consume (round 19 — the round-18 shared-subtree discipline
@@ -737,10 +724,7 @@ object Lex {
     // micro-unit term SQL), summed over the subset of tokens whose
     // prefix the doc entered — bounded by M·|probe tokens|·gens rows
     // by the prefix construction.
-    val prefix = tokenScanFilter(gens
-      .map(g => spark.read.parquet(s"${genPath(path, g)}/postings_pruned"))
-      .foldLeft(spark.read.parquet(s"$path/postings_pruned"))(_ unionByName _),
-      toks)
+    val prefix = tokenScanFilter(folded(spark, path, gens, "postings_pruned"), toks)
     val idf = dfT.join(broadcast(ptok.select("t").distinct()), "t")
       .crossJoin(broadcast(stats.select("n")))
       .filter(expr(s"df * 100 <= $maxDfPct * n"))
@@ -876,56 +860,36 @@ object Lex {
     * doubled postings. */
   def compactLexIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       fingerprint: String): Unit = {
-    require(lexServes(spark, path, fingerprint),
-      s"compactLexIndex: no serving lexical tier at $path for this tokenizer")
-    val gens = completedGens(spark, path)
+    val t = tier(spark, path)
+    t.require("compactLexIndex", fingerprint)
+    val gens = t.gens
     if (gens.isEmpty) return
     val (postings, dlen) = lexTierTablesAt(spark, path, gens)
-    // materialize the merged plans BEFORE retracting the marker (they
+    // materialize the merged plans BEFORE retracting the marker: they
     // reference the very files the rewrite overwrites, AND a transient
     // checkpoint failure here must leave a still-serving tier, not a
-    // healthy tier stranded behind a deleted marker — r15 second-pass
-    // review); exactly ONE merged copy exists at a time
+    // healthy tier stranded behind a deleted marker; exactly ONE merged
+    // copy exists at a time
     val (d, joined) = genTableFrames(postings, dlen)
-    Markers.delete(spark, s"$path/$LexCompleteMarker")
-    // statistics are REAGGREGATED from the merged facts (one extra
-    // shuffle over data compaction rewrites anyway) — exact integers,
-    // so this equals the generation fold bit-for-bit
-    writeGenTablesFrom(path, d, joined, base = true)
-    dropLexDeltas(spark, path)
-    org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(d)
-    org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(joined)
-    Markers.write(spark, s"$path/$LexCompleteMarker", fingerprint)
+    t.rewrite(fingerprint) {
+      // statistics are REAGGREGATED from the merged facts (one extra
+      // shuffle over data compaction rewrites anyway) — exact integers,
+      // so this equals the generation fold bit-for-bit
+      writeGenTablesFrom(path, d, joined, base = true)
+      t.dropGens()
+      org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(d)
+      org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(joined)
+    }
   }
 
-  /** Auto-compaction policy (the [[Dedup.maybeCompactNearDupIndex]]
-    * twin): fire at `maxGens` generations or delta/base posting-row
-    * ratio ≥ `maxRatio`. Returns whether it fired. */
+  /** Auto-compaction ([[Tier.compactionDue]] over posting rows): fire at
+    * `maxGens` generations or delta/base ratio ≥ `maxRatio`. Returns
+    * whether it fired. */
   def maybeCompactLexIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String, fingerprint: String,
                            maxGens: Int = 4, maxRatio: Double = 0.25): Boolean = {
-    val gens = completedGens(spark, path)
-    val fire = DeltaGens.shouldCompact(gens, maxGens, maxRatio) {
-      val nDelta = gens.map(g => spark.read
-        .parquet(s"${genPath(path, g)}/postings").count()).sum
-      val nBase = spark.read.parquet(s"$path/postings").count()
-      if (nBase == 0) Double.MaxValue else nDelta.toDouble / nBase
-    }
+    val fire = tier(spark, path).compactionDue(maxGens, maxRatio)
     if (fire) compactLexIndex(spark, path, fingerprint)
     fire
   }
-
-  /** Completed generation numbers at `path` — a point-in-time listing
-    * (callers needing consistency across several reads must thread ONE
-    * snapshot; the serve entry points above do). Registry use: the
-    * upsert-lifecycle twins ensure base + arrival generation exist
-    * before serving. */
-  def lexGens(spark: org.apache.spark.sql.SparkSession,
-              path: String): Seq[Int] =
-    completedGens(spark, path)
-
-  /** Test-only alias (kept for older specs). */
-  private[graft] def lexGensForTest(spark: org.apache.spark.sql.SparkSession,
-                                    path: String): Seq[Int] =
-    completedGens(spark, path)
 }

@@ -500,12 +500,19 @@ object Similarity {
         col("__n.score").as("cos_sim"))
   }
 
-  /** Top-level completion marker, written strictly AFTER both index
-    * artifacts: readiness checks must gate on this (not on
+  /** Completion marker of the IVF index, written strictly AFTER both
+    * index artifacts: readiness checks gate on this (not on
     * `centroids/_SUCCESS`, which exists as soon as the FIRST write lands
     * — a crash between the two writes would otherwise leave a half-built
     * index that looks complete forever). */
   val IndexCompleteMarker = "_GRAFT_INDEX_COMPLETE"
+
+  /** The IVF index at `indexPath` (empty fingerprint). Arrival batches
+    * land as `lists_delta/gen=N` generations, each one hive-partitioned
+    * list table; the compaction ratio counts list rows. */
+  def ivfTier(spark: org.apache.spark.sql.SparkSession, indexPath: String): Tier =
+    new Tier(spark, indexPath, IndexCompleteMarker, Some(Tier.Gens(
+      "lists_delta", DeltaCompleteMarker, "lists", "")))
 
   /** Persist the IVF index (round-5 verdict #8 — the index BUILD story):
     * the centroid table as plain parquet and the corpus
@@ -519,22 +526,19 @@ object Similarity {
   def buildIvfIndex(corpus: DataFrame, indexPath: String,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     listCol: String = "label"): DataFrame = {
-    // Hadoop FS, not java.io: the index path may be HDFS/S3 at scale
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$IndexCompleteMarker")
-    val fs = marker.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    // retract the PREVIOUS build's marker before touching either
-    // artifact: a rebuild that crashes between the two writes must read
-    // as incomplete, not serve new centroids against old lists
-    fs.delete(marker, false)
-    // the two artifacts are independent writes to disjoint paths —
-    // overlap them (round 19, guide §2.6); the marker below still
-    // lands strictly after BOTH (Par.run joins every task)
-    graft.core.Par.run(
-      () => coarseCentroids(corpus, listCol, vecCol)
-        .write.mode("overwrite").parquet(s"$indexPath/centroids"),
-      () => corpus.select(col(idCol), col(vecCol), col(listCol))
-        .write.mode("overwrite").partitionBy(listCol).parquet(s"$indexPath/lists"))
-    fs.create(marker, true).close()
+    // the rewrite retracts the PREVIOUS build's marker before touching
+    // either artifact: a rebuild that crashes between the two writes
+    // must read as incomplete, not serve new centroids against old lists.
+    // The two artifacts are independent writes to disjoint paths, so
+    // they overlap; the marker still lands strictly after BOTH (Par.run
+    // joins every task)
+    ivfTier(corpus.sparkSession, indexPath).rewrite() {
+      graft.core.Par.run(
+        () => coarseCentroids(corpus, listCol, vecCol)
+          .write.mode("overwrite").parquet(s"$indexPath/centroids"),
+        () => corpus.select(col(idCol), col(vecCol), col(listCol))
+          .write.mode("overwrite").partitionBy(listCol).parquet(s"$indexPath/lists"))
+    }
     corpus.sparkSession.read.parquet(s"$indexPath/centroids")
   }
 
@@ -1099,8 +1103,8 @@ object Similarity {
     // is an iterative loop whose stage outputs are tiny
     // (≤ |probes|·kk fixed-width rows) but whose composed lazy plan
     // re-analyzes and re-plans every prior stage per hop under AQE.
-    // Round-17 A/B on a quiet box (1600 probes, 2k corpus, warm JVM,
-    // GraphProfile): shipped lazy walk 7.8 s median → carried-score +
+    // A/B on a quiet box (1600 probes, 2k corpus, warm JVM; PERF_NOTES):
+    // shipped lazy walk 7.8 s median → carried-score +
     // dedup-heap + per-stage materialization 4.5 s, output-identical
     // (set-equality checked in the same run). At deployment scale the
     // checkpoint is |probes|·kk rows — arrival-batch-sized state, the
@@ -1182,6 +1186,14 @@ object Similarity {
     * against missing vectors. */
   val GraphCompleteMarker = "_GRAFT_GRAPH_COMPLETE"
 
+  /** The kNN-graph tier at `indexPath` (empty fingerprint: its
+    * parameters are baked into the root path). Arrival batches land as
+    * `graph_delta/gen=N/{vectors,edges}` generations; the compaction
+    * ratio counts vector rows. */
+  def graphTier(spark: org.apache.spark.sql.SparkSession, indexPath: String): Tier =
+    new Tier(spark, indexPath, GraphCompleteMarker, Some(Tier.Gens(
+      "graph_delta", DeltaCompleteMarker, "vectors", "vectors")))
+
   /** Persist the [[knnGraph]] as a SELF-CONTAINED serving tier (edge
     * list + the scoring vectors): the NN-Descent build is the
     * once-per-corpus-generation cost, and [[graphSearchIndexed]] then
@@ -1193,20 +1205,18 @@ object Similarity {
                       graphK: Int = 10, graphRounds: Int = 2,
                       nPlanes: Int = 4, dim: Int = 64,
                       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$GraphCompleteMarker")
-    val fs = marker.getFileSystem(corpus.sparkSession.sparkContext.hadoopConfiguration)
-    fs.delete(marker, false)
-    // the vector-tier copy is independent of the NN-Descent build —
-    // overlap them (round 19, guide §2.6): the cheap corpus copy rides
-    // inside the build's scheduling gaps instead of queueing behind
-    // ~30 jobs of it; the marker still lands strictly after both
-    graft.core.Par.run(
-      () => knnGraph(corpus, graphK, graphRounds, nPlanes = nPlanes, dim = dim,
-          idCol = idCol, vecCol = vecCol)
-        .write.mode("overwrite").parquet(s"$indexPath/graph_edges"),
-      () => corpus.select(col(idCol), col(vecCol))
-        .write.mode("overwrite").parquet(s"$indexPath/vectors"))
-    fs.create(marker, true).close()
+    // the vector-tier copy is independent of the NN-Descent build, so
+    // they overlap: the cheap corpus copy rides inside the build's
+    // scheduling gaps instead of queueing behind ~30 jobs of it; the
+    // marker still lands strictly after both
+    graphTier(corpus.sparkSession, indexPath).rewrite() {
+      graft.core.Par.run(
+        () => knnGraph(corpus, graphK, graphRounds, nPlanes = nPlanes, dim = dim,
+            idCol = idCol, vecCol = vecCol)
+          .write.mode("overwrite").parquet(s"$indexPath/graph_edges"),
+        () => corpus.select(col(idCol), col(vecCol))
+          .write.mode("overwrite").parquet(s"$indexPath/vectors"))
+    }
     corpus.sparkSession.read.parquet(s"$indexPath/graph_edges")
   }
 
@@ -1218,28 +1228,12 @@ object Similarity {
                          hops: Int = 2, entryStride: Int = GraphEntryStride,
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          entryLayer: Option[DataFrame] = None): DataFrame = {
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$GraphCompleteMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker),
-      s"graphSearchIndexed: no complete graph tier at $indexPath")
+    graphTier(spark, indexPath).require("graphSearchIndexed")
     graphSearchOn(
       spark.read.parquet(s"$indexPath/graph_edges"),
       spark.read.parquet(s"$indexPath/vectors"),
       probes, k, beam, hops, entryStride, idCol, vecCol, entryLayer)
   }
-
-  private def graphDeltaRoot(indexPath: String) = s"$indexPath/graph_delta"
-  private def graphDeltaGenPath(indexPath: String, gen: Int) =
-    s"${graphDeltaRoot(indexPath)}/gen=$gen"
-
-  /** Generation numbers of all COMPLETED graph delta segments, ascending
-    * — the graph twin of [[completedDeltaGens]], same
-    * [[DeltaCompleteMarker]] discipline: a marker-less (crashed) attempt
-    * is invisible and its slot is reclaimed by the next upsert's
-    * overwrite or by [[dropGraphDelta]]. */
-  private def completedGraphDeltaGens(spark: org.apache.spark.sql.SparkSession,
-                                      indexPath: String): Seq[Int] =
-    DeltaGens.completed(spark, graphDeltaRoot(indexPath), DeltaCompleteMarker)
 
   /** Append one batch of arrivals to a persisted [[buildGraphIndex]]
     * tier — the graph family's streaming-arrival path, the same
@@ -1275,18 +1269,14 @@ object Similarity {
                        hops: Int = 2, entryStride: Int = GraphEntryStride,
                        idCol: String = "vec_id", vecCol: String = "embedding",
                        entryLayer: Option[DataFrame] = None): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$GraphCompleteMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(marker),
-      s"upsertGraphIndex: no complete graph tier at $indexPath")
+    val tier = graphTier(spark, indexPath)
+    tier.require("upsertGraphIndex")
     if (batch.select(col(idCol)).isEmpty) return
-    val next = DeltaGens.next(spark, graphDeltaRoot(indexPath), DeltaCompleteMarker)
-    val gen = graphDeltaGenPath(indexPath, next)
     // the generation's vector copy and the beam-walk edge derivation
     // are independent (the walk reads the BASE tier, never
-    // gen/vectors) — overlap them (round 19, guide §2.6); the
-    // completion marker still lands strictly after both
-    graft.core.Par.run(
+    // gen/vectors), so they overlap; the completion marker still lands
+    // strictly after both
+    tier.append(gen => graft.core.Par.run(
       () => batch.select(col(idCol), col(vecCol))
         .write.mode("overwrite").parquet(s"$gen/vectors"),
       () => graphSearchOn(
@@ -1294,9 +1284,7 @@ object Similarity {
           spark.read.parquet(s"$indexPath/vectors"),
           batch, k, beam, hops, entryStride, idCol, vecCol, entryLayer)
         .select(col("probe_id").as(idCol), col("neighbor_id"), col("cos_sim"))
-        .write.mode("overwrite").parquet(s"$gen/edges"))
-    fs.create(new org.apache.hadoop.fs.Path(
-      s"$gen/$DeltaCompleteMarker"), true).close()
+        .write.mode("overwrite").parquet(s"$gen/edges")))
   }
 
   /** The LIVE delta edge list — all completed generations unioned, the
@@ -1306,15 +1294,14 @@ object Similarity {
     * exists. The dedup join touches DELTA rows only, never the base. */
   def graphDeltaEdges(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                       idCol: String = "vec_id"): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = completedGraphDeltaGens(spark, indexPath)
+    val tier = graphTier(spark, indexPath)
+    val gens = tier.gens
     if (gens.isEmpty) None
     else if (gens.sizeIs == 1)
-      Some(spark.read.parquet(s"${graphDeltaGenPath(indexPath, gens.head)}/edges"))
+      Some(spark.read.parquet(s"${tier.genPath(gens.head)}/edges"))
     else {
       val tagged = gens
-        .map(g => spark.read.parquet(s"${graphDeltaGenPath(indexPath, g)}/edges")
+        .map(g => spark.read.parquet(s"${tier.genPath(g)}/edges")
           .withColumn("__gen", lit(g)))
         .reduce(_ unionByName _)
       val latest = tagged.groupBy(col(idCol)).agg(max(col("__gen")).as("__gen"))
@@ -1327,15 +1314,14 @@ object Similarity {
   private def graphDeltaVectors(spark: org.apache.spark.sql.SparkSession,
                                 indexPath: String, idCol: String,
                                 vecCol: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = completedGraphDeltaGens(spark, indexPath)
+    val tier = graphTier(spark, indexPath)
+    val gens = tier.gens
     if (gens.isEmpty) None
     else if (gens.sizeIs == 1)
-      Some(spark.read.parquet(s"${graphDeltaGenPath(indexPath, gens.head)}/vectors")
+      Some(spark.read.parquet(s"${tier.genPath(gens.head)}/vectors")
         .select(col(idCol), col(vecCol)))
     else Some(
-      gens.map(g => spark.read.parquet(s"${graphDeltaGenPath(indexPath, g)}/vectors")
+      gens.map(g => spark.read.parquet(s"${tier.genPath(g)}/vectors")
           .select(col(idCol), col(vecCol), lit(g).as("__gen")))
         .reduce(_ unionByName _)
         .groupBy(col(idCol))
@@ -1355,6 +1341,8 @@ object Similarity {
                         graphK: Int = 10, graphRounds: Int = 2,
                         nPlanes: Int = 4, dim: Int = 64,
                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val tier = graphTier(spark, indexPath)
+    tier.require("compactGraphIndex")
     graphDeltaVectors(spark, indexPath, idCol, vecCol) match {
       case None =>
         spark.read.parquet(s"$indexPath/graph_edges")
@@ -1368,52 +1356,30 @@ object Similarity {
           .localCheckpoint(true)
         val rebuilt = buildGraphIndex(all, indexPath, graphK, graphRounds,
           nPlanes, dim, idCol, vecCol)
-        dropGraphDelta(spark, indexPath)
+        tier.dropGens()
         org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(all)
         rebuilt
     }
   }
 
-  /** AUTO-COMPACTION POLICY for the graph tier (round-11 verdict #5 —
-    * the maintenance loop should not need an operator watching
-    * generation counts): fold the delta into the base when completed
-    * generations reach `maxGens` OR raw live delta rows reach
-    * `maxRatio` of the base vector count. Generation counts are RAW
-    * (pre-dedup) row counts — parquet footer metadata, no scan — because
-    * the policy prices storage/serving amplification, which stale
-    * superseded copies contribute to until compaction reclaims them.
-    * Returns true iff compaction fired, so a caller (or a replay's
-    * hash gate) can prove exactly-once firing. */
+  /** AUTO-COMPACTION POLICY for the graph tier ([[Tier.compactionDue]]):
+    * fold the delta into the base when completed generations reach
+    * `maxGens` OR raw live delta rows reach `maxRatio` of the base
+    * vector count. Generation counts are RAW (pre-dedup) row counts,
+    * because the policy prices storage/serving amplification, which
+    * stale superseded copies contribute to until compaction reclaims
+    * them. Returns true iff compaction fired, so a caller (or a
+    * replay's hash gate) can prove exactly-once firing. */
   def maybeCompactGraphIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                              maxGens: Int = 4, maxRatio: Double = 0.25,
                              graphK: Int = 10, graphRounds: Int = 2,
                              nPlanes: Int = 4, dim: Int = 64,
                              idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
-    val gens = completedGraphDeltaGens(spark, indexPath)
-    val fire = DeltaGens.shouldCompact(gens, maxGens, maxRatio) {
-      val nDelta = gens.map(g => spark.read
-        .parquet(s"${graphDeltaGenPath(indexPath, g)}/vectors").count()).sum
-      val nBase = spark.read.parquet(s"$indexPath/vectors").count()
-      if (nBase == 0) Double.MaxValue else nDelta.toDouble / nBase
-    }
+    val fire = graphTier(spark, indexPath).compactionDue(maxGens, maxRatio)
     if (fire)
       compactGraphIndex(spark, indexPath, graphK, graphRounds, nPlanes,
         dim, idCol, vecCol)
     fire
-  }
-
-  /** Remove a graph tier's delta generations — vectors AND edges, the
-    * whole `graph_delta/` root (replay idempotence — the
-    * [[dropIvfDelta]] twin). Also clears the pre-generation flat
-    * `delta_edges`/`delta_vectors` layout so tiers persisted by older
-    * builds can't serve stale appends beside the new generations. */
-  def dropGraphDelta(spark: org.apache.spark.sql.SparkSession, indexPath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(graphDeltaRoot(indexPath), s"$indexPath/delta_edges",
-        s"$indexPath/delta_vectors")
-      .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    ()
   }
 
   /** Completion marker for the PQ tier, written strictly AFTER both PQ
@@ -1441,12 +1407,16 @@ object Similarity {
   def pqFingerprint(mSub: Int, subDim: Int, ks: Int): String =
     s"ivfadc:$mSub:$subDim:$ks"
 
+  /** The PQ tier inside the IVF index root at `indexPath`; its marker
+    * carries [[pqFingerprint]]. */
+  def pqTier(spark: org.apache.spark.sql.SparkSession, indexPath: String): Tier =
+    new Tier(spark, indexPath, PqCompleteMarker)
+
   /** True iff a complete PQ tier with exactly this codec + geometry is
-    * present at `indexPath` ([[Markers]]). */
+    * present at `indexPath`. */
   def pqTierServes(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                    mSub: Int, subDim: Int, ks: Int): Boolean =
-    Markers.matches(spark, s"$indexPath/$PqCompleteMarker",
-      pqFingerprint(mSub, subDim, ks))
+    pqTier(spark, indexPath).serves(pqFingerprint(mSub, subDim, ks))
 
   /** Persist the PQ tier BESIDE a built IVF index (the production
     * composition [[knnIvfPq]] derives in-query): codebooks as plain
@@ -1461,33 +1431,28 @@ object Similarity {
                   mSub: Int = 4, subDim: Int = 16, ks: Int = 8,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   listCol: String = "label"): DataFrame = {
-    val marker = new org.apache.hadoop.fs.Path(s"$indexPath/$PqCompleteMarker")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$indexPath/$IndexCompleteMarker")),
-      s"buildPqTier: no complete IVF index at $indexPath")
-    fs.delete(marker, false)
-    val lists = spark.read.parquet(s"$indexPath/lists")
-      .select(col(idCol), col(vecCol), col(listCol))
-    // residual PQ (the knnIvfPq discipline): codes quantize
-    // x − μ_list(x) against the index's own persisted centroids
-    val cent = spark.read.parquet(s"$indexPath/centroids")
-    val rlists = lists
-      .join(broadcast(cent), listCol)
-      .select(col(idCol),
-        zip_with(col(vecCol), col("__centroid"),
-          (a, b) => a.cast("double") - b).as("__r"))
-    val (cb, codes) = pqTrain(rlists, mSub, subDim, ks, idCol, "__r")
-    // codebooks and codes are independent writes to disjoint paths
-    // (both frames hang off pqTrain's checkpointed subvector table) —
-    // overlap them (round 19, guide §2.6); marker strictly after both
-    graft.core.Par.run(
-      () => cb.write.mode("overwrite").parquet(s"$indexPath/pq_codebooks"),
-      () => codes.join(lists.select(col(idCol), col(listCol)), idCol)
-        .write.mode("overwrite").partitionBy(listCol)
-        .parquet(s"$indexPath/pq_codes"))
-    Markers.write(spark, s"$indexPath/$PqCompleteMarker",
-      pqFingerprint(mSub, subDim, ks))
+    ivfTier(spark, indexPath).require("buildPqTier")
+    pqTier(spark, indexPath).rewrite(pqFingerprint(mSub, subDim, ks)) {
+      val lists = spark.read.parquet(s"$indexPath/lists")
+        .select(col(idCol), col(vecCol), col(listCol))
+      // residual PQ (the knnIvfPq discipline): codes quantize
+      // x − μ_list(x) against the index's own persisted centroids
+      val cent = spark.read.parquet(s"$indexPath/centroids")
+      val rlists = lists
+        .join(broadcast(cent), listCol)
+        .select(col(idCol),
+          zip_with(col(vecCol), col("__centroid"),
+            (a, b) => a.cast("double") - b).as("__r"))
+      val (cb, codes) = pqTrain(rlists, mSub, subDim, ks, idCol, "__r")
+      // codebooks and codes are independent writes to disjoint paths
+      // (both frames hang off pqTrain's checkpointed subvector table),
+      // so they overlap; the marker lands strictly after both
+      graft.core.Par.run(
+        () => cb.write.mode("overwrite").parquet(s"$indexPath/pq_codebooks"),
+        () => codes.join(lists.select(col(idCol), col(listCol)), idCol)
+          .write.mode("overwrite").partitionBy(listCol)
+          .parquet(s"$indexPath/pq_codes"))
+    }
     spark.read.parquet(s"$indexPath/pq_codebooks")
   }
 
@@ -1509,10 +1474,9 @@ object Similarity {
                       idCol: String = "vec_id", vecCol: String = "embedding",
                       listCol: String = "label"): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(new org.apache.hadoop.fs.Path(
-      s"$indexPath/$PqCompleteMarker")),
+    // the marker's geometry is not checked here: it is read from the
+    // tier's own codebooks below
+    require(pqTier(spark, indexPath).marked,
       s"knnIvfPqIndexed: no complete PQ tier at $indexPath")
     // staleness guard: the codes tier is built from the BASE lists, so
     // probing it while live delta generations exist would silently miss
@@ -1520,7 +1484,7 @@ object Similarity {
     // ids). Refusing is the honest contract: compact the deltas into
     // the base (compactIvfIndex) and rebuild the tier, or probe the
     // vector tier (knnIvfUpserted) until then.
-    require(completedDeltaGens(fs, indexPath).isEmpty,
+    require(ivfTier(spark, indexPath).gens.isEmpty,
       s"knnIvfPqIndexed: live delta generations at $indexPath — the PQ " +
         "codes tier predates them; compactIvfIndex + buildPqTier first " +
         "(or probe knnIvfUpserted)")
@@ -1618,6 +1582,7 @@ object Similarity {
                      probes: DataFrame, k: Int, nprobe: Int = 2,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      listCol: String = "label"): DataFrame = {
+    ivfTier(spark, indexPath).require("knnIvfUpserted")
     val base = spark.read.parquet(s"$indexPath/lists")
       .select(col(idCol), col(vecCol), col(listCol))
     val lists = deltaSegment(spark, indexPath, idCol, vecCol, listCol) match {
@@ -1652,32 +1617,11 @@ object Similarity {
         col("__top").getItem(0).getField("id").as(listCol))
   }
 
-  /** Per-generation completion marker, written strictly AFTER the
-    * generation's parquet commit — the delta-side mirror of
-    * [[IndexCompleteMarker]] (round-7 advisor): a crash mid delta write
-    * must leave an INVISIBLE generation (no marker → never read), not a
-    * half-committed directory that probes serve as valid. */
+  /** Per-generation completion marker of the IVF and graph tiers,
+    * written strictly AFTER the generation's parquet commit: a crash mid
+    * delta write leaves an INVISIBLE generation (no marker → never
+    * read), not a half-committed directory that probes serve as valid. */
   val DeltaCompleteMarker = "_GRAFT_DELTA_COMPLETE"
-
-  private def deltaRoot(indexPath: String) = s"$indexPath/lists_delta"
-  private def deltaGenPath(indexPath: String, gen: Int) =
-    s"${deltaRoot(indexPath)}/gen=$gen"
-
-  /** Generation numbers of all COMPLETED delta segments, ascending.
-    * Directories without the completion marker (crashed writes) are
-    * invisible here and get reclaimed either by the next upsert reusing
-    * their number (overwrite) or by compaction deleting the root. */
-  private def completedDeltaGens(fs: org.apache.hadoop.fs.FileSystem,
-                                 indexPath: String): Seq[Int] = {
-    val root = new org.apache.hadoop.fs.Path(deltaRoot(indexPath))
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .flatMap(s => s.getPath.getName.stripPrefix("gen=").toIntOption)
-      .filter(g => fs.exists(new org.apache.hadoop.fs.Path(
-        s"${deltaGenPath(indexPath, g)}/$DeltaCompleteMarker")))
-      .sorted
-  }
 
   /** Incremental index maintenance (round-6 verdict #8 — the missing
     * half of the build-once story): assign a batch of NEW vectors to the
@@ -1712,21 +1656,14 @@ object Similarity {
                      newVecs: DataFrame, idCol: String = "vec_id",
                      vecCol: String = "embedding",
                      listCol: String = "label"): DataFrame = {
+    val tier = ivfTier(spark, indexPath)
+    tier.require("upsertIvfIndex")
     // probe the INPUT for emptiness (one scan-limit-1 job), not the
     // assignment frame — the latter would execute the broadcast argmax
     // once for the check and again for the write
-    if (!newVecs.select(col(idCol)).isEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(indexPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // next = max COMPLETED + 1: a crashed (marker-less) attempt at
-      // that number is cleared by the overwrite and its slot reused
-      val next = completedDeltaGens(fs, indexPath).lastOption.getOrElse(0) + 1
-      assignToIndex(spark, indexPath, newVecs, idCol, vecCol, listCol)
-        .write.mode("overwrite").partitionBy(listCol)
-        .parquet(deltaGenPath(indexPath, next))
-      fs.create(new org.apache.hadoop.fs.Path(
-        s"${deltaGenPath(indexPath, next)}/$DeltaCompleteMarker"), true).close()
-    }
+    if (!newVecs.select(col(idCol)).isEmpty)
+      tier.append(gen => assignToIndex(spark, indexPath, newVecs, idCol, vecCol, listCol)
+        .write.mode("overwrite").partitionBy(listCol).parquet(gen))
     val base = spark.read.parquet(s"$indexPath/lists")
       .groupBy(col(listCol).cast("int").as(listCol))
       .agg(count(lit(1)).as("n_base"))
@@ -1753,31 +1690,20 @@ object Similarity {
   private def deltaSegment(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String, idCol: String, vecCol: String,
                            listCol: String): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = completedDeltaGens(fs, indexPath)
+    val tier = ivfTier(spark, indexPath)
+    val gens = tier.gens
     if (gens.isEmpty) None
     else if (gens.sizeIs == 1)
-      Some(spark.read.parquet(deltaGenPath(indexPath, gens.head))
+      Some(spark.read.parquet(tier.genPath(gens.head))
         .select(col(idCol), col(vecCol), col(listCol)))
     else Some(
-      gens.map(g => spark.read.parquet(deltaGenPath(indexPath, g))
+      gens.map(g => spark.read.parquet(tier.genPath(g))
           .select(col(idCol), col(vecCol), col(listCol), lit(g).as("__gen")))
         .reduce(_ unionByName _)
         .groupBy(col(idCol))
         .agg(max_by(struct(col(vecCol), col(listCol)), col("__gen")).as("__r"))
         .select(col(idCol), col(s"__r.$vecCol").as(vecCol),
           col(s"__r.$listCol").as(listCol)))
-  }
-
-  /** Discard ALL delta generations without folding them into the base —
-    * the upserted vectors are gone from probes after this. A reset hook
-    * for rebuild-from-source flows and tests; production maintenance
-    * retires deltas through [[compactIvfIndex]], which preserves them. */
-  def dropIvfDelta(spark: org.apache.spark.sql.SparkSession,
-                   indexPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(deltaRoot(indexPath))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** COMPACTION — the LSM fold that answers a tripped `recluster` flag
@@ -1804,13 +1730,13 @@ object Similarity {
     * the next compaction reclaims them. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                       idCol: String = "vec_id", vecCol: String = "embedding",
-                      listCol: String = "label"): DataFrame =
+                      listCol: String = "label"): DataFrame = {
+    val tier = ivfTier(spark, indexPath)
+    tier.require("compactIvfIndex")
     deltaSegment(spark, indexPath, idCol, vecCol, listCol) match {
       case None => // nothing outstanding: compaction is a no-op read
         spark.read.parquet(s"$indexPath/centroids")
       case Some(d) =>
-        val fs = new org.apache.hadoop.fs.Path(indexPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
         // EAGER checkpoint instead of a staging parquet round-trip
         // (round 18 — the [[compactGraphIndex]] discipline): the merged
         // frame reads from `lists`, which [[buildIvfIndex]] overwrites,
@@ -1825,10 +1751,11 @@ object Similarity {
           .unionByName(d)
           .localCheckpoint(true)
         val cent = buildIvfIndex(all, indexPath, idCol, vecCol, listCol)
-        fs.delete(new org.apache.hadoop.fs.Path(deltaRoot(indexPath)), true)
+        tier.dropGens()
         org.apache.spark.sql.GraftColumnBridge.unpersistLocalCheckpoint(all)
         cent
     }
+  }
 
   /** IVF search against a [[buildIvfIndex]] index: identical semantics
     * (and oracle) to [[knnIvf]], but the centroid build is a 2-file read
@@ -1845,11 +1772,13 @@ object Similarity {
   def knnIvfIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                     probes: DataFrame, k: Int, nprobe: Int = 2,
                     idCol: String = "vec_id", vecCol: String = "embedding",
-                    listCol: String = "label"): DataFrame =
+                    listCol: String = "label"): DataFrame = {
+    ivfTier(spark, indexPath).require("knnIvfIndexed")
     ivfSearch(spark.read.parquet(s"$indexPath/centroids"),
       spark.read.parquet(s"$indexPath/lists")
         .select(col(idCol), col(vecCol), col(listCol)),
       probes, k, nprobe, idCol, vecCol, listCol, broadcastProbes = true)
+  }
 
   /** AUTO-COMPACTION POLICY for the IVF index — the
     * [[maybeCompactGraphIndex]] twin, same two bars: fold when
@@ -1864,15 +1793,7 @@ object Similarity {
                            maxGens: Int = 4, maxRatio: Double = 0.25,
                            idCol: String = "vec_id", vecCol: String = "embedding",
                            listCol: String = "label"): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gens = completedDeltaGens(fs, indexPath)
-    val fire = gens.nonEmpty && (gens.sizeIs >= maxGens || {
-      val nDelta = gens.map(g => spark.read
-        .parquet(deltaGenPath(indexPath, g)).count()).sum
-      val nBase = spark.read.parquet(s"$indexPath/lists").count()
-      nBase == 0 || nDelta.toDouble / nBase >= maxRatio
-    })
+    val fire = ivfTier(spark, indexPath).compactionDue(maxGens, maxRatio)
     if (fire) compactIvfIndex(spark, indexPath, idCol, vecCol, listCol)
     fire
   }

@@ -253,9 +253,10 @@ object Text {
   //  Persisted BPE tokenizer tier (round 13)                            //
   // ------------------------------------------------------------------ //
 
-  /** Completion marker for a persisted BPE model — fingerprint content
-    * per the [[Markers]] discipline (merge count + tokenizer codec). */
-  val BpeCompleteMarker = "_GRAFT_BPE_COMPLETE"
+  /** A persisted BPE model at `path`; its marker carries
+    * [[bpeFingerprint]] (merge count + tokenizer codec). */
+  private def bpeTier(spark: org.apache.spark.sql.SparkSession, path: String): Tier =
+    new Tier(spark, path, "_GRAFT_BPE_COMPLETE")
 
   def bpeFingerprint(merges: Int): String = s"bpe:m$merges:charinit-v1"
 
@@ -263,7 +264,7 @@ object Text {
     * configuration is persisted at `path`. */
   def bpeModelServes(spark: org.apache.spark.sql.SparkSession, path: String,
                      merges: Int): Boolean =
-    Markers.matches(spark, s"$path/$BpeCompleteMarker", bpeFingerprint(merges))
+    bpeTier(spark, path).serves(bpeFingerprint(merges))
 
   /** Train on `docsDf` and PERSIST the tokenizer — the merge table IS
     * the model (rank-ordered symbol pairs; everything else about
@@ -271,10 +272,10 @@ object Text {
   def bpeSaveModel(docsDf: DataFrame, path: String, merges: Int = 8,
                    textCol: String = "text"): DataFrame = {
     val spark = docsDf.sparkSession
-    Markers.delete(spark, s"$path/$BpeCompleteMarker")
-    bpeTrain(docsDf, merges, textCol)
-      .write.mode("overwrite").parquet(s"$path/merges")
-    Markers.write(spark, s"$path/$BpeCompleteMarker", bpeFingerprint(merges))
+    bpeTier(spark, path).rewrite(bpeFingerprint(merges)) {
+      bpeTrain(docsDf, merges, textCol)
+        .write.mode("overwrite").parquet(s"$path/merges")
+    }
     spark.read.parquet(s"$path/merges")
   }
 

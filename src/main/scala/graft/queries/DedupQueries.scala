@@ -122,12 +122,6 @@ object DedupQueries {
     * every decision — shingle hashes, 64 signature mins, 16 band keys, the
     * bucket self-join — is hash-checkable against DuckDB. The production
     * path keeps xxhash64 (faster at scale); this proves the LSH logic. */
-  /** The `dedup_groups` pair pipeline on its fixed sample — exposed for
-    * the isolated CC A/B harness ([[graft.CcBench]]), which pre-materializes
-    * these pairs so algorithm timings exclude the LSH stage entirely. */
-  private[graft] def portablePairsFor(spark: SparkSession, dir: String): DataFrame =
-    portablePairs(Tables.documents(spark, dir).filter(col("doc_id") < PortableCap))
-
   /** Engine-neutral (band, bucket) key rows — the portable-LSH banding
     * stage on its own, shared by the self-join candidate pipeline below
     * and the persisted band tier ([[Dedup.buildNearDupIndex]] et al.),
@@ -175,7 +169,7 @@ object DedupQueries {
   private[queries] val NdiCap = 500L
 
   /** Banding fingerprint stored INSIDE the tier marker
-    * ([[Dedup.ndiServes]]) — hash family, modulus, shingle k, signature
+    * ([[Dedup.nearDupTier]]) — hash family, modulus, shingle k, signature
     * width, band count. Any re-cut of these invalidates every persisted
     * tier instead of silently serving keys cut the old way. */
   private[queries] val NdiFingerprint = s"ndi:md5lsh:p${PortableLsh.P}:k3:h64:b16"
@@ -210,7 +204,7 @@ object DedupQueries {
   def ndiQueryQ(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val path = ndiRoot("graft_ndi_index", dir)
-    if (!Dedup.ndiServes(spark, path, NdiFingerprint))
+    if (!Dedup.nearDupTier(spark, path).serves(NdiFingerprint))
       Dedup.buildNearDupIndex(spark, path,
         portableKeyRows(docs.filter(col("doc_id") < NdiBase)), NdiFingerprint)
     ndiDecision(spark, path,
@@ -249,10 +243,11 @@ object DedupQueries {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
     val path = ndiRoot("graft_ndi_stream", dir)
-    if (!Dedup.ndiServes(spark, path, NdiFingerprint))
+    val tier = Dedup.nearDupTier(spark, path)
+    if (!tier.serves(NdiFingerprint))
       Dedup.buildNearDupIndex(spark, path,
         portableKeyRows(docs.filter(col("doc_id") < NdiBase)), NdiFingerprint)
-    Dedup.dropNdiDeltas(spark, path)
+    tier.dropGens()
     val arrivals = docs
       .filter(col("doc_id") >= NdiBase && col("doc_id") < NdiCap)
       .select(col("doc_id"), col("text"))

@@ -233,9 +233,9 @@ object SimilarityQueries {
     * serve/arrival re-pays exactly the corpus-linear work the bounded
     * layer exists to remove — the layer is a build-time cost, like the
     * graph it enters). Marker-gated beside the other tier roots with a
-    * FINGERPRINTED marker (r16 ADVICE #3, the [[graft.ext.Markers]]
-    * discipline): [[TierRoots]] keys the path by corpus identity, and
-    * the marker content pins how the layer was computed, so a re-cut of
+    * FINGERPRINTED marker ([[graft.ext.Tier]]): [[TierRoots]] keys the
+    * path by corpus identity, and the marker content pins how the layer
+    * was computed, so a re-cut of
     * the entry construction reads as "no tier" instead of serving heads
     * cut the old way. The persisted rows are the deterministic layer
     * verbatim, so readers are hash-identical to the recompute form.
@@ -254,16 +254,12 @@ object SimilarityQueries {
     s"entry:cluster-heads:h$ClusterHeads:cosine-topk:v1"
   private def ensureEntryTier(spark: SparkSession, dir: String): String = {
     val path = s"${indexRoot("graft_graph_entry", dir)}_h$ClusterHeads"
-    val markerPath = s"$path/${Similarity.GraphCompleteMarker}"
-    if (!graft.ext.Markers.matches(spark, markerPath, EntryTierFingerprint)) {
-      graft.ext.Markers.delete(spark, markerPath)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/layer"), true)
-      Similarity.clusterEntryLayer(Tables.embeddings(spark, dir), ClusterHeads)
-        .write.mode("overwrite").parquet(s"$path/layer")
-      graft.ext.Markers.write(spark, markerPath, EntryTierFingerprint)
-    }
+    val tier = new graft.ext.Tier(spark, path, Similarity.GraphCompleteMarker)
+    if (!tier.serves(EntryTierFingerprint))
+      tier.rewrite(EntryTierFingerprint) {
+        Similarity.clusterEntryLayer(Tables.embeddings(spark, dir), ClusterHeads)
+          .write.mode("overwrite").parquet(s"$path/layer")
+      }
     path
   }
 
@@ -285,7 +281,7 @@ object SimilarityQueries {
     * stays hash-identical to its rebuild-each-time form). */
   private def ensureGraphTier(spark: SparkSession, dir: String): String = {
     val path = s"${indexRoot("graft_graph_index", dir)}_k${GraphK}r$GraphRounds"
-    if (!new java.io.File(s"$path/${Similarity.GraphCompleteMarker}").exists())
+    if (!Similarity.graphTier(spark, path).serves())
       Similarity.buildGraphIndex(Tables.embeddings(spark, dir), path,
         graphK = GraphK, graphRounds = GraphRounds)
     path
@@ -326,7 +322,7 @@ object SimilarityQueries {
   private def ensureGraphBaseTier(spark: SparkSession, dir: String): String = {
     val path =
       s"${indexRoot("graft_stream_graph_index", dir)}_k${GraphK}r$GraphRounds"
-    if (!new java.io.File(s"$path/${Similarity.GraphCompleteMarker}").exists())
+    if (!Similarity.graphTier(spark, path).serves())
       Similarity.buildGraphIndex(
         Tables.embeddings(spark, dir).filter(col("vec_id") < UpsertSplit),
         path, graphK = GraphK, graphRounds = GraphRounds)
@@ -361,7 +357,7 @@ object SimilarityQueries {
     import spark.implicits._
     val path = ensureGraphBaseTier(spark, dir)
     val e = Tables.embeddings(spark, dir)
-    Similarity.dropGraphDelta(spark, path)
+    Similarity.graphTier(spark, path).dropGens()
     val arrivals = e
       .filter(col("vec_id") >= UpsertSplit)
       .select(col("vec_id"), col("embedding"))
@@ -1083,7 +1079,7 @@ object SimilarityQueries {
     * forever, and every later probe read a half-built index. */
   private def ensureIvfIndex(spark: SparkSession, dir: String): String = {
     val path = ivfIndexPath(dir)
-    if (!new java.io.File(s"$path/${Similarity.IndexCompleteMarker}").exists())
+    if (!Similarity.ivfTier(spark, path).serves())
       Similarity.buildIvfIndex(Tables.embeddings(spark, dir), path)
     path
   }
@@ -1149,9 +1145,9 @@ object SimilarityQueries {
   def annIndexUpsert(spark: SparkSession, dir: String): DataFrame = {
     val path = upsertIndexPath(dir)
     val e = Tables.embeddings(spark, dir)
-    if (!new java.io.File(s"$path/${Similarity.IndexCompleteMarker}").exists())
+    if (!Similarity.ivfTier(spark, path).serves())
       Similarity.buildIvfIndex(e.filter(col("vec_id") < UpsertSplit), path)
-    Similarity.dropIvfDelta(spark, path)
+    Similarity.ivfTier(spark, path).dropGens()
     Similarity.upsertIvfIndex(spark, path, e.filter(col("vec_id") >= UpsertSplit))
   }
 
@@ -1181,9 +1177,9 @@ object SimilarityQueries {
   def annUpsertMulti(spark: SparkSession, dir: String): DataFrame = {
     val path = multiIndexPath(dir)
     val e = Tables.embeddings(spark, dir)
-    if (!new java.io.File(s"$path/${Similarity.IndexCompleteMarker}").exists())
+    if (!Similarity.ivfTier(spark, path).serves())
       Similarity.buildIvfIndex(e.filter(col("vec_id") < UpsertSplit), path)
-    Similarity.dropIvfDelta(spark, path)
+    Similarity.ivfTier(spark, path).dropGens()
     Similarity.upsertIvfIndex(spark, path,
       e.filter(col("vec_id") >= UpsertSplit && col("vec_id") < MultiSplit))
     Similarity.upsertIvfIndex(spark, path, e.filter(col("vec_id") >= MultiSplit))
@@ -1284,9 +1280,9 @@ object SimilarityQueries {
     import spark.implicits._
     val path = streamIndexPath(dir)
     val e = Tables.embeddings(spark, dir)
-    if (!new java.io.File(s"$path/${Similarity.IndexCompleteMarker}").exists())
+    if (!Similarity.ivfTier(spark, path).serves())
       Similarity.buildIvfIndex(e.filter(col("vec_id") < UpsertSplit), path)
-    Similarity.dropIvfDelta(spark, path)
+    Similarity.ivfTier(spark, path).dropGens()
     val arrivals = e
       .filter(col("vec_id") >= UpsertSplit && col("vec_id") < StreamUpsertCap)
       .select(col("vec_id"), col("embedding"))
@@ -1974,7 +1970,7 @@ object SimilarityQueries {
   def searchBm25Indexed(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val path = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, path, LexFingerprint))
+    if (!Lex.tier(spark, path).serves(LexFingerprint))
       Lex.buildLexIndex(spark, path, Tables.documents(spark, dir), LexFingerprint)
     bm25RankCut(Lex.queryLexIndex(spark, path,
       Tables.documents(spark, dir).filter(col("doc_id") < NProbes), MaxDfPct))
@@ -1994,7 +1990,7 @@ object SimilarityQueries {
   def searchBm25Pruned(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val path = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, path, LexFingerprint))
+    if (!Lex.tier(spark, path).serves(LexFingerprint))
       Lex.buildLexIndex(spark, path, Tables.documents(spark, dir), LexFingerprint)
     bm25RankCut(Lex.queryLexIndexPruned(spark, path,
       Tables.documents(spark, dir).filter(col("doc_id") < NProbes), MaxDfPct))
@@ -2013,7 +2009,7 @@ object SimilarityQueries {
   def searchBm25Wand(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val path = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, path, LexFingerprint))
+    if (!Lex.tier(spark, path).serves(LexFingerprint))
       Lex.buildLexIndex(spark, path, Tables.documents(spark, dir), LexFingerprint)
     bm25RankCut(Lex.queryLexIndexWand(spark, path,
       Tables.documents(spark, dir).filter(col("doc_id") < NProbes),
@@ -2045,8 +2041,8 @@ object SimilarityQueries {
     val docs = Tables.documents(spark, dir)
     val path = lexRoot("graft_lex_upsert", dir)
     val arrivals = docs.filter(col("doc_id") >= LexBase && col("doc_id") < LexCap)
-    if (!Lex.lexServes(spark, path, LexFingerprint) ||
-        Lex.lexGens(spark, path).isEmpty) {
+    val tier = Lex.tier(spark, path)
+    if (!tier.serves(LexFingerprint) || tier.gens.isEmpty) {
       Lex.buildLexIndex(spark, path, docs.filter(col("doc_id") < LexBase),
         LexFingerprint)
       Lex.upsertLexIndex(spark, path, arrivals, LexFingerprint)
@@ -2064,7 +2060,7 @@ object SimilarityQueries {
   def searchPrunedRecall(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val path = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, path, LexFingerprint))
+    if (!Lex.tier(spark, path).serves(LexFingerprint))
       Lex.buildLexIndex(spark, path, Tables.documents(spark, dir), LexFingerprint)
     val probeDocs = Tables.documents(spark, dir).filter(col("doc_id") < NProbes)
     val full = bm25RankCut(Lex.queryLexIndex(spark, path, probeDocs, MaxDfPct))
@@ -2116,7 +2112,7 @@ object SimilarityQueries {
   def searchHybridIndexed(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val lexPath = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, lexPath, LexFingerprint))
+    if (!Lex.tier(spark, lexPath).serves(LexFingerprint))
       Lex.buildLexIndex(spark, lexPath, Tables.documents(spark, dir),
         LexFingerprint)
     val graphPath = ensureGraphTier(spark, dir)
@@ -2146,7 +2142,7 @@ object SimilarityQueries {
   def searchHybridPruned(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val lexPath = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, lexPath, LexFingerprint))
+    if (!Lex.tier(spark, lexPath).serves(LexFingerprint))
       Lex.buildLexIndex(spark, lexPath, Tables.documents(spark, dir),
         LexFingerprint)
     val graphPath = ensureGraphTier(spark, dir)
@@ -2196,7 +2192,7 @@ object SimilarityQueries {
                              prunedLex: Boolean): DataFrame = {
     import graft.ext.Lex
     val lexPath = lexRoot("graft_lex_index", dir)
-    if (!Lex.lexServes(spark, lexPath, LexFingerprint))
+    if (!Lex.tier(spark, lexPath).serves(LexFingerprint))
       Lex.buildLexIndex(spark, lexPath, Tables.documents(spark, dir),
         LexFingerprint)
     val graphPath = ensureGraphTier(spark, dir)

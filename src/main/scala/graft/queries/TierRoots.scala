@@ -10,7 +10,7 @@ package graft.queries
   * — say adding a content hash after an mtime collision — lands
   * everywhere at once. What the file key CANNOT see is how the tier's
   * artifacts were computed; that half lives in the marker fingerprint
-  * ([[graft.ext.Markers]]). */
+  * ([[graft.ext.Tier]]). */
 private[queries] object TierRoots {
   def of(kind: String, dir: String, sourceTable: String): String = {
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp").stripSuffix("/")

@@ -334,36 +334,36 @@ class DedupSpec extends SparkSpec {
       Dedup.queryNearDupIndex(spark, path, p)
         .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
     // no tier: serves=false, upsert refuses
-    Dedup.ndiServes(spark, path, fp) shouldBe false
+    Dedup.nearDupTier(spark, path).serves(fp) shouldBe false
     an[IllegalArgumentException] should be thrownBy
       Dedup.upsertNearDupIndex(spark, path, keys(9L -> "x"), fp)
     // base: 1,2 share "x"; 3 on "y"; 4 on "z"
     Dedup.buildNearDupIndex(spark, path, keys(
       1L -> "x", 2L -> "x", 3L -> "y", 4L -> "z"), fp)
-    Dedup.ndiServes(spark, path, fp) shouldBe true
+    Dedup.nearDupTier(spark, path).serves(fp) shouldBe true
     // the marker's fingerprint gates banding identity, not existence
-    Dedup.ndiServes(spark, path, "ndi:test:v2") shouldBe false
+    Dedup.nearDupTier(spark, path).serves("ndi:test:v2") shouldBe false
     // probe: 10 matches {1,2} → keep-first dup_of 1; 11 matches nothing;
     // 0 matches nothing because only SMALLER indexed ids count
     decide(keys(10L -> "x", 11L -> "q", 0L -> "x")) shouldBe
       Map(10L -> (1L, 2L))
     // upsert gen 1: doc 10 joins the "x" bucket
     Dedup.upsertNearDupIndex(spark, path, keys(10L -> "x"), fp)
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq(1)
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq(1)
     decide(keys(12L -> "x")) shouldBe Map(12L -> (1L, 3L))
     // a CRASHED generation (files, no completion marker) is invisible...
     keys(99L -> "x").write.mode("overwrite")
       .parquet(s"$path/ndi_delta/gen=2/bands")
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq(1)
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq(1)
     decide(keys(12L -> "x")) shouldBe Map(12L -> (1L, 3L))
     // ...and its slot is reclaimed by the next upsert's overwrite
     Dedup.upsertNearDupIndex(spark, path, keys(20L -> "y"), fp)
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq(1, 2)
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq(1, 2)
     decide(keys(21L -> "y")) shouldBe Map(21L -> (3L, 2L))
     // compaction folds gens into the base and serves identically
     Dedup.compactNearDupIndex(spark, path, fp)
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq.empty
-    Dedup.ndiServes(spark, path, fp) shouldBe true
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq.empty
+    Dedup.nearDupTier(spark, path).serves(fp) shouldBe true
     decide(keys(12L -> "x", 21L -> "y")) shouldBe
       Map(12L -> (1L, 3L), 21L -> (3L, 2L))
     // compacting an empty-delta tier is a no-op, not a crash
@@ -383,16 +383,16 @@ class DedupSpec extends SparkSpec {
     Dedup.upsertNearDupIndex(spark, path, keys(10L -> "k1"), fp)
     Dedup.maybeCompactNearDupIndex(spark, path, fp, maxGens = 2,
       maxRatio = Double.PositiveInfinity) shouldBe false
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq(1)
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq(1)
     // second gen reaches the gens bar: fires and folds
     Dedup.upsertNearDupIndex(spark, path, keys(11L -> "k2"), fp)
     Dedup.maybeCompactNearDupIndex(spark, path, fp, maxGens = 2,
       maxRatio = Double.PositiveInfinity) shouldBe true
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq.empty
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq.empty
     // ratio bar: 1 delta row / 8 base rows ≥ 0.1 fires
     Dedup.upsertNearDupIndex(spark, path, keys(12L -> "k3"), fp)
     Dedup.maybeCompactNearDupIndex(spark, path, fp, maxGens = 99,
       maxRatio = 0.1) shouldBe true
-    Dedup.ndiGensForTest(spark, path) shouldBe Seq.empty
+    Dedup.nearDupTier(spark, path).gens shouldBe Seq.empty
   }
 }

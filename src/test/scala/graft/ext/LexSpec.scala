@@ -23,13 +23,13 @@ class LexSpec extends SparkSpec {
   test("lifecycle: fingerprint gate, crash-safe generations, fold-and-retire compaction") {
     val path = s"target/test_lex_${System.nanoTime()}"
     // no tier: serves=false, upsert refuses
-    Lex.lexServes(spark, path, fp) shouldBe false
+    Lex.tier(spark, path).serves(fp) shouldBe false
     an[IllegalArgumentException] should be thrownBy
       Lex.upsertLexIndex(spark, path, docs.limit(1), fp)
     Lex.buildLexIndex(spark, path, docs.filter(col("doc_id") <= 2L), fp)
-    Lex.lexServes(spark, path, fp) shouldBe true
+    Lex.tier(spark, path).serves(fp) shouldBe true
     // fingerprint gates tokenizer identity, not existence
-    Lex.lexServes(spark, path, "lex:test:v2") shouldBe false
+    Lex.tier(spark, path).serves("lex:test:v2") shouldBe false
 
     // probe doc 10 shares alpha/beta with docs 1,2 — both candidates,
     // scored; max_df = 100% admits every token
@@ -48,24 +48,24 @@ class LexSpec extends SparkSpec {
     // of n 3, inside max_df 100%) with the probe, so it becomes a
     // candidate
     Lex.upsertLexIndex(spark, path, docs.filter(col("doc_id") === 3L), fp)
-    Lex.lexGensForTest(spark, path) shouldBe Seq(1)
+    Lex.tier(spark, path).gens shouldBe Seq(1)
     hits(100) shouldBe Map(10L -> Set(1L, 2L, 3L))
 
     // a CRASHED generation (files, no marker) is invisible...
     val (p4, d4) = Lex.factTables(docs.filter(col("doc_id") === 4L))
     p4.write.mode("overwrite").parquet(s"$path/lex_delta/gen=2/postings")
     d4.write.mode("overwrite").parquet(s"$path/lex_delta/gen=2/dlen")
-    Lex.lexGensForTest(spark, path) shouldBe Seq(1)
+    Lex.tier(spark, path).gens shouldBe Seq(1)
     hits(100) shouldBe Map(10L -> Set(1L, 2L, 3L))
     // ...and reclaimed by the next upsert
     Lex.upsertLexIndex(spark, path, docs.filter(col("doc_id") === 4L), fp)
-    Lex.lexGensForTest(spark, path) shouldBe Seq(1, 2)
+    Lex.tier(spark, path).gens shouldBe Seq(1, 2)
     hits(100) shouldBe Map(10L -> Set(1L, 2L, 3L, 4L))
 
     // compaction folds and retires; decisions identical
     Lex.compactLexIndex(spark, path, fp)
-    Lex.lexGensForTest(spark, path) shouldBe Seq.empty
-    Lex.lexServes(spark, path, fp) shouldBe true
+    Lex.tier(spark, path).gens shouldBe Seq.empty
+    Lex.tier(spark, path).serves(fp) shouldBe true
     hits(100) shouldBe Map(10L -> Set(1L, 2L, 3L, 4L))
     // no-op compaction doesn't crash
     Lex.compactLexIndex(spark, path, fp)
@@ -252,7 +252,7 @@ class LexSpec extends SparkSpec {
     Lex.upsertLexIndex(spark, path, docs.filter(col("doc_id") === 4L), fp)
     Lex.maybeCompactLexIndex(spark, path, fp, maxGens = 2,
       maxRatio = Double.PositiveInfinity) shouldBe true
-    Lex.lexGensForTest(spark, path) shouldBe Seq.empty
+    Lex.tier(spark, path).gens shouldBe Seq.empty
   }
 
   test("crash mid-compact reads as no tier, never doubled postings") {
@@ -264,18 +264,18 @@ class LexSpec extends SparkSpec {
     val (postings, dlen) = Lex.lexTierTables(spark, path)
     val allP = postings.localCheckpoint(true)
     val allD = dlen.localCheckpoint(true)
-    Markers.delete(spark, s"$path/${Lex.LexCompleteMarker}")
+    Lex.tier(spark, path).retract()
     allP.write.mode("overwrite").parquet(s"$path/postings")
     allD.write.mode("overwrite").parquet(s"$path/dlen")
     // no marker: the tier refuses to serve (a marker-less merged read
     // WOULD double-count doc 3's postings — base now holds them AND
     // gen 1 is still live)
-    Lex.lexServes(spark, path, fp) shouldBe false
+    Lex.tier(spark, path).serves(fp) shouldBe false
     an[IllegalArgumentException] should be thrownBy
       Lex.upsertLexIndex(spark, path, docs.limit(1), fp)
     // recovery = rebuild, which drops the stale generations first
     Lex.buildLexIndex(spark, path, docs.filter(col("doc_id") <= 3L), fp)
-    Lex.lexGensForTest(spark, path) shouldBe Seq.empty
-    Lex.lexServes(spark, path, fp) shouldBe true
+    Lex.tier(spark, path).gens shouldBe Seq.empty
+    Lex.tier(spark, path).serves(fp) shouldBe true
   }
 }

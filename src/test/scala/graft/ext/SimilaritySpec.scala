@@ -702,7 +702,7 @@ class SimilaritySpec extends SparkSpec {
     new java.io.File(s"$path/graph_delta").exists() shouldBe false
     // replay idempotence: a re-run tier (drop + same upserts) serves the
     // same delta content as the first run did
-    Similarity.dropGraphDelta(spark, path)
+    Similarity.graphTier(spark, path).dropGens()
     Similarity.graphDeltaEdges(spark, path) shouldBe None
   }
 
@@ -822,8 +822,8 @@ class SimilaritySpec extends SparkSpec {
     report4.map(r => (r._1, r._2, r._3)) shouldBe
       List((0, 6L, 0L), (1, 6L, 4L), (2, 6L, 3L))
 
-    // dropIvfDelta: all generations retracted, probe falls back to base
-    Similarity.dropIvfDelta(spark, path)
+    // dropGens: all generations retracted, probe falls back to base
+    Similarity.ivfTier(spark, path).dropGens()
     val report5 = Similarity.upsertIvfIndex(spark, path, emptyBatch)
       .as[(Int, Long, Long, Long, Boolean)].collect().toList
     report5.map(r => (r._1, r._2, r._3)) shouldBe

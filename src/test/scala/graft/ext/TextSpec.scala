@@ -107,7 +107,7 @@ class TextSpec extends SparkSpec {
     Text.bpeSaveModel(train, path, merges = 3)
     Text.bpeModelServes(spark, path, 3) shouldBe true
     // fingerprint: a model trained with a different merge count must
-    // read as absent, never serve (the Markers discipline)
+    // read as absent, never serve (the Tier marker discipline)
     Text.bpeModelServes(spark, path, 8) shouldBe false
     def inv(df: org.apache.spark.sql.DataFrame) = df
       .select("unit", "n_occurrences", "n_types")

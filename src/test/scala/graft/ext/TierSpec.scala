@@ -1,0 +1,179 @@
+package graft.ext
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.SparkSpec
+
+/** The persisted-tier lifecycle ([[Tier]]) on every tier that takes
+  * arrival generations: BM25 postings, IVF lists, the kNN graph and
+  * near-dup bands. A writer killed between a generation's files and its
+  * marker must leave a tier that serves the last completed state and
+  * whose next append reclaims the slot; a base whose marker is gone must
+  * refuse to grow or compact. */
+class TierSpec extends SparkSpec {
+  import TierSpec.Case
+  import spark.implicits._
+
+  private def rows(df: DataFrame): Set[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSet
+
+  private val Inf = Double.PositiveInfinity
+
+  private val lexFp = "lex:tier-spec:v1"
+  private val lexDocs = Seq((1L, "alpha beta gamma"), (2L, "alpha delta"),
+    (3L, "beta epsilon"), (4L, "gamma zeta")).toDF("doc_id", "text")
+  private val lexProbe = Seq((10L, "alpha beta gamma zeta")).toDF("doc_id", "text")
+
+  private val dim = 8
+  private val rng = new scala.util.Random(29)
+  private def vec(): Seq[Float] = Seq.fill(dim)(rng.nextFloat() - 0.5f)
+  private val centers = Seq.fill(3)(vec())
+  private def near(c: Int): Seq[Float] =
+    centers(c).map(x => x + 0.05f * (rng.nextFloat() - 0.5f))
+  private val ivfBase = (for (c <- 0 until 3; j <- 0 until 6)
+    yield (c * 100L + j, c, near(c))).toDF("vec_id", "label", "embedding")
+  private val ivfBatches = Map(
+    1 -> (50L until 53L).map(i => (i, near(1))).toDF("vec_id", "embedding"),
+    2 -> (60L until 63L).map(i => (i, near(2))).toDF("vec_id", "embedding"))
+  private val ivfProbe = Seq((999L, centers(1))).toDF("vec_id", "embedding")
+
+  private val graphBase = (0L until 30L).map(i => (i, vec())).toDF("vec_id", "embedding")
+  private val graphBatches = Map(
+    1 -> Seq((30L, vec()), (31L, vec())).toDF("vec_id", "embedding"),
+    2 -> Seq((32L, vec()), (33L, vec())).toDF("vec_id", "embedding"))
+
+  private val ndiFp = "ndi:tier-spec:v1"
+  private val ndiKeys = Seq((1L, "k1"), (2L, "k2"), (3L, "k5"), (4L, "k1"))
+    .toDF("doc_id", "key")
+  private val ndiProbe = Seq((100L, "k1"), (100L, "k5")).toDF("doc_id", "key")
+
+  private val cases = Seq(
+    Case("lex",
+      tier = Lex.tier(spark, _),
+      build = p => Lex.buildLexIndex(spark, p, lexDocs.filter(col("doc_id") <= 2L), lexFp),
+      upsert = (p, i) =>
+        Lex.upsertLexIndex(spark, p, lexDocs.filter(col("doc_id") === 2L + i), lexFp),
+      compact = Lex.compactLexIndex(spark, _, lexFp),
+      maybeCompact = Lex.maybeCompactLexIndex(spark, _, lexFp, maxGens = 2, maxRatio = Inf),
+      serve = p => rows(Lex.queryLexIndex(spark, p, lexProbe, 100)
+        .select("probe_id", "cand_id")),
+      plant = { dir =>
+        val (postings, dlen) = Lex.factTables(Seq((99L, "alpha beta gamma zeta"))
+          .toDF("doc_id", "text"))
+        postings.write.parquet(s"$dir/postings")
+        dlen.write.parquet(s"$dir/dlen")
+      }),
+    Case("ivf",
+      tier = Similarity.ivfTier(spark, _),
+      build = p => { Similarity.buildIvfIndex(ivfBase, p); () },
+      upsert = (p, i) => { Similarity.upsertIvfIndex(spark, p, ivfBatches(i)); () },
+      compact = p => { Similarity.compactIvfIndex(spark, p); () },
+      maybeCompact = Similarity.maybeCompactIvfIndex(spark, _, maxGens = 2, maxRatio = Inf),
+      serve = p => rows(Similarity.knnIvfUpserted(spark, p, ivfProbe, k = 5, nprobe = 3)
+        .select("probe_id", "neighbor_id")),
+      plant = dir => Seq((77L, 1, centers(1))).toDF("vec_id", "label", "embedding")
+        .write.partitionBy("label").parquet(dir)),
+    Case("graph",
+      tier = Similarity.graphTier(spark, _),
+      build = p => {
+        Similarity.buildGraphIndex(graphBase, p, graphK = 5, graphRounds = 2, dim = dim); ()
+      },
+      upsert = (p, i) => Similarity.upsertGraphIndex(spark, p, graphBatches(i),
+        k = 5, beam = 10, hops = 2),
+      compact = p => {
+        Similarity.compactGraphIndex(spark, p, graphK = 5, graphRounds = 2, dim = dim); ()
+      },
+      maybeCompact = Similarity.maybeCompactGraphIndex(spark, _, maxGens = 2,
+        maxRatio = Inf, graphK = 5, graphRounds = 2, dim = dim),
+      serve = p => Similarity.graphDeltaEdges(spark, p)
+        .map(e => rows(e.select("vec_id", "neighbor_id"))).getOrElse(Set.empty),
+      plant = dir => Seq((99L, 0L, 1.0)).toDF("vec_id", "neighbor_id", "cos_sim")
+        .write.parquet(s"$dir/edges")),
+    Case("near-dup",
+      tier = Dedup.nearDupTier(spark, _),
+      build = p => Dedup.buildNearDupIndex(spark, p, ndiKeys.filter(col("doc_id") <= 2L), ndiFp),
+      upsert = (p, i) =>
+        Dedup.upsertNearDupIndex(spark, p, ndiKeys.filter(col("doc_id") === 2L + i), ndiFp),
+      compact = Dedup.compactNearDupIndex(spark, _, ndiFp),
+      maybeCompact = Dedup.maybeCompactNearDupIndex(spark, _, ndiFp, maxGens = 2,
+        maxRatio = Inf),
+      serve = p => rows(Dedup.queryNearDupIndex(spark, p, ndiProbe)),
+      plant = dir => Seq((0L, "k1")).toDF("doc_id", "key").write.parquet(s"$dir/bands")))
+
+  private def root(c: Case) = s"target/test_tier_${c.name}_${System.nanoTime()}"
+
+  for (c <- cases)
+    test(s"${c.name}: a crashed generation is invisible and reclaimed; a crashed base refuses upsert and compaction") {
+      val path = root(c)
+      val tier = c.tier(path)
+      c.build(path)
+      c.upsert(path, 1)
+      tier.gens shouldBe Seq(1)
+      val served = c.serve(path)
+
+      // killed mid-append: generation 2's files land, its marker never does
+      c.plant(tier.genPath(2))
+      tier.gens shouldBe Seq(1)
+      c.serve(path) shouldBe served
+
+      // the next append reclaims the slot: the tier serves exactly what a
+      // tier that never crashed serves
+      c.upsert(path, 2)
+      tier.gens shouldBe Seq(1, 2)
+      val clean = s"${path}_clean"
+      c.build(clean)
+      c.upsert(clean, 1)
+      c.upsert(clean, 2)
+      c.serve(path) shouldBe c.serve(clean)
+
+      // killed mid-rewrite: the base marker is retracted and never written
+      tier.retract()
+      an[IllegalArgumentException] should be thrownBy c.upsert(path, 2)
+      an[IllegalArgumentException] should be thrownBy c.compact(path)
+      tier.gens shouldBe Seq(1, 2)
+    }
+
+  test("below the gens bar at maxRatio = ∞, auto-compaction runs no Spark job on any tier") {
+    for (c <- cases) withClue(s"${c.name}: ") {
+      val path = root(c)
+      c.build(path)
+      c.upsert(path, 1)
+      var fired = true
+      jobsOf { fired = c.maybeCompact(path) } shouldBe 0
+      fired shouldBe false
+      c.tier(path).gens shouldBe Seq(1)
+    }
+  }
+
+  test("IVF entry points refuse an index whose build never completed") {
+    val path = s"target/test_tier_ivf_marker_${System.nanoTime()}"
+    Similarity.buildIvfIndex(ivfBase, path)
+    Similarity.ivfTier(spark, path).retract()
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.upsertIvfIndex(spark, path, ivfBatches(1))
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.compactIvfIndex(spark, path)
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.knnIvfIndexed(spark, path, ivfProbe, k = 3)
+    an[IllegalArgumentException] should be thrownBy
+      Similarity.knnIvfUpserted(spark, path, ivfProbe, k = 3)
+  }
+}
+
+object TierSpec {
+
+  /** One tier under test. `upsert(path, i)` lands arrival batch i (1 or
+    * 2); `plant(dir)` writes into a generation directory files a crashed
+    * writer could leave there, which `serve` would show if it read
+    * them; `maybeCompact` runs the policy at maxGens = 2, maxRatio = ∞. */
+  final case class Case(
+      name: String,
+      tier: String => Tier,
+      build: String => Unit,
+      upsert: (String, Int) => Unit,
+      compact: String => Unit,
+      maybeCompact: String => Boolean,
+      serve: String => Set[String],
+      plant: String => Unit)
+}

@@ -28,7 +28,7 @@ class NdiCrashSpec extends SparkSpec {
     // first run builds (or reuses) the tier and fixes the baseline
     val baseline = decisions()
     baseline should not be empty
-    val gensBefore = Dedup.ndiGensForTest(spark, path)
+    val gensBefore = Dedup.nearDupTier(spark, path).gens
 
     // simulate the kill: a generation's band files land, the process
     // dies BEFORE the completion marker — exactly the on-disk state
@@ -38,7 +38,7 @@ class NdiCrashSpec extends SparkSpec {
     // probe window would rewrite most canonical_ids) — so serving them
     // is loudly visible, not a subtle drift.
     import spark.implicits._
-    val crashedGen = (Dedup.ndiGensForTest(spark, path) ++ Seq(0)).max + 1
+    val crashedGen = (Dedup.nearDupTier(spark, path).gens ++ Seq(0)).max + 1
     (0L until DedupQueries.NdiCap).map(i => (0L, s"poison_$i")).toDF("doc_id", "key")
       .write.mode("overwrite")
       .parquet(s"$path/ndi_delta/gen=$crashedGen/bands")
@@ -48,14 +48,14 @@ class NdiCrashSpec extends SparkSpec {
     // no in-memory state to mask the crash). The marker-less generation
     // must be invisible: same rows, same values, same order.
     decisions() shouldBe baseline
-    Dedup.ndiGensForTest(spark, path) shouldBe gensBefore
+    Dedup.nearDupTier(spark, path).gens shouldBe gensBefore
 
     // and the crashed slot is RECLAIMED, not resurrected: the next
     // upsert overwrites it under a completion marker of its own
     Dedup.upsertNearDupIndex(spark, path,
       Seq((9999999L, "isolated_key")).toDF("doc_id", "key"),
       DedupQueries.NdiFingerprint)
-    Dedup.ndiGensForTest(spark, path) should contain(crashedGen)
+    Dedup.nearDupTier(spark, path).gens should contain(crashedGen)
     // the reclaimed generation holds the upsert's rows, not the poison
     spark.read.parquet(s"$path/ndi_delta/gen=$crashedGen/bands")
       .as[(Long, String)].collect().toSeq shouldBe
@@ -63,7 +63,7 @@ class NdiCrashSpec extends SparkSpec {
     // an isolated-key upsert cannot change any probe decision
     decisions() shouldBe baseline
     // leave the tier as found for other suites: drop the extra gen
-    Dedup.dropNdiDeltas(spark, path)
+    Dedup.nearDupTier(spark, path).dropGens()
     decisions() shouldBe baseline
   }
 
@@ -72,14 +72,14 @@ class NdiCrashSpec extends SparkSpec {
     val baseline = decisions()
     // crash window inside buildNearDupIndex: marker deleted, bands
     // half-rewritten, process dies before the fingerprint lands
-    graft.ext.Markers.delete(spark, s"$path/${Dedup.NdiCompleteMarker}")
+    Dedup.nearDupTier(spark, path).retract()
     import spark.implicits._
     Seq((0L, "garbage")).toDF("doc_id", "key")
       .write.mode("overwrite").parquet(s"$path/bands")
-    Dedup.ndiServes(spark, path, DedupQueries.NdiFingerprint) shouldBe false
+    Dedup.nearDupTier(spark, path).serves(DedupQueries.NdiFingerprint) shouldBe false
     // the query path treats no-marker as no-tier and rebuilds from the
     // corpus — answers identical to the pre-crash tier's
     decisions() shouldBe baseline
-    Dedup.ndiServes(spark, path, DedupQueries.NdiFingerprint) shouldBe true
+    Dedup.nearDupTier(spark, path).serves(DedupQueries.NdiFingerprint) shouldBe true
   }
 }

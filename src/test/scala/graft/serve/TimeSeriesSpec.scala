@@ -1,9 +1,5 @@
 package graft.serve
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.json4s._
@@ -139,27 +135,6 @@ class TimeSeriesSpec extends SparkSpec {
         counts.withColumn("minute", lit(null).cast("timestamp")),
         counts.withColumn("cnt", lit(null).cast("long"))))
       an[IllegalArgumentException] should be thrownBy TimeSeries.emojiDataJson(bad)
-  }
-
-  /** Spark jobs started by `body` on this thread. */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"job-count-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   test("a dashboard read runs at most 2 jobs; building the retained frame runs 2") {
