@@ -1133,8 +1133,7 @@ object Dedup {
   def nearDupTierBands(spark: org.apache.spark.sql.SparkSession, path: String,
                        idCol: String = "doc_id"): DataFrame = {
     val t = nearDupTier(spark, path)
-    t.gens.map(g => spark.read.parquet(s"${t.genPath(g)}/bands"))
-      .foldLeft(spark.read.parquet(s"$path/bands"))(_ unionByName _)
+    t.folded(t.gens, "bands")
   }
 
   /** Probe the tier: which indexed documents share ≥ 1 band key with

@@ -1,11 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** PERSISTED LEXICAL (BM25) INDEX TIER — the retrieval family's LSM
-  * lifecycle (round 14), the [[Dedup]] near-dup band tier's discipline
-  * applied to the inverted index: at 100 TB the corpus is tokenized
+  * lifecycle, the [[Dedup]] near-dup band tier's discipline applied to
+  * the inverted index: at 100 TB the corpus is tokenized
   * ONCE and every query batch probes the persisted posting lists
   * instead of re-tokenizing the world. Build → marker-gated serve →
   * numbered delta generations per arrival batch → idempotent
@@ -14,9 +15,8 @@ import org.apache.spark.sql.functions._
   * Tier content is six append-only tables for the BASE segment (five
   * for delta generations — arrival-sized segments skip the heavy
   * layouts, see [[writeGenTablesFrom]]), all fixed-width and
-  * text-free, in the TWO layouts a retrieval engine actually needs
-  * (round 16 — r15 verdict #1; the Lucene split of inverted index vs
-  * per-doc stored fields):
+  * text-free, in the TWO layouts a retrieval engine actually needs (the
+  * Lucene split of inverted index vs per-doc stored fields):
   *  - `postings` (doc_id, t, tf, dl) RANGE-SORTED BY TOKEN — the
   *    inverted index: each parquet file holds a disjoint token range
   *    with tight row-group min/max stats, so a probe batch's bounded
@@ -33,8 +33,8 @@ import org.apache.spark.sql.functions._
   *    cover the whole vocabulary and token pruning alone cannot bite;
   *  - `dlen` (doc_id, dl), plus the per-generation BM25 STATISTICS
   *    `df` (t, df, max_tf, min_dl) and `stats` (sdl, n). max_tf/min_dl
-  *    (round 16) are the per-token score-bound inputs the WAND serve
-  *    folds into sound upper bounds.
+  *    are the per-token score-bound inputs the WAND serve folds into
+  *    sound upper bounds.
   * Like band rows, a document's postings are immutable once tokenized
   * (re-upserting an id is the caller's bug), so compaction is a
   * REWRITE, not a rebuild. Global statistics FOLD across generations
@@ -44,12 +44,12 @@ import org.apache.spark.sql.functions._
   * tier upsert-correct however arrivals were batched (the streaming
   * replay's shared oracle hash-proves exactly this) while a probe
   * batch reads GENS-BOUNDED vocab-sized stat tables instead of
-  * re-aggregating the full postings table — the 100 TB
-  * scan-per-query killer the round-14 layout had (r14 verdict #3).
+  * re-aggregating the full postings table, which at 100 TB would be a
+  * corpus scan per query.
   *
-  * Scoring is [[bm25Scores]] — ONE implementation shared by the
-  * in-query hybrid arm and the tier serve, so the persisted and
-  * in-query forms cannot drift. Determinism: idf is deterministic
+  * Scoring is ONE implementation (`scoreRows` over rows weighted by
+  * `admitted`) shared by the in-query hybrid arm, the tier serves and
+  * the WAND serve, so the persisted and in-query forms cannot drift. Determinism: idf is deterministic
   * DetMath (native expression twin of the oracle's ln chain), the
   * tf/dl/avgdl arithmetic is shared SQL text, each term quantizes to
   * 12-dp fixed-point micro-units and sums as exact BIGINT —
@@ -72,7 +72,7 @@ object Lex {
     * Spark implements ROUND-on-double and beyond-long decimals via a
     * per-row BigDecimal allocation — measured 2× the whole probe cost
     * at 9M scored pairs (9.6 s → ~4.5 s, ScaleBench lex_probe 1×).
-    * Overflow bound (stated, not assumed — round-15 ADVICE #2): the
+    * Overflow bound (stated, not assumed): the
     * per-pair sum is over SHARED ADMITTED tokens only, each term
     * ≤ idf·(k1+1) ≤ ~65 score units even at n = 10^12 docs
     * (idf ≤ ln 2n ≈ 29), i.e. ≤ 6.5·10^13 micro-units, so BIGINT's
@@ -101,9 +101,8 @@ object Lex {
   def Bm25ScoreOf(sumSql: String): String =
     s"CAST($sumSql AS DOUBLE) / 1.0E12"
 
-  /** IMPACT-ORDERED CANDIDATE GENERATION (round 15 — the
-    * early-termination scale path the max-df cut comments point at):
-    * posting-list length under a corpus-relative stopword cut is
+  /** IMPACT-ORDERED CANDIDATE GENERATION (the early-termination scale
+    * path the max-df cut comments point at): posting-list length under a corpus-relative stopword cut is
     * linear in the corpus, so an exact probe pays Θ(admitted postings
     * per probe token). Real engines bound that with impact ordering
     * (Anh & Moffat 2006) / static index pruning (Carmel et al. 2001):
@@ -135,7 +134,7 @@ object Lex {
                  textCol: String = "text"): (DataFrame, DataFrame) = {
     val toks = docs.select(col(idCol),
       explode(Text.tokens(col(textCol))).as("t"))
-    // NOTE (round 18, measured): deriving dl from a lazily-checkpointed
+    // NOTE (measured): deriving dl from a lazily-checkpointed
     // postings frame (dl = Σ tf — exact) to tokenize once instead of
     // twice REGRESSED the lex lifecycle (+1.2 s on the autocompact
     // replay, stash A/B): the extra checkpoint materialization costs
@@ -161,19 +160,19 @@ object Lex {
     * (df, stats) pair — otherwise both aggregate from the fact tables
     * in-query.
     *
-    * The stopword cut is CORPUS-RELATIVE (round-15 verdict #1): tokens
-    * in more than `maxDfPct`% of documents drop — the `max_df`
-    * convention, compared in exact integers (`df·100 ≤ pct·n`) so both
-    * engines make the identical cut. The round-14 ABSOLUTE cap was the
-    * vacuity bug: any fixed count is "everything" on a small corpus
-    * and "nothing" on a big one — a fraction of the corpus is the
-    * only df that means the same thing at every scale.
+    * The stopword cut is CORPUS-RELATIVE: tokens in more than
+    * `maxDfPct`% of documents drop — the `max_df` convention, compared
+    * in exact integers (`df·100 ≤ pct·n`) so both engines make the
+    * identical cut. An ABSOLUTE cap would be vacuous: any fixed count
+    * is "everything" on a small corpus and "nothing" on a big one — a
+    * fraction of the corpus is the only df that means the same thing at
+    * every scale.
     *
-    * Join order is the 100 TB shape (round-15 verdict #4): the
-    * postings scan meets the BROADCAST PROBE TOKENS FIRST — the only
-    * join that prunes corpus-sized data — then the (probe-pruned,
-    * vocab-bounded, broadcast) idf table, then doc lengths, then the
-    * 1-row stats. When `postings` already CARRIES a `dl` column (the
+    * Join order is the 100 TB shape: the postings scan meets the
+    * BROADCAST PROBE TOKENS FIRST — the only join that prunes
+    * corpus-sized data — then the (probe-pruned, vocab-bounded,
+    * broadcast) idf table, which carries the 1-row avgdl, then doc
+    * lengths. When `postings` already CARRIES a `dl` column (the
     * persisted tier denormalizes it at write time — the Lucene
     * per-doc-norm layout), the doc-length join disappears entirely and
     * the probe plan's ONLY exchange is the final (probe, cand)
@@ -183,7 +182,40 @@ object Lex {
     * the impact-prefix serving path, where the pair set is bounded by
     * M·|probe tokens| per probe. Returns (probe_id, cand_id, __score
     * DOUBLE) — the exact-decimal per-pair sum surfaced as a double. */
-  /** `hintBroadcastCandidates`: the impact-prefix serves pass true —
+  def bm25Scores(postings: DataFrame, dlen: DataFrame, probeTok: DataFrame,
+                 maxDfPct: Int, idCol: String = "doc_id",
+                 dfStats: Option[(DataFrame, DataFrame)] = None,
+                 candidates: Option[DataFrame] = None): DataFrame = {
+    val (dfT, stats) = dfStats.getOrElse(statTables(postings, dlen))
+    val ptok = probeTok.select(col("probe_id"), col("t"))
+    // idf only for tokens the probes actually use (bounded by the probe
+    // batch's vocabulary) that survive the relative cut; the ln is the
+    // native DetMath expression — the bit-identical twin of the chain
+    // the oracle evaluates
+    val idf = admitted(dfT.join(broadcast(ptok.select("t")), Seq("t"), "left_semi")
+        .crossJoin(broadcast(stats.select("sdl", "n"))), maxDfPct)
+      .select(col("t"), col("__idf"), col("avgdl"))
+    val rows = postings
+      .join(broadcast(ptok), "t")
+      .filter(col(idCol) =!= col("probe_id"))
+      .join(broadcast(idf), "t")
+    scoreRows(rows, idCol, candidates, dlen = Some(dlen))
+  }
+
+  /** The tokens of `stats` — rows carrying `df`, `n` and `sdl` — that
+    * pass the relative df cut, with their `avgdl` and `__idf`. */
+  private def admitted(stats: DataFrame, maxDfPct: Int): DataFrame =
+    stats.filter(expr(s"df * 100 <= $maxDfPct * n"))
+      .withColumn("avgdl", expr(Bm25AvgdlSql))
+      .withColumn("__x", expr(Bm25IdfArgSql))
+      .withColumn("__idf", graft.functions.DetMathExpr.detLn(col("__x")))
+
+  /** Posting rows already paired with a probe (`probe_id`) and weighted
+    * (`__idf`, `avgdl`), summed per (probe, doc) pair in micro-units:
+    * restricted to `candidates` (probe_id, idCol) pairs when given, and
+    * joined to `dlen` only when the rows carry no `dl`.
+    *
+    * `hintBroadcastCandidates`: the impact-prefix serves pass true —
     * their candidate set is bounded by construction (≤ M·|probe
     * tokens|·gens), so the hint is safe and skips a shuffle. The WAND
     * serve passes FALSE: its survivor set is θ-dependent and on a
@@ -191,38 +223,19 @@ object Lex {
     * degenerates to ALL pairs — a forced broadcast there is a
     * corpus-sized driver hazard, so the planner (AQE) picks the join
     * side from actual sizes instead. */
-  def bm25Scores(postings: DataFrame, dlen: DataFrame, probeTok: DataFrame,
-                 maxDfPct: Int, idCol: String = "doc_id",
-                 dfStats: Option[(DataFrame, DataFrame)] = None,
-                 candidates: Option[DataFrame] = None,
-                 hintBroadcastCandidates: Boolean = true): DataFrame = {
-    val (dfT, stats0) = dfStats.getOrElse(statTables(postings, dlen))
-    val stats = stats0.withColumn("avgdl", expr(Bm25AvgdlSql))
-    val ptok = probeTok.select(col("probe_id"), col("t"))
-    // idf only for tokens the probes actually use (bounded by the probe
-    // batch's vocabulary) that survive the relative cut; the ln is the
-    // native DetMath expression — the bit-identical twin of the chain
-    // the oracle evaluates
-    val idf = dfT.join(broadcast(ptok.select("t").distinct()), "t")
-      .crossJoin(broadcast(stats.select("n")))
-      .filter(expr(s"df * 100 <= $maxDfPct * n"))
-      .withColumn("__x", expr(Bm25IdfArgSql))
-      .withColumn("__idf", graft.functions.DetMathExpr.detLn(col("__x")))
-      .select(col("t"), col("__idf"))
-    val pruned0 = postings
-      .join(broadcast(ptok), "t")
-      .filter(col(idCol) =!= col("probe_id"))
-      .join(broadcast(idf), "t")
+  private def scoreRows(rows: DataFrame, idCol: String,
+                        candidates: Option[DataFrame] = None,
+                        hintBroadcastCandidates: Boolean = true,
+                        dlen: Option[DataFrame] = None): DataFrame = {
     val pruned = candidates
-      .map(c => pruned0.join(
+      .map(c => rows.join(
         if (hintBroadcastCandidates) broadcast(c) else c,
         Seq("probe_id", idCol)))
-      .getOrElse(pruned0)
+      .getOrElse(rows)
     val withDl =
-      if (postings.columns.contains("dl")) pruned
-      else pruned.join(dlen, idCol)
+      if (pruned.columns.contains("dl")) pruned
+      else pruned.join(dlen.get, idCol)
     withDl
-      .crossJoin(broadcast(stats.select("avgdl")))
       .withColumn("__term", expr(Bm25TermSql))
       .groupBy(col("probe_id"), col(idCol).as("cand_id"))
       .agg(sum(col("__term")).as("__micro"))
@@ -243,17 +256,6 @@ object Lex {
     new Tier(spark, path, "_GRAFT_LEX_COMPLETE", Some(Tier.Gens(
       "lex_delta", "_GRAFT_LEX_DELTA_COMPLETE", "postings", "postings")))
 
-  /** `table` over the base and the generations `gens`, unioned; the
-    * base reads `baseTable`. */
-  private def folded(spark: org.apache.spark.sql.SparkSession, path: String,
-                     gens: Seq[Int], table: String,
-                     baseTable: String = ""): DataFrame = {
-    val t = tier(spark, path)
-    gens.map(g => spark.read.parquet(s"${t.genPath(g)}/$table"))
-      .foldLeft(spark.read.parquet(
-        s"$path/${if (baseTable.isEmpty) table else baseTable}"))(_ unionByName _)
-  }
-
   /** Write one generation's four tables (facts + statistics) under
     * `dir`. The facts are materialized once (localCheckpoint) so the
     * df/stats aggregations don't re-tokenize the documents. The
@@ -269,10 +271,9 @@ object Lex {
     * (doc, t) row set equals the raw postings', so df aggregated there
     * is identical to statTables' form). Exposed separately from
     * [[writeGenTablesFrom]] so compaction can materialize BEFORE
-    * retracting the serving marker (r15 second-pass review: a
-    * transient checkpoint failure must not strand a healthy tier
-    * behind a deleted marker) while still holding only one merged
-    * copy at a time. */
+    * retracting the serving marker (a transient checkpoint failure must
+    * not strand a healthy tier behind a deleted marker) while still
+    * holding only one merged copy at a time. */
   private def genTableFrames(postings: DataFrame,
                              dlen: DataFrame): (DataFrame, DataFrame) = {
     val d = dlen.localCheckpoint(true)
@@ -293,8 +294,7 @@ object Lex {
   /** Write one generation's six tables from the [[genTableFrames]]
     * pair (does NOT unpersist — callers own the checkpoints).
     *
-    * Layout (round 16 — r15 verdict #1): `postings` and its pruned
-    * prefix are RANGE-SORTED BY TOKEN ([[graft.core.Layout
+    * Layout: `postings` and its pruned prefix are RANGE-SORTED BY TOKEN ([[graft.core.Layout
     * .writeRangeSorted]]'s shape: disjoint per-file key ranges + tight
     * row-group stats, LayoutSpec-proven), so a probe's bounded token
     * set pushes into the scan; `forward` holds the SAME rows
@@ -332,8 +332,7 @@ object Lex {
     val stats = d.agg(sum(col("dl")).as("sdl"), count(lit(1)).as("n"))
     val nFiles = math.min(32, math.max(1, joined.rdd.getNumPartitions))
     // the generation's 5–6 tables are INDEPENDENT writes to disjoint
-    // paths over the two checkpointed frames — overlap them (round 19,
-    // guide §2.6): the small metadata tables (dlen/df/stats) back-fill
+    // paths over the two checkpointed frames — overlap them: the small metadata tables (dlen/df/stats) back-fill
     // the scheduling and commit gaps of the corpus-shaped layout
     // writes instead of queueing behind them; the marker stays with
     // the caller, strictly after all of them
@@ -400,22 +399,22 @@ object Lex {
   }
 
   /** The merged fact tables: base plus every completed generation.
-    * SNAPSHOT DISCIPLINE (round-15 review): a query must list the
-    * completed generations ONCE and thread that list through every
-    * table it reads — listing per table would let a concurrently
-    * completing upsert split one probe across two tier states (stats
-    * counting documents whose postings are never scanned). */
+    * SNAPSHOT DISCIPLINE: a query lists the completed generations ONCE
+    * and threads that list through every table it reads — listing per
+    * table would let a concurrently completing upsert split one probe
+    * across two tier states (stats counting documents whose postings
+    * are never scanned). */
   def lexTierTables(spark: org.apache.spark.sql.SparkSession, path: String):
-      (DataFrame, DataFrame) =
-    lexTierTablesAt(spark, path, tier(spark, path).gens)
+      (DataFrame, DataFrame) = {
+    val t = tier(spark, path)
+    lexTierTablesAt(t, t.gens)
+  }
 
-  private def lexTierTablesAt(spark: org.apache.spark.sql.SparkSession,
-                              path: String, gens: Seq[Int]):
-      (DataFrame, DataFrame) =
-    (folded(spark, path, gens, "postings"), folded(spark, path, gens, "dlen"))
+  private def lexTierTablesAt(t: Tier, gens: Seq[Int]): (DataFrame, DataFrame) =
+    (t.folded(gens, "postings"), t.folded(gens, "dlen"))
 
   /** The tier's FOLDED statistics — (t, df) and 1-row (sdl, n) —
-    * summed over base + every completed generation (round 15):
+    * summed over base + every completed generation:
     * generations index disjoint documents, so the per-generation
     * doc-frequencies and doc-count/length totals add EXACTLY (integer
     * arithmetic — bit-identical to a fresh full build's aggregation,
@@ -423,19 +422,19 @@ object Lex {
     * vocab-sized tables instead of aggregating the full postings
     * table — at 100 TB that aggregation was a corpus scan per query. */
   def lexTierStats(spark: org.apache.spark.sql.SparkSession, path: String):
-      (DataFrame, DataFrame) =
-    lexTierStatsAt(spark, path, tier(spark, path).gens)
-
-  private def lexTierStatsAt(spark: org.apache.spark.sql.SparkSession,
-                             path: String, gens: Seq[Int]):
       (DataFrame, DataFrame) = {
+    val t = tier(spark, path)
+    lexTierStatsAt(t, t.gens)
+  }
+
+  private def lexTierStatsAt(t: Tier, gens: Seq[Int]): (DataFrame, DataFrame) = {
     // df/sdl/n fold by exact integer addition (disjoint documents);
     // max_tf/min_dl fold by max/min — also exact, and identical to a
     // fresh full build's per-token aggregate by the same disjointness
-    val dfT = folded(spark, path, gens, "df")
+    val dfT = t.folded(gens, "df")
       .groupBy("t").agg(sum(col("df")).as("df"),
         max(col("max_tf")).as("max_tf"), min(col("min_dl")).as("min_dl"))
-    val stats = folded(spark, path, gens, "stats")
+    val stats = t.folded(gens, "stats")
       .agg(sum(col("sdl")).as("sdl"), sum(col("n")).as("n"))
     (dfT, stats)
   }
@@ -447,9 +446,8 @@ object Lex {
     * point); delta generations serve their postings directly: same
     * rows, same schema, arrival-batch-sized scans the pushdown
     * wouldn't meaningfully shrink (see [[writeGenTablesFrom]]). */
-  private def lexTierForwardAt(spark: org.apache.spark.sql.SparkSession,
-                               path: String, gens: Seq[Int]): DataFrame =
-    folded(spark, path, gens, "postings", baseTable = "forward")
+  private def lexTierForwardAt(t: Tier, gens: Seq[Int]): DataFrame =
+    t.folded(gens, "postings", baseTable = "forward")
 
   /** Loud guard on the driver-side bounded collects below: a probe
     * batch's distinct vocabulary past this is not an arrival batch —
@@ -466,126 +464,129 @@ object Lex {
   @volatile private[graft] var lastWandRoute: String = ""
 
   /** TEST-FACING plan capture for the WAND serve (the
-    * [[Dedup.captureGramPlan]] pattern): θ and the per-token bounds are
-    * lazily checkpointed (they are consumed by both the dispatch job
-    * and the serve job — see [[queryLexIndexWand]]), which makes them
-    * opaque RDD leaves in the served plan; the PlanSpec gates that
-    * audit the prefix scan's In(t, …) pushdown read the plans recorded
-    * here at construction instead. Off by default. */
+    * [[Dedup.captureGramPlan]] pattern): θ is collected to the driver,
+    * so the served plan never contains the impact-prefix scan; the
+    * PlanSpec gates that audit that scan's In(t, …) pushdown read θ's
+    * executed plan, recorded here after its collect. Off by default. */
   @volatile private[graft] var captureWandPlans: Boolean = false
   @volatile private[graft] var lastWandThetaPlan: String = ""
-  @volatile private[graft] var lastWandUbPlan: String = ""
 
   /** Driver-memory cap on the collected prefix-candidate pair frame.
     * The STRUCTURAL bound is M·|probe (probe_id, token) pairs|·segments
     * — computed per call from the actual inputs, because a static cap
     * cannot distinguish "the per-list prefix write is broken" from "a
-    * legal but huge probe batch" (review finding, round 16: a ~200k-
-    * token batch under [[MaxProbeVocab]] legitimately exceeds any fixed
-    * constant). Exceeding the structural bound means the write is
-    * broken; exceeding this cap with an intact write means the batch
-    * must be split before the driver-local frame is built. */
+    * legal but huge probe batch" (a ~200k-token batch under
+    * [[MaxProbeVocab]] legitimately exceeds any fixed constant).
+    * Exceeding the structural bound means the write is broken;
+    * exceeding this cap with an intact write means the batch must be
+    * split before the driver-local frame is built. */
   val MaxPrunedPairs = 4 << 20
 
   /** Past this many distinct probe tokens the scan-pushdown `In(t, …)`
-    * filter is SKIPPED: a million-literal In expression costs seconds
-    * of driver-side canonicalization/serialization per batch, while the
-    * broadcast probe-token join already restricts the same rows — the
-    * filter exists purely to let the reader skip row groups, a win that
-    * evaporates once the probe vocabulary approaches the corpus's. */
+    * filter gives way to a broadcast semi join with the probe tokens: a
+    * million-literal In expression costs seconds of driver-side
+    * canonicalization/serialization per batch, while the join restricts
+    * the same rows — the In filter exists to let the reader skip row
+    * groups, a win that evaporates once the probe vocabulary approaches
+    * the corpus's. */
   val InFilterCap = 4096
 
-  /** `In(t, …)` pushdown when the token set is small enough to pay for
-    * itself; identity (join-only restriction) past [[InFilterCap]] —
-    * same rows either way, so serves are hash-identical. */
-  private def tokenScanFilter(df: DataFrame, toks: Seq[String]): DataFrame =
-    if (toks.length <= InFilterCap) df.filter(col("t").isin(toks: _*)) else df
+  /** The rows of `df` whose token `t` the probe batch uses: an `In(t, …)`
+    * scan pushdown up to [[InFilterCap]] tokens, a broadcast semi join
+    * past it — same rows either way, so serves are hash-identical. */
+  private def probedRows(df: DataFrame, probe: Probe): DataFrame =
+    if (probe.vocab.length <= InFilterCap) df.filter(col("t").isin(probe.vocab: _*))
+    else df.join(broadcast(probe.pairs.select("t")), Seq("t"), "left_semi")
 
   /** The same cap discipline for the candidate-doc `In(doc_id, …)`
-    * pushdown on the forward scans (r16 ADVICE #1: the structural
-    * bound legalizes candidate batches up to [[MaxPrunedPairs]] — a
+    * pushdown on the forward scans: the structural bound legalizes
+    * candidate batches up to [[MaxPrunedPairs]], and a
     * multi-million-literal In expression costs exactly the seconds of
-    * driver-side canonicalization the TOKEN cap was added to avoid).
-    * The bounded broadcast `candidates` join restricts the same rows
-    * either way, so serves are hash-identical past the cap; the cap is
-    * wider than [[InFilterCap]] because doc ids are fixed-width
-    * numerics (no per-literal string canonicalization) and the forward
-    * pushdown is what keeps exact scoring candidate-shaped. */
+    * driver-side canonicalization the TOKEN cap avoids. The bounded
+    * broadcast `candidates` join restricts the same rows either way, so
+    * serves are hash-identical past the cap; the cap is wider than
+    * [[InFilterCap]] because doc ids are fixed-width numerics (no
+    * per-literal string canonicalization) and the forward pushdown is
+    * what keeps exact scoring candidate-shaped. */
   val DocInFilterCap = 1 << 16
   private def docScanFilter(df: DataFrame, idCol: String,
                             docs: Seq[Any]): DataFrame =
     if (docs.length <= DocInFilterCap) df.filter(col(idCol).isin(docs: _*)) else df
 
-  /** The probe frame's (probe_id, t) DISTINCT tokens — in-plan (the
-    * broadcast side of every serve join) — plus the collected distinct
-    * token strings for the scan-pushdown filter (bounded by the probe
-    * batch's vocabulary; the `decon_bloom` no-join discipline) and the
-    * (probe, token) PAIR COUNT, aggregated in the SAME collect (r16
-    * ADVICE #4: the pruned/WAND serves ran a second `ptok.count()` job
-    * per serve solely to compute the structural candidate bound — one
-    * per-token count in the collect already in flight carries it). */
+  /** A probe batch's tokens on the driver: the distinct (probe_id, t)
+    * `rows`, the same pairs as a driver-local frame (`pairs`, the
+    * broadcast side of every serve join), and the distinct tokens
+    * (`vocab`, for [[probedRows]]). */
+  private final case class Probe(pairs: DataFrame, rows: Seq[Row], vocab: Seq[String])
+
+  /** Tokenize `probeDocs` and collect its distinct (probe_id, t) pairs in
+    * one action. The collect groups by token and is limit-capped at
+    * [[MaxProbeVocab]] + 1 rows, so the vocabulary guard fires before
+    * the driver holds more than that (a corpus-sized batch would
+    * otherwise OOM the collect ahead of the guard). The pairs then enter
+    * every serve plan as a driver-local frame, so no serve job derives
+    * them again. */
   private def probeTokens(probeDocs: DataFrame, idCol: String,
-                          textCol: String): (DataFrame, Seq[String], Long) = {
-    val ptok = probeDocs
+                          textCol: String): Probe = {
+    val tok = probeDocs
       .select(col(idCol).as("probe_id"), explode(Text.tokens(col(textCol))).as("t"))
-      .distinct()
-    // limit BEFORE the collect: the guard exists to catch unbounded
-    // driver state, so it must fire before the driver materializes it
-    // (a corpus-sized batch would OOM the collect ahead of the require)
-    val rows = ptok.groupBy("t").agg(count(lit(1)).as("c"))
+    val byToken = tok.groupBy("t").agg(collect_set(col("probe_id")).as("ids"))
       .limit(MaxProbeVocab + 1).collect()
-    require(rows.length <= MaxProbeVocab,
+    require(byToken.length <= MaxProbeVocab,
       s"lex probe vocabulary exceeds $MaxProbeVocab - " +
         "probe batches must be arrival-sized, not corpus-sized")
-    (ptok, rows.map(_.getString(0)).toSeq, rows.map(_.getLong(1)).sum)
+    val rows = byToken.toSeq.flatMap(r => r.getSeq[Any](1).map(Row(_, r.getString(0))))
+    Probe(localFrame(probeDocs.sparkSession, rows, tok.schema), rows,
+      byToken.map(_.getString(0)).toSeq)
   }
+
+  private def localFrame(spark: org.apache.spark.sql.SparkSession, rows: Seq[Row],
+                         schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Probe the tier: BM25 top candidates for each probe document,
     * scored against EVERYTHING indexed (base ∪ deltas), global stats
     * FOLDED from the persisted per-generation tables ([[lexTierStats]]
-    * — never a full-postings aggregation). Probes are tokenized
-    * in-query (tiny — an arrival batch), and their bounded distinct
-    * token set pushes into the token-range-sorted postings scan as an
-    * `In(t, …)` filter (round 16 — r15 verdict #1): the reader skips
-    * every row group whose token range the probe never mentions, so
-    * scan cost follows the PROBED posting lists, not the corpus. (On a
-    * corpus whose whole vocabulary is probed nothing can be skipped —
-    * exact BM25 is inherently linear in admitted postings per probe
-    * token; [[queryLexIndexWand]] is the exact serve that also bounds
-    * the SCORING work, and [[queryLexIndexPruned]] the approximate one
-    * that bounds everything.) */
+    * — never a full-postings aggregation). The probe batch's bounded
+    * distinct token set pushes into the token-range-sorted postings
+    * scan as an `In(t, …)` filter: the reader skips every row group
+    * whose token range the probe never mentions, so scan cost follows
+    * the PROBED posting lists, not the corpus. (On a corpus whose whole
+    * vocabulary is probed nothing can be skipped — exact BM25 is
+    * inherently linear in admitted postings per probe token;
+    * [[queryLexIndexWand]] is the exact serve that also bounds the
+    * SCORING work, and [[queryLexIndexPruned]] the approximate one that
+    * bounds everything.) */
   def queryLexIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     probeDocs: DataFrame, maxDfPct: Int,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val gens = tier(spark, path).gens // ONE snapshot for all tables
-    val (postings, dlen) = lexTierTablesAt(spark, path, gens)
-    val (ptok, toks, _) = probeTokens(probeDocs, idCol, textCol)
-    bm25Scores(tokenScanFilter(postings, toks), dlen, ptok,
-      maxDfPct, idCol, dfStats = Some(lexTierStatsAt(spark, path, gens)))
+    val t = tier(spark, path)
+    val gens = t.gens // ONE snapshot for all tables
+    val (postings, dlen) = lexTierTablesAt(t, gens)
+    val probe = probeTokens(probeDocs, idCol, textCol)
+    bm25Scores(probedRows(postings, probe), dlen, probe.pairs,
+      maxDfPct, idCol, dfStats = Some(lexTierStatsAt(t, gens)))
   }
 
-  /** The impact-prefix CANDIDATE pairS of a probe batch, collected
+  /** The impact-prefix CANDIDATE pairs of a probe batch, collected
     * driver-side (bounded by M·|probe tokens|·gens by construction):
     * (probe_id, doc) pairs from the top-[[LexPrunedM]] prefix of every
-    * probe token's posting list, per generation. Shared by the pruned
-    * and WAND serves; the doc ids feed the forward-table `isin`
-    * pushdown and the pairs re-enter the plan as a broadcast-local
-    * frame, so the serve plan never re-derives them. */
+    * probe token's posting list, per generation. The doc ids feed the
+    * forward-table `isin` pushdown and the pairs re-enter the plan as a
+    * broadcast-local frame, so the serve plan never re-derives them. */
   private def prefixCandidates(spark: org.apache.spark.sql.SparkSession,
-                               path: String, gens: Seq[Int], ptok: DataFrame,
-                               toks: Seq[String], ptokPairs: Long,
+                               t: Tier, gens: Seq[Int], probe: Probe,
                                idCol: String): (DataFrame, Seq[Any]) = {
-    val prefix = tokenScanFilter(folded(spark, path, gens, "postings_pruned"), toks)
-    val cands = prefix.join(broadcast(ptok), "t")
+    val prefix = probedRows(t.folded(gens, "postings_pruned"), probe)
+    val cands = prefix.join(broadcast(probe.pairs), "t")
       .filter(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol))
       .distinct()
     // the structural bound from the ACTUAL inputs (M · |(probe, token)
-    // pairs| · segments — the pair count rides in [[probeTokens]]'
-    // collect, no extra job); the collect is limit-capped so a broken
+    // pairs| · segments); the collect is limit-capped so a broken
     // prefix write fails LOUDLY here instead of OOMing the driver first
     val structuralBound =
-      LexPrunedM.toLong * ptokPairs * (gens.length + 1)
+      LexPrunedM.toLong * probe.rows.length * (gens.length + 1)
     val cap = math.min(structuralBound, MaxPrunedPairs.toLong)
     val rows = cands.limit(cap.toInt + 1).collect()
     require(rows.length <= cap,
@@ -597,9 +598,7 @@ object Lex {
         s"prefix candidate pairs exceed $MaxPrunedPairs - the probe " +
           "batch is too large for the driver-local candidate frame; " +
           "split the batch")
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), cands.schema)
-    (local, rows.map(_.get(1)).distinct.toSeq)
+    (localFrame(spark, rows.toSeq, cands.schema), rows.map(_.get(1)).distinct.toSeq)
   }
 
   /** [[queryLexIndex]]'s APPROXIMATE twin — the two-phase
@@ -612,136 +611,141 @@ object Lex {
     * the exact serve's and only the candidate set approximates.
     * `search_pruned_recall` grades that approximation.
     *
-    * Round 16 (r15 verdict #1): exact scoring reads the doc-major
-    * FORWARD tables with the bounded candidate-doc set pushed down as
-    * `In(doc_id, …)` — the scoring scan is now candidate-shaped at ANY
-    * corpus size and vocabulary shape (the token-sorted postings can
-    * only skip tokens the probe lacks, which is nothing on a flat
-    * vocabulary; the forward layout skips every non-candidate DOC
-    * instead). Candidate generation itself reads only the prefix
-    * tables — per-list top-M files, corpus-independent. */
+    * Exact scoring reads the doc-major FORWARD tables with the bounded
+    * candidate-doc set pushed down as `In(doc_id, …)` — the scoring
+    * scan is candidate-shaped at ANY corpus size and vocabulary shape
+    * (the token-sorted postings can only skip tokens the probe lacks,
+    * which is nothing on a flat vocabulary; the forward layout skips
+    * every non-candidate DOC instead). Candidate generation itself
+    * reads only the prefix tables — per-list top-M files,
+    * corpus-independent. */
   def queryLexIndexPruned(spark: org.apache.spark.sql.SparkSession, path: String,
                           probeDocs: DataFrame, maxDfPct: Int,
                           idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val gens = tier(spark, path).gens // ONE snapshot for all tables
-    val (ptok, toks, nPairs) = probeTokens(probeDocs, idCol, textCol)
-    val (cands, candDocs) =
-      prefixCandidates(spark, path, gens, ptok, toks, nPairs, idCol)
-    val forward = tokenScanFilter(
-      docScanFilter(lexTierForwardAt(spark, path, gens), idCol, candDocs), toks)
-    val dlen = lexTierTablesAt(spark, path, gens)._2
-    bm25Scores(forward, dlen, ptok, maxDfPct, idCol,
-      dfStats = Some(lexTierStatsAt(spark, path, gens)), candidates = Some(cands))
+    val t = tier(spark, path)
+    val gens = t.gens // ONE snapshot for all tables
+    val probe = probeTokens(probeDocs, idCol, textCol)
+    val (cands, candDocs) = prefixCandidates(spark, t, gens, probe, idCol)
+    val forward = probedRows(
+      docScanFilter(lexTierForwardAt(t, gens), idCol, candDocs), probe)
+    bm25Scores(forward, t.folded(gens, "dlen"), probe.pairs, maxDfPct, idCol,
+      dfStats = Some(lexTierStatsAt(t, gens)), candidates = Some(cands))
   }
 
-  /** SOUND per-token upper bounds on the BM25 term (the WAND /
-    * MaxScore bound — Broder et al. 2003; Turtle & Flood's MaxScore):
-    * for every admitted probe token, `__ub` ≥ any document's micro-unit
-    * term for that token. Evaluates [[bm25TermSqlOver]] at the tier's
-    * folded (max_tf, min_dl) with the serve-time folded avgdl — the
-    * SAME expression text as the scoring term on dominating inputs:
-    * the term is monotone ↑ in tf and ↓ in dl under IEEE evaluation
-    * (every dl-chain op is monotone per rounded-op monotonicity; the
-    * tf direction has real-arithmetic slack ≥ K/(tf²+tf+tf·K) per
-    * integer step, orders of magnitude above the ≤ ~4-ulp rounding
-    * noise for any per-doc tf < 2^24), and `+ 2` micro-units absorbs
-    * even the pathological-tf residual: term values are ≤ ~65 score
-    * units (see the overflow note above), where 9 ulps is ≪ 1
-    * micro-unit. The bound only ever KEEPS extra candidates — it can
-    * never prune a true top-k doc. */
-  private def bm25UpperBounds(dfT: DataFrame, stats: DataFrame,
-                              ptok: DataFrame, maxDfPct: Int): DataFrame =
-    dfT.join(broadcast(ptok.select("t").distinct()), "t")
-      .crossJoin(broadcast(stats.select("n")))
-      .filter(expr(s"df * 100 <= $maxDfPct * n"))
-      .withColumn("__x", expr(Bm25IdfArgSql))
-      .withColumn("__idf", graft.functions.DetMathExpr.detLn(col("__x")))
-      .crossJoin(broadcast(stats.select("avgdl")))
-      .withColumn("__ub",
-        expr(bm25TermSqlOver("max_tf", "min_dl")) + lit(2L))
-      .select(col("t"), col("__ub"))
+  /** (t, df, max_tf, min_dl, sdl, n): [[probedStats]]' rows. */
+  private val ProbedStatsSchema = StructType(
+    Seq("t" -> StringType, "df" -> LongType, "max_tf" -> LongType,
+      "min_dl" -> LongType, "sdl" -> LongType, "n" -> LongType)
+      .map { case (n, t) => StructField(n, t) })
+
+  /** The tier's folded statistics for the probed tokens, collected: one
+    * (t, df, max_tf, min_dl, sdl, n) row per probed token the tier
+    * indexes, each carrying the tier-wide sdl and n. One scan each over
+    * the base and `gens` of the `df` and `stats` tables; the segments
+    * fold on the driver by [[lexTierStatsAt]]'s exact integer rules
+    * (sum, max, min; sdl is null when every segment's is). Bounded by
+    * the probe batch's vocabulary. */
+  private def probedStats(t: Tier, gens: Seq[Int], probe: Probe): Seq[Row] = {
+    val segs = t.folded(gens, "stats").collect()
+    val n = segs.map(_.getAs[Long]("n")).sum
+    val sdls = segs.filterNot(r => r.isNullAt(r.fieldIndex("sdl"))).map(_.getAs[Long]("sdl"))
+    val sdl = if (sdls.isEmpty) null else sdls.sum
+    probedRows(t.folded(gens, "df"), probe).select("t", "df", "max_tf", "min_dl")
+      .collect().toSeq.groupBy(_.getString(0)).toSeq.map { case (tok, rs) =>
+        Row(tok, rs.map(_.getLong(1)).sum, rs.map(_.getLong(2)).max,
+          rs.map(_.getLong(3)).min, sdl, n)
+      }
+  }
+
+  /** Per ADMITTED probed token ([[admitted]]): `df`, `__idf`, `avgdl`
+    * and `__ub`, evaluated by the shared scoring SQL over the
+    * driver-local [[probedStats]] rows. Filters and projections over a
+    * local relation are evaluated while the plan is optimized, so the
+    * collect runs no Spark job.
+    *
+    * `__ub` is a SOUND per-token upper bound on the BM25 term (the WAND
+    * / MaxScore bound — Broder et al. 2003; Turtle & Flood's MaxScore):
+    * `__ub` ≥ any document's micro-unit term for that token. It
+    * evaluates [[bm25TermSqlOver]] at the tier's folded (max_tf, min_dl)
+    * with the folded avgdl — the SAME expression text as the scoring
+    * term on dominating inputs: the term is monotone ↑ in tf and ↓ in
+    * dl under IEEE evaluation (every dl-chain op is monotone per
+    * rounded-op monotonicity; the tf direction has real-arithmetic
+    * slack ≥ K/(tf²+tf+tf·K) per integer step, orders of magnitude above
+    * the ≤ ~4-ulp rounding noise for any per-doc tf < 2^24), and `+ 2`
+    * micro-units absorbs even the pathological-tf residual: term values
+    * are ≤ ~65 score units (see the overflow note above), where 9 ulps
+    * is ≪ 1 micro-unit. The bound only ever KEEPS extra candidates — it
+    * can never prune a true top-k doc. */
+  private def tokenWeights(spark: org.apache.spark.sql.SparkSession,
+                           stats: Seq[Row], maxDfPct: Int): Seq[Row] =
+    admitted(localFrame(spark, stats, ProbedStatsSchema), maxDfPct)
+      .withColumn("__ub", expr(bm25TermSqlOver("max_tf", "min_dl")) + lit(2L))
+      .select("t", "df", "__idf", "avgdl", "__ub")
+      .collect().toSeq
 
   /** EXACT top-`topK` BM25 serve WITH BOUNDED SCORING WORK — the WAND
-    * rendering (round 16, r15 verdict #4) of [[queryLexIndex]]: same
-    * scores, same top-`topK` per probe, but only candidates whose
-    * score UPPER BOUND clears the running threshold are ever
-    * exact-scored. Set-at-a-time phases:
-    *   1. θ seeds from PARTIAL scores over the impact-prefix rows
-    *      alone (round 17 — r16 verdict #3): for every (probe, doc)
-    *      pair the exact micro-unit term sum over just the admitted
-    *      tokens whose top-[[LexPrunedM]] prefix the doc entered. A
-    *      partial sum is an exact-integer sum of a SUBSET of the
-    *      pair's non-negative terms, so it LOWER-bounds the pair's
-    *      full score, and the per-probe topK-th partial score
-    *      therefore lower-bounds the true topK-th score — pruning on
-    *      it stays lossless. vs the round-16 phase 1 (exact-scoring
-    *      the full prefix-candidate set through the forward table):
-    *      one arithmetic pass over prefix rows already scanned — no
-    *      forward scan, no driver-side candidate collect, no
-    *      In(doc_id) pushdown, and the ~80%-of-exact-serve scoring
-    *      work SCALEBENCH_r16 measured in θ-derivation is gone;
-    *   2. every (probe, doc) pair sharing an admitted token gets a
+    * rendering of [[queryLexIndex]]: same scores, same top-`topK` per
+    * probe, but only candidates whose score UPPER BOUND clears the
+    * running threshold are ever exact-scored.
+    *
+    * Everything the serve derives from the probe batch is bounded by it
+    * and is collected to the driver once: the (probe_id, t) pairs
+    * ([[probeTokens]]), the probed tokens' folded statistics
+    * ([[probedStats]]), their idf and upper bounds ([[tokenWeights]],
+    * no job) and θ. Those rows re-enter the remaining plans as one
+    * driver-local frame of (probe, admitted token) weights. Phases:
+    *   1. θ seeds from PARTIAL scores over the impact-prefix rows alone:
+    *      for every (probe, doc) pair the exact micro-unit term sum over
+    *      just the admitted tokens whose top-[[LexPrunedM]] prefix the
+    *      doc entered. A partial sum is an exact-integer sum of a SUBSET
+    *      of the pair's non-negative terms, so it LOWER-bounds the
+    *      pair's full score, and the per-probe topK-th partial score
+    *      therefore lower-bounds the true topK-th score — pruning on it
+    *      stays lossless. One arithmetic pass over prefix rows, no
+    *      forward scan; θ (≤ one row per probe) is collected.
+    *   2. the route decision ([[maxScoreRoute]]) runs on the driver over
+    *      the collected bounds, df and θ.
+    *   3. every (probe, doc) pair sharing an admitted token gets a
     *      per-pair upper bound — Σ over shared tokens of the sound
-    *      per-token bound ([[bm25UpperBounds]]) — one cheap aggregate
-    *      over the token-pruned postings, no per-row idf/term math;
-    *   3. only pairs with bound ≥ θ are exact-scored (the shared
-    *      [[bm25Scores]] path), and their ranks 1..topK equal the
-    *      exact serve's: any pruned pair has true score ≤ bound < θ ≤
-    *      the true topK-th score, so it could never enter the cut, and
-    *      every survivor's score is the shared [[bm25Scores]] value.
+    *      per-token bound — one cheap aggregate over the token-pruned
+    *      postings, no per-row idf/term math; only pairs with bound ≥ θ
+    *      are exact-scored, and their ranks 1..topK equal the exact
+    *      serve's: any pruned pair has true score ≤ bound < θ ≤ the true
+    *      topK-th score, so it could never enter the cut, and every
+    *      survivor's score is the shared scoring form's value.
     * The result therefore hash-matches the exact serve BY ARGUMENT —
     * `search_bm25_wand` pins it against `search_bm25_indexed`'s own
-    * oracle, which proves the pruning lossless on real data every
-    * round (the weaker partial-sum θ admits MORE survivors than the
-    * r16 exact-prefix θ, never fewer true results) — while the
+    * oracle, which proves the pruning lossless on real data — while the
     * exact-scored pair count follows θ, not the corpus (ScaleBench
     * `lex_wand_pruning` measures the ratio). */
   def queryLexIndexWand(spark: org.apache.spark.sql.SparkSession, path: String,
                         probeDocs: DataFrame, maxDfPct: Int, topK: Int,
                         idCol: String = "doc_id", textCol: String = "text",
                         dispatch: Boolean = true): DataFrame = {
-    val gens = tier(spark, path).gens // ONE snapshot for all tables
-    val (ptok, toks, _) = probeTokens(probeDocs, idCol, textCol)
-    // LAZY-CHECKPOINT the frames the dispatch job and the serve job
-    // BOTH consume (round 19 — the round-18 shared-subtree discipline
-    // applied across JOBS): runtime exchange reuse deduplicates
-    // identical subtrees only WITHIN one job, and the dispatch decision
-    // below is its own driver action, so without truncation the
-    // gens-folded stats (df/stats scans + fold aggregates), θ (the
-    // whole prefix partial-sum pipeline) and the per-token bounds each
-    // re-executed in every job that referenced them — θ up to three
-    // times per serve. All four frames are bounded by construction
-    // (vocab rows, 1 stats row, ≤ probes θ rows, ≤ probe-vocab bounds),
-    // the same class the repo already checkpoints.
-    val (dfT0, stats00) = lexTierStatsAt(spark, path, gens)
-    val dfT = dfT0.localCheckpoint(false)
-    val stats0 = stats00.localCheckpoint(false)
-    val stats = stats0.withColumn("avgdl", expr(Bm25AvgdlSql))
-    val (postings, dlen) = lexTierTablesAt(spark, path, gens)
-    val tokPruned = tokenScanFilter(postings, toks)
-    // phase 1: partial scores over the prefix rows → θ. The idf/term
-    // arithmetic is the scoring form verbatim (same DetMath ln, same
-    // micro-unit term SQL), summed over the subset of tokens whose
-    // prefix the doc entered — bounded by M·|probe tokens|·gens rows
-    // by the prefix construction.
-    val prefix = tokenScanFilter(folded(spark, path, gens, "postings_pruned"), toks)
-    val idf = dfT.join(broadcast(ptok.select("t").distinct()), "t")
-      .crossJoin(broadcast(stats.select("n")))
-      .filter(expr(s"df * 100 <= $maxDfPct * n"))
-      .withColumn("__x", expr(Bm25IdfArgSql))
-      .withColumn("__idf", graft.functions.DetMathExpr.detLn(col("__x")))
-      .select(col("t"), col("__idf"))
-    val phase1 = prefix
-      .join(broadcast(ptok), "t")
-      .filter(col(idCol) =!= col("probe_id"))
-      .join(broadcast(idf), "t")
-      .crossJoin(broadcast(stats.select("avgdl")))
-      .withColumn("__term", expr(Bm25TermSql))
-      .groupBy(col("probe_id"), col(idCol).as("cand_id"))
-      .agg(sum(col("__term")).as("__micro"))
-      .select(col("probe_id"), col("cand_id"),
-        expr(Bm25ScoreOf("__micro")).as("__score"))
-    val theta0 = phase1
+    val t = tier(spark, path)
+    val gens = t.gens // ONE snapshot for all tables
+    val probe = probeTokens(probeDocs, idCol, textCol)
+    val stats = probedStats(t, gens, probe)
+    val weightOf = tokenWeights(spark, stats, maxDfPct).map(w => w.getString(0) -> w).toMap
+    // (probe pair, token weights) for every admitted probed token
+    val weighted = probe.rows.flatMap(p => weightOf.get(p.getString(1)).map(p -> _))
+    val pairSchema = probe.pairs.schema
+      .add("__idf", "double").add("avgdl", "double").add("__ub", "long")
+    // θ rides along per pair, -∞ for a probe without one (every pair
+    // survives)
+    def weightFrame(theta: Map[Any, Double]): DataFrame = localFrame(spark,
+      weighted.map { case (p, w) =>
+        Row(p.get(0), p.get(1), w.get(2), w.get(3), w.get(4),
+          theta.getOrElse(p.get(0), Double.NegativeInfinity))
+      }, pairSchema.add("__theta", "double"))
+    def probedPairs(table: DataFrame, weights: DataFrame): DataFrame =
+      probedRows(table, probe).join(broadcast(weights), "t")
+        .filter(col(idCol) =!= col("probe_id"))
+
+    // phase 1: partial scores over the prefix rows → θ per probe
+    val thetaDf = scoreRows(probedPairs(t.folded(gens, "postings_pruned"),
+        weightFrame(Map.empty)), idCol)
       .groupBy("probe_id")
       .agg(graft.functions.BoundedTopK.topk(
         col("__score"), col("cand_id"), topK).as("__nn"))
@@ -749,95 +753,22 @@ object Lex {
         when(size(col("__nn")) >= topK,
           element_at(col("__nn"), topK).getField("score"))
           .otherwise(lit(Double.NegativeInfinity)).as("__theta"))
-    // phase 2: per-pair upper bounds over the token-pruned postings —
-    // descaled through the same monotone division as the score, so
-    // boundScore ≥ exactScore pairwise
-    val ub0 = bm25UpperBounds(dfT, stats, ptok, maxDfPct)
-    // test-facing plan capture (the [[Dedup.captureGramPlan]] pattern):
-    // the checkpoints make θ and the bounds opaque RDD leaves in the
-    // served plan, so the PlanSpec gates that audit the prefix scan's
-    // In(t, …) pushdown (θ's input) read the plans recorded here at
-    // construction. Off by default; no production caller flips it.
-    if (captureWandPlans) {
-      // SIMPLE mode (one line per operator, PushedFilters inline) — the
-      // format the PlanSpec scan greps parse; formatted mode splits a
-      // scan's path and filters across lines
-      lastWandThetaPlan = theta0.queryExecution.executedPlan.toString
-      lastWandUbPlan = ub0.queryExecution.executedPlan.toString
-    }
-    val theta = theta0.localCheckpoint(false)
-    val ub = ub0.localCheckpoint(false)
-    // ---- DEGENERATE-SHAPE DISPATCH (round 18 — r17 verdict #3) ----
-    // WAND only WINS when per-pair bounds can fall below θ; on a flat
-    // vocabulary every doc shares every probed token at near-identical
-    // lengths, bounds are near-uniform, survivors ≈ all pairs, and the
-    // serve pays the ub aggregation + survivor join ON TOP of the exact
-    // scoring it cannot avoid (measured 1.94× the exact serve at 30×,
-    // SCALEBENCH_r17). The dispatch estimates prunability BEFORE paying
-    // phases 2-3, per probe, from bounded frames only (the MaxScore
-    // feasibility argument — Turtle & Flood 1995): sort the probe's
-    // admitted tokens by descaled upper-bound contribution; a pair
-    // missing the top-j tokens is prunable only where the remaining
-    // tail sum < θ, and the number of docs missing ALL top-j tokens is
-    // ≥ n − Σ_{i≤j} df_i (union bound). A probe is "prunable" when at
-    // least half its LARGEST posting list is provably prunable at some
-    // cut; when fewer than half the probes are prunable, the whole
-    // batch serves the EXACT path. Output is hash-identical BY
-    // CONSTRUCTION whichever way the heuristic lands — pruning is
-    // lossless (survivors ⊇ the true top-k) and both routes score
-    // through the shared [[bm25Scores]] form — so the dispatch can only
-    // be suboptimal, never wrong; the registry oracle keeps proving
-    // that every round. Decision cost: one aggregate over phase 1's
-    // bounded prefix rows plus a window over the ≤ MaxProbeVocab
-    // (probe, token) impact rows — paid once per serve, corpus-free.
-    val route: String =
+    val theta = thetaDf.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+    if (captureWandPlans)
+      lastWandThetaPlan = thetaDf.queryExecution.executedPlan.toString
+
+    val route =
       if (!dispatch) "wand:forced"
-      else {
-        import org.apache.spark.sql.expressions.Window
-        val nDocs = stats.select(col("n")).head.getLong(0)
-        val wOrd = Window.partitionBy("probe_id")
-          .orderBy(col("__u").desc, col("t"))
-        val wAll = Window.partitionBy("probe_id")
-        val cut = ub
-          .join(dfT.select(col("t"), col("df")), "t")
-          .join(broadcast(ptok), "t")
-          .withColumn("__u", expr(Bm25ScoreOf("__ub")))
-          .withColumn("__cum", sum(col("__u")).over(wOrd))
-          .withColumn("__tot", sum(col("__u")).over(wAll))
-          .withColumn("__cumDf", sum(col("df")).over(wOrd))
-          .withColumn("__maxDf", max(col("df")).over(wAll))
-          .join(broadcast(theta), "probe_id")
-          .filter(col("__theta") =!= lit(Double.NegativeInfinity) &&
-            (col("__tot") - col("__cum")) < col("__theta"))
-          .groupBy("probe_id")
-          .agg(min(col("__cumDf")).as("__dfCut"),
-            first(col("__maxDf")).as("__listMax"))
-        val d = theta.join(cut, Seq("probe_id"), "left")
-          .agg(count(lit(1)).as("np"),
-            sum(when(col("__dfCut").isNotNull &&
-              (lit(nDocs) - col("__dfCut")) >=
-                col("__listMax") / lit(2), 1L).otherwise(0L)).as("npr"))
-          .head
-        val np = d.getLong(0)
-        val npr = if (d.isNullAt(1)) 0L else d.getLong(1)
-        if (npr * 2 < np) "exact" else "wand"
-      }
+      else maxScoreRoute(weighted, theta, stats.headOption.fold(0L)(_.getLong(5)))
     lastWandRoute = route
-    if (route == "exact")
-      // the exact serve verbatim ([[queryLexIndex]]'s body over the
-      // snapshot already in hand): no ub pass, no survivor join
-      return bm25Scores(tokPruned, dlen, ptok, maxDfPct, idCol,
-        dfStats = Some((dfT, stats0)))
-    val survivors = tokPruned
-      .join(broadcast(ptok), "t")
-      .filter(col(idCol) =!= col("probe_id"))
-      .join(broadcast(ub), "t")
+    val rows = probedPairs(t.folded(gens, "postings"), weightFrame(theta))
+    // the exact serve over the snapshot already in hand: no bound pass,
+    // no survivor join
+    if (route == "exact") return scoreRows(rows, idCol)
+    val survivors = rows
       .groupBy(col("probe_id"), col(idCol))
-      .agg(sum(col("__ub")).as("__ubm"))
-      .withColumn("__ubscore", expr(Bm25ScoreOf("__ubm")))
-      .join(broadcast(theta), Seq("probe_id"), "left")
-      .filter(col("__ubscore") >=
-        coalesce(col("__theta"), lit(Double.NegativeInfinity)))
+      .agg(sum(col("__ub")).as("__ubm"), max(col("__theta")).as("__theta"))
+      .filter(expr(Bm25ScoreOf("__ubm")) >= col("__theta"))
       .select(col("probe_id"), col(idCol))
     // phase 3: exact-score the survivors only. NO broadcast hint on the
     // survivor join: the set is θ-dependent — bounded when score bounds
@@ -845,9 +776,51 @@ object Lex {
     // forced corpus-sized broadcast is exactly the hazard AQE's
     // size-based choice avoids (measured: a 3M-pair survivor broadcast
     // OOMed a 1 GB driver on the flat-vocab 10× corpus).
-    bm25Scores(tokPruned, dlen, ptok, maxDfPct, idCol,
-      dfStats = Some((dfT, stats0)), candidates = Some(survivors),
+    scoreRows(rows, idCol, candidates = Some(survivors),
       hintBroadcastCandidates = false)
+  }
+
+  /** The DEGENERATE-SHAPE DISPATCH, on the driver over bounded rows:
+    * "exact" when WAND cannot pay for itself, else "wand". WAND only
+    * WINS when per-pair bounds can fall below θ; on a flat vocabulary
+    * every doc shares every probed token at near-identical lengths,
+    * bounds are near-uniform, survivors ≈ all pairs, and the serve pays
+    * the bound aggregation + survivor join ON TOP of the exact scoring
+    * it cannot avoid (measured 1.94× the exact serve at 30×,
+    * SCALEBENCH_r17). The test is the MaxScore feasibility argument
+    * (Turtle & Flood 1995), per probe with a finite θ: sort the probe's
+    * admitted tokens by descaled upper-bound contribution `u` (ties by
+    * token, in Spark's UTF-8 byte order); a pair missing the top-j
+    * tokens is prunable only where the remaining tail sum (the total
+    * minus the running sum, both summed in that order) < θ, and the
+    * number of docs missing ALL top-j tokens is ≥ n − Σ_{i≤j} df_i
+    * (union bound). A probe is "prunable" when at least half its
+    * LARGEST posting list is provably prunable at some cut; when fewer
+    * than half the probes with a θ are prunable, the batch serves the
+    * EXACT path. Output is hash-identical BY CONSTRUCTION whichever way
+    * the heuristic lands — pruning is lossless and both routes score
+    * through the same form — so the dispatch can only be suboptimal,
+    * never wrong. */
+  private def maxScoreRoute(weighted: Seq[(Row, Row)], theta: Map[Any, Double],
+                            nDocs: Long): String = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val tokensOf = weighted.groupBy(_._1.get(0))
+    val prunable = theta.count { case (probeId, th) =>
+      th != Double.NegativeInfinity && {
+        val toks = tokensOf.getOrElse(probeId, Seq.empty)
+          .map { case (p, w) =>
+            (w.getLong(4).toDouble / 1.0E12, UTF8String.fromString(p.getString(1)), w.getLong(1))
+          }
+          .sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2.compareTo(b._2) < 0))
+        val cum = toks.scanLeft(0.0)(_ + _._1).tail
+        val cumDf = toks.scanLeft(0L)(_ + _._3).tail
+        val tot = cum.lastOption.getOrElse(0.0)
+        val listMax = toks.map(_._3).maxOption.getOrElse(0L)
+        cum.indices.find(i => tot - cum(i) < th)
+          .exists(i => (nDocs - cumDf(i)).toDouble >= listMax / 2.0)
+      }
+    }
+    if (prunable * 2L < theta.size) "exact" else "wand"
   }
 
   /** COMPACT: fold generations into the base tables and drop them.
@@ -864,7 +837,7 @@ object Lex {
     t.require("compactLexIndex", fingerprint)
     val gens = t.gens
     if (gens.isEmpty) return
-    val (postings, dlen) = lexTierTablesAt(spark, path, gens)
+    val (postings, dlen) = lexTierTablesAt(t, gens)
     // materialize the merged plans BEFORE retracting the marker: they
     // reference the very files the rewrite overwrites, AND a transient
     // checkpoint failure here must leave a still-serving tier, not a

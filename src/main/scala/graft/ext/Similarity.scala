@@ -539,7 +539,7 @@ object Similarity {
         () => corpus.select(col(idCol), col(vecCol), col(listCol))
           .write.mode("overwrite").partitionBy(listCol).parquet(s"$indexPath/lists"))
     }
-    corpus.sparkSession.read.parquet(s"$indexPath/centroids")
+    ivfTier(corpus.sparkSession, indexPath).read("centroids")
   }
 
   /** DISTRIBUTED kNN-GRAPH CONSTRUCTION (NN-Descent — Dong, Moses &
@@ -1217,7 +1217,7 @@ object Similarity {
         () => corpus.select(col(idCol), col(vecCol))
           .write.mode("overwrite").parquet(s"$indexPath/vectors"))
     }
-    corpus.sparkSession.read.parquet(s"$indexPath/graph_edges")
+    graphTier(corpus.sparkSession, indexPath).read("graph_edges")
   }
 
   /** [[graphSearch]] served from a persisted [[buildGraphIndex]] tier —
@@ -1228,10 +1228,9 @@ object Similarity {
                          hops: Int = 2, entryStride: Int = GraphEntryStride,
                          idCol: String = "vec_id", vecCol: String = "embedding",
                          entryLayer: Option[DataFrame] = None): DataFrame = {
-    graphTier(spark, indexPath).require("graphSearchIndexed")
-    graphSearchOn(
-      spark.read.parquet(s"$indexPath/graph_edges"),
-      spark.read.parquet(s"$indexPath/vectors"),
+    val tier = graphTier(spark, indexPath)
+    tier.require("graphSearchIndexed")
+    graphSearchOn(tier.read("graph_edges"), tier.read("vectors"),
       probes, k, beam, hops, entryStride, idCol, vecCol, entryLayer)
   }
 
@@ -1279,9 +1278,7 @@ object Similarity {
     tier.append(gen => graft.core.Par.run(
       () => batch.select(col(idCol), col(vecCol))
         .write.mode("overwrite").parquet(s"$gen/vectors"),
-      () => graphSearchOn(
-          spark.read.parquet(s"$indexPath/graph_edges"),
-          spark.read.parquet(s"$indexPath/vectors"),
+      () => graphSearchOn(tier.read("graph_edges"), tier.read("vectors"),
           batch, k, beam, hops, entryStride, idCol, vecCol, entryLayer)
         .select(col("probe_id").as(idCol), col("neighbor_id"), col("cos_sim"))
         .write.mode("overwrite").parquet(s"$gen/edges")))
@@ -1297,15 +1294,13 @@ object Similarity {
     val tier = graphTier(spark, indexPath)
     val gens = tier.gens
     if (gens.isEmpty) None
-    else if (gens.sizeIs == 1)
-      Some(spark.read.parquet(s"${tier.genPath(gens.head)}/edges"))
     else {
-      val tagged = gens
-        .map(g => spark.read.parquet(s"${tier.genPath(g)}/edges")
-          .withColumn("__gen", lit(g)))
-        .reduce(_ unionByName _)
-      val latest = tagged.groupBy(col(idCol)).agg(max(col("__gen")).as("__gen"))
-      Some(tagged.join(latest, Seq(idCol, "__gen")).drop("__gen"))
+      val tagged = tier.genRows(gens, "edges")
+      if (gens.sizeIs == 1) Some(tagged.drop("gen"))
+      else {
+        val latest = tagged.groupBy(col(idCol)).agg(max(col("gen")).as("gen"))
+        Some(tagged.join(latest, Seq(idCol, "gen")).drop("gen"))
+      }
     }
   }
 
@@ -1317,15 +1312,11 @@ object Similarity {
     val tier = graphTier(spark, indexPath)
     val gens = tier.gens
     if (gens.isEmpty) None
-    else if (gens.sizeIs == 1)
-      Some(spark.read.parquet(s"${tier.genPath(gens.head)}/vectors")
-        .select(col(idCol), col(vecCol)))
-    else Some(
-      gens.map(g => spark.read.parquet(s"${tier.genPath(g)}/vectors")
-          .select(col(idCol), col(vecCol), lit(g).as("__gen")))
-        .reduce(_ unionByName _)
-        .groupBy(col(idCol))
-        .agg(max_by(col(vecCol), col("__gen")).as(vecCol)))
+    else {
+      val tagged = tier.genRows(gens, "vectors")
+      Some(if (gens.sizeIs == 1) tagged.select(col(idCol), col(vecCol))
+        else tagged.groupBy(col(idCol)).agg(max_by(col(vecCol), col("gen")).as(vecCol)))
+    }
   }
 
   /** COMPACT the graph tier: full NN-Descent rebuild over base ∪ delta
@@ -1345,12 +1336,12 @@ object Similarity {
     tier.require("compactGraphIndex")
     graphDeltaVectors(spark, indexPath, idCol, vecCol) match {
       case None =>
-        spark.read.parquet(s"$indexPath/graph_edges")
+        tier.read("graph_edges")
       case Some(dv) =>
         // materialize the union BEFORE rebuilding: buildGraphIndex
         // overwrites `vectors`, and Spark (rightly) refuses to overwrite
         // a path an active plan still reads from
-        val all = spark.read.parquet(s"$indexPath/vectors")
+        val all = tier.read("vectors")
           .join(dv.select(col(idCol)), Seq(idCol), "left_anti")
           .unionByName(dv)
           .localCheckpoint(true)
@@ -1431,13 +1422,14 @@ object Similarity {
                   mSub: Int = 4, subDim: Int = 16, ks: Int = 8,
                   idCol: String = "vec_id", vecCol: String = "embedding",
                   listCol: String = "label"): DataFrame = {
-    ivfTier(spark, indexPath).require("buildPqTier")
+    val ivf = ivfTier(spark, indexPath)
+    ivf.require("buildPqTier")
     pqTier(spark, indexPath).rewrite(pqFingerprint(mSub, subDim, ks)) {
-      val lists = spark.read.parquet(s"$indexPath/lists")
+      val lists = ivf.read("lists")
         .select(col(idCol), col(vecCol), col(listCol))
       // residual PQ (the knnIvfPq discipline): codes quantize
       // x − μ_list(x) against the index's own persisted centroids
-      val cent = spark.read.parquet(s"$indexPath/centroids")
+      val cent = ivf.read("centroids")
       val rlists = lists
         .join(broadcast(cent), listCol)
         .select(col(idCol),
@@ -1453,7 +1445,7 @@ object Similarity {
           .write.mode("overwrite").partitionBy(listCol)
           .parquet(s"$indexPath/pq_codes"))
     }
-    spark.read.parquet(s"$indexPath/pq_codebooks")
+    pqTier(spark, indexPath).read("pq_codebooks")
   }
 
   /** IVF-PQ search against the PERSISTED index + PQ tier — identical
@@ -1476,20 +1468,21 @@ object Similarity {
     import org.apache.spark.sql.types.DecimalType
     // the marker's geometry is not checked here: it is read from the
     // tier's own codebooks below
-    require(pqTier(spark, indexPath).marked,
-      s"knnIvfPqIndexed: no complete PQ tier at $indexPath")
+    val pq = pqTier(spark, indexPath)
+    require(pq.marked, s"knnIvfPqIndexed: no complete PQ tier at $indexPath")
     // staleness guard: the codes tier is built from the BASE lists, so
     // probing it while live delta generations exist would silently miss
     // every upserted vector (and serve superseded copies of re-upserted
     // ids). Refusing is the honest contract: compact the deltas into
     // the base (compactIvfIndex) and rebuild the tier, or probe the
     // vector tier (knnIvfUpserted) until then.
-    require(ivfTier(spark, indexPath).gens.isEmpty,
+    val ivf = ivfTier(spark, indexPath)
+    require(ivf.gens.isEmpty,
       s"knnIvfPqIndexed: live delta generations at $indexPath — the PQ " +
         "codes tier predates them; compactIvfIndex + buildPqTier first " +
         "(or probe knnIvfUpserted)")
-    val cent = spark.read.parquet(s"$indexPath/centroids")
-    val cb = spark.read.parquet(s"$indexPath/pq_codebooks")
+    val cent = ivf.read("centroids")
+    val cb = pq.read("pq_codebooks")
     val pv = probes.select(col(idCol).as("probe_id"),
       transform(col(vecCol), x => x.cast("double")).as("__pv"))
     val probed = pv
@@ -1528,7 +1521,7 @@ object Similarity {
     // broadcast: its list column drives directory pruning of the codes
     // scan, its (m, code) legs resolve each candidate's ADC terms
     val probedLut = probed.join(lut, "probe_id")
-    val codes = spark.read.parquet(s"$indexPath/pq_codes")
+    val codes = pq.read("pq_codes")
     val cand = codes
       .join(broadcast(probedLut), Seq(listCol, "__m", "__code"))
       .filter(col(idCol) =!= col("probe_id"))
@@ -1543,7 +1536,7 @@ object Similarity {
     // re-rank fetch: restrict the vector read to the probed lists first
     // (broadcast list-id join → partition pruning, the knnIvfIndexed
     // shape), then resolve the ≤ k·candMult winners by id
-    val fetch = spark.read.parquet(s"$indexPath/lists")
+    val fetch = ivf.read("lists")
       .select(col(idCol).as("neighbor_id"), col(vecCol), col(listCol))
       .join(broadcast(probed.select(listCol).distinct()), listCol)
       .select(col("neighbor_id"),
@@ -1582,16 +1575,16 @@ object Similarity {
                      probes: DataFrame, k: Int, nprobe: Int = 2,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      listCol: String = "label"): DataFrame = {
-    ivfTier(spark, indexPath).require("knnIvfUpserted")
-    val base = spark.read.parquet(s"$indexPath/lists")
-      .select(col(idCol), col(vecCol), col(listCol))
+    val tier = ivfTier(spark, indexPath)
+    tier.require("knnIvfUpserted")
+    val base = tier.read("lists").select(col(idCol), col(vecCol), col(listCol))
     val lists = deltaSegment(spark, indexPath, idCol, vecCol, listCol) match {
       case Some(d) =>
         base.join(broadcast(d.select(col(idCol))), Seq(idCol), "left_anti")
           .unionByName(d)
       case None => base
     }
-    ivfSearch(spark.read.parquet(s"$indexPath/centroids"),
+    ivfSearch(tier.read("centroids"),
       lists, probes, k, nprobe, idCol, vecCol, listCol, broadcastProbes = true)
   }
 
@@ -1605,7 +1598,7 @@ object Similarity {
                     newVecs: DataFrame, idCol: String = "vec_id",
                     vecCol: String = "embedding",
                     listCol: String = "label"): DataFrame = {
-    val cent = spark.read.parquet(s"$indexPath/centroids")
+    val cent = ivfTier(spark, indexPath).read("centroids")
     newVecs.select(col(idCol), col(vecCol))
       .crossJoin(broadcast(cent))
       .groupBy(col(idCol))
@@ -1664,7 +1657,7 @@ object Similarity {
     if (!newVecs.select(col(idCol)).isEmpty)
       tier.append(gen => assignToIndex(spark, indexPath, newVecs, idCol, vecCol, listCol)
         .write.mode("overwrite").partitionBy(listCol).parquet(gen))
-    val base = spark.read.parquet(s"$indexPath/lists")
+    val base = tier.read("lists")
       .groupBy(col(listCol).cast("int").as(listCol))
       .agg(count(lit(1)).as("n_base"))
     base.join(deltaSegment(spark, indexPath, idCol, vecCol, listCol)
@@ -1693,17 +1686,14 @@ object Similarity {
     val tier = ivfTier(spark, indexPath)
     val gens = tier.gens
     if (gens.isEmpty) None
-    else if (gens.sizeIs == 1)
-      Some(spark.read.parquet(tier.genPath(gens.head))
-        .select(col(idCol), col(vecCol), col(listCol)))
-    else Some(
-      gens.map(g => spark.read.parquet(tier.genPath(g))
-          .select(col(idCol), col(vecCol), col(listCol), lit(g).as("__gen")))
-        .reduce(_ unionByName _)
-        .groupBy(col(idCol))
-        .agg(max_by(struct(col(vecCol), col(listCol)), col("__gen")).as("__r"))
-        .select(col(idCol), col(s"__r.$vecCol").as(vecCol),
-          col(s"__r.$listCol").as(listCol)))
+    else {
+      val tagged = tier.genRows(gens, "")
+      Some(if (gens.sizeIs == 1) tagged.select(col(idCol), col(vecCol), col(listCol))
+        else tagged.groupBy(col(idCol))
+          .agg(max_by(struct(col(vecCol), col(listCol)), col("gen")).as("__r"))
+          .select(col(idCol), col(s"__r.$vecCol").as(vecCol),
+            col(s"__r.$listCol").as(listCol)))
+    }
   }
 
   /** COMPACTION — the LSM fold that answers a tripped `recluster` flag
@@ -1735,7 +1725,7 @@ object Similarity {
     tier.require("compactIvfIndex")
     deltaSegment(spark, indexPath, idCol, vecCol, listCol) match {
       case None => // nothing outstanding: compaction is a no-op read
-        spark.read.parquet(s"$indexPath/centroids")
+        tier.read("centroids")
       case Some(d) =>
         // EAGER checkpoint instead of a staging parquet round-trip
         // (round 18 — the [[compactGraphIndex]] discipline): the merged
@@ -1745,7 +1735,7 @@ object Similarity {
         // compact-staging dir cost one extra corpus write AND read per
         // compaction). Eager, not lazy: a lazy checkpoint would
         // materialize mid-overwrite.
-        val all = spark.read.parquet(s"$indexPath/lists")
+        val all = tier.read("lists")
           .select(col(idCol), col(vecCol), col(listCol))
           .join(broadcast(d.select(col(idCol))), Seq(idCol), "left_anti")
           .unionByName(d)
@@ -1773,10 +1763,10 @@ object Similarity {
                     probes: DataFrame, k: Int, nprobe: Int = 2,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     listCol: String = "label"): DataFrame = {
-    ivfTier(spark, indexPath).require("knnIvfIndexed")
-    ivfSearch(spark.read.parquet(s"$indexPath/centroids"),
-      spark.read.parquet(s"$indexPath/lists")
-        .select(col(idCol), col(vecCol), col(listCol)),
+    val tier = ivfTier(spark, indexPath)
+    tier.require("knnIvfIndexed")
+    ivfSearch(tier.read("centroids"),
+      tier.read("lists").select(col(idCol), col(vecCol), col(listCol)),
       probes, k, nprobe, idCol, vecCol, listCol, broadcastProbes = true)
   }
 

@@ -3,7 +3,10 @@ package graft.ext
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One persisted tier root: the completion marker that makes its base
   * visible and, for tiers that take arrivals, the numbered delta
@@ -83,6 +86,57 @@ final class Tier(spark: SparkSession, val root: String, marker: String,
 
   def genPath(gen: Int): String = s"$gensDir/gen=$gen"
 
+  /** `table` of generation `gen`; "" names the generation directory. */
+  private def genTable(gen: Int, table: String): String =
+    if (table.isEmpty) genPath(gen) else s"${genPath(gen)}/$table"
+
+  /** The table `table` under the root. */
+  def read(table: String): DataFrame = scan(Seq(s"$root/$table"))
+
+  /** The base's `baseTable` and `table` of each generation in `gens` (a
+    * [[gens]] snapshot), as one scan: the rows of every segment, with
+    * the base's schema. The table must not be partitioned by directory:
+    * one scan infers partition columns only under a single root. */
+  def folded(gens: Seq[Int], table: String, baseTable: String = ""): DataFrame =
+    scan(s"$root/${if (baseTable.isEmpty) table else baseTable}" +:
+      gens.map(genTable(_, table)))
+
+  /** `table` of each generation in the non-empty snapshot `gens`, as one
+    * scan whose rows carry their generation number in an int column
+    * `gen`, for the latest-wins merge rules. */
+  def genRows(gens: Seq[Int], table: String): DataFrame =
+    scan(gens.map(genTable(_, table)), basePath = Some(gensDir))
+
+  /** `paths` as one parquet scan. The schema is the row schema Spark
+    * wrote into the footer of the first path's first data file, read on
+    * the driver, so building the frame runs no Spark job (schema
+    * inference runs one per read). With `basePath`, the directories
+    * between it and each path are partition columns. */
+  private def scan(paths: Seq[String], basePath: Option[String] = None): DataFrame = {
+    Predef.require(paths.nonEmpty, s"no tier table to read under $root")
+    val reader = spark.read.schema(footerSchema(new Path(paths.head)))
+    basePath.fold(reader)(reader.option("basePath", _)).parquet(paths: _*)
+  }
+
+  private def footerSchema(dir: Path): StructType = {
+    val f = fs
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def firstFile(d: Path): Option[Path] = {
+      val (files, dirs) = f.listStatus(d).filter(s => visible(s.getPath)).partition(_.isFile)
+      files.headOption.map(_.getPath)
+        .orElse(dirs.iterator.map(s => firstFile(s.getPath)).collectFirst { case Some(p) => p })
+    }
+    val file = firstFile(dir).getOrElse(
+      throw new IllegalStateException(s"no parquet data file under $dir"))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(Tier.RowSchemaKey)
+      finally reader.close()
+    if (json == null)
+      throw new IllegalStateException(s"$file carries no Spark row schema (${Tier.RowSchemaKey})")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
+
   /** Completed generation numbers, ascending. */
   def gens: Seq[Int] = {
     val f = fs
@@ -110,8 +164,8 @@ final class Tier(spark: SparkSession, val root: String, marker: String,
 
   /** The auto-compaction policy: due once `maxGens` generations have
     * completed, or once the delta/base row ratio of the layout's table
-    * reaches `maxRatio`. The ratio costs one count job per generation
-    * plus one for the base, so it is computed only when the gens bar
+    * reaches `maxRatio`. The ratio costs two counts, the base and every
+    * generation as one scan, so it is computed only when the gens bar
     * has not fired and `maxRatio` is finite: `maxRatio = ∞` means the
     * gens bar alone. An empty base with live generations fires at every
     * finite `maxRatio`. */
@@ -119,16 +173,18 @@ final class Tier(spark: SparkSession, val root: String, marker: String,
     val g = gens
     g.nonEmpty && (g.sizeIs >= maxGens || (!maxRatio.isInfinity && {
       val t = gensLayout
-      def rows(dir: String, table: String) = spark.read
-        .parquet(if (table.isEmpty) dir else s"$dir/$table").count()
-      val nDelta = g.map(n => rows(genPath(n), t.genTable)).sum
-      val nBase = rows(root, t.table)
+      val nDelta = genRows(g, t.genTable).count()
+      val nBase = read(t.table).count()
       nBase == 0 || nDelta.toDouble / nBase >= maxRatio
     }))
   }
 }
 
 object Tier {
+
+  /** The parquet footer key under which Spark writes a file's row schema
+    * (JSON). */
+  val RowSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Where a tier keeps its generations: `root/dir/gen=N`, each visible
     * once `marker` exists inside it. The compaction ratio compares the

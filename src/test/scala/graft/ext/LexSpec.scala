@@ -198,6 +198,35 @@ class LexSpec extends SparkSpec {
     dispS shouldBe forcS
   }
 
+  test("WAND serve job budget: bounded frames are collected once and the route is decided on the driver") {
+    // Spark jobs per serve through its collect, on a 2-generation tier
+    // and after compaction, on both routes: at most 14 / 14 (wand) and
+    // 11 / 11 (exact). AQE plans the wand route's survivor join by the
+    // order its input stages finish, so a run may take one job fewer.
+    // With each bounded frame a lazy checkpoint, the route decision its
+    // own action and one schema-inferring read per table and segment,
+    // the same serves ran 55 / 45 (wand) and 51 / 41 (exact).
+    val flat = (0 until 12).map(j => s"w$j").mkString(" ")
+    val shapes = Seq(
+      ("wand", ((0L until 198L).map(i => (i, s"u${i}x common")) ++
+        Seq((198L, "r1 r2 common"), (199L, "r1 r2 common"))).toDF("doc_id", "text"),
+        Seq((1000L, "r1 r2 common")).toDF("doc_id", "text"), 2, 14, 14),
+      ("exact", (0L until 50L).map(i => (i, flat)).toDF("doc_id", "text"),
+        Seq((1000L, flat)).toDF("doc_id", "text"), 3, 11, 11))
+    for ((route, corpus, probe, k, twoGens, compacted) <- shapes) withClue(s"$route: ") {
+      val path = s"target/test_lex_wand_jobs_${route}_${System.nanoTime()}"
+      Lex.buildLexIndex(spark, path, corpus.filter(col("doc_id") % 4 =!= 0), fp)
+      Lex.upsertLexIndex(spark, path, corpus.filter(col("doc_id") % 8 === 0), fp)
+      Lex.upsertLexIndex(spark, path, corpus.filter(col("doc_id") % 8 === 4), fp)
+      Lex.tier(spark, path).gens shouldBe Seq(1, 2)
+      jobsOf(Lex.queryLexIndexWand(spark, path, probe, 100, topK = k).collect()) should be <= twoGens
+      Lex.lastWandRoute shouldBe route
+      Lex.compactLexIndex(spark, path, fp)
+      jobsOf(Lex.queryLexIndexWand(spark, path, probe, 100, topK = k).collect()) should be <= compacted
+      Lex.lastWandRoute shouldBe route
+    }
+  }
+
   test("empty-vocabulary probe batches serve empty results through every path (the isin-empty edge)") {
     val path = s"target/test_lex_empty_${System.nanoTime()}"
     Lex.buildLexIndex(spark, path, docs, fp)

@@ -63,7 +63,9 @@ class TierSpec extends SparkSpec {
           .toDF("doc_id", "text"))
         postings.write.parquet(s"$dir/postings")
         dlen.write.parquet(s"$dir/dlen")
-      }),
+      },
+      tables = Seq("postings", "postings_pruned", "dlen", "df", "stats")
+        .map(t => Some(t) -> Some(t)) :+ (Some("forward") -> Some("postings"))),
     Case("ivf",
       tier = Similarity.ivfTier(spark, _),
       build = p => { Similarity.buildIvfIndex(ivfBase, p); () },
@@ -73,7 +75,8 @@ class TierSpec extends SparkSpec {
       serve = p => rows(Similarity.knnIvfUpserted(spark, p, ivfProbe, k = 5, nprobe = 3)
         .select("probe_id", "neighbor_id")),
       plant = dir => Seq((77L, 1, centers(1))).toDF("vec_id", "label", "embedding")
-        .write.partitionBy("label").parquet(dir)),
+        .write.partitionBy("label").parquet(dir),
+      tables = Seq(Some("centroids") -> None, Some("lists") -> None, None -> Some(""))),
     Case("graph",
       tier = Similarity.graphTier(spark, _),
       build = p => {
@@ -89,7 +92,9 @@ class TierSpec extends SparkSpec {
       serve = p => Similarity.graphDeltaEdges(spark, p)
         .map(e => rows(e.select("vec_id", "neighbor_id"))).getOrElse(Set.empty),
       plant = dir => Seq((99L, 0L, 1.0)).toDF("vec_id", "neighbor_id", "cos_sim")
-        .write.parquet(s"$dir/edges")),
+        .write.parquet(s"$dir/edges"),
+      tables = Seq(Some("graph_edges") -> None, Some("vectors") -> Some("vectors"),
+        None -> Some("edges"))),
     Case("near-dup",
       tier = Dedup.nearDupTier(spark, _),
       build = p => Dedup.buildNearDupIndex(spark, p, ndiKeys.filter(col("doc_id") <= 2L), ndiFp),
@@ -99,7 +104,8 @@ class TierSpec extends SparkSpec {
       maybeCompact = Dedup.maybeCompactNearDupIndex(spark, _, ndiFp, maxGens = 2,
         maxRatio = Inf),
       serve = p => rows(Dedup.queryNearDupIndex(spark, p, ndiProbe)),
-      plant = dir => Seq((0L, "k1")).toDF("doc_id", "key").write.parquet(s"$dir/bands")))
+      plant = dir => Seq((0L, "k1")).toDF("doc_id", "key").write.parquet(s"$dir/bands"),
+      tables = Seq(Some("bands") -> Some("bands"))))
 
   private def root(c: Case) = s"target/test_tier_${c.name}_${System.nanoTime()}"
 
@@ -146,6 +152,94 @@ class TierSpec extends SparkSpec {
     }
   }
 
+  private def tableDir(dir: String, table: String) =
+    if (table.isEmpty) dir else s"$dir/$table"
+
+  test("below the gens bar at a finite ratio, auto-compaction counts rows in the same number of Spark jobs for 1 and 3 generations") {
+    // the base is one count and every generation together another; with
+    // a schema-inferring read and a count per segment, every tier ran 6
+    // jobs for 1 generation and 12 for 3
+    for (c <- cases) withClue(s"${c.name}: ") {
+      val path = root(c)
+      val tier = c.tier(path)
+      c.build(path)
+      c.upsert(path, 1)
+      var due = true
+      val one = jobsOf { due = tier.compactionDue(maxGens = 10, maxRatio = 100.0) }
+      due shouldBe false
+      // the ratio counts rows only, so a repeated batch serves as a third
+      c.upsert(path, 2)
+      c.upsert(path, 1)
+      tier.gens shouldBe Seq(1, 2, 3)
+      jobsOf { due = tier.compactionDue(maxGens = 10, maxRatio = 100.0) } shouldBe one
+      due shouldBe false
+    }
+  }
+
+  test("tier reads follow the snapshot: a generation completed after it, or one without its marker, is not read") {
+    for (c <- cases) withClue(s"${c.name}: ") {
+      val path = root(c)
+      val tier = c.tier(path)
+      val gen = c.tables.collectFirst { case (_, Some(g)) => g }.get
+      val fold = c.tables.collectFirst { case (Some(b), Some(g)) => (b, g) }
+      c.build(path)
+      c.upsert(path, 1)
+      val snapshot = tier.gens
+      val tagged = tier.genRows(snapshot, gen)
+      val folded = fold.map { case (b, g) =>
+        val n = spark.read.parquet(s"$path/$b").count() +
+          spark.read.parquet(tableDir(tier.genPath(1), g)).count()
+        (tier.folded(snapshot, g, b), n)
+      }
+      c.upsert(path, 2)
+      c.plant(tier.genPath(3))
+      tier.gens shouldBe Seq(1, 2)
+      rows(tagged.select("gen").distinct()) shouldBe Set("1")
+      folded.foreach { case (df, n) => df.count() shouldBe n }
+      rows(tier.genRows(tier.gens, gen).select("gen").distinct()) shouldBe Set("1", "2")
+    }
+  }
+
+  test("tier reads take spark.read.parquet's schema for every table, an empty one included, and run no Spark job") {
+    val frames = scala.collection.mutable.ArrayBuffer[(DataFrame, String)]()
+    for (c <- cases) {
+      val path = root(c)
+      val tier = c.tier(path)
+      c.build(path)
+      c.upsert(path, 1)
+      c.upsert(path, 2)
+      val gens = tier.gens
+      jobsOf {
+        for ((base, gen) <- c.tables) {
+          base.foreach(b => frames += tier.read(b) -> s"$path/$b")
+          for (g <- gen; n <- gens)
+            frames += tier.genRows(Seq(n), g).drop("gen") -> tableDir(tier.genPath(n), g)
+          for (b <- base; g <- gen) frames += tier.folded(gens, g, b) -> s"$path/$b"
+        }
+      } shouldBe 0
+    }
+    // the fifth tier: product-quantized codes over an IVF index
+    val pqPath = s"target/test_tier_pq_${System.nanoTime()}"
+    Similarity.buildIvfIndex(ivfBase, pqPath)
+    Similarity.buildPqTier(spark, pqPath, mSub = 2, subDim = 4, ks = 4)
+    val pq = Similarity.pqTier(spark, pqPath)
+    // an empty arrival batch lands an empty generation table
+    val emptyPath = s"target/test_tier_empty_${System.nanoTime()}"
+    Dedup.buildNearDupIndex(spark, emptyPath, ndiKeys, ndiFp)
+    Dedup.upsertNearDupIndex(spark, emptyPath, ndiKeys.filter(lit(false)), ndiFp)
+    val nd = Dedup.nearDupTier(spark, emptyPath)
+    jobsOf {
+      Seq("pq_codebooks", "pq_codes").foreach(t => frames += pq.read(t) -> s"$pqPath/$t")
+      frames += nd.genRows(Seq(1), "bands").drop("gen") -> s"${nd.genPath(1)}/bands"
+      frames += nd.folded(Seq(1), "bands") -> s"$emptyPath/bands"
+    } shouldBe 0
+    spark.read.parquet(s"${nd.genPath(1)}/bands").count() shouldBe 0L
+    nd.folded(Seq(1), "bands").count() shouldBe ndiKeys.count()
+    for ((df, dir) <- frames) withClue(s"$dir: ") {
+      df.schema shouldBe spark.read.parquet(dir).schema
+    }
+  }
+
   test("IVF entry points refuse an index whose build never completed") {
     val path = s"target/test_tier_ivf_marker_${System.nanoTime()}"
     Similarity.buildIvfIndex(ivfBase, path)
@@ -166,7 +260,11 @@ object TierSpec {
   /** One tier under test. `upsert(path, i)` lands arrival batch i (1 or
     * 2); `plant(dir)` writes into a generation directory files a crashed
     * writer could leave there, which `serve` would show if it read
-    * them; `maybeCompact` runs the policy at maxGens = 2, maxRatio = ∞. */
+    * them; `maybeCompact` runs the policy at maxGens = 2, maxRatio = ∞.
+    * `tables` lists each table as (under the root, in a generation),
+    * `None` where it has no such copy and "" for the generation
+    * directory itself; where both exist the two fold together (only
+    * unpartitioned tables fold). */
   final case class Case(
       name: String,
       tier: String => Tier,
@@ -175,5 +273,6 @@ object TierSpec {
       compact: String => Unit,
       maybeCompact: String => Boolean,
       serve: String => Set[String],
-      plant: String => Unit)
+      plant: String => Unit,
+      tables: Seq[(Option[String], Option[String])])
 }

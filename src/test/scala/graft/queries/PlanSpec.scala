@@ -749,17 +749,16 @@ class PlanSpec extends SparkSpec {
       // side candidate collect + In(doc_id) push) must NOT appear
       // anywhere in the WAND plan; phases 2+3 share the token-pruned
       // postings scan — In(t, …) pushed on every postings-family read.
-      // Round 19: θ and the bounds are lazily checkpointed (consumed by
-      // the dispatch job AND the serve job), so the prefix scan lives
-      // in the CAPTURED θ plan and the served plan consumes the
-      // checkpointed leaves — the stronger structural property, audited
+      // θ and the bounds are collected to the driver, so the prefix
+      // scan lives in the CAPTURED θ plan and the served plan consumes
+      // a driver-local leaf — the stronger structural property, audited
       // through the captureWandPlans hook (the captureGramPlan recut).
       val tp = graft.ext.Lex.lastWandThetaPlan
       val prefixScan = tp.linesIterator
         .find(l => l.contains("/postings_pruned]") && l.contains("FileScan"))
       prefixScan should not be None
       prefixScan.get should include("In(t, [")
-      p should include("ExistingRDD") // the checkpointed θ/bounds leaves
+      p should include("LocalTableScan") // the collected θ/bounds leaf
       p should not include "/postings_pruned]"
       p.linesIterator
         .filter(l => l.contains("/postings]") && l.contains("FileScan"))
@@ -796,14 +795,14 @@ class PlanSpec extends SparkSpec {
     fdf.collect()
     Lex.lastWandRoute shouldBe "wand:forced"
     val p = plan(fdf).split("== Initial Plan ==").head
-    // round 19: the prefix scan feeds the checkpointed θ — audit its
-    // pushdown in the captured θ plan; the served plan must consume
-    // the checkpoint leaves (see the dispatch-aware gate above)
+    // the prefix scan feeds the collected θ — audit its pushdown in the
+    // captured θ plan; the served plan must consume the driver-local
+    // leaf (see the dispatch-aware gate above)
     val prefixScan = Lex.lastWandThetaPlan.linesIterator
       .find(l => l.contains("/postings_pruned]") && l.contains("FileScan"))
     prefixScan should not be None
     prefixScan.get should include("In(t, [")
-    p should include("ExistingRDD")
+    p should include("LocalTableScan")
     p should not include "/postings_pruned]"
     p.linesIterator
       .filter(l => l.contains("/postings]") && l.contains("FileScan"))
@@ -827,8 +826,8 @@ class PlanSpec extends SparkSpec {
     // the gate exists for. The forward table must not appear on EITHER
     // route (wand: θ derives from prefix partial sums, round 17;
     // exact dispatch: the inverted layout scores directly, round 18).
-    // Round 19: the pruned-prefix scans live in the checkpointed θ's
-    // captured plan (every generation's segment, base + delta).
+    // The pruned-prefix scans live in the collected θ's captured plan
+    // (every generation's segment, base + delta).
     val scans = p.linesIterator.filter(_.contains("FileScan")).toSeq
     val postingScans = scans.filter(l =>
       l.contains("/postings]") || l.contains("/postings_pruned]"))
