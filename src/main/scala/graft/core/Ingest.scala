@@ -3,17 +3,22 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.{EnvelopeDecode, ProducerTimestamp}
+
 /** Ingest / envelope operators — SURVEY.md §2.1-§2.2 (S1, P1-P4).
   *
   * The reference ingests a JSON envelope `{user_id, emoji_type, timestamp}`
   * over Kafka and parses it in three places with slightly different
   * leniency (`api_server.py:52-66`, `spark_consumer.py:27-35`,
-  * `analytical_server.py:22-27`). We centralize that as pure
-  * `DataFrame => DataFrame` transforms so the same code path serves batch
-  * (parquet) and streaming (Kafka `value` bytes).
+  * `analytical_server.py:22-27`). This object is that parse as pure
+  * `DataFrame => DataFrame` transforms, so one code path serves batch
+  * (parquet) and streaming (Kafka `value` bytes or a string wire column).
   *
-  * All expressions here are built-in Catalyst functions — codegen'd, no
-  * UDFs — so whole-stage codegen spans the parse (SURVEY.md §2.7).
+  * The envelope is decoded by one native generator,
+  * [[graft.functions.EnvelopeDecode]] (`json_tuple`'s rules, read from
+  * the UTF-8 bytes), and the event time by the arithmetic
+  * [[graft.functions.ProducerTimestamp]] ahead of a `try_to_timestamp`
+  * chain; validation and serialization are built-in Catalyst functions.
   */
 object Ingest {
 
@@ -25,7 +30,13 @@ object Ingest {
   private val isoMillisZ = "yyyy-MM-dd'T'HH:mm:ss.SSSX"
 
   /** P3+P4: lenient multi-format ISO-8601 parse (`spark_consumer.py:32-35`,
-    * `analytical_server.py:23-27`) via a `try_to_timestamp` coalesce chain.
+    * `analytical_server.py:23-27`). The producers' two formats are read by
+    * arithmetic ([[graft.functions.ProducerTimestamp]]); any other string
+    * falls to a `try_to_timestamp` coalesce chain: `isoMicros` in the
+    * session time zone, `isoMillisZ`, then Spark's default ISO parse,
+    * which covers second granularity. The arithmetic parse answers only
+    * strings on which the chain's first formatter returns the same
+    * instant.
     *
     * The `fallback` is what an unparsable string becomes. Batch queries use
     * the default `null` so results stay deterministic (the GQuery contract);
@@ -36,9 +47,10 @@ object Ingest {
       ts: Column,
       fallback: Column = lit(null).cast("timestamp")): Column =
     coalesce(
+      ProducerTimestamp.parse(ts),
       try_to_timestamp(ts, lit(isoMicros)),
       try_to_timestamp(ts, lit(isoMillisZ)),
-      try_to_timestamp(ts), // default ISO parser, covers second granularity
+      try_to_timestamp(ts),
       fallback)
 
   /** W8: unparsable event time → wall clock (`analytical_server.py:26-27`).
@@ -46,25 +58,25 @@ object Ingest {
     * oracle query. */
   def processingTimeFallback: Column = current_timestamp()
 
-  /** P1+P2: Kafka `value: binary` → envelope columns, via `json_tuple`.
+  /** P1+P2: the wire column (`string`, or the Kafka `binary` value read
+    * in place) → `user_id`, `emoji_type`, `timestamp` (strings, null when
+    * absent or unparsable) and `event_time`, by `json_tuple`'s rules
+    * ([[graft.functions.EnvelopeDecode]]).
     *
-    * `json_tuple` (a Generate) rather than `from_json` (a scalar
-    * expression), deliberately: every envelope field is a string
-    * ([[Schemas.emojiEventSchema]]) so the untyped extraction is loss-free,
-    * and a Generate is a hard materialization point — downstream
-    * validation predicates stay on its output attributes. With the
-    * `from_json` form, predicate pushdown substituted the parse into every
-    * filter conjunct and coalesce branch (where conditional evaluation
-    * also defeats codegen subexpression elimination): the measured plan
-    * parsed each row's JSON ~7× and ran 3× slower at sf0.1.
+    * The decoder is a Generate, a hard materialization point: the
+    * validity filter and the `event_time` coalesce read its output
+    * attributes, so each row is parsed once. A scalar parse (`from_json`)
+    * would be substituted by predicate pushdown into every filter
+    * conjunct and coalesce branch, where conditional evaluation also
+    * defeats codegen subexpression elimination; measured on such a plan,
+    * each row's JSON was parsed ~7× and the query ran 3× slower at sf0.1.
     */
   def parseEnvelope(
       raw: DataFrame,
       valueCol: String = "value",
       tsFallback: Column = lit(null).cast("timestamp")): DataFrame =
     raw
-      .select(json_tuple(col(valueCol).cast("string"),
-        "user_id", "emoji_type", "timestamp").as(Seq("user_id", "emoji_type", "timestamp")))
+      .select(EnvelopeDecode.decode(col(valueCol)))
       .withColumn("event_time", lenientTimestamp(col("timestamp"), tsFallback))
 
   /** S1 validation: presence of all three fields (`api_server.py:55-56`).

@@ -255,7 +255,7 @@ object Text {
 
   /** A persisted BPE model at `path`; its marker carries
     * [[bpeFingerprint]] (merge count + tokenizer codec). */
-  private def bpeTier(spark: org.apache.spark.sql.SparkSession, path: String): Tier =
+  def bpeTier(spark: org.apache.spark.sql.SparkSession, path: String): Tier =
     new Tier(spark, path, "_GRAFT_BPE_COMPLETE")
 
   def bpeFingerprint(merges: Int): String = s"bpe:m$merges:charinit-v1"
@@ -276,7 +276,7 @@ object Text {
       bpeTrain(docsDf, merges, textCol)
         .write.mode("overwrite").parquet(s"$path/merges")
     }
-    spark.read.parquet(s"$path/merges")
+    bpeTier(spark, path).read("merges")
   }
 
   /** Segment a corpus with a FROZEN persisted model — the production
@@ -312,7 +312,7 @@ object Text {
                          path: String, merges: Int): org.apache.spark.sql.Column = {
     require(bpeModelServes(spark, path, merges),
       s"no complete BPE model at $path for m=$merges")
-    val model = spark.read.parquet(s"$path/merges")
+    val model = bpeTier(spark, path).read("merges")
       .orderBy("merge_rank")
       .select("left_sym", "right_sym")
       .collect()

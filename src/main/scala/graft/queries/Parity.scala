@@ -32,8 +32,9 @@ object Parity {
       .orderBy("window_start", "event_type")
 
   /** P1-P4 roundtrip: serialize events to the reference's JSON wire
-    * envelope, re-parse with `from_json` + lenient timestamp + presence
-    * validation, aggregate. Oracle sees only the (identity) end state. */
+    * envelope, re-parse it with [[Ingest.parseEnvelope]] (the native
+    * envelope decoder and the lenient timestamp), validate presence,
+    * aggregate. The oracle sees only the (identity) end state. */
   def parseEnvelope(spark: SparkSession, dir: String): DataFrame = {
     val parsed = Ingest.parseEnvelope(wireEnvelope(spark, dir))
     val (valid, _) = Ingest.validate(parsed)

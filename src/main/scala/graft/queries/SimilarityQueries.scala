@@ -254,7 +254,7 @@ object SimilarityQueries {
     s"entry:cluster-heads:h$ClusterHeads:cosine-topk:v1"
   private def ensureEntryTier(spark: SparkSession, dir: String): String = {
     val path = s"${indexRoot("graft_graph_entry", dir)}_h$ClusterHeads"
-    val tier = new graft.ext.Tier(spark, path, Similarity.GraphCompleteMarker)
+    val tier = entryTier(spark, path)
     if (!tier.serves(EntryTierFingerprint))
       tier.rewrite(EntryTierFingerprint) {
         Similarity.clusterEntryLayer(Tables.embeddings(spark, dir), ClusterHeads)
@@ -263,8 +263,11 @@ object SimilarityQueries {
     path
   }
 
+  private def entryTier(spark: SparkSession, path: String) =
+    new graft.ext.Tier(spark, path, Similarity.GraphCompleteMarker)
+
   private def tierEntryLayer(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${ensureEntryTier(spark, dir)}/layer")
+    entryTier(spark, ensureEntryTier(spark, dir)).read("layer")
 
   /** THE shared full-corpus graph tier (round-14 amortization, r13
     * verdict #1): one marker-gated [[Similarity.buildGraphIndex]] root
@@ -289,7 +292,7 @@ object SimilarityQueries {
 
   /** The shared tier's edge list — (vec_id, neighbor_id, cos_sim). */
   private def tierGraph(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${ensureGraphTier(spark, dir)}/graph_edges")
+    Similarity.graphTier(spark, ensureGraphTier(spark, dir)).read("graph_edges")
 
   /** Graph search served from the PERSISTED tier
     * ([[Similarity.graphSearchIndexed]]): marker-discipline read of the
@@ -333,8 +336,7 @@ object SimilarityQueries {
     val e = Tables.embeddings(spark, dir)
     val base = e.filter(col("vec_id") < UpsertSplit)
     val delta = e.filter(col("vec_id") >= UpsertSplit)
-    val g = spark.read.parquet(
-      s"${ensureGraphBaseTier(spark, dir)}/graph_edges")
+    val g = Similarity.graphTier(spark, ensureGraphBaseTier(spark, dir)).read("graph_edges")
     val newEdges = Similarity.graphSearchOn(g, base, delta, k = GraphK,
         beam = GraphBeam, hops = GraphHops)
       .select(col("probe_id").as("vec_id"), col("neighbor_id"), col("cos_sim"))
@@ -375,7 +377,7 @@ object SimilarityQueries {
       Similarity.upsertGraphIndex(spark, path, batch, k = GraphK,
         beam = GraphBeam, hops = GraphHops)
     }
-    spark.read.parquet(s"$path/graph_edges").withColumn("tier", lit("base"))
+    Similarity.graphTier(spark, path).read("graph_edges").withColumn("tier", lit("base"))
       .unionByName(Similarity.graphDeltaEdges(spark, path)
         .getOrElse(sys.error(
           "streamGraphUpsertReplay: no completed graph delta generation " +
@@ -431,7 +433,7 @@ object SimilarityQueries {
           maxRatio = Double.PositiveInfinity, graphK = GraphK,
           graphRounds = GraphRounds)) { fired.incrementAndGet(); () }
     }
-    spark.read.parquet(s"$path/graph_edges")
+    Similarity.graphTier(spark, path).read("graph_edges")
       .select(col("vec_id"), col("neighbor_id"),
         round(col("cos_sim"), 6).as("cos_sim"),
         lit(fired.get).as("n_compactions"))

@@ -233,6 +233,18 @@ class TierSpec extends SparkSpec {
       frames += nd.genRows(Seq(1), "bands").drop("gen") -> s"${nd.genPath(1)}/bands"
       frames += nd.folded(Seq(1), "bands") -> s"$emptyPath/bands"
     } shouldBe 0
+    // the query layer's graph entry layer and the persisted BPE merges
+    val entryPath = s"target/test_tier_entry_${System.nanoTime()}"
+    val entry = new Tier(spark, entryPath, Similarity.GraphCompleteMarker)
+    entry.rewrite() {
+      Similarity.clusterEntryLayer(ivfBase, 2).write.parquet(s"$entryPath/layer")
+    }
+    val bpePath = s"target/test_tier_bpe_${System.nanoTime()}"
+    Text.bpeSaveModel(lexDocs, bpePath, merges = 3)
+    jobsOf {
+      frames += entry.read("layer") -> s"$entryPath/layer"
+      frames += Text.bpeTier(spark, bpePath).read("merges") -> s"$bpePath/merges"
+    } shouldBe 0
     spark.read.parquet(s"${nd.genPath(1)}/bands").count() shouldBe 0L
     nd.folded(Seq(1), "bands").count() shouldBe ndiKeys.count()
     for ((df, dir) <- frames) withClue(s"$dir: ") {

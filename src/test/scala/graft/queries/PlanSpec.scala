@@ -494,6 +494,44 @@ class PlanSpec extends SparkSpec {
     DedupQueries.EvidencePins.subsetOf(graft.SparkEntry.queries.keySet) shouldBe true
   }
 
+  test("stream parse: the envelope decoder runs once; the validity filter and the event_time coalesce read its outputs") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Coalesce}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    import org.apache.spark.sql.execution.{GenerateExec, WholeStageCodegenExec}
+    import graft.functions.{EnvelopeDecode, ProducerTimestamp}
+    import graft.stream.Pipeline
+    import spark.implicits._
+    val wire = Seq("""{"user_id":"u","emoji_type":"e","timestamp":"2024-11-19T12:34:56.789123"}""")
+      .toDF("value")
+    for (cfg <- Seq(Pipeline.StreamConfig(), Pipeline.StreamConfig(wallClockFallback = false)))
+      withClue(s"$cfg: ") {
+        val plan = Pipeline.parse(wire, cfg).queryExecution.optimizedPlan
+        plan.flatMap(_.expressions.flatMap(_.collect { case d: EnvelopeDecode => d }))
+          .size shouldBe 1
+        val gen = plan.collect { case g: Generate => g }
+        gen.size shouldBe 1
+        gen.head.generator shouldBe a[EnvelopeDecode]
+        val outs = AttributeSet(gen.head.generatorOutput)
+        val filters = plan.collect { case f: Filter => f.condition }
+        filters should not be empty
+        for (f <- filters) f.references.subsetOf(outs) shouldBe true
+        filters.flatMap(_.references.map(_.name)).toSet should contain allOf (
+          "user_id", "emoji_type", "timestamp")
+        val coalesces = plan.flatMap(_.expressions.flatMap(_.collect { case c: Coalesce => c }))
+        coalesces should not be empty
+        for (c <- coalesces) {
+          c.references.subsetOf(outs) shouldBe true
+          c.children.head shouldBe a[ProducerTimestamp]
+          c.children.head.children.head.references.map(_.name).toSet shouldBe Set("timestamp")
+        }
+        // the decoder generates code: its Generate runs inside whole-stage codegen
+        val exec = Pipeline.parse(wire, cfg).queryExecution.executedPlan
+        exec.collect { case w: WholeStageCodegenExec =>
+          w.child.collect { case g: GenerateExec => g }
+        }.flatten.size shouldBe 1
+      }
+  }
+
   test("flagship scan prunes to (ts, event_type)") {
     val p = plan(Parity.flagship(spark, dir))
     // the physical ts dtype depends on the fixture generation (nanos-as-
