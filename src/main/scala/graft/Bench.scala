@@ -66,14 +66,6 @@ import graft.core.Tables
   *    (`load_inrun_max`) but never part of the verdict — on local[32]
   *    it is self-load-dominated (see the inline note).
   *
-  * Evidence-vs-engine split (round-6 verdict fix #2): queries in
-  * `EvidenceQueries` exist to keep A/B evidence honest (they pin
-  * deliberately pessimized code paths, e.g. the pure-distributed CC
-  * twins with `driverFinishEdges=0`) and are DESIGNED to lose to the
-  * shipped defaults. They still run and stay in CORRECTNESS, but they
-  * are priced separately: the headline `value` is the ENGINE total and
-  * `evidence_sec` carries their sum, grouped under an "evidence" family.
-  *
   * SPARK_GRAFT_QUERIES=a,b,c restricts the set (local iteration only;
   * the driver runs the full registry).
   *
@@ -94,11 +86,6 @@ import graft.core.Tables
   * final print).
   */
 object Bench {
-
-  /** Deliberately pessimized A/B pin twins — correctness evidence, not
-    * engine pricing. The set is owned by DedupQueries, beside the pin
-    * definitions, so a rename there cannot desync this split. */
-  val EvidenceQueries: Set[String] = graft.queries.DedupQueries.EvidencePins
 
   /** The fixed box-speed calibration vector (round 18 — r17 verdict
     * #4): one scan-bound, one shuffle-bound, one similarity inner-loop,
@@ -158,21 +145,12 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = envInt("SPARK_GRAFT_REPS", 3)
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
-    // A/B knob for the AQE small-partition coalescing experiment
-    // (round 19, guide §2.2): Spark's own tuning doc recommends
-    // parallelismFirst=false so coalescing honors the advisory target
-    // size instead of stopping at 1 MB-sized partitions. Unset = Spark
-    // defaults (the shipped behavior); the knob exists so the A/B is a
-    // same-binary env flip, not a code edit.
-    val pFirst = sys.env.get("SPARK_GRAFT_COALESCE_PARALLELISM_FIRST")
-    val builder0 = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
       .config("spark.ui.enabled", "false")
-    val spark = pFirst.fold(builder0)(v => builder0.config(
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst", v))
       .getOrCreate()
     // ERROR, not WARN: the CC unpersist path logs a WARN per freed
     // checkpoint, and any log line after the final JSON line would
@@ -314,22 +292,23 @@ object Bench {
       val ok = okEffTimes(i)
       if (ok.length >= 2) ok.count(t => isOutlier(t, ok.min)) else 0
     }.sum
+    def engineTotalNow(): Double =
+      (0 until nq).filterNot(failed).map(i => median(okEffTimes(i))).sum
+    def engineBestNow(): Double =
+      (0 until nq).filterNot(failed).map(i => okEffTimes(i).min).sum
 
     def emit(phase: String, engineQuiet: Option[Double], quietReason: String,
              writeDetail: Boolean, printPerQuery: Boolean): Unit = {
       val results = queries.zipWithIndex
         .filterNot { case (_, i) => failed(i) }
         .map { case ((name, _), i) => (name, okEffTimes(i), loads(i).toSeq, i) }
-      val engineResults = results.filterNot(r => EvidenceQueries.contains(r._1))
-      val engineTotal = engineResults.map(r => median(r._2)).sum
+      val engineTotal = results.map(r => median(r._2)).sum
       // the least-contended engine floor (round-7 verdict #3): the sum of
       // each query's BEST rep. On a quiet box best ≈ median; under external
       // load the medians inflate while the best reps keep the committed
       // floor — publishing both makes contention quantifiable from the
       // artifact alone (value / value_best ≈ the load inflation factor).
-      val engineBest = engineResults.map(r => r._2.min).sum
-      val evidenceSec = results.filter(r => EvidenceQueries.contains(r._1))
-        .map(r => median(r._2)).sum
+      val engineBest = results.map(r => r._2.min).sum
       val allLoads = loads.flatten.filter(_ >= 0).sorted
       val loadRange =
         if (allLoads.isEmpty) "[-1,-1,-1]"
@@ -415,7 +394,7 @@ object Bench {
           .map(p => p.map(i => s"\"${queries(i)._1}\"").mkString("[", ",", "]"))
           .mkString("[", ",", "]")
         val detail =
-          s"""{"metric":"total","phase":"$phase","value":${fmt(engineTotal)},"value_best":${fmt(engineBest)},"value_quiet":$quietJson3,"quiet_launch":$quietAmbient,"quiet_run":$quietRunJson,"quiet_reason":"$quietReason","evidence_sec":${fmt(evidenceSec)},"unit":"sec","reps":$reps,"interleaved":true,"calibration":$calibJson,"n_failed":${failedNames.size},"failed":$failedJson,"failed_reps":$repFails,"load_gate":${fmt2(loadGate)},"contended_reps":$contendedJson,"n_outlier_reps":${flaggedOutliers.size},"n_reruns":$rerunsUsed,"n_reruns_skipped_deadline":$rerunsSkippedDeadline,"n_outlier_unresolved":$outlierUnresolved,"reruns":$rerunsJson,"deadline_sec":${deadlineSec.toLong},"elapsed_sec":${fmt(elapsedSec)},"queries":$qs,"spread":$spread,"reps_detail":$perRep,"reps_rescued":$perRescued,"load_per_rep":$perLoad,"load_after_per_rep":$perLoadAfter,"load_inrun_max":${fmt2(inRunMax)},"load_ambient":${fmt2(ambientLoad)},"launch_settle":$launchSettleJson,"load":$loadRange,"pass_order":$orderJson,"sf":"$sfDir"}"""
+          s"""{"metric":"total","phase":"$phase","value":${fmt(engineTotal)},"value_best":${fmt(engineBest)},"value_quiet":$quietJson3,"quiet_launch":$quietAmbient,"quiet_run":$quietRunJson,"quiet_reason":"$quietReason","unit":"sec","reps":$reps,"interleaved":true,"calibration":$calibJson,"n_failed":${failedNames.size},"failed":$failedJson,"failed_reps":$repFails,"load_gate":${fmt2(loadGate)},"contended_reps":$contendedJson,"n_outlier_reps":${flaggedOutliers.size},"n_reruns":$rerunsUsed,"n_reruns_skipped_deadline":$rerunsSkippedDeadline,"n_outlier_unresolved":$outlierUnresolved,"reruns":$rerunsJson,"deadline_sec":${deadlineSec.toLong},"elapsed_sec":${fmt(elapsedSec)},"queries":$qs,"spread":$spread,"reps_detail":$perRep,"reps_rescued":$perRescued,"load_per_rep":$perLoad,"load_after_per_rep":$perLoadAfter,"load_inrun_max":${fmt2(inRunMax)},"load_ambient":${fmt2(ambientLoad)},"launch_settle":$launchSettleJson,"load":$loadRange,"pass_order":$orderJson,"sf":"$sfDir"}"""
         val detailPath = java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath
         java.nio.file.Files.write(detailPath,
           (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -425,25 +404,20 @@ object Bench {
         val qs2 = results.map { case (k, t, _, _) => s"\"$k\":${fmt2(median(t))}" }
           .mkString("{", ",", "}")
         println(s"bench detail (medians 3dp + spreads + per-rep times/loads + pass order): ${java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath}")
-        println(s"""{"metric":"total","phase":"$phase","value":${fmt2(engineTotal)},"value_best":${fmt2(engineBest)},"value_quiet":$quietJson,"evidence_sec":${fmt2(evidenceSec)},"unit":"sec","reps":$reps,"n_failed":${failedNames.size},"queries":$qs2,"sf":"$sfDir"}""")
+        println(s"""{"metric":"total","phase":"$phase","value":${fmt2(engineTotal)},"value_best":${fmt2(engineBest)},"value_quiet":$quietJson,"unit":"sec","reps":$reps,"n_failed":${failedNames.size},"queries":$qs2,"sf":"$sfDir"}""")
       }
       // the GUARANTEED-SHORT machine-parse target (round-5 verdict #4):
-      // engine total + evidence total + per-family median sums + loadavg
+      // engine total + per-family median sums + loadavg
       // [min,med,max] + the calibration vector. The per-query line above
       // will eventually outgrow the consumer's ~2000-char stdout tail as
       // the registry grows; this one cannot (family count is bounded by
       // name prefixes, not registry size).
       val fams = results
-        .groupBy { case (k, _, _, _) =>
-          if (EvidenceQueries.contains(k)) "evidence" else k.takeWhile(_ != '_')
-        }
+        .groupBy { case (k, _, _, _) => k.takeWhile(_ != '_') }
         .toSeq.sortBy(_._1)
         .map { case (f, rs) => s"\"$f\":${fmt2(rs.map(r => median(r._2)).sum)}" }
         .mkString("{", ",", "}")
-      // n_queries counts ENGINE queries only, matching what `value` sums
-      // (round-7 advisor: value/n_queries must reconcile); the pins are
-      // priced and counted separately as evidence
-      println(s"""{"metric":"total","phase":"$phase","value":${fmt2(engineTotal)},"value_best":${fmt2(engineBest)},"value_quiet":$quietJson,"quiet_launch":$quietAmbient,"quiet_run":$quietRunJson,"quiet_reason":"$quietReason","evidence_sec":${fmt2(evidenceSec)},"unit":"sec","reps":$reps,"n_queries":${engineResults.size},"n_evidence":${results.size - engineResults.size},"n_failed":${failedNames.size},"failed":$failedJson,"n_rep_failures":${(0 until nq).map(i => failedRep(i).count(identity)).sum},"n_contended_reps":$nContendedReps,"n_outlier_reps":${flaggedOutliers.size},"n_reruns":$rerunsUsed,"n_reruns_skipped_deadline":$rerunsSkippedDeadline,"n_outlier_unresolved":$outlierUnresolved,"load_gate":${fmt2(loadGate)},"load_inrun_max":${fmt2(inRunMax)},"interleaved":true,"calibration":$calibJson2,"load_ambient":${fmt2(ambientLoad)},"launch_settle":$launchSettleJson,"load":$loadRange,"families":$fams,"queries_detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
+      println(s"""{"metric":"total","phase":"$phase","value":${fmt2(engineTotal)},"value_best":${fmt2(engineBest)},"value_quiet":$quietJson,"quiet_launch":$quietAmbient,"quiet_run":$quietRunJson,"quiet_reason":"$quietReason","unit":"sec","reps":$reps,"n_queries":${results.size},"n_failed":${failedNames.size},"failed":$failedJson,"n_rep_failures":${(0 until nq).map(i => failedRep(i).count(identity)).sum},"n_contended_reps":$nContendedReps,"n_outlier_reps":${flaggedOutliers.size},"n_reruns":$rerunsUsed,"n_reruns_skipped_deadline":$rerunsSkippedDeadline,"n_outlier_unresolved":$outlierUnresolved,"load_gate":${fmt2(loadGate)},"load_inrun_max":${fmt2(inRunMax)},"interleaved":true,"calibration":$calibJson2,"load_ambient":${fmt2(ambientLoad)},"launch_settle":$launchSettleJson,"load":$loadRange,"families":$fams,"queries_detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
       System.out.flush()
     }
 
@@ -453,14 +427,10 @@ object Bench {
     val prelimQuiet: (Option[Double], String) =
       if (ambientLoad < 0)
         (None, "loadavg unavailable on this platform - quietness unverifiable")
-      else if (quietAmbient) {
-        // value_quiet = engine total under a quiet launch — recompute
-        // inline here (emit derives its totals itself; this mirrors it)
-        val tot = queries.zipWithIndex
-          .filterNot { case ((n, _), i) => failed(i) || EvidenceQueries.contains(n) }
-          .map { case (_, i) => median(okEffTimes(i)) }.sum
-        (Some(tot), "prelim: quiet launch, pre-rerun snapshot")
-      } else
+      else if (quietAmbient)
+        // value_quiet = engine total under a quiet launch
+        (Some(engineTotalNow()), "prelim: quiet launch, pre-rerun snapshot")
+      else
         (None, "prelim: contended launch - re-price deferred to the final line")
     emit("prelim", prelimQuiet._1, prelimQuiet._2,
       writeDetail = true, printPerQuery = false)
@@ -533,18 +503,12 @@ object Bench {
     // value_quiet == value; on a contended launch the bench IDLES long
     // enough for the 1-min loadavg to shed its own self-load
     // (SPARK_GRAFT_QUIET_SETTLE_MS, default 100 s), re-samples, and if
-    // the box has gone quiet re-prices the ENGINE queries with
+    // the box has gone quiet re-prices every query with
     // SPARK_GRAFT_QUIET_REPS fresh passes; if after
     // SPARK_GRAFT_QUIET_RETRIES settles the box never went quiet — or
     // the wall deadline no longer affords the settle + re-price
     // (round 18) — value_quiet is NULL: no number beats a fabricated
     // one, and quiet_reason says exactly what was observed. ----
-    def engineTotalNow(): Double = queries.zipWithIndex
-      .filterNot { case ((n, _), i) => failed(i) || EvidenceQueries.contains(n) }
-      .map { case (_, i) => median(okEffTimes(i)) }.sum
-    def engineBestNow(): Double = queries.zipWithIndex
-      .filterNot { case ((n, _), i) => failed(i) || EvidenceQueries.contains(n) }
-      .map { case (_, i) => okEffTimes(i).min }.sum
     val (engineQuiet: Option[Double], quietReason: String) =
       if (ambientLoad < 0)
         // the platform reports no loadavg at all — "unknown" is neither
@@ -589,14 +553,13 @@ object Bench {
           }
           val sampleStr = samples.map(fmt2).mkString("[", ",", "]")
           if (samples.lastOption.exists(s => s >= 0 && s < 1.5)) {
-            // quiet re-price: fresh interleaved passes over ENGINE queries
-            // only (evidence pins are priced separately and never feed
-            // value_quiet); a query whose quiet reps all fail falls back
-            // to its main-run median so the total stays comparable
+            // quiet re-price: fresh interleaved passes over every
+            // query; a query whose quiet reps all fail falls back to its
+            // main-run median so the total stays comparable
             val qTimes = Array.fill(nq, qReps)(-1.0)
             for (r <- 0 until qReps;
                  i <- new scala.util.Random(0xBEEF + r).shuffle((0 until nq).toList)
-                 if !failed(i) && !EvidenceQueries.contains(queries(i)._1)) {
+                 if !failed(i)) {
               val t0 = System.nanoTime()
               try {
                 exec(queries(i)._2(spark, sfDir))
@@ -609,7 +572,7 @@ object Bench {
             // presents contaminated numbers as loadavg-verified
             var fellBack = List.empty[String]
             val total = queries.zipWithIndex
-              .filterNot { case ((n, _), i) => failed(i) || EvidenceQueries.contains(n) }
+              .filterNot { case (_, i) => failed(i) }
               .map { case ((name, _), i) =>
                 val ok = qTimes(i).filter(_ >= 0).toSeq
                 if (ok.nonEmpty) median(ok)

@@ -109,7 +109,7 @@ object Dedup {
                      maxBucketSize: Int = 1000): DataFrame = {
     val bt = bandTable(docs, idCol, k, numHashes, bands)
     // bucket-size cap via groupBy + BROADCAST anti-join, not a count()
-    // window (round 19; the knnGraph bucket-cap rule): the window
+    // window (the knnGraph bucket-cap rule): the window
     // shuffled every band row into per-bucket partitions to count them —
     // the hot buckets the cap exists to remove are exactly the ones that
     // collapse into single straggler tasks at corpus scale. The counts
@@ -167,28 +167,6 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
-  /** Algorithm choice for [[connectedComponents]]. */
-  sealed abstract class CcAlgo
-  object CcAlgo {
-    /** Min-label propagation: O(component-diameter) rounds, one
-      * equi-join + partial agg per round. Right when dup clusters are
-      * dense (LSH links most members directly, diameters stay small). */
-    case object MinLabel extends CcAlgo
-    /** Alternating large-star/small-star contraction (Kiveris et al.,
-      * "Connected Components in MapReduce and Beyond"): O(log n) rounds
-      * on ANY topology, two equi-joins + a set-equality check per round.
-      * The DEFAULT for the distributed regime: its round bound does not
-      * depend on component diameter. Isolated A/B (fresh JVM per
-      * algorithm, pairs pre-materialized; numbers in PERF_NOTES.md)
-      * shows star ≈ min-label at test scale (0.98 s vs 1.09 s warm
-      * median on the `dedup_groups` pairs at sf0.1; the
-      * earlier "star ~3× faster" reading was run-order contamination in
-      * the shared-JVM bench, withdrawn in round 6). The tie-break is the
-      * worst-case bound: min-label is O(diameter) rounds, star is
-      * O(log n) on the same per-round shuffle budget. */
-    case object StarContraction extends CcAlgo
-  }
-
   /** Default edge-count bound below which [[connectedComponents]] skips
     * the distributed rounds and finishes with a driver-side union-find:
     * 500k oriented distinct edges ≈ 8 MB collected, label map ≤ 1M
@@ -202,40 +180,38 @@ object Dedup {
 
   /** Connected components over an undirected pair list.
     *
-    * Execution is HYBRID (round-5 verdict #1): the pair list is oriented
-    * (larger endpoint first) and deduplicated once, then
+    * The pair list is oriented (larger endpoint first) and deduplicated
+    * once, then
     *  - if the edge-set row count — self-pairs INCLUDED, because the
     *    driver finish collects all of them — is ≤ `driverFinishEdges`, a
     *    driver-side union-find labels the graph in ONE collect + one
     *    broadcast-joined local relation — no iterative rounds at all.
-    *    Contraction endgames and test-scale graphs both land here; the
-    *    bound is explicit and the collect is provably ≤ 16·bound bytes
-    *    (the gate counts exactly the rows collected).
-    *  - otherwise the distributed `algo` runs (star contraction default).
+    *    Test-scale graphs land here; the bound is explicit and the
+    *    collect is provably ≤ 16·bound bytes (the gate counts exactly the
+    *    rows collected).
+    *  - otherwise alternating large-star/small-star contraction (Kiveris
+    *    et al., "Connected Components in MapReduce and Beyond") runs:
+    *    O(log n) rounds on ANY topology, whatever the component diameter.
+    *    The same bound is its mid-loop endgame: once contraction shrinks
+    *    the edge set under it, the driver union-find finishes the rest.
     *
-    * The driver finish holds ids as longs, so it (and the star endgame
+    * The driver finish holds ids as longs, so it (and the endgame
     * cutover) engages only when BOTH id columns are integral; any other
     * orderable id type (e.g. string fingerprints) runs the distributed
     * path end-to-end, which never narrows the type.
     *
-    * Scale notes (shared by both distributed algorithms):
-    *  - per-round cost is equi-join + partial aggregate — never all-pairs;
-    *  - every round's labels are marked for a LAZY `localCheckpoint` whose
-    *    materializing action is the convergence count, so a round is ONE
+    * Scale notes for the distributed path:
+    *  - per-round cost is equi-joins + partial aggregates — never
+    *    all-pairs;
+    *  - every round's edges are marked for a LAZY `localCheckpoint` whose
+    *    materializing action is the convergence probe, so a round is ONE
     *    Spark job and the plan stays constant-size (lineage truncation
     *    beats the classic iterative-Spark plan blowup);
-    *  - convergence is checked every `checkEvery` rounds (min-label): at
-    *    small data sizes wall time is probes × job round-trip latency, so
-    *    batching rounds cuts latency; the label sum decreases
-    *    monotonically, so "the batch composite changed nothing" remains a
-    *    sound fixpoint test;
-    *  - each round UNPERSISTS the previous round's checkpointed labels
-    *    once the new ones are materialized (via the RDD-level handle —
-    *    `Dataset.unpersist` cannot reach a checkpoint's cache). Without
-    *    this every intermediate (id, component) RDD stays cached for the
-    *    JVM's lifetime (the round-4 storage-memory leak). Only the FINAL
-    *    labels stay cached — they back the returned frame.
-    *  - `maxIters` counts propagation rounds; IllegalStateException on
+    *  - each round UNPERSISTS the previous round's checkpoint once the
+    *    new one is materialized (via the RDD-level handle —
+    *    `Dataset.unpersist` cannot reach a checkpoint's cache), so no
+    *    intermediate edge set stays cached for the JVM's lifetime;
+    *  - `maxIters` counts contraction rounds; IllegalStateException on
     *    non-convergence beats silently wrong groups.
     *
     * Returns (id, component) for every endpoint appearing in `pairs`;
@@ -243,10 +219,8 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
                           bCol: String = "b_id", maxIters: Int = 25,
-                          checkEvery: Int = 3,
-                          algo: CcAlgo = CcAlgo.StarContraction,
                           driverFinishEdges: Long = DriverFinishEdges): DataFrame = {
-    // orient + dedup ONCE, shared by every path; the checkpoint truncates
+    // orient + dedup ONCE, shared by both paths; the checkpoint truncates
     // the (potentially huge) pair-pipeline lineage so the edge-count
     // probe and the rounds both read the materialized edge set. Keeps
     // self-pairs so isolated endpoints still get a label.
@@ -256,7 +230,7 @@ object Dedup {
       .localCheckpoint(false)
     // driver finish requires integral ids (collected as longs); anything
     // else — string fingerprints, decimals — stays distributed, where the
-    // algorithms only compare and min-reduce.
+    // contraction only compares and min-reduces.
     val integralIds = {
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
       Seq(aCol, bCol).forall { c =>
@@ -267,29 +241,14 @@ object Dedup {
       }
     }
     // gate on base.count() — self-pairs INCLUDED — because that is the
-    // exact row set ccDriverFinish collects; filtering self-pairs here
-    // made the "collect ≤ 16·bound bytes" claim false for inputs with
-    // many isolated (self-paired) endpoints.
+    // exact row set ccDriverFinish collects, so the "collect ≤ 16·bound
+    // bytes" claim holds for inputs with many isolated (self-paired)
+    // endpoints too.
     val small = integralIds && driverFinishEdges > 0 &&
       base.count() <= driverFinishEdges
     if (small) ccDriverFinish(base)
-    else algo match {
-      case CcAlgo.MinLabel => ccMinLabelFrom(base, maxIters, checkEvery)
-      // star gets per-round probes regardless of checkEvery, measured in
-      // BOTH regimes: at tiny edge counts batching 2-3 ADDED ~1 s/query
-      // (sf0.1), and at 2.2M edges the isolated CC A/B (PERF_NOTES)
-      // measured 8.1 s (per-round) vs 10.8 s (batch 2) vs 18.4 s (batch 3) — dup
-      // topologies converge in ~2 composite rounds, so a batch's wasted
-      // post-fixpoint rounds (6 shuffle stages each) always cost more
-      // than the probe they skip. ccStar keeps the batching knob for
-      // deployments where driver→cluster job latency dominates stages.
-      // The bound also rides along as the mid-loop endgame cutover: once
-      // contraction shrinks the edge set under it, the remaining rounds
-      // collapse into the driver union-find.
-      case CcAlgo.StarContraction =>
-        ccStarFrom(base, maxIters, checkEvery = 1,
-          cutoverEdges = if (integralIds) driverFinishEdges else 0L)._1
-    }
+    else ccStarFrom(base, maxIters,
+      cutoverEdges = if (integralIds) driverFinishEdges else 0L)._1
   }
 
   private def unpersistCkpt(df: DataFrame): Unit =
@@ -363,70 +322,6 @@ object Dedup {
     labels
   }
 
-  private def ccMinLabelFrom(base: DataFrame, maxIters: Int, checkEvery: Int): DataFrame = {
-    // localCheckpoint, NOT persist (done once in connectedComponents): a
-    // persisted frame keeps the full upstream plan (here: the whole LSH
-    // pair pipeline) in its analyzed tree, and every per-round Dataset op
-    // re-ANALYZES a tree embedding several copies of it — at sf0.1 that
-    // driver-side Catalyst time was ~10 s while the actual jobs took
-    // ~0.7 s. The checkpoint truncates the lineage to a LogicalRDD leaf,
-    // so round plans stay constant-size and analysis is O(round body).
-    // explode, not union-of-two-projections: a union would read the edge
-    // checkpoint twice per round. Self-pairs propagate their own label —
-    // harmless, and they keep isolated endpoints labelled.
-    val edges = base
-      .select(explode(array(
-        struct(col("u").as("src"), col("v").as("dst")),
-        struct(col("v").as("src"), col("u").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    var ckpt = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(false) // lazy: the first batch's aggregate materializes it
-    var labels = ckpt
-    // Convergence probe: labels are monotonically non-increasing, so
-    // Σ(component) is strictly decreasing until the fixpoint — one scalar
-    // aggregate per BATCH replaces the per-round changed-row count (and
-    // the second join the old __chg column forced into every round).
-    // DECIMAL(38,0): exact at any id magnitude, no Long overflow at 100 TB.
-    var prevSum: java.math.BigDecimal = null
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val rounds = math.min(checkEvery, maxIters - iter)
-      var cur = labels
-      for (_ <- 0 until rounds) {
-        // new label = min(own, labels of in-neighbours): one equi-join,
-        // then a single min-aggregate over (propagated ∪ current)
-        cur = edges
-          .join(cur.select(col("id").as("src"), col("component").as("nl")), "src")
-          .select(col("dst").as("id"), col("nl").as("component"))
-          .union(cur)
-          .groupBy("id")
-          .agg(min(col("component")).as("component"))
-      }
-      val next = cur.localCheckpoint(false) // lazy: the aggregate materializes it
-      val row = next.agg(
-        count(lit(1)),
-        sum(col("component").cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-      val curSum = row.getDecimal(1)
-      converged = row.getLong(0) == 0L ||
-        (prevSum != null && prevSum.compareTo(curSum) == 0)
-      prevSum = curSum
-      unpersistCkpt(ckpt) // previous batch's labels: materialized, now dead
-      ckpt = next
-      labels = next
-      iter += rounds
-    }
-    // the final labels are a self-contained LogicalRDD; the shared edge
-    // base no longer backs anything this function returns
-    unpersistCkpt(base)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters iterations")
-    labels
-  }
-
   /** One large-star round: every node attaches its strictly-LARGER
     * neighbours to the minimum of its closed neighbourhood. Edges stay
     * oriented (larger endpoint first). */
@@ -454,86 +349,67 @@ object Dedup {
   }
 
   /** Connected components via alternating large-star/small-star
-    * contraction. Returns (labels, roundsUsed) — the round count is
-    * asserted O(log n) on a planted chain in DedupSpec. At the fixpoint
-    * the edge set is a union of stars centred on component minima, so
-    * labels fall out of a single group-by. Convergence = the (distinct,
-    * oriented) edge set is unchanged by a full round, checked with two
-    * anti-join probes. */
+    * contraction, distributed all the way (no driver finish). Returns
+    * (labels, roundsUsed) — the round count is asserted O(log n) on a
+    * planted chain in DedupSpec. */
   private[ext] def ccStar(pairs: DataFrame, aCol: String = "a_id",
                           bCol: String = "b_id",
-                          maxIters: Int = 20,
-                          checkEvery: Int = 2): (DataFrame, Int) =
+                          maxIters: Int = 20): (DataFrame, Int) =
     ccStarFrom(pairs
       .select(greatest(col(aCol), col(bCol)).as("u"), least(col(aCol), col(bCol)).as("v"))
       .distinct()
-      .localCheckpoint(false), maxIters, checkEvery)
+      .localCheckpoint(false), maxIters)
 
   /** The contraction loop over a pre-oriented, deduplicated, checkpointed
     * edge base (self-pairs included — they keep isolated endpoints
-    * labelled). `base` stays cached: it backs the returned plan (see
-    * class doc on the one-frame-per-call residue).
+    * labelled). `base` stays cached: the returned labels read their node
+    * list from it.
     *
-    * `cutoverEdges` > 0 enables the mid-loop ENDGAME: the convergence
-    * probe also counts the contracted edge set (same job — the probe is
-    * a full-outer join of next vs prev, so |next| is one more aggregate
-    * over it), and once it shrinks under the bound the remaining rounds
-    * are replaced by the driver union-find. Sound because neither star
-    * round ever drops a node from the edge set (a node's smaller
-    * neighbours re-emit it from largeStar, its own min-row keeps it in
-    * smallStar), so components over any intermediate edge set equal
-    * components over the original restricted to non-isolated nodes —
-    * the same invariant the fixpoint label extraction relies on. */
+    * Each iteration runs one large-star then one small-star round and
+    * probes convergence: the (distinct, oriented) edge set is unchanged
+    * by the round. At the fixpoint the edge set is a union of stars
+    * centred on component minima, so labels fall out of a single
+    * group-by.
+    *
+    * `cutoverEdges` > 0 enables the mid-loop ENDGAME: after each probe
+    * the contracted edge set is counted, and once it shrinks under the
+    * bound the remaining rounds are replaced by the driver union-find.
+    * Sound because neither star round ever drops a node from the edge set
+    * (a node's smaller neighbours re-emit it from largeStar, its own
+    * min-row keeps it in smallStar), so components over any intermediate
+    * edge set equal components over the original restricted to
+    * non-isolated nodes — the same invariant the fixpoint label
+    * extraction relies on. */
   private def ccStarFrom(base: DataFrame, maxIters: Int,
-                         checkEvery: Int,
                          cutoverEdges: Long = 0L): (DataFrame, Int) = {
     var edges = base.filter(col("u") =!= col("v"))
     var prevCkpt: DataFrame = null
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      // batch `checkEvery` contraction rounds per convergence probe: the
-      // star potential (Σ edge endpoints) decreases monotonically, so an
-      // edge set unchanged by the ROUND COMPOSITE is a fixpoint — same
-      // soundness argument as min-label's batched Σ-probe. Each probe is
-      // one driver job, and at test scale wall time is probes × job
-      // round-trip; the post-fixpoint rounds a batch wastes are two
-      // equi-joins over an already-contracted (small) edge set.
-      // EVERY round still gets its own lazy localCheckpoint: a star round
+      // EVERY round gets its own lazy localCheckpoint: a star round
       // references its input FOUR times (largeStar's union-of-directions
       // twice, smallStar's join-with-mins twice), so composing rounds
       // without truncation re-executes the previous round's shuffles
       // ~4× per level (measured 15-41 s/query). The lazy checkpoint
-      // truncates the logical plan immediately while deferring execution,
-      // so the whole batch still materializes inside the single probe
-      // job; intermediates are freed right after that job.
-      val rounds = math.min(checkEvery, maxIters - iter)
-      var cur = edges
-      val intermediates = scala.collection.mutable.Buffer.empty[DataFrame]
-      for (i <- 0 until rounds) {
-        cur = smallStar(largeStar(cur)).localCheckpoint(false)
-        if (i < rounds - 1) intermediates += cur
-      }
-      val next = cur
+      // truncates the logical plan immediately while deferring execution
+      // to the probe job below.
+      val next = smallStar(largeStar(edges)).localCheckpoint(false)
       // distinct sets: equal iff the full-outer join has no one-sided row.
-      // ONE probe job per round (it also materializes the lazy
-      // checkpoint) — the two exceptAll probes this replaces cost a
-      // second job per round, pure driver round-trip latency at test
-      // scale and a second full shuffle of both edge sets at 100 TB. The
-      // limit(1) matters: an unchanged round is the RARE case, so the
-      // probe short-circuits after the first mismatching row instead of
-      // iterating the full join output (replacing it with a counting
-      // aggregate measured 50 s vs 20 s on the 24.75M-edge CC A/B set).
+      // ONE probe job per round, which also materializes the lazy
+      // checkpoint. The limit(1) matters: an unchanged round is the RARE
+      // case, so the probe short-circuits after the first mismatching row
+      // instead of iterating the full join output (a counting aggregate
+      // measured 50 s vs 20 s on a 24.75M-edge set).
       val prev = edges.select(col("u").as("pu"), col("v").as("pv"))
       converged = next.join(prev,
           col("u") === col("pu") && col("v") === col("pv"), "full_outer")
         .filter(col("u").isNull || col("pu").isNull)
         .limit(1).count() == 0L
-      intermediates.foreach(unpersistCkpt) // materialized by the probe; dead now
       if (prevCkpt != null) unpersistCkpt(prevCkpt)
       prevCkpt = edges
       edges = next
-      iter += rounds
+      iter += 1
       if (!converged && cutoverEdges > 0 &&
           edges.count() <= cutoverEdges) {
         // endgame: the contracted edge set no longer needs a cluster.
@@ -541,8 +417,8 @@ object Dedup {
         // the probe just materialized, so it sums cached block counts.
         // The union-find collect inside ccDriverFinishOver is eager, so
         // both the contracted set and the loop's previous checkpoint are
-        // dead on return (the early return otherwise skips the loop-exit
-        // prevCkpt unpersist — the round-6 advisor leak).
+        // dead on return; the early return skips the loop-exit unpersist,
+        // so both are freed here.
         val labels = ccDriverFinishOver(base, edges)
         unpersistCkpt(edges)
         if (prevCkpt != null) unpersistCkpt(prevCkpt)
@@ -552,7 +428,7 @@ object Dedup {
     if (prevCkpt != null) unpersistCkpt(prevCkpt)
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents(star) did not converge in $maxIters rounds")
+        s"connectedComponents did not converge in $maxIters rounds")
     val nodes = base.select(explode(array(col("u"), col("v"))).as("id")).distinct()
     val parents = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("__p"))
     val labels = nodes.join(parents, Seq("id"), "left")
@@ -567,11 +443,8 @@ object Dedup {
     * [[exactGroups]] — without it, A~B and B~C would dedup B and C against
     * different canonicals. */
   def nearDupGroups(docs: DataFrame, threshold: Double = 0.7,
-                    idCol: String = "doc_id", k: Int = 3,
-                    algo: CcAlgo = CcAlgo.StarContraction,
-                    checkEvery: Int = 3): DataFrame = {
-    val cc = connectedComponents(nearDupPairs(docs, threshold, idCol, k),
-      algo = algo, checkEvery = checkEvery)
+                    idCol: String = "doc_id", k: Int = 3): DataFrame = {
+    val cc = connectedComponents(nearDupPairs(docs, threshold, idCol, k))
     docs.select(col(idCol))
       .join(cc.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .select(col(idCol), coalesce(col("component"), col(idCol)).as("canonical_id"))
@@ -584,9 +457,9 @@ object Dedup {
     * hashes have bit i set (+1/-1 vote per token). Near-identical docs
     * land within a few bits of Hamming distance.
     *
-    * SINGLE-REFERENCE form (round-7 verdict #7): one `aggregate` carries
-    * all 64 bit votes as an array accumulator, so the `tokenHashes`
-    * expression appears exactly ONCE in the plan. The previous shape —
+    * SINGLE-REFERENCE form: one `aggregate` carries all 64 bit votes
+    * as an array accumulator, so the `tokenHashes` expression appears
+    * exactly ONCE in the plan. The previous shape —
     * 64 independent per-bit folds — embedded 64 copies of the input
     * expression, and codegen's subexpression elimination does not reach
     * across higher-order-aggregate inputs: when callers pass a computed
@@ -751,8 +624,8 @@ object Dedup {
     *     n-gram text reduced to a fixed-width key before any shuffle;
     *  2. occurrence cap: grams appearing > `dfCap` times corpus-wide are
     *     dropped by a partial-aggregated count + broadcast anti-join on
-    *     the over-cap keys (round 19; the gram table itself never
-    *     shuffles by key) — the boilerplate guard that bounds the
+    *     the over-cap keys (the gram table itself never shuffles by
+    *     key) — the boilerplate guard that bounds the
     *     self-join at ≤ dfCap² pairs per key (the [[candidatePairs]]
     *     `maxBucketSize` rule; runs through a dropped hyper-frequent
     *     gram split in two, the documented trade-off);
@@ -834,11 +707,11 @@ object Dedup {
       else ""
     // the tokenize→md5 stage is the expensive pass and feeds BOTH the
     // occurrence counts and the capped table — one lazy checkpoint runs
-    // it exactly once (round 18's discipline, moved one stage down;
+    // it exactly once (ngramContamination's discipline, one stage down;
     // fixed-width (id, pos, md5) rows)
     val grams = grams0.localCheckpoint(false)
     // occurrence cap via groupBy + BROADCAST anti-join, not a count()
-    // window (round 19; the knnGraph bucket-cap rule): the window
+    // window (the knnGraph bucket-cap rule): the window
     // shuffled and sorted EVERY gram row by __key — and the hot grams
     // the cap exists to remove are exactly the keys that collapse into
     // single straggler partitions at corpus scale. The counts shuffle is
@@ -907,7 +780,7 @@ object Dedup {
                         minSpan: Int = 16, dfCap: Long = 16L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // referenced twice below (a-side + b-side intervals) —
-    // lazy-checkpoint so the whole span machinery runs once (round 18)
+    // lazy-checkpoint so the whole span machinery runs once
     val spans = substringSpans(docs, idCol, toksCol, k, minSpan, dfCap)
       .localCheckpoint(false)
     // DISTINCT is load-bearing, not an optimization: a doc duplicated in
@@ -1054,7 +927,7 @@ object Dedup {
 
   // ------------------------------------------------------------------ //
   //  Persisted near-dup band-bucket tier (the dedup family's LSM        //
-  //  lifecycle — round 13)                                              //
+  //  lifecycle)                                                         //
   // ------------------------------------------------------------------ //
   //
   // The batch near-dup queries re-band the WHOLE corpus per run; at
@@ -1093,7 +966,7 @@ object Dedup {
     t.rewrite(fingerprint) {
       t.dropGens()
       // BASE segment gets the heavy layout (the Lex `base = true`
-      // convention, ported round 18): range-sorted by band key, so every
+      // convention): range-sorted by band key, so every
       // parquet row group's key min/max is tight and a probe's bounded
       // `In(key, …)` pushdown skips the (corpus − probed-buckets) rest.
       // Without it the probe join scans the WHOLE band table — measured
@@ -1155,7 +1028,7 @@ object Dedup {
                         probeKeys: DataFrame,
                         idCol: String = "doc_id"): DataFrame = {
     // bounded probe-key collect for the scan pushdown (the Lex
-    // `tokenScanFilter` discipline, round 18): an arrival batch bands
+    // `tokenScanFilter` discipline): an arrival batch bands
     // to |batch|·nBands distinct keys — limit-capped at
     // [[KeyInFilterCap]] + 1, so the driver never materializes more
     // than the cap regardless of batch size; past the cap the filter

@@ -61,9 +61,9 @@ object DedupQueries {
 
   /** Deterministic absolute-size cap for the demonstration/proof queries
     * below. doc_id is dense from 0, so `doc_id < cap` is a FIXED number of
-    * documents at every sf — a fixed *fraction* (the round-2 form) shrinks
-    * nothing: in-bucket pair counts grow quadratically with bucket size,
-    * so a 1-in-10 sample at 100× data is still ~100× the pairs. These
+    * documents at every sf — a fixed *fraction* shrinks nothing:
+    * in-bucket pair counts grow quadratically with bucket size, so a
+    * 1-in-10 sample at 100× data is still ~100× the pairs. These
     * queries prove logic against the oracle; the production paths
     * (`Dedup.nearDupPairs`, `Dedup.nearDupGroups`) score LSH candidates
     * only and run on the full corpus. */
@@ -157,7 +157,7 @@ object DedupQueries {
   }
 
   // ------------------------------------------------------------------ //
-  //  Persisted near-dup band tier (round 13) — the dedup family's       //
+  //  Persisted near-dup band tier — the dedup family's                  //
   //  IVF-style lifecycle: build → probe → upsert gens → auto-compact    //
   // ------------------------------------------------------------------ //
 
@@ -329,42 +329,15 @@ object DedupQueries {
   }
 
   /** Near-dup GROUP RESOLUTION, oracle-proved: portable candidate pairs →
-    * connected components ([[Dedup.connectedComponents]] with its SHIPPED
-    * defaults — the hybrid that takes the bounded driver-side union-find
-    * on small edge sets and star contraction above the bound) → every
-    * sampled doc mapped to its canonical (component-min) id. DuckDB
-    * recomputes the same components with a recursive CTE, so the
-    * transitive closure itself is hash-checked — A~B and B~C must land B
-    * AND C on A's canonical in both engines. The two `_star`/`_minlabel`
-    * twins pin the DISTRIBUTED algorithms against the same oracle. */
-  def groupsPortable(spark: SparkSession, dir: String): DataFrame =
-    groupsPortableWith(spark, dir, Dedup.CcAlgo.StarContraction,
-      Dedup.DriverFinishEdges)
-
-  /** The registry names of the two deliberately pessimized CC pin twins
-    * below — OWNED HERE, next to their definitions, so a rename cannot
-    * silently desync the bench's evidence split (`graft.Bench` prices
-    * this set outside the headline engine total). */
-  val EvidencePins: Set[String] = Set("dedup_groups_star", "dedup_groups_minlabel")
-
-  /** Same pipeline forced through the distributed large-star/small-star
-    * contraction (driver-finish disabled) — the above-bound code path,
-    * hash-proved against the same recursive-CTE oracle. */
-  def groupsPortableStar(spark: SparkSession, dir: String): DataFrame =
-    groupsPortableWith(spark, dir, Dedup.CcAlgo.StarContraction, 0L)
-
-  /** Same pipeline forced through the distributed batched min-label
-    * propagation — the alternative above-bound algorithm, against the
-    * SAME oracle. */
-  def groupsPortableMinLabel(spark: SparkSession, dir: String): DataFrame =
-    groupsPortableWith(spark, dir, Dedup.CcAlgo.MinLabel, 0L)
-
-  private def groupsPortableWith(spark: SparkSession, dir: String,
-                                 algo: Dedup.CcAlgo,
-                                 driverFinishEdges: Long): DataFrame = {
+    * connected components ([[Dedup.connectedComponents]]: the bounded
+    * driver-side union-find on small edge sets, star contraction above
+    * the bound) → every sampled doc mapped to its canonical
+    * (component-min) id. DuckDB recomputes the same components with a
+    * recursive CTE, so the transitive closure itself is hash-checked —
+    * A~B and B~C must land B AND C on A's canonical in both engines. */
+  def groupsPortable(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).filter(col("doc_id") < PortableCap)
-    val cc = Dedup.connectedComponents(portablePairs(docs), algo = algo,
-      driverFinishEdges = driverFinishEdges)
+    val cc = Dedup.connectedComponents(portablePairs(docs))
     docs.select("doc_id")
       .join(cc.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -384,10 +357,10 @@ object DedupQueries {
       .orderBy("doc_id")
 
   /** The portable twin of [[nearGroups]] — the COMPLETE near-dup
-    * pipeline with engine-neutral hashing, hash-checked end to end
-    * (round-5 verdict #5): portable-LSH candidates → exact shingle
-    * Jaccard ≥ 0.7 verification (string shingles, no hashing, so both
-    * engines compute identical rationals) → connected components →
+    * pipeline with engine-neutral hashing, hash-checked end to end:
+    * portable-LSH candidates → exact shingle Jaccard ≥ 0.7 verification
+    * (string shingles, no hashing, so both engines compute identical
+    * rationals) → connected components →
     * canonical map. DuckDB recomputes every stage including the
     * recursive-CTE closure over the VERIFIED edge set. */
   def nearGroupsPortable(spark: SparkSession, dir: String): DataFrame = {
@@ -440,8 +413,7 @@ object DedupQueries {
   }
 
   /** Per-doc 64-bit SimHash fingerprint over the FULL corpus, computed
-    * with the engine-neutral md5-prefix token hash — fully hash-green
-    * (round-10 verdict #6: the last structural oracle retired).
+    * with the engine-neutral md5-prefix token hash — fully hash-green.
     *
     * Why md5-prefix is the shipped batch default and not a "portable
     * compromise": after the single-reference simhashTable rewrite the
@@ -472,18 +444,6 @@ object DedupQueries {
     * recomputes it exactly as `('0x' || substr(md5(t),1,15))::BIGINT`. */
   private def portableTokenHashes(toks: Column): Column =
     transform(toks, t => conv(substring(md5(t), 1, 15), 16, 10).cast("long"))
-
-  /** The capped twin of [[simhashQ]] — same md5-prefix hash, doc_id <
-    * [[PortableCap]]. Retained for registry continuity (it was the
-    * hash-green proof of the bit-vote logic while `dedup_simhash` still
-    * shipped xxhash fingerprints; both are now full hash gates). */
-  def simhashPortableQ(spark: SparkSession, dir: String): DataFrame =
-    Dedup.simhashTable(
-      Dedup.rebalance(
-        Tables.documents(spark, dir).filter(col("doc_id") < PortableCap)
-          .select(col("doc_id"), col("text")), "doc_id"),
-      hashFn = portableTokenHashes)
-      .orderBy("doc_id")
 
   /** Deterministic stratified sampling: keep a doc iff an engine-neutral
     * hash of its id (md5-prefix mod 100 — the same portable-hash recipe
@@ -821,7 +781,7 @@ object DedupQueries {
       SELECT te.test_id, CAST(min(tr.train_id) AS BIGINT) AS contaminated_by
       FROM te JOIN tr ON te.fp = tr.fp
       GROUP BY 1 ORDER BY 1""")),
-    // Oracle = exactly the 50 planted members (round-9 verdict #1):
+    // Oracle = exactly the 50 planted members:
     // member flags are GUARANTEED by the sketch's no-false-negative
     // property under any hash family, and the clean probes are
     // mathematically FP-free at fixture load — 500–5000 fingerprints in
@@ -864,12 +824,12 @@ object DedupQueries {
                        / len(list_distinct(list_concat(x.sh, y.sh))) END AS jaccard
       FROM d x JOIN d y ON x.source = y.source AND x.doc_id < y.doc_id
       ORDER BY jaccard DESC, a_id, b_id LIMIT 20""")),
-    // FULL-CORPUS oracle for the production xxhash LSH (round-9 verdict
-    // #1): DuckDB replays the engine-neutral md5 LSH over the whole
-    // documents table, so the hash gate asserts that the production hash
-    // family finds the SAME candidate set. That equality is empirical,
-    // not guaranteed — a pair at Jaccard j survives a 16-band/4-row LSH
-    // with prob 1-(1-j^4)^16 per hash family — but the fixture's planted
+    // FULL-CORPUS oracle for the production xxhash LSH: DuckDB replays
+    // the engine-neutral md5 LSH over the whole documents table, so the
+    // hash gate asserts that the production hash family finds the SAME
+    // candidate set. That equality is empirical, not guaranteed — a
+    // pair at Jaccard j survives a 16-band/4-row LSH with prob
+    // 1-(1-j^4)^16 per hash family — but the fixture's planted
     // similarity structure sits far enough from the decision boundary
     // that both families resolve identically (verified at sf0.001 and
     // sf0.01, exceptAll = 0 both directions); a future borderline pair
@@ -897,7 +857,7 @@ object DedupQueries {
       SELECT d.doc_id, CAST(coalesce(deg.n, 0) AS BIGINT) AS n_candidates
       FROM documents d LEFT JOIN deg USING (doc_id)
       WHERE d.doc_id < $PortableCap ORDER BY d.doc_id""")),
-    // persisted band-tier lifecycle (round 13): all four gates replay
+    // persisted band-tier lifecycle: all four gates replay
     // the identical md5-LSH banding from the hoisted pairs_all temp
     // table, windowed to the tier's base/arrival id ranges — the
     // keep-first decision is min over a probe's smaller-id band mates
@@ -960,14 +920,13 @@ object DedupQueries {
       FROM documents d LEFT JOIN m USING (doc_id)
       WHERE d.doc_id >= $NdiBase AND d.doc_id < $NdiCap
       ORDER BY d.doc_id""")),
-    GQuery("dedup_groups", groupsPortable, Some(groupsOracleSql)),
-    // same oracle on purpose: every CC path — the shipped hybrid
-    // (driver-finish), distributed star, distributed min-label — must
-    // produce the exact same canonical map as DuckDB's closure
-    GQuery("dedup_groups_star", groupsPortableStar, Some(groupsOracleSql)),
-    GQuery("dedup_groups_minlabel", groupsPortableMinLabel, Some(groupsOracleSql)),
-    // FULL hash gate (round-10 verdict #6 — the last structural oracle
-    // retired): the shipped fingerprint hash is now the engine-neutral
+    // the full transitive closure, hoisted into the `comp_cap` temp table
+    GQuery("dedup_groups", groupsPortable, Some(s"""
+      ${lshTemps("comp_cap")}
+      SELECT d.doc_id, CAST(coalesce(comp.c, d.doc_id) AS BIGINT) AS canonical_id
+      FROM documents d LEFT JOIN graft_lsh_comp_cap comp ON comp.id = d.doc_id
+      WHERE d.doc_id < $PortableCap ORDER BY d.doc_id""")),
+    // FULL hash gate: the shipped fingerprint hash is the engine-neutral
     // md5 prefix (see simhashQ's scaladoc for why the xxhash form's
     // group stats could never be canonicalized instead), so DuckDB
     // rebuilds every full-corpus fingerprint bit-for-bit.
@@ -977,19 +936,6 @@ object DedupQueries {
                list_transform($duckToks, t ->
                  ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hm
         FROM documents)
-      SELECT doc_id,
-             CAST(list_sum(list_transform(range(0, 64), i ->
-               CASE WHEN coalesce(list_sum(list_transform(hm,
-                      x -> CASE WHEN ((x >> i) & 1) = 1 THEN 1 ELSE -1 END)), 0) > 0
-                    THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS simhash
-      FROM h ORDER BY doc_id""")),
-    // the capped twin of the same fold (registry continuity)
-    GQuery("dedup_simhash_portable", simhashPortableQ, Some(s"""
-      WITH h AS (
-        SELECT doc_id,
-               list_transform($duckToks, t ->
-                 ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hm
-        FROM documents WHERE doc_id < $PortableCap)
       SELECT doc_id,
              CAST(list_sum(list_transform(range(0, 64), i ->
                CASE WHEN coalesce(list_sum(list_transform(hm,
@@ -1023,25 +969,14 @@ object DedupQueries {
       FROM graft_lsh_canon_cap ORDER BY doc_id"""))
   )
 
-  /** The components oracle shared by `dedup_groups`
-    * (large-star/small-star) and `dedup_groups_minlabel` (batched
-    * min-label): both engines must agree on the full transitive
-    * closure (hoisted into the `comp_cap` temp table). */
-  private lazy val groupsOracleSql: String = s"""
-      ${lshTemps("comp_cap")}
-      SELECT d.doc_id, CAST(coalesce(comp.c, d.doc_id) AS BIGINT) AS canonical_id
-      FROM documents d LEFT JOIN graft_lsh_comp_cap comp ON comp.id = d.doc_id
-      WHERE d.doc_id < $PortableCap ORDER BY d.doc_id"""
-
-  /** r12 gate-cost fix (the `graphTempPrefix` device from
+  /** Oracle gate cost (the `graphTempPrefix` device from
     * SimilarityQueries applied to the dedup family): the portable-LSH
     * replay — shingle sets, 64-slot minhash signatures, banded candidate
     * pairs, Jaccard-verified pairs, and the recursive closures — is
     * hoisted into session-scoped DuckDB temp tables created once
     * (`IF NOT EXISTS`) by whichever LSH-family oracle the compare runs
-    * first and reused by the remaining seven on the same connection;
-    * the pure-CTE form re-ran the full chain per oracle (8 × ~48 s at
-    * sf0.01). Falls back to build-per-oracle on fresh connections.
+    * first and reused by the others on the same connection; a pure-CTE
+    * form re-runs the full chain per oracle (~48 s each at sf0.01). Falls back to build-per-oracle on fresh connections.
     * Statement text per table name comes from this ONE emitter so the
     * `IF NOT EXISTS` cache can never serve a divergent definition.
     *

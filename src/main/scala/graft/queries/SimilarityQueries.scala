@@ -1530,14 +1530,11 @@ object SimilarityQueries {
     * `dedup_groups`, with the same recursive-CTE oracle shape. */
   def embDupGroups(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    // star contraction, not min-label: at the calibrated 0.35 threshold
-    // the dup graph is chain-heavy (diameter ~10), which is exactly the
-    // topology the O(log n) contraction exists for — min-label with
-    // batched convergence checks (checkEvery=5) still paid ~10
-    // propagation rounds here
+    // at the calibrated 0.35 threshold the dup graph is chain-heavy
+    // (diameter ~10): above the driver-finish bound, star contraction's
+    // O(log n) rounds do not grow with that diameter
     val cc = graft.ext.Dedup.connectedComponents(
-      Similarity.embNearDupPairs(emb, threshold = EmbDupThreshold, nPlanes = 4),
-      algo = graft.ext.Dedup.CcAlgo.StarContraction)
+      Similarity.embNearDupPairs(emb, threshold = EmbDupThreshold, nPlanes = 4))
     emb.select("vec_id")
       .join(cc.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
       .select(col("vec_id"),

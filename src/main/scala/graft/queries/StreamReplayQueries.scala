@@ -25,26 +25,17 @@ import graft.stream.Pipeline
 object StreamReplayQueries {
 
   /** Shuffle/state partition count while a bounded STATEFUL replay's
-    * streaming query runs — round 18, guide §2.2
-    * ("fewer, larger reduce partitions") + §2 ("derive partitioning
-    * from input size"): every replay harness is CAPPED BY CONSTRUCTION
-    * (`requireBoundedReplay`, ≤ a few thousand rows), yet its stateful
-    * exchanges inherited the session's scan-parallelism setting (32 on
-    * the bench), so each micro-batch paid 32 state-store instances ×
-    * N stateful stages of near-empty tasks, and every state partition
-    * wrote its own per-batch delta file. Deriving the partition count
-    * from the BOUNDED REPLAY SIZE instead of the box is the
-    * scale-adaptive fix: the replays stay identical in semantics
-    * (every stateful op here is per-group with in-group sorting, so
-    * results are partition-count-independent — the oracle hashes prove
-    * it), only the per-batch task/state-file count shrinks. The
-    * PRODUCTION streaming pipeline (`stream/Pipeline` behind real
-    * sources) keeps the session default — this knob is scoped to the
-    * bounded replay harnesses alone, env-overridable for deployments
-    * that replay bigger windows. */
-  private[queries] val ReplayPartitions: Int =
-    sys.env.get("SPARK_GRAFT_REPLAY_PARTITIONS").flatMap(_.toIntOption)
-      .getOrElse(8)
+    * streaming query runs ("fewer, larger reduce partitions"; derive
+    * partitioning from input size). Every replay harness is capped by
+    * construction (`requireBoundedReplay`, ≤ a few thousand rows), so
+    * the session's scan-parallelism setting would only buy near-empty
+    * tasks: one state-store instance per partition per stateful stage,
+    * each writing its own per-batch delta file. Results do not depend
+    * on it — every stateful op here is per-group with in-group sorting,
+    * and the oracle hashes prove it. The PRODUCTION streaming pipeline
+    * (`stream/Pipeline` behind real sources) keeps the session default;
+    * this constant is scoped to the bounded replay harnesses alone. */
+  private[queries] val ReplayPartitions: Int = 8
 
   /** Run `f` with [[ReplayPartitions]] shuffle partitions, restoring
     * the session value after — the streaming query reads the conf at
@@ -67,9 +58,9 @@ object StreamReplayQueries {
     * micro-batch (MemoryStream emits no offsets for it), which is the
     * degenerate edge when a mid-split window holds a single arrival.
     *
-    * Deliberately NOT under [[withReplayPartitions]] (round 18,
-    * measured): the whole pipeline here is stateless passthrough into
-    * `foreachBatch`, whose body runs REAL BATCH jobs against
+    * Deliberately NOT under [[withReplayPartitions]]: the whole
+    * pipeline here is stateless passthrough into `foreachBatch`, whose
+    * body runs REAL BATCH jobs against
     * corpus-sized tiers (beam walks, index rebuilds) — their
     * parallelism must track the session/scan setting, not the bounded
     * replay cap. A/B at sf0.1: wrapping moved the tier replays only

@@ -55,7 +55,7 @@ object Sources {
     * source's (timestamp, value) rows become JSON envelopes: uuid-ish user
     * ids, round-robin pick from the 10-emoji vocabulary, ISO-micros
     * timestamps. Works on both `spark.readStream.format("rate")` output and
-    * any static frame with the same two columns (used by tests/bench).
+    * any static frame with the same two columns (used by tests).
     */
   def envelopeFromRate(rate: DataFrame): DataFrame =
     rate.select(
@@ -66,12 +66,6 @@ object Sources {
           (pmod(col("value"), lit(10L)) + 1).cast("int")).as("emoji_type"),
         date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").as("timestamp")
       )).as("value"))
-
-  /** S6: ready-to-run rate source of emoji envelopes. */
-  def rateEnvelopes(spark: SparkSession, rowsPerSecond: Long): DataFrame =
-    envelopeFromRate(
-      spark.readStream.format("rate")
-        .option("rowsPerSecond", rowsPerSecond.toString).load())
 
   /** File source: a drop directory of newline-delimited JSON envelopes —
     * the no-broker twin of the Kafka topic (each line = one `value`).

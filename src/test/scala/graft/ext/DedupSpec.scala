@@ -125,11 +125,6 @@ class DedupSpec extends SparkSpec {
     rounds should be <= 12
     labels.as[(Long, Long)].collect().toMap shouldBe
       (1L to 64L).map(_ -> 1L).toMap
-    // the same budget starves min-label on this topology — that's the
-    // reason star contraction is the distributed default
-    an[IllegalStateException] should be thrownBy
-      Dedup.connectedComponents(chain, maxIters = 12,
-        algo = Dedup.CcAlgo.MinLabel, driverFinishEdges = 0L)
   }
 
   test("star mid-loop endgame: cutover below the bound labels a chain exactly") {
@@ -161,8 +156,7 @@ class DedupSpec extends SparkSpec {
       (20L, 21L), (21L, 22L), (22L, 20L), (30L, 30L)).toDF("a_id", "b_id")
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L, 30L -> 30L)
-    Dedup.connectedComponents(pairs, algo = Dedup.CcAlgo.StarContraction,
-        driverFinishEdges = 0L)
+    Dedup.connectedComponents(pairs, driverFinishEdges = 0L)
       .as[(Long, Long)].collect().toMap shouldBe expect
     // the hybrid's small-edge path must agree exactly
     Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap shouldBe expect

@@ -114,8 +114,7 @@ object ExtProperties extends Properties("graft.ext") {
   property("star-contraction CC ≡ union-find on random graphs") =
     forAll(edgesGen) { edges =>
       val got = Dedup
-        .connectedComponents(edges.toDF("a_id", "b_id"),
-          algo = Dedup.CcAlgo.StarContraction, driverFinishEdges = 0L)
+        .connectedComponents(edges.toDF("a_id", "b_id"), driverFinishEdges = 0L)
         .as[(Long, Long)].collect().toMap
       got == unionFind(edges)
     }

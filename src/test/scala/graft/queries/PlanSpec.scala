@@ -487,13 +487,6 @@ class PlanSpec extends SparkSpec {
     "ReadSchema: struct<doc_id:bigint,text:string>".r.findFirstIn(p) should not be None
   }
 
-  test("evidence pins name real registry queries (bench split cannot silently desync)") {
-    // the other rename direction: if a pin QUERY is renamed but the set
-    // is not, the stale name must fail here rather than re-price the pin
-    // into the bench's engine total
-    DedupQueries.EvidencePins.subsetOf(graft.SparkEntry.queries.keySet) shouldBe true
-  }
-
   test("stream parse: the envelope decoder runs once; the validity filter and the event_time coalesce read its outputs") {
     import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Coalesce}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
