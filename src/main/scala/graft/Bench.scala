@@ -1,150 +1,132 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.Tables
 
-/** Driver-run benchmark: every registered query at SPARK_GRAFT_SF_DIR,
-  * one JSON line on stdout.
+/** Registry benchmark: times every registered query at
+  * `SPARK_GRAFT_SF_DIR` under one fixed protocol and prints one summary
+  * JSON line.
   *
-  * Measurement contract:
-  *  - each query executes its FULL physical plan by writing to the
-  *    built-in `noop` sink — `count()` would let Catalyst prune final
-  *    projections and output sorts (round-1 verdict fix);
-  *  - a warm-up pass (flagship, untimed) absorbs one-time
-  *    JVM/codegen/parquet-footer cost;
-  *  - a fixed CALIBRATION probe (round 18 — r17 verdict #4) runs next:
-  *    four canonical queries — scan-bound (`value_stats`),
-  *    shuffle-bound (`flagship`), similarity inner-loop (`knn_exact`),
-  *    stream replay (`stream_flagship_replay`) — each 1 warm + 2 timed
-  *    reps, min recorded. The vector rides in BOTH artifacts
-  *    (`calibration`), so cross-round box-speed claims cite a fixed
-  *    same-protocol probe instead of an ad-hoc query pair;
-  *  - each query runs SPARK_GRAFT_REPS times (default 3) and reports the
-  *    MEDIAN, with per-query min/max spread in the JSON — single-shot
-  *    numbers varied ~2× run-to-run, making round deltas meaningless
-  *    (round-2 verdict fix);
-  *  - reps are INTERLEAVED (round-6 verdict fix #1): the run is
-  *    structured as `reps` full passes over the registry, each pass in a
-  *    different deterministic shuffle order, so an external load burst
-  *    lands on a different query set in every pass instead of sitting on
-  *    one alphabetical block (the round-6 "d-block" artifact). Per-rep
-  *    wall-times and 1-min system loadavg samples taken immediately
-  *    before AND after each execution go into BENCH_DETAIL.json, so a
-  *    contended rep is attributable from the artifact alone;
-  *  - A PRELIMINARY summary line prints (and BENCH_DETAIL.json is
-  *    written) IMMEDIATELY after the main passes, BEFORE the outlier
-  *    re-run phase (round 18 — r17 verdict #1: BENCH_r17 was rc 124 /
-  *    parsed null because the rerun phase on a contended box blew the
-  *    driver's wall budget and the summary never printed). The rerun
-  *    phase is then SILENT on both streams (its log goes to the detail
-  *    artifact only — any line printed after the prelim summary would
-  *    push it out of the consumer's ~2000-char stdout tail), and the
-  *    refined line re-prints after it: whichever line the driver
-  *    captures, a number of record exists;
-  *  - OUTLIER REPS ARE RE-RUN (round 17 — r16 verdict #1): a rep
-  *    > 3× the query's own best (and > 0.3 s over it) is a contention
-  *    casualty the load-sample marker cannot see when the burst lands
-  *    mid-rep; after all passes it is re-executed (bounded budget) and
-  *    priced at the min of its attempts — contention only inflates, so
-  *    the min is the honest uncontended estimate. Round 18 (r17 ADVICE):
-  *    the per-query baseline min is RECOMPUTED after each rescue (a
-  *    rescued rep can drop below the old min, exposing siblings the
-  *    stale baseline missed), original rep times stay untouched in
-  *    `reps_detail` with rescued values in the parallel `reps_rescued`
-  *    field, and every rerun records its own before/after load samples;
-  *  - the WHOLE post-pass phase is WALL-DEADLINED (round 18 — r17
-  *    verdict #1b): `SPARK_GRAFT_BENCH_DEADLINE` (seconds of total
-  *    process wall, default 2100) bounds reruns AND the quiet re-price —
-  *    on a contended box the bench stops re-running when the next
-  *    attempt could cross the deadline, reports the remainder
-  *    unresolved, and EXITS with a parseable artifact instead of being
-  *    killed mid-phase (r17: 93 outliers × ≤ 2 attempts on a box 2×
-  *    slower ran the driver's budget out). `quiet_run` then certifies
-  *    the whole run (quiet launch + no unresolved outlier), a strictly
-  *    stronger claim than `quiet_launch`; in-run loadavg is recorded
-  *    (`load_inrun_max`) but never part of the verdict — on local[32]
-  *    it is self-load-dominated (see the inline note).
+  * Protocol:
+  *  - a query runs its full physical plan by writing to the built-in
+  *    `noop` sink; `count()` would let Catalyst prune final projections
+  *    and output sorts;
+  *  - one untimed `flagship` run absorbs JVM, codegen and parquet-footer
+  *    warm-up;
+  *  - the calibration vector ([[CalibrationQueries]]) runs next, each
+  *    query 1 warm + 2 timed reps, min recorded. It is taken from the
+  *    full registry, so a run restricted by `SPARK_GRAFT_QUERIES`
+  *    calibrates the same way;
+  *  - [[Reps]] interleaved passes over the selected queries ([[run]]):
+  *    pass `r` runs them in the shuffle order seeded `0xC0FFEE + r`, so a
+  *    load burst lands on a different query set in each pass. A query is
+  *    priced at the median of its reps; `value_best` sums each query's
+  *    best rep, the floor that contention cannot raise;
+  *  - a rep that throws leaves its query's median and best. A query with
+  *    no good rep is listed in `failed` and left out of every sum, never
+  *    priced at its time-to-exception;
+  *  - the 1-min system load average is sampled once, before any Spark
+  *    work, as `load_ambient`: any later sample carries the bench's own
+  *    load.
   *
-  * SPARK_GRAFT_QUERIES=a,b,c restricts the set (local iteration only;
-  * the driver runs the full registry).
+  * Environment: `SPARK_GRAFT_SF_DIR` (fixture directory),
+  * `SPARK_GRAFT_CPUS` (local cores and shuffle partitions),
+  * `SPARK_GRAFT_QUERIES=a,b,c` (restricts the timed set).
   *
-  * Output contract (round-4 verdict fix): the consumer keeps only a
-  * ~2000-char TAIL of stdout, so the LAST line is a compact summary —
-  * engine total (`value`, sum of medians) + least-contended floor
-  * (`value_best`, sum of per-query best reps — round-7 verdict #3) +
-  * launch-loadavg-verified headline (`value_quiet` — round-10 verdict
-  * #4, protocol re-cut round 13: equals `value` when the launch ambient
-  * was quiet (< 1.5); on a contended launch the bench settles and
-  * re-prices the engine queries, or reports NULL when the box never
-  * went quiet — `quiet_reason` states what was observed. The
-  * cross-round comparator is now IN the JSON, not PERF_NOTES prose) +
-  * per-family median sums at 2 dp + loadavg range — kept well under
-  * ~1500 chars. Full 3-dp medians, min/max spreads, per-rep
-  * times, per-rep load samples, and per-pass run order go to
-  * `BENCH_DETAIL.json` in the working directory (path echoed at the
-  * final print).
+  * Output: the consumer keeps only a ~2000-char tail of stdout, so the
+  * run prints one line, at 2 dp: `value` (sum of medians),
+  * `value_best`, `calibration`, per-family median sums (`families`),
+  * `n_failed`, `failed` and `load_ambient`. Medians, min/max spreads,
+  * per-rep times in pass order, `failed_reps` and `pass_order` go to
+  * `BENCH_DETAIL.json` in the working directory, at 3 dp. The log level
+  * is ERROR so that no log line follows the summary.
   */
 object Bench {
 
-  /** The fixed box-speed calibration vector (round 18 — r17 verdict
-    * #4): one scan-bound, one shuffle-bound, one similarity inner-loop,
-    * one stream replay. Names must stay in the registry; a rename here
-    * without one there only costs the calibration row (logged), never
-    * the bench. */
+  /** Box-speed calibration: one scan-bound, one shuffle-bound, one
+    * similarity inner-loop and one stream-replay query. A name missing
+    * from the registry costs its calibration entry (logged), not the
+    * run. */
   val CalibrationQueries: Seq[String] =
     Seq("value_stats", "flagship", "knn_exact", "stream_flagship_replay")
+
+  /** Interleaved passes per run. */
+  val Reps = 3
+
+  /** One interleaved run over `names`. `times(i)(r)` is query `i`'s wall
+    * time in pass `r`, failed reps included; `failedRep(i)(r)` marks a
+    * rep that threw; `order(r)` lists the query indices of pass `r` in
+    * execution order. */
+  final case class Run(names: IndexedSeq[String], order: IndexedSeq[Seq[Int]],
+                       times: IndexedSeq[IndexedSeq[Double]],
+                       failedRep: IndexedSeq[IndexedSeq[Boolean]]) {
+    /** Query `i`'s reps that did not throw, in pass order. */
+    def good(i: Int): Seq[Double] =
+      times(i).indices.filterNot(failedRep(i)).map(times(i))
+    /** Queries with no good rep. */
+    def failed: Seq[String] = names.indices.filter(good(_).isEmpty).map(names)
+    /** (name, good reps) of every query with at least one good rep. */
+    def priced: Seq[(String, Seq[Double])] =
+      names.indices.map(i => names(i) -> good(i)).filter(_._2.nonEmpty)
+    def value: Double = priced.map(p => median(p._2)).sum
+    def valueBest: Double = priced.map(_._2.min).sum
+  }
+
+  def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.length / 2)
+
+  /** Runs `reps` passes over `queries`, pass `r` in the shuffle order
+    * seeded `0xC0FFEE + r`. A rep that throws is logged to stderr and
+    * marked failed; the run goes on. */
+  def run(queries: IndexedSeq[(String, () => Unit)], reps: Int): Run = {
+    val n = queries.size
+    val order = (0 until reps).map { r =>
+      new scala.util.Random(0xC0FFEE + r).shuffle((0 until n).toList)
+    }
+    val times = Array.fill(n, reps)(0.0)
+    val failedRep = Array.fill(n, reps)(false)
+    for (r <- 0 until reps; i <- order(r)) {
+      val (name, thunk) = queries(i)
+      val t0 = System.nanoTime()
+      try thunk() catch { case e: Throwable =>
+        failedRep(i)(r) = true
+        System.err.println(s"[bench] $name rep $r FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+      }
+      times(i)(r) = (System.nanoTime() - t0) / 1e9
+    }
+    Run(queries.map(_._1), order,
+      times.map(_.toIndexedSeq).toIndexedSeq, failedRep.map(_.toIndexedSeq).toIndexedSeq)
+  }
 
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   private def fmt(v: Double): String = f"$v%.3f"
 
-  /** Compact-line format: 2 dp with trailing zeros stripped ("0.50" →
-    * "0.5", "2.00" → "2") — still valid JSON numbers, ~50 chars saved
-    * across the registry. The consumer keeps only a ~2000-char stdout
-    * TAIL, so every char of the final line competes with the sbt
-    * epilogue that follows it. */
+  /** 2 dp with trailing zeros stripped ("0.50" → "0.5", "2.00" → "2"):
+    * still valid JSON numbers, and every char of the summary line
+    * competes for the consumer's stdout tail. */
   private def fmt2(v: Double): String = {
     val s = f"$v%.2f"
     if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
     else s
   }
 
-  /** Numeric env knobs parse with a FALLBACK to their default (round-15
-    * ADVICE #3): a malformed value must not kill the whole bench with a
-    * NumberFormatException before any work — one stderr note, then the
-    * default. */
-  private def envLong(name: String, default: Long): Long =
-    sys.env.get(name).map { v =>
-      try v.trim.toLong catch { case _: NumberFormatException =>
-        System.err.println(s"[bench] $name='$v' is not a number - using default $default")
-        default
-      }
-    }.getOrElse(default)
-  private def envInt(name: String, default: Int): Int =
-    sys.env.get(name).map { v =>
-      // toInt directly, NOT toLong.toInt: a value like 2^31 parses as a
-      // valid Long and then silently wraps negative — the exact
-      // silent-misconfiguration class this helper exists to catch
-      try v.trim.toInt catch { case _: NumberFormatException =>
-        System.err.println(s"[bench] $name='$v' is not an int - using default $default")
-        default
-      }
-    }.getOrElse(default)
+  private def str(s: String): String = "\"" + s + "\""
+  private def arr(vs: Seq[String]): String = vs.mkString("[", ",", "]")
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val startNanos = System.nanoTime()
-    def elapsedSec: Double = (System.nanoTime() - startNanos) / 1e9
-    // total-process wall budget (round 18 — r17 verdict #1b): the
-    // default sits comfortably inside the driver's observed kill window
-    // (r17 was killed somewhere past ~40 min of main passes + reruns);
-    // every post-pass phase checks it before spending
-    val deadlineSec = envLong("SPARK_GRAFT_BENCH_DEADLINE", 2100L).toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = envInt("SPARK_GRAFT_REPS", 3)
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").toSet)
+    val ambient = ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -153,57 +135,12 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // ERROR, not WARN: the CC unpersist path logs a WARN per freed
-    // checkpoint, and any log line after the final JSON line would
-    // pollute the consumer's stdout tail
+    // checkpoint
     spark.sparkContext.setLogLevel("ERROR")
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    // ambient load, sampled BEFORE any Spark work: every later sample's
-    // 1-min average partly carries the bench's own preceding 32-thread
-    // query, so in-run loadavg conflates ambient and self-load — this
-    // one number is the uncontaminated external-contention bound
-    val rawAmbient = osBean.getSystemLoadAverage
-    // PRE-RUN settle (round-15, r14 verdict #7 — third bench-hygiene
-    // ask): on a contended LAUNCH, waiting up front is strictly better
-    // than re-pricing afterwards — the MAIN medians (what the judge
-    // decomposes per query) become the quiet numbers instead of only
-    // the re-priced total. Idle until the 1-min loadavg drops under
-    // the quiet bar (nothing of ours is running yet, so every sample
-    // here is pure external load), give up after the retry budget and
-    // let the post-run re-price protocol handle it as before.
-    val launchSettleMs = envLong("SPARK_GRAFT_LAUNCH_SETTLE_MS", 75000L)
-    val launchRetries = envInt("SPARK_GRAFT_LAUNCH_RETRIES", 6)
-    val launchSamples = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // a NEGATIVE loadavg means the platform doesn't report it — that
-    // is "unknown", not "contended": settling on it would burn the
-    // whole retry budget learning nothing (r15 review)
-    while (launchSamples.length < launchRetries &&
-           launchSamples.lastOption.getOrElse(rawAmbient) >= 1.5) {
-      // one line per sample (round-15 ADVICE #3): a multi-minute
-      // pre-run wait must be attributable while it happens, not only
-      // from the launch_settle field afterwards
-      System.err.println(s"[bench] contended launch (loadavg " +
-        s"${fmt2(launchSamples.lastOption.getOrElse(rawAmbient))} >= 1.5) - " +
-        s"settling ${launchSettleMs / 1000}s " +
-        s"(${launchSamples.length + 1}/$launchRetries)")
-      Thread.sleep(launchSettleMs)
-      launchSamples += osBean.getSystemLoadAverage
-    }
-    // the effective ambient is the last pre-run sample — still taken
-    // before any Spark work, so still uncontaminated
-    val ambientLoad = launchSamples.lastOption.getOrElse(rawAmbient)
-    val launchSettleJson =
-      (rawAmbient +: launchSamples.toSeq).map(fmt2).mkString("[", ",", "]")
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val nq = queries.size
-    try exec(SparkEntry.queries("flagship")(spark, sfDir)) // warm-up, untimed
+
+    try exec(SparkEntry.queries("flagship")(spark, sfDir))
     catch { case _: Throwable => () }
 
-    // CALIBRATION PROBE (round 18 — r17 verdict #4): fixed canonical
-    // queries, 1 warm + 2 timed reps each, min recorded. Runs against
-    // the FULL registry's functions (not the `only` subset) so a
-    // filtered local iteration still calibrates identically; a missing
-    // name (renamed query) logs and skips rather than failing the run.
     val calibration: Seq[(String, Double)] = CalibrationQueries.flatMap { name =>
       SparkEntry.queries.get(name) match {
         case None =>
@@ -223,380 +160,48 @@ object Bench {
           }
       }
     }
-    val calibJson = calibration
-      .map { case (n, t) => s"\"$n\":${fmt(t)}" }.mkString("{", ",", "}")
-    val calibJson2 = calibration
-      .map { case (n, t) => s"\"$n\":${fmt2(t)}" }.mkString("{", ",", "}")
 
-    // reps × full-registry passes; each pass a different seeded shuffle.
-    // times/loads are indexed [query][rep] in PASS order (rep 0 first) —
-    // NOT sorted — so the detail file shows what happened when.
-    val times = Array.fill(nq, reps)(0.0)
-    val loads = Array.fill(nq, reps)(0.0)
-    // post-exec load sample (round 17 — r16 verdict #1): the pre-exec
-    // sample cannot see a burst that arrives MID-rep (r16 had a 75.5 s
-    // rep on a 3 s query whose pre-exec sample passed the gate); the
-    // exit sample is the attribution record for exactly that case
-    val loadsAfter = Array.fill(nq, reps)(0.0)
-    // r8 advisor fix: a query that throws must NOT be silently priced at
-    // its time-to-exception (the r8 artifact recorded 33 events queries
-    // at 0.06-0.09s AnalysisException stubs with no failure marker).
-    // Failures are still caught (one broken query must not kill the whole
-    // bench), and — round-9 advice — recorded PER REP: a transient
-    // single-rep failure (a flaky FS hiccup on rep 3 of 3) no longer
-    // discards the query's healthy reps; only the failed rep leaves the
-    // median/best, the rep-level marker goes to failed_reps in the detail
-    // artifact, and `failed` lists only queries with ZERO good reps.
-    val failedRep = Array.fill(nq, reps)(false)
-    val passOrder: IndexedSeq[Seq[Int]] = (0 until reps).map { r =>
-      new scala.util.Random(0xC0FFEE + r).shuffle((0 until nq).toList)
-    }
-    for (r <- 0 until reps; i <- passOrder(r)) {
-      val (_, fn) = queries(i)
-      loads(i)(r) = osBean.getSystemLoadAverage
-      val t0 = System.nanoTime()
-      try exec(fn(spark, sfDir)) catch { case e: Throwable =>
-        failedRep(i)(r) = true
-        System.err.println(s"[bench] ${queries(i)._1} rep $r FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      times(i)(r) = (System.nanoTime() - t0) / 1e9
-      loadsAfter(i)(r) = osBean.getSystemLoadAverage
-    }
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .map { case (n, fn) => n -> (() => exec(fn(spark, sfDir))) }
+      .toIndexedSeq
+    val res = run(selected, Reps)
+    val names = res.names
+    val medians = res.priced.map { case (n, ts) => n -> median(ts) }
+    val failedJson = arr(res.failed.map(str))
 
-    // ORIGINAL rep times never change past this point (r17 ADVICE #2:
-    // reps_detail must record what actually happened); rescued values
-    // live in the parallel array and `eff` merges the two views.
-    val rescuedT = Array.fill(nq, reps)(-1.0)
-    def eff(i: Int, r: Int): Double =
-      if (rescuedT(i)(r) >= 0) rescuedT(i)(r) else times(i)(r)
+    val detail = obj(Seq(
+      "metric" -> str("total"), "value" -> fmt(res.value),
+      "value_best" -> fmt(res.valueBest), "unit" -> str("sec"),
+      "reps" -> Reps.toString,
+      "calibration" -> obj(calibration.map { case (n, t) => n -> fmt(t) }),
+      "n_failed" -> res.failed.size.toString, "failed" -> failedJson,
+      "failed_reps" -> obj(names.indices.collect {
+        case i if res.failedRep(i).contains(true) =>
+          names(i) -> arr((0 until Reps).filter(res.failedRep(i)).map(_.toString))
+      }),
+      "queries" -> obj(medians.map { case (n, m) => n -> fmt(m) }),
+      "spread" -> obj(res.priced.map { case (n, ts) => n -> arr(Seq(fmt(ts.min), fmt(ts.max))) }),
+      "reps_detail" -> obj(names.indices.map(i => names(i) -> arr(res.times(i).map(fmt)))),
+      "pass_order" -> arr(res.order.map(p => arr(p.map(i => str(names(i)))))),
+      "load_ambient" -> fmt2(ambient),
+      "elapsed_sec" -> fmt((System.nanoTime() - startNanos) / 1e9),
+      "sf" -> str(sfDir)))
+    Files.write(Paths.get("BENCH_DETAIL.json"), (detail + "\n").getBytes(UTF_8))
 
-    def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.length / 2)
-    val failed = (0 until nq).map(i => failedRep(i).forall(identity))
-    val failedNames = queries.zipWithIndex.collect { case ((n, _), i) if failed(i) => n }
-    val failedJson = failedNames.map(n => s"\"$n\"").mkString("[", ",", "]")
-
-    val rerunCap = envInt("SPARK_GRAFT_RERUN_CAP", 80)
-    def isOutlier(t: Double, mn: Double): Boolean =
-      t > 3.0 * mn && t - mn > 0.3
-    var rerunsUsed = 0
-    var rerunsSkippedDeadline = 0
-    val flaggedOutliers = scala.collection.mutable.LinkedHashSet.empty[(Int, Int)]
-    val rerunLog = scala.collection.mutable.ArrayBuffer.empty[String]
-
-    // ---- shared stats/artifact builder: runs once for the PRELIM
-    // snapshot (before the rerun phase — r17 verdict #1a: a bench killed
-    // mid-rerun must still leave a number of record) and once FINAL ----
-    def okEffTimes(i: Int): Seq[Double] =
-      (0 until reps).collect { case r if !failedRep(i)(r) => eff(i, r) }
-    def countUnresolved(): Int = (0 until nq).map { i =>
-      val ok = okEffTimes(i)
-      if (ok.length >= 2) ok.count(t => isOutlier(t, ok.min)) else 0
-    }.sum
-    def engineTotalNow(): Double =
-      (0 until nq).filterNot(failed).map(i => median(okEffTimes(i))).sum
-    def engineBestNow(): Double =
-      (0 until nq).filterNot(failed).map(i => okEffTimes(i).min).sum
-
-    def emit(phase: String, engineQuiet: Option[Double], quietReason: String,
-             writeDetail: Boolean, printPerQuery: Boolean): Unit = {
-      val results = queries.zipWithIndex
-        .filterNot { case (_, i) => failed(i) }
-        .map { case ((name, _), i) => (name, okEffTimes(i), loads(i).toSeq, i) }
-      val engineTotal = results.map(r => median(r._2)).sum
-      // the least-contended engine floor (round-7 verdict #3): the sum of
-      // each query's BEST rep. On a quiet box best ≈ median; under external
-      // load the medians inflate while the best reps keep the committed
-      // floor — publishing both makes contention quantifiable from the
-      // artifact alone (value / value_best ≈ the load inflation factor).
-      val engineBest = results.map(r => r._2.min).sum
-      val allLoads = loads.flatten.filter(_ >= 0).sorted
-      val loadRange =
-        if (allLoads.isEmpty) "[-1,-1,-1]"
-        else s"[${fmt2(allLoads.head)},${fmt2(allLoads(allLoads.length / 2))},${fmt2(allLoads.last)}]"
-      // Contention advisory (round-9 verdict #7; gate RECUT round 16 per
-      // r15 verdict #3): on local[32] the bench IS the box's dominant
-      // load, so any gate anchored to the pre-run ambient counts the
-      // bench's own steady-state self-load — r15 flagged 271/501 reps
-      // "contended" on a quiet launch, pure noise. The self-calibrating
-      // marker: the run's own in-run loadavg MEDIAN is the self-load
-      // baseline, and a rep is flagged only when its pre-exec sample
-      // sits in a BURST above that steady state (≥ max(2× median,
-      // median + 4)) — i.e. external load landing on top of the bench,
-      // which is the only thing the flag was ever meant to catch.
-      // ADVISORY, not exclusion: the honest quietness gate remains
-      // load_ambient plus the quiet-launch protocol.
-      val selfBaseline =
-        if (allLoads.isEmpty) -1.0 else allLoads(allLoads.length / 2)
-      val loadGate =
-        if (selfBaseline < 0) -1.0
-        else math.max(2.0 * selfBaseline, selfBaseline + 4.0)
-      val contended = results
-        .map { case (k, _, l, _) =>
-          k -> (0 until reps).filter(r => loadGate >= 0 && l(r) > loadGate)
-        }.filter(_._2.nonEmpty)
-      val nContendedReps = contended.map(_._2.size).sum
-      val quietAmbient = ambientLoad >= 0 && ambientLoad < 1.5
-      val outlierUnresolved = countUnresolved()
-      // "quiet at launch" and "quiet throughout" are DIFFERENT claims
-      // (r16 verdict: quiet_launch=true on a run whose in-run load hit
-      // 9.91 invited exactly the misreading the field guards against).
-      // quiet_run certifies the RUN: quiet launch AND no outlier rep
-      // left unresolved by the re-run budget/deadline. In-run loadavg is
-      // deliberately NOT part of the verdict — on local[32] it is
-      // SELF-load-dominated (the bench's own NN-Descent/build stages
-      // push the 1-min average to 12+ while light segments sit at 2, so
-      // any self-relative load bar re-creates the r15 trap; measured: a
-      // fully idle box still peaks load 12.6 vs self-median 4.0
-      // mid-run). The spread-based outlier protocol is the in-run
-      // contention detector — it keys on the query's own best rep,
-      // which self-load cannot shift — and load_inrun_max rides in the
-      // JSON as the attribution record. null when no loadavg.
-      val inRunMax = (loads.flatten ++ loadsAfter.flatten)
-        .filter(_ >= 0).foldLeft(-1.0)(math.max)
-      val quietRunJson: String =
-        if (ambientLoad < 0) "null"
-        else (quietAmbient && outlierUnresolved == 0 && phase == "final").toString
-      val quietJson = engineQuiet.map(fmt2).getOrElse("null")
-      val quietJson3 = engineQuiet.map(fmt).getOrElse("null")
-
-      if (writeDetail) {
-        val qs = results.map { case (k, t, _, _) => s"\"$k\":${fmt(median(t))}" }
-          .mkString("{", ",", "}")
-        val spread = results
-          .map { case (k, t, _, _) => s"\"$k\":[${fmt(t.min)},${fmt(t.max)}]" }
-          .mkString("{", ",", "}")
-        // per-rep times: ALL reps in pass order, failed reps included
-        // (marked in failed_reps) — ORIGINALS, never rescue-overwritten
-        val perRep = results
-          .map { case (k, _, _, i) => s"\"$k\":[${times(i).map(fmt).mkString(",")}]" }
-          .mkString("{", ",", "}")
-        // rescued values (r17 ADVICE #2), parallel to reps_detail:
-        // only queries with ≥ 1 rescue appear; -1 marks untouched reps
-        val perRescued = results
-          .collect { case (k, _, _, i) if rescuedT(i).exists(_ >= 0) =>
-            s"\"$k\":[${rescuedT(i).map(v => if (v >= 0) fmt(v) else "-1").mkString(",")}]"
-          }.mkString("{", ",", "}")
-        val perLoad = results
-          .map { case (k, _, l, _) => s"\"$k\":[${l.map(fmt2).mkString(",")}]" }
-          .mkString("{", ",", "}")
-        val perLoadAfter = results
-          .map { case (k, _, _, i) => s"\"$k\":[${loadsAfter(i).map(fmt2).mkString(",")}]" }
-          .mkString("{", ",", "}")
-        val rerunsJson = rerunLog.mkString("[", ",", "]")
-        val repFails = queries.zipWithIndex
-          .collect { case ((k, _), i) if failedRep(i).exists(identity) =>
-            s"\"$k\":[${(0 until reps).filter(failedRep(i)).mkString(",")}]"
-          }.mkString("{", ",", "}")
-        val contendedJson = contended
-          .map { case (k, rs) => s"\"$k\":[${rs.mkString(",")}]" }
-          .mkString("{", ",", "}")
-        val orderJson = passOrder
-          .map(p => p.map(i => s"\"${queries(i)._1}\"").mkString("[", ",", "]"))
-          .mkString("[", ",", "]")
-        val detail =
-          s"""{"metric":"total","phase":"$phase","value":${fmt(engineTotal)},"value_best":${fmt(engineBest)},"value_quiet":$quietJson3,"quiet_launch":$quietAmbient,"quiet_run":$quietRunJson,"quiet_reason":"$quietReason","unit":"sec","reps":$reps,"interleaved":true,"calibration":$calibJson,"n_failed":${failedNames.size},"failed":$failedJson,"failed_reps":$repFails,"load_gate":${fmt2(loadGate)},"contended_reps":$contendedJson,"n_outlier_reps":${flaggedOutliers.size},"n_reruns":$rerunsUsed,"n_reruns_skipped_deadline":$rerunsSkippedDeadline,"n_outlier_unresolved":$outlierUnresolved,"reruns":$rerunsJson,"deadline_sec":${deadlineSec.toLong},"elapsed_sec":${fmt(elapsedSec)},"queries":$qs,"spread":$spread,"reps_detail":$perRep,"reps_rescued":$perRescued,"load_per_rep":$perLoad,"load_after_per_rep":$perLoadAfter,"load_inrun_max":${fmt2(inRunMax)},"load_ambient":${fmt2(ambientLoad)},"launch_settle":$launchSettleJson,"load":$loadRange,"pass_order":$orderJson,"sf":"$sfDir"}"""
-        val detailPath = java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath
-        java.nio.file.Files.write(detailPath,
-          (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      if (printPerQuery) {
-        // full per-query compact medians (2 dp), second-to-last
-        val qs2 = results.map { case (k, t, _, _) => s"\"$k\":${fmt2(median(t))}" }
-          .mkString("{", ",", "}")
-        println(s"bench detail (medians 3dp + spreads + per-rep times/loads + pass order): ${java.nio.file.Paths.get("BENCH_DETAIL.json").toAbsolutePath}")
-        println(s"""{"metric":"total","phase":"$phase","value":${fmt2(engineTotal)},"value_best":${fmt2(engineBest)},"value_quiet":$quietJson,"unit":"sec","reps":$reps,"n_failed":${failedNames.size},"queries":$qs2,"sf":"$sfDir"}""")
-      }
-      // the GUARANTEED-SHORT machine-parse target (round-5 verdict #4):
-      // engine total + per-family median sums + loadavg
-      // [min,med,max] + the calibration vector. The per-query line above
-      // will eventually outgrow the consumer's ~2000-char stdout tail as
-      // the registry grows; this one cannot (family count is bounded by
-      // name prefixes, not registry size).
-      val fams = results
-        .groupBy { case (k, _, _, _) => k.takeWhile(_ != '_') }
-        .toSeq.sortBy(_._1)
-        .map { case (f, rs) => s"\"$f\":${fmt2(rs.map(r => median(r._2)).sum)}" }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"total","phase":"$phase","value":${fmt2(engineTotal)},"value_best":${fmt2(engineBest)},"value_quiet":$quietJson,"quiet_launch":$quietAmbient,"quiet_run":$quietRunJson,"quiet_reason":"$quietReason","unit":"sec","reps":$reps,"n_queries":${results.size},"n_failed":${failedNames.size},"failed":$failedJson,"n_rep_failures":${(0 until nq).map(i => failedRep(i).count(identity)).sum},"n_contended_reps":$nContendedReps,"n_outlier_reps":${flaggedOutliers.size},"n_reruns":$rerunsUsed,"n_reruns_skipped_deadline":$rerunsSkippedDeadline,"n_outlier_unresolved":$outlierUnresolved,"load_gate":${fmt2(loadGate)},"load_inrun_max":${fmt2(inRunMax)},"interleaved":true,"calibration":$calibJson2,"load_ambient":${fmt2(ambientLoad)},"launch_settle":$launchSettleJson,"load":$loadRange,"families":$fams,"queries_detail":"BENCH_DETAIL.json","sf":"$sfDir"}""")
-      System.out.flush()
-    }
-
-    // ---- PRELIM snapshot: the number of record exists from here on,
-    // whatever happens to the phases below (r17 verdict #1a) ----
-    val quietAmbient = ambientLoad >= 0 && ambientLoad < 1.5
-    val prelimQuiet: (Option[Double], String) =
-      if (ambientLoad < 0)
-        (None, "loadavg unavailable on this platform - quietness unverifiable")
-      else if (quietAmbient)
-        // value_quiet = engine total under a quiet launch
-        (Some(engineTotalNow()), "prelim: quiet launch, pre-rerun snapshot")
-      else
-        (None, "prelim: contended launch - re-price deferred to the final line")
-    emit("prelim", prelimQuiet._1, prelimQuiet._2,
-      writeDetail = true, printPerQuery = false)
-
-    // ---- OUTLIER-REP RE-RUN (round 17 — r16 verdict #1): the
-    // load-sample contention marker is blind to bursts arriving MID-rep,
-    // but the query's own rep spread is not — with interleaved passes, a
-    // rep > 3× the query's own best is a contention casualty, not the
-    // code (r16: a 75.5 s rep on a 3 s query sat unflagged in the
-    // median). Such reps are RE-RUN (the burst has usually moved on) and
-    // priced at the MIN of their attempts: contention only ever INFLATES
-    // a full-plan execution. The 0.3 s absolute guard skips timer/GC
-    // noise on sub-second queries where a 3× spread cannot move the
-    // total. Budget-bounded (SPARK_GRAFT_RERUN_CAP re-executions, ≤ 2
-    // per rep) AND deadline-bounded (round 18); the per-query baseline
-    // min is recomputed after each rescue (r17 ADVICE #2 — a rescued rep
-    // dropping below the old min exposes siblings the stale baseline
-    // missed); reps still > 3× at the end are reported UNRESOLVED rather
-    // than silently kept. SILENT on both streams: any line printed here
-    // would push the prelim summary out of the consumer's stdout tail —
-    // the rerun log goes to BENCH_DETAIL.json only. ----
-    def deadlineLeft: Double = deadlineSec - elapsedSec
-    for (i <- 0 until nq) {
-      val okReps = (0 until reps).filterNot(failedRep(i))
-      if (okReps.length >= 2) {
-        val attempts = Array.fill(reps)(0)
-        var rescan = true
-        while (rescan) {
-          rescan = false
-          val mn = okReps.map(r => eff(i, r)).min
-          for (r <- okReps if isOutlier(eff(i, r), mn) && attempts(r) < 2) {
-            flaggedOutliers += ((i, r))
-            if (rerunsUsed >= rerunCap) { attempts(r) = 2 }
-            // an attempt is expected to cost ~mn (the uncontended
-            // estimate); refuse it when even 1.5× that would cross the
-            // deadline — exiting with unresolved outliers beats rc 124
-            else if (deadlineLeft < mn * 1.5 + 30.0) {
-              rerunsSkippedDeadline += 1; attempts(r) = 2
-            } else {
-              attempts(r) += 1; rerunsUsed += 1
-              val orig = times(i)(r)
-              val lb = osBean.getSystemLoadAverage
-              val t0 = System.nanoTime()
-              val t = try {
-                exec(queries(i)._2(spark, sfDir))
-                (System.nanoTime() - t0) / 1e9
-              } catch { case _: Throwable => Double.MaxValue } // rep stands
-              val la = osBean.getSystemLoadAverage
-              if (t < eff(i, r)) {
-                rescuedT(i)(r) = t
-                if (t < mn) rescan = true // new baseline — rescan siblings
-              }
-              rerunLog += s"""["${queries(i)._1}",$r,${fmt(orig)},${fmt(eff(i, r))},${fmt2(lb)},${fmt2(la)}]"""
-            }
-          }
-        }
-      }
-    }
-
-    // ---- value_quiet (round-10 verdict #4, protocol re-cut round 13
-    // after r11 verdict #7): the headline must be defensible from the
-    // JSON alone — "the launch-loadavg-verified median". The LAUNCH
-    // ambient is the only uncontaminated external-contention signal
-    // (every in-run sample carries the bench's own 32-thread self-load,
-    // so a per-rep load filter on a contended launch just passes the
-    // contaminated medians through — measured 170.8 ≈ 170.0 at ambient
-    // 4.3). The honest protocol is therefore BOUNDED RE-RUNS, not
-    // filtering: on a quiet launch (ambient < 1.5, the round-8/10
-    // manual re-run bar) the whole run is the quiet run and
-    // value_quiet == value; on a contended launch the bench IDLES long
-    // enough for the 1-min loadavg to shed its own self-load
-    // (SPARK_GRAFT_QUIET_SETTLE_MS, default 100 s), re-samples, and if
-    // the box has gone quiet re-prices every query with
-    // SPARK_GRAFT_QUIET_REPS fresh passes; if after
-    // SPARK_GRAFT_QUIET_RETRIES settles the box never went quiet — or
-    // the wall deadline no longer affords the settle + re-price
-    // (round 18) — value_quiet is NULL: no number beats a fabricated
-    // one, and quiet_reason says exactly what was observed. ----
-    val (engineQuiet: Option[Double], quietReason: String) =
-      if (ambientLoad < 0)
-        // the platform reports no loadavg at all — "unknown" is neither
-        // quiet nor contended, and settling on it would burn the whole
-        // post-run retry budget learning nothing (r15 second-pass
-        // review): no number beats a fabricated one, and the reason
-        // must not claim contention
-        (None, "loadavg unavailable on this platform - quietness unverifiable")
-      else if (quietAmbient)
-        (Some(engineTotalNow()),
-          if (launchSamples.isEmpty)
-            s"quiet launch: ambient ${fmt2(ambientLoad)} < 1.5"
-          else
-            s"quiet launch after pre-run settle: last sample " +
-              s"${fmt2(ambientLoad)} < 1.5 (samples $launchSettleJson)")
-      else {
-        // r13 verdict #8 bench hygiene: settle longer and take one more
-        // quiet rep by default — value_quiet resting on 2 reps after a
-        // 75 s settle was defensible but thin; 100 s + 3 reps costs ~4
-        // extra minutes only on CONTENDED launches
-        val maxRetries = envInt("SPARK_GRAFT_QUIET_RETRIES", 2)
-        val settleMs = envLong("SPARK_GRAFT_QUIET_SETTLE_MS", 100000L)
-        val qReps = envInt("SPARK_GRAFT_QUIET_REPS", 3)
-        // round 18: the settle + re-price must FIT the wall deadline —
-        // one settle plus qReps × the least-contended engine floor,
-        // with slack. If it can't, say so and ship NULL.
-        val repriceEstimate = settleMs / 1000.0 + qReps * engineBestNow() + 60.0
-        if (deadlineLeft < repriceEstimate)
-          (None,
-            s"contended launch (ambient ${fmt2(ambientLoad)}) and the wall " +
-              s"deadline (${deadlineSec.toLong}s, ${fmt2(elapsedSec)}s elapsed) cannot " +
-              s"afford a settle + re-price (~${fmt2(repriceEstimate)}s)")
-        else {
-          val samples = scala.collection.mutable.ArrayBuffer.empty[Double]
-          while (samples.length < maxRetries &&
-                 !samples.lastOption.exists(s => s >= 0 && s < 1.5) &&
-                 deadlineLeft > settleMs / 1000.0 + qReps * engineBestNow() + 30.0) {
-            System.err.println(s"[bench] post-run settle ${settleMs / 1000}s " +
-              s"(${samples.length + 1}/$maxRetries) before quiet re-price")
-            Thread.sleep(settleMs)
-            samples += osBean.getSystemLoadAverage
-          }
-          val sampleStr = samples.map(fmt2).mkString("[", ",", "]")
-          if (samples.lastOption.exists(s => s >= 0 && s < 1.5)) {
-            // quiet re-price: fresh interleaved passes over every
-            // query; a query whose quiet reps all fail falls back to its
-            // main-run median so the total stays comparable
-            val qTimes = Array.fill(nq, qReps)(-1.0)
-            for (r <- 0 until qReps;
-                 i <- new scala.util.Random(0xBEEF + r).shuffle((0 until nq).toList)
-                 if !failed(i)) {
-              val t0 = System.nanoTime()
-              try {
-                exec(queries(i)._2(spark, sfDir))
-                qTimes(i)(r) = (System.nanoTime() - t0) / 1e9
-              } catch { case _: Throwable => () }
-            }
-            // defensibility: a query whose quiet reps ALL failed falls
-            // back to its contended main-run median so the total stays
-            // comparable — but the reason string must SAY so, or the JSON
-            // presents contaminated numbers as loadavg-verified
-            var fellBack = List.empty[String]
-            val total = queries.zipWithIndex
-              .filterNot { case (_, i) => failed(i) }
-              .map { case ((name, _), i) =>
-                val ok = qTimes(i).filter(_ >= 0).toSeq
-                if (ok.nonEmpty) median(ok)
-                else { fellBack ::= name; median(okEffTimes(i)) }
-              }.sum
-            val fallbackNote =
-              if (fellBack.isEmpty) ""
-              else s"; ${fellBack.size} queries fell back to contended " +
-                s"medians (quiet reps failed): ${fellBack.sorted.mkString(",")}"
-            (Some(total),
-              s"re-priced engine after settle: ambient ${fmt2(ambientLoad)} -> $sampleStr, $qReps quiet reps$fallbackNote")
-          } else if (samples.length < maxRetries)
-            (None,
-              s"contended launch (ambient ${fmt2(ambientLoad)}); settles stopped " +
-                s"at the wall deadline (${deadlineSec.toLong}s): samples $sampleStr")
-          else
-            (None,
-              s"contended launch (ambient ${fmt2(ambientLoad)}) and box never settled < 1.5 after $maxRetries x ${settleMs / 1000}s: samples $sampleStr")
-        }
-      }
-
-    // ---- FINAL: refined artifact + per-query line + summary line ----
-    emit("final", engineQuiet, quietReason,
-      writeDetail = true, printPerQuery = true)
+    // family count is bounded by name prefixes, not registry size, so
+    // this line stays inside the stdout tail as the registry grows
+    val families = medians.groupBy(_._1.takeWhile(_ != '_')).toSeq.sortBy(_._1)
+      .map { case (f, ms) => f -> fmt2(ms.map(_._2).sum) }
+    println(obj(Seq(
+      "metric" -> str("total"), "value" -> fmt2(res.value),
+      "value_best" -> fmt2(res.valueBest), "unit" -> str("sec"),
+      "reps" -> Reps.toString, "n_queries" -> medians.size.toString,
+      "n_failed" -> res.failed.size.toString, "failed" -> failedJson,
+      "calibration" -> obj(calibration.map { case (n, t) => n -> fmt2(t) }),
+      "load_ambient" -> fmt2(ambient), "families" -> obj(families),
+      "queries_detail" -> str("BENCH_DETAIL.json"), "sf" -> str(sfDir))))
+    System.out.flush()
     spark.stop()
   }
 }

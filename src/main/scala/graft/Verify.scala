@@ -153,8 +153,7 @@ object Verify {
         grouped.map { case (g, names) => (names.map(costRank).max, g, names) })
         .sortBy { case (rank, name, _) => (rank, name) }
 
-    val nThreads = sys.env.getOrElse("SPARK_GRAFT_DUMP_THREADS", "6").toInt
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     units.foreach { case (_, _, names) =>
       pool.execute(() => names.foreach(dumpOne))
     }

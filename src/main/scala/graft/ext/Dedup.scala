@@ -666,13 +666,12 @@ object Dedup {
   }
 
   /** Stages 1–3 of [[substringSpans]] (gram table → occurrence cap →
-    * key equi-join), exposed separately so ScaleBench can price the
-    * diagonal-window stage per PAIR ROW — the unit of work the islands
-    * window actually processes. Returns (__key, a_id, a_pos, b_id,
-    * b_pos, __diag). */
-  def substringGramPairs(docs: DataFrame, idCol: String = "doc_id",
-                         toksCol: String = "toks", k: Int = 8,
-                         dfCap: Long = 16L): DataFrame = {
+    * key equi-join): one row per cross-doc shared-gram pair, the unit
+    * of work the islands window processes. Returns (__key, a_id,
+    * a_pos, b_id, b_pos, __diag). */
+  private def substringGramPairs(docs: DataFrame, idCol: String,
+                                 toksCol: String, k: Int,
+                                 dfCap: Long): DataFrame = {
     val capped = cappedGramTable(docs, idCol, toksCol, k, dfCap)
     val a = capped.select(col("__key"), col(idCol).as("a_id"), col("__pos").as("a_pos"))
     val b = capped.select(col("__key"), col(idCol).as("b_id"), col("__pos").as("b_pos"))

@@ -71,7 +71,8 @@ object Lex {
     * on identical inputs; integer sums are exact in any order), but
     * Spark implements ROUND-on-double and beyond-long decimals via a
     * per-row BigDecimal allocation — measured 2× the whole probe cost
-    * at 9M scored pairs (9.6 s → ~4.5 s, ScaleBench lex_probe 1×).
+    * at 9M scored pairs (9.6 s → ~4.5 s on the 1× `lex_probe` rung;
+    * PERF_NOTES, "BM25 probe cost, profiled then cut 3.4×").
     * Overflow bound (stated, not assumed): the
     * per-pair sum is over SHARED ADMITTED tokens only, each term
     * ≤ idf·(k1+1) ≤ ~65 score units even at n = 10^12 docs
@@ -262,9 +263,9 @@ object Lex {
     * persisted postings DENORMALIZE the doc length (`dl`) into every
     * row — the Lucene per-doc-norm layout, +8 bytes/row paid once per
     * generation so probe plans never shuffle corpus-sized data to a
-    * doc-length join (measured: the lex_probe ScaleBench join was the
-    * dominant probe cost once the max-df cut admitted real posting
-    * lists). */
+    * doc-length join, which is the dominant probe cost once the max-df
+    * cut admits real posting lists (`lex_probe`; PERF_NOTES, "BM25
+    * probe cost, profiled then cut 3.4×"). */
   /** Materialize the TWO frames every generation write derives from:
     * `d` (doc lengths — dlen + stats + the dl join) and `joined`
     * (dl-denormalized postings — postings + pruned prefix + df, whose
@@ -459,8 +460,9 @@ object Lex {
     * convention): which path the last [[queryLexIndexWand]] call chose
     * — "wand" (bounds discriminate), "exact" (degenerate-shape
     * dispatch fired), or "wand:forced" (`dispatch = false`). Specs pin
-    * the routing on both corpus shapes; ScaleBench reports it beside
-    * the pruning-power rows. Never read by the serve itself. */
+    * the routing on both corpus shapes; the `lex_wand_pruning` rows of
+    * SCALEBENCH_r18.jsonl record it (`dispatch_route`) beside the
+    * pruning power. Never read by the serve itself. */
   @volatile private[graft] var lastWandRoute: String = ""
 
   /** TEST-FACING plan capture for the WAND serve (the
@@ -717,8 +719,9 @@ object Lex {
     * The result therefore hash-matches the exact serve BY ARGUMENT —
     * `search_bm25_wand` pins it against `search_bm25_indexed`'s own
     * oracle, which proves the pruning lossless on real data — while the
-    * exact-scored pair count follows θ, not the corpus (ScaleBench
-    * `lex_wand_pruning` measures the ratio). */
+    * exact-scored pair count follows θ, not the corpus (the
+    * `lex_wand_pruning` rows of SCALEBENCH_r17.jsonl record the ratio;
+    * PERF_NOTES, "WAND θ from prefix partial sums"). */
   def queryLexIndexWand(spark: org.apache.spark.sql.SparkSession, path: String,
                         probeDocs: DataFrame, maxDfPct: Int, topK: Int,
                         idCol: String = "doc_id", textCol: String = "text",

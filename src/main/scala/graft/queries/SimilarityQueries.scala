@@ -1996,15 +1996,16 @@ object SimilarityQueries {
   }
 
   /** EXACT BM25 SERVE WITH BOUNDED SCORING WORK — the WAND / MaxScore
-    * rendering (round 16, r15 verdict #4; Broder et al. 2003): same
-    * output as [[searchBm25Indexed]] TO THE HASH (it shares that
-    * query's oracle), but only candidates whose sound score upper
+    * rendering (Broder et al. 2003): same output as
+    * [[searchBm25Indexed]] TO THE HASH (it shares that query's
+    * oracle), but only candidates whose sound score upper
     * bound ([[graft.ext.Lex.bm25UpperBounds]] — the per-token
     * max_tf/min_dl stats persisted at write time) clears the
     * impact-prefix round's top-[[RrfDepth]] threshold are ever
     * exact-scored. The exact serve's scoring work is corpus-linear;
-    * here it follows the threshold — ScaleBench `lex_probe_wand`
-    * measures the exact-scored-pair ratio. */
+    * here it follows the threshold — the `lex_wand_pruning` rows of
+    * SCALEBENCH_r17.jsonl record the exact-scored-pair ratio
+    * (PERF_NOTES, "WAND θ from prefix partial sums"). */
   def searchBm25Wand(spark: SparkSession, dir: String): DataFrame = {
     import graft.ext.Lex
     val path = lexRoot("graft_lex_index", dir)
@@ -2030,9 +2031,10 @@ object SimilarityQueries {
     * absent, so the lifecycle cost stays priced by `search_bm25
     * _upsert` and this query prices the bounded SERVE — over the
     * FIRST [[NProbes]] arrivals only: the fixture vocabulary is flat
-    * (WAND's documented worst case, see the ScaleBench
-    * `lex_wand_pruning` note), so the full 100-probe window would
-    * just re-pay the degenerate shape the exact twin already prices;
+    * (WAND's documented worst case: the flat-shape `lex_wand_pruning`
+    * rows of SCALEBENCH_r16.jsonl; PERF_NOTES, "WAND exact bounded
+    * serve"), so the full 100-probe window would just re-pay the
+    * degenerate shape the exact twin already prices;
     * the folded-bounds semantics this query pins is probe-count
     * independent. */
   def searchBm25WandUpsert(spark: SparkSession, dir: String): DataFrame = {
