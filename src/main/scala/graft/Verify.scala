@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Round-12 gate-cost fixes (r11 verdict #1/#2 — the sequential dump ran
-  * ~30 min and a driver timeout zeroed the whole round's correctness):
+  * Gate-cost rules (a sequential dump runs ~30 min, and a timeout
+  * before the oracle file lands leaves nothing comparable):
   *  - `oracle_sql.json` is written FIRST, before any query executes, so a
   *    mid-dump kill still leaves every completed query comparable;
   *  - queries dump CONCURRENTLY on a small fixed pool (each query is
@@ -32,7 +32,7 @@ object Verify {
     * silently reopen the race. */
   private val tierGroups: Seq[(String, Seq[String])] = Seq(
     "tier_ivf_main" -> Seq("ann_index_build", "knn_ivf_indexed",
-      "ann_index_pq", "stream_ann_query_replay"),
+      "stream_ann_query_replay"),
     "tier_ivf_upsert" -> Seq("ann_index_upsert", "knn_ivf_upserted"),
     "tier_ivf_multi" -> Seq("ann_upsert_multi", "knn_ivf_upserted_multi"),
     // graph + lex SERVING tiers share one group: search_hybrid_indexed
@@ -42,25 +42,24 @@ object Verify {
     "tier_graph_lex_main" -> Seq("ann_index_graph", "ann_graph_search",
       "ann_graph_recall", "ann_graph_beam_sweep", "emb_semdedup_graph",
       "search_bm25_indexed", "search_hybrid_indexed",
-      // round 15: the recall evaluators and the pruned serve all
-      // ensure-build the SAME lex root (search_recall's omission raced
-      // two concurrent lex-tier builds into doubled part files —
-      // caught by the 2× scores it produced)
+      // the recall evaluators and the pruned serve all ensure-build
+      // the SAME lex root (two concurrent lex-tier builds race into
+      // doubled part files, which show as 2× scores)
       "search_recall", "search_bm25_pruned", "search_pruned_recall",
       "search_hybrid_pruned",
-      // round 16: the WAND exact-bounded serve and the pruned-hybrid
-      // recall evaluator ensure-build the same lex (and graph) roots
-      // (every ensure-builder of a shared root lists here in the SAME
-      // commit that adds it — the r15 race lesson)
+      // the WAND exact-bounded serve and the pruned-hybrid recall
+      // evaluator ensure-build the same lex (and graph) roots (every
+      // ensure-builder of a shared root lists here in the SAME commit
+      // that adds it)
       "search_bm25_wand", "search_hybrid_pruned_recall",
-      // round 16: the cluster-head-entry serve and its recall evaluator
+      // the cluster-head-entry serve and its recall evaluator
       // read the same shared graph root
       "ann_graph_clustered", "ann_graph_clustered_recall",
       "ann_graph_filtered"),
     // both ensure-build the SAME [0, UpsertSplit) base graph root
-    // (round 14 amortization) — concurrent first builds would race
+    // (build amortization) — concurrent first builds would race
     "tier_graph_base" -> Seq("ann_graph_upsert", "stream_graph_upsert_replay"),
-    // round 16: the WAND upsert twin reads the SAME graft_lex_upsert
+    // the WAND upsert twin reads the SAME graft_lex_upsert
     // root that search_bm25_upsert REBUILDS unconditionally every run
     // — concurrent dump = reading a tier mid-rewrite
     "tier_lex_upsert" -> Seq("search_bm25_upsert", "search_bm25_wand_upsert"),
@@ -105,7 +104,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // oracle dump FIRST (r11 verdict #2): a driver timeout mid-dump must
+    // oracle dump FIRST: a driver timeout mid-dump must
     // degrade to a partial compare, never to `{}`
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -124,9 +123,9 @@ object Verify {
           .parquet(s"$outDir/$name")
         System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
       } catch { case e: Throwable =>
-        // r8 verdict #3: a stderr-only failure made 33 broken queries
-        // VANISH from the driver's correctness report instead of showing
-        // as errors. Leave an error artifact in the query's slot so the
+        // a stderr-only failure would make a broken query VANISH from
+        // the driver's correctness report instead of showing as an
+        // error. Leave an error artifact in the query's slot so the
         // compare records a failed row rather than omitting it.
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         val d = Paths.get(s"$outDir/$name")

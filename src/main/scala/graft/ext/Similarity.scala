@@ -51,7 +51,7 @@ object Similarity {
       lit(0L), (acc, x) => acc + x.cast("long"))
 
   /** Cosine similarity, null-safe for zero vectors — the native FUSED
-    * expression ([[graft.functions.CosineSim]], round 16): one walk of
+    * expression ([[graft.functions.CosineSim]]): one walk of
     * both arrays carrying the three running sums instead of the three
     * [[DotProduct]] loops (six array traversals) the
     * `dot/norm·norm/CASE` composition paid per scored pair.
@@ -144,7 +144,7 @@ object Similarity {
       .select(col("probe_id"), col("n.id").as("neighbor_id"), col("n.score").as("cos_sim"))
   }
 
-  /** MULTI-PROBE SRP-LSH (round 10): each probe also queries every
+  /** MULTI-PROBE SRP-LSH: each probe also queries every
     * bucket at Hamming distance 1 from its own — the standard
     * recall/cost lever for sign-random-projection search (Lv et al.,
     * VLDB'07 shape): a true neighbor lost to a near-miss on ONE
@@ -224,282 +224,6 @@ object Similarity {
       .select(col(listCol), transform(col("__pc"), x => x.getField("__c")).as("__centroid"))
   }
 
-  /** IVF × int8 COMPOSITION — the two pruning axes of the ANN family in
-    * one search, the shape the COVERAGE claim "at 100 TB the two
-    * compose (IVF selects lists, int8 scans them)" promises: the
-    * centroid route first prunes the corpus to |corpus|·nprobe/nlists
-    * (partitioning axis), the int8 integer dot then scans only the
-    * survivors at 4× less memory traffic (precision axis), and the
-    * exact double cosine re-ranks just k·candMult candidates per probe.
-    * Both rank stages run on the [[BoundedTopK]] heap (≤ k·candMult
-    * rows per probe cross any shuffle) with ties resolved toward
-    * smaller ids in every stage, so the whole two-axis pipeline stays
-    * deterministic and oracle-checkable (integer coarse scores are
-    * exact in any engine). At scale the quantized corpus tier is
-    * persisted once beside the index; here it is derived in-query
-    * behind the same rebalance barriers as the standalone quantized
-    * scan. */
-  def knnIvfQuantized(corpus: DataFrame, probes: DataFrame, k: Int,
-                      nprobe: Int = 2, candMult: Int = 3,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      listCol: String = "label"): DataFrame = {
-    val cent = coarseCentroids(corpus, listCol, vecCol)
-    val pv = probes.select(col(idCol).as("probe_id"),
-      transform(col(vecCol), x => x.cast("double")).as("__pv"))
-    val probed = pv
-      .crossJoin(broadcast(cent))
-      .groupBy("probe_id")
-      .agg(first(col("__pv")).as("__pv"),
-        BoundedTopK.topk(
-          cosine(col("__pv"), col("__centroid")), col(listCol), nprobe).as("__top"))
-      .select(col("probe_id"), col("__pv"), explode(col("__top")).as("__t"))
-      .select(col("probe_id"),
-        int8Quantize(col("__pv"), int8Scale(col("__pv"))).as("__pq"),
-        col("__t.id").as(listCol))
-    val base = corpus.select(col(idCol), col(listCol),
-      transform(col(vecCol), x => x.cast("double")).as("__v"))
-    val withScale = Dedup.rebalance(base, idCol)
-      .select(col(idCol), col(listCol), col("__v"), int8Scale(col("__v")).as("__sc"))
-    val qt = Dedup.rebalance(withScale, idCol)
-      .select(col(idCol), col(listCol), col("__v"),
-        int8Quantize(col("__v"), col("__sc")).as("__qv"))
-    val coarse = qt.join(probed, listCol)
-      .filter(col(idCol) =!= col("probe_id"))
-      .select(col("probe_id"), col(idCol).as("neighbor_id"),
-        dotInt8(col("__qv"), col("__pq")).as("__cs"))
-      .groupBy("probe_id")
-      .agg(BoundedTopK.topk(
-        col("__cs").cast("double"), col("neighbor_id"), k * candMult).as("__nn"))
-      .select(col("probe_id"), explode(col("__nn")).as("__n"))
-      .select(col("probe_id"), col("__n.id").as("neighbor_id"))
-    coarse
-      .join(qt.select(col(idCol).as("neighbor_id"), col("__v")), "neighbor_id")
-      .join(pv, "probe_id")
-      .select(col("probe_id"), col("neighbor_id"),
-        cosine(col("__v"), col("__pv")).as("cos_sim"))
-      .groupBy("probe_id")
-      .agg(BoundedTopK.topk(col("cos_sim"), col("neighbor_id"), k).as("__nn"))
-      .select(col("probe_id"), explode(col("__nn")).as("__n"))
-      .select(col("probe_id"), col("__n.id").as("neighbor_id"),
-        col("__n.score").as("cos_sim"))
-  }
-
-  /** PRODUCT QUANTIZATION training (the codebook half of IVF-PQ —
-    * Jégou et al. 2011, "Product Quantization for Nearest Neighbor
-    * Search"): the vector is cut into `mSub` contiguous `subDim`-wide
-    * subvectors and each subspace learns its own `ks`-centroid codebook,
-    * so a D-dim float vector compresses to `mSub` small codes
-    * (mSub·log2 ks bits — at mSub=16/ks=256 that is 16 bytes per vector,
-    * the 24× memory cut that holds a 100 TB float corpus's index in
-    * cluster RAM where int8's fixed 4× cannot).
-    *
-    * Training is the [[kmeans]] machinery per subspace, kept bit-
-    * deterministic so the whole trajectory is oracle-checkable:
-    *  - seeds = subvectors of the `ks` smallest ids (sorted limit — the
-    *    same sparse-id-space-safe init as [[kmeans]]);
-    *  - assignment = argmin squared-L2, with every per-element term cast
-    *    to DECIMAL(28,12) before the fold — the sum is EXACT, so
-    *    aggregation order cannot perturb a bit in either engine — and
-    *    ranked on the decimal's double cast with ties toward the smaller
-    *    code (both engines compare identical doubles);
-    *  - update = exact-decimal per-dimension means (the
-    *    [[coarseCentroids]] rule);
-    *  - one Lloyd round (assign → update → assign), matching the
-    *    [[kmeans]] `iters = 2` trajectory shape.
-    *
-    * All stages run against the BROADCAST codebook (mSub·ks rows); the
-    * corpus-side subvector table is a narrow map of the scan — training
-    * shuffles only (m, code, dim, decimal) partial sums. Returns
-    * (codebooks (__m, __code, __cent), codes (idCol, __m, __code)). */
-  def pqTrain(corpus: DataFrame, mSub: Int = 4, subDim: Int = 16, ks: Int = 8,
-              idCol: String = "vec_id", vecCol: String = "embedding")
-      : (DataFrame, DataFrame) = {
-    // referenced THREE times below (seed assign, codebook update, final
-    // assign) — lazy-checkpoint so the corpus scan + residual zip +
-    // subvector slice compute once per train instead of once per
-    // reference (round 18; corpus×mSub fixed-width rows, the same
-    // bounded-frame class as the CC loop checkpoints)
-    val sub = pqSubvectors(
-      Dedup.rebalance(corpus.select(col(idCol), col(vecCol)), idCol),
-      mSub, subDim, idCol, vecCol)
-      .localCheckpoint(false)
-    val seeds = pqSubvectors(
-      corpus.orderBy(col(idCol)).limit(ks).select(col(idCol), col(vecCol)),
-      mSub, subDim, idCol, vecCol)
-    val init = seeds
-      .withColumn("__code",
-        (row_number().over(Window.partitionBy("__m").orderBy(idCol)) - 1)
-          .cast("long"))
-      .select(col("__m"), col("__code"), col("__s").as("__cent"))
-    val a1 = pqAssign(sub, init, idCol)
-    val cb = pqUpdate(sub, a1, idCol)
-    val codes = pqAssign(sub, cb, idCol)
-    (cb, codes)
-  }
-
-  /** (id, __m, __s): the `mSub` contiguous `subDim`-wide double
-    * subvectors of each vector — a narrow map, no shuffle. */
-  private def pqSubvectors(df: DataFrame, mSub: Int, subDim: Int,
-                           idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol), explode(sequence(lit(0), lit(mSub - 1))).as("__m"),
-        col(vecCol))
-      .select(col(idCol), col("__m"),
-        transform(slice(col(vecCol), col("__m") * subDim + 1, lit(subDim)),
-          x => x.cast("double")).as("__s"))
-
-  /** Exact-decimal squared-L2 between a subvector and a codebook
-    * centroid: each term is a deterministic IEEE double, cast to
-    * DECIMAL(28,12) before the fold so the SUM is order-independent
-    * and bit-identical across engines. */
-  private def pqDist2(s: Column, cent: Column): Column = {
-    import org.apache.spark.sql.types.DecimalType
-    aggregate(
-      zip_with(s, cent, (a, b) => ((a - b) * (a - b)).cast(DecimalType(28, 12))),
-      lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 12)),
-      (acc, x) => (acc + x).cast(DecimalType(38, 12)))
-  }
-
-  /** Nearest-code assignment per (vector, subspace): broadcast codebook,
-    * [[BoundedTopK]] argmin (score = −distance; ties → smaller code). */
-  private def pqAssign(sub: DataFrame, cb: DataFrame, idCol: String): DataFrame =
-    sub.join(broadcast(cb), "__m")
-      .groupBy(col(idCol), col("__m"))
-      .agg(BoundedTopK.topk(
-        -pqDist2(col("__s"), col("__cent")).cast("double"), col("__code"), 1)
-        .as("__t"))
-      .select(col(idCol), col("__m"),
-        col("__t").getItem(0).getField("id").as("__code"))
-
-  /** Codebook update: exact-decimal per-dimension mean per (subspace,
-    * code) — deterministic regardless of aggregation order. */
-  private def pqUpdate(sub: DataFrame, assigned: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    sub.join(assigned, Seq(idCol, "__m"))
-      .select(col("__m"), col("__code"), posexplode(col("__s")).as(Seq("__p", "__v")))
-      .groupBy(col("__m"), col("__code"), col("__p"))
-      .agg((sum(col("__v").cast(DecimalType(28, 9))).cast("double")
-        / count(lit(1))).as("__c"))
-      .groupBy(col("__m"), col("__code"))
-      .agg(array_sort(collect_list(struct(col("__p"), col("__c")))).as("__pc"))
-      .select(col("__m"), col("__code"),
-        transform(col("__pc"), x => x.getField("__c")).as("__cent"))
-  }
-
-  /** IVF-PQ search — the third real-ANN-index axis after IVF list
-    * pruning (partitioning) and int8 (scalar quantization): coarse
-    * centroid routing prunes the corpus to the `nprobe` nearest inverted
-    * lists, then the surviving candidates are scored WITHOUT touching
-    * their vectors via Asymmetric Distance Computation over RESIDUAL
-    * codes (IVFADC — round 13): PQ quantizes x − μ_list(x), each probe
-    * precomputes a (mSub × ks) LUT of raw-probe-subvector ·
-    * residual-codebook-centroid inner products, and a candidate's
-    * approximate score is ⟨p, μ_list⟩ (exact, per probed list) plus the
-    * sum of the `mSub` LUT entries its codes select. When lists are
-    * clusters (the real IVF assignment) residuals carry the
-    * within-list detail raw codes would spend re-encoding the shared
-    * cluster mean — the SimilaritySpec planted-cluster test pins the
-    * contrast (raw codes collapse cluster members onto identical
-    * tuples; residual codes separate them and a thin re-rank margin
-    * recovers the exact in-list answer). On the sf fixtures the list
-    * assignment is a RANDOM partition of centered noise (per-list
-    * centroids ≈ 0, measured |μ| ≤ 0.02 vs data range ±0.37), so
-    * residual ≡ raw there and recall sits at the nprobe ceiling either
-    * way (sf0.01, nprobe=2: exact-in-probed-lists caps recall@10 at
-    * 0.30; ADC delivers 0.28 = 93% of the ceiling). At 100 TB the ADC
-    * scan reads mSub code bytes per vector instead of 4·D vector bytes
-    * (~64× less memory traffic at D=64/mSub=4), and the LUT join is a
-    * BROADCAST of |probes|·mSub·ks tiny rows. Exact double cosine then
-    * re-ranks only k·candMult candidates per probe.
-    *
-    * Every stage deterministic and hash-checkable: codebooks/codes from
-    * [[pqTrain]]'s exact-decimal trajectory, LUT entries exact decimal
-    * sums, ADC totals exact decimal sums ranked on their double casts
-    * with id tie-breaks, both rank stages on the [[BoundedTopK]] heap
-    * (≤ k·candMult rows per probe cross any shuffle). */
-  def knnIvfPq(corpus: DataFrame, probes: DataFrame, k: Int, nprobe: Int = 2,
-               mSub: Int = 4, subDim: Int = 16, ks: Int = 8, candMult: Int = 3,
-               idCol: String = "vec_id", vecCol: String = "embedding",
-               listCol: String = "label"): DataFrame = {
-    // the exact-decimal centroid aggregation feeds FOUR consumers
-    // (probe routing, residual centering, the ⟨p, μ_list⟩ term, and —
-    // through the residuals — the whole PQ train): lazy-checkpoint the
-    // nlists-row result so the full-corpus mean aggregation runs once
-    // (round 18; exchange reuse under AQE is runtime-lucky, this makes
-    // it structural)
-    val cent = coarseCentroids(corpus, listCol, vecCol).localCheckpoint(false)
-    val pv = probes.select(col(idCol).as("probe_id"),
-      transform(col(vecCol), x => x.cast("double")).as("__pv"))
-    val probed = pv
-      .crossJoin(broadcast(cent))
-      .groupBy("probe_id")
-      .agg(BoundedTopK.topk(
-        cosine(col("__pv"), col("__centroid")), col(listCol), nprobe).as("__top"))
-      .select(col("probe_id"), explode(col("__top")).as("__t"))
-      .select(col("probe_id"), col("__t.id").as(listCol))
-    // RESIDUAL quantization (IVFADC, Jégou et al. 2011 §IV-A, round 13):
-    // PQ learns x − μ_list(x), not x — residuals are centered and far
-    // lower-variance than raw vectors, so the same (mSub, ks) budget
-    // spends its codes on the fine structure the coarse quantizer
-    // can't express (measured recall@10 at sf0.01, nprobe=2, candMult=3:
-    // 0.28 raw → see query scaladoc for the residual figure). The ADC
-    // score decomposes asymmetrically: ⟨p, x⟩ ≈ ⟨p, μ_l⟩ + Σ_m LUT[m,
-    // code_m], with the ⟨p, μ_l⟩ term exact per (probe, probed list).
-    val rcorp = corpus
-      .join(broadcast(cent), listCol)
-      .select(col(idCol),
-        zip_with(col(vecCol), col("__centroid"),
-          (a, b) => a.cast("double") - b).as("__r"))
-    val (cb, codes) = pqTrain(rcorp, mSub, subDim, ks, idCol, "__r")
-    val psub = pqSubvectors(
-      probes.select(col(idCol).as("probe_id"), col(vecCol)),
-      mSub, subDim, "probe_id", vecCol)
-    import org.apache.spark.sql.types.DecimalType
-    val lut = psub.join(broadcast(cb), "__m")
-      .select(col("probe_id"), col("__m"), col("__code"),
-        aggregate(
-          zip_with(col("__s"), col("__cent"),
-            (a, b) => (a * b).cast(DecimalType(28, 12))),
-          lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 12)),
-          (acc, x) => (acc + x).cast(DecimalType(38, 12))).as("__w"))
-    // the exact ⟨probe, list-centroid⟩ term — |probes|·nprobe rows,
-    // same decimal discipline as the LUT so both engines add identical
-    // decimals
-    val ip0 = probed
-      .join(broadcast(cent), listCol)
-      .join(pv, "probe_id")
-      .select(col("probe_id"), col(listCol),
-        aggregate(
-          zip_with(col("__pv"), col("__centroid"),
-            (a, b) => (a * b).cast(DecimalType(28, 12))),
-          lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 12)),
-          (acc, x) => (acc + x).cast(DecimalType(38, 12))).as("__w0"))
-    val cand = codes
-      .join(corpus.select(col(idCol), col(listCol)), idCol)
-      .join(ip0, listCol)
-      .filter(col(idCol) =!= col("probe_id"))
-      .join(broadcast(lut), Seq("probe_id", "__m", "__code"))
-      .groupBy(col("probe_id"), col(idCol))
-      // __w0 is constant within the group (a candidate lives in exactly
-      // one list), so max() just carries it across the fold
-      .agg((sum(col("__w")) + max(col("__w0"))).as("__adc"))
-      .groupBy(col("probe_id"))
-      .agg(BoundedTopK.topk(
-        col("__adc").cast("double"), col(idCol), k * candMult).as("__nn"))
-      .select(col("probe_id"), explode(col("__nn")).as("__n"))
-      .select(col("probe_id"), col("__n.id").as("neighbor_id"))
-    val base = corpus.select(col(idCol).as("neighbor_id"),
-      transform(col(vecCol), x => x.cast("double")).as("__v"))
-    cand.join(base, "neighbor_id")
-      .join(pv, "probe_id")
-      .select(col("probe_id"), col("neighbor_id"),
-        cosine(col("__v"), col("__pv")).as("cos_sim"))
-      .groupBy("probe_id")
-      .agg(BoundedTopK.topk(col("cos_sim"), col("neighbor_id"), k).as("__nn"))
-      .select(col("probe_id"), explode(col("__nn")).as("__n"))
-      .select(col("probe_id"), col("__n.id").as("neighbor_id"),
-        col("__n.score").as("cos_sim"))
-  }
-
   /** Completion marker of the IVF index, written strictly AFTER both
     * index artifacts: readiness checks gate on this (not on
     * `centroids/_SUCCESS`, which exists as soon as the FIRST write lands
@@ -514,7 +238,7 @@ object Similarity {
     new Tier(spark, indexPath, IndexCompleteMarker, Some(Tier.Gens(
       "lists_delta", DeltaCompleteMarker, "lists", "")))
 
-  /** Persist the IVF index (round-5 verdict #8 — the index BUILD story):
+  /** Persist the IVF index (the index BUILD story):
     * the centroid table as plain parquet and the corpus
     * HIVE-PARTITIONED BY the inverted-list id. Build cost is paid once
     * per corpus lifetime; [[knnIvfIndexed]] probes then (a) skip the
@@ -564,8 +288,8 @@ object Similarity {
     *    [[BoundedTopK]] (ties → smaller id) — no sampling, fixed
     *    `rounds`, so both engines walk the identical trajectory.
     *
-    * Round 15 applies the paper's own INCREMENTAL-SEARCH optimization
-    * (its §2.3 "new/old" split, made exact): from round 2 on, only
+    * The paper's own INCREMENTAL-SEARCH optimization applies (its §2.3
+    * "new/old" split, made exact): from the second round on, only
     * two-hop pairs with at least one CHANGED hop are generated — a
     * pair whose both hops survived from the previous round was already
     * a candidate then, and either made the graph (so it rides along in
@@ -578,12 +302,11 @@ object Similarity {
     * two vector joins + cosine, and the final projection emits the
     * carried scores instead of re-scoring the whole edge list. A round
     * that produces ZERO changed edges is a fixed point (every later
-    * candidate set is all-old), so remaining rounds are skipped — the
-    * early-termination ask of r14 verdict #5, restricted to the
-    * provably-identical case.
+    * candidate set is all-old), so remaining rounds are skipped — early
+    * termination restricted to the provably-identical case.
     *
-    * Round 16 adds the paper's δ-TERMINATION (its Algorithm 2 stop
-    * rule, r15 verdict #2) as `deltaPct`: before running round r, if
+    * The paper's δ-TERMINATION (its Algorithm 2 stop rule) is
+    * `deltaPct`: before running a round, if
     * the candidate graph's NEW-edge count is under δ·n·k the round is
     * skipped and the previous round's graph is final. The comparison
     * is EXACT INTEGER arithmetic (`newCount·100 < deltaPct·n·k`) and
@@ -595,7 +318,7 @@ object Similarity {
     * Honest fixture note: at GraphRounds = 2 on the sf fixtures the
     * rule cannot fire at any published δ (the paper uses 0.001) —
     * measured at sf0.1, 13 806 of n·k = 28 000 candidate edges (49%)
-    * are still NEW entering a would-be round 3, i.e. the fixture graph
+    * are still NEW entering a would-be third round, i.e. the fixture graph
     * is far from converged when the fixed round budget ends. δ is the
     * DEPLOYMENT lever for rounds ≳ 4 at real corpus sizes, where
     * NN-Descent's update rate collapses geometrically; the
@@ -629,7 +352,7 @@ object Similarity {
                nPlanes: Int = 4, maxBucketSize: Int = 1000, dim: Int = 64,
                idCol: String = "vec_id", vecCol: String = "embedding",
                deltaPct: Int = 0): (DataFrame, Long, Boolean) = {
-    // the incremental form fuses round 1 with init scoring, so a
+    // the incremental form fuses the first round with init scoring, so a
     // 0-round build (score the raw init graph) no longer exists — be
     // loud rather than silently running one refinement round
     require(rounds >= 1, s"knnGraph: rounds must be >= 1, got $rounds")
@@ -643,8 +366,8 @@ object Similarity {
     // seeds them and the NN-Descent rounds recover their neighborhoods
     // through two-hop propagation (that recovery is the algorithm's
     // whole premise).
-    // bucket sizes via groupBy + BROADCAST join, not a count() window
-    // (round 17): the window shuffles every corpus row into per-bucket
+    // bucket sizes via groupBy + BROADCAST join, not a count() window:
+    // the window shuffles every corpus row into per-bucket
     // partitions — with 2^nPlanes buckets that is ≤ 16 tasks holding
     // the WHOLE corpus at deployment scale, a parallelism collapse the
     // cap itself exists to avoid. The per-bucket counts are ≤ 2^nPlanes
@@ -674,7 +397,7 @@ object Similarity {
     // top-k per src ALONGSIDE already-scored rows — the one scoring
     // stage every round funnels through
     def topkScored(freshPairs: DataFrame, scored: Option[DataFrame]): DataFrame = {
-      // dst-vector join FIRST, src-vector join LAST (round 18): the
+      // dst-vector join FIRST, src-vector join LAST: the
       // second join leaves the frame hash-partitioned on src, which is
       // exactly what the groupBy below requires — EnsureRequirements
       // then skips the aggregation exchange (src-first ordering paid a
@@ -689,9 +412,9 @@ object Similarity {
         .select(col("src"), explode(col("__nn")).as("__e"))
         .select(col("src"), col("__e.id").as("dst"), col("__e.score").as("__s"))
     }
-    // round 1 exactly as before — everything is "new" vs the unscored
-    // init graph, so every candidate pays the scoring join once.
-    // NO distinct on g0 (round 17): bucketInit and ring are each
+    // the first round: everything is "new" vs the unscored init graph,
+    // so every candidate pays the scoring join once.
+    // NO distinct on g0: bucketInit and ring are each
     // duplicate-free by construction (exploded top-k per src; two
     // arithmetic successors), so the only duplicates are bucket∩ring
     // overlaps — which u1's own distinct removes identically one
@@ -702,7 +425,7 @@ object Similarity {
       // lineage truncation per round: u is referenced twice below and g
       // references the prior round — the CC discipline (analysis cost
       // grows multiplicatively otherwise); edge lists are n·2k rows.
-      // LAZY (round 17): materialization folds into the first consuming
+      // LAZY: materialization folds into the first consuming
       // job instead of paying a dedicated synchronization job per round
       .localCheckpoint(false)
     val twoHop1 = u1.select(col("src"), col("dst").as("__mid"))
@@ -745,8 +468,7 @@ object Similarity {
         .join(prevU.select(col("src"), col("dst"), lit(true).as("__old")),
           Seq("src", "dst"), "left")
         .withColumn("__new", col("__old").isNull).drop("__old")
-        // LAZY (round 18, completing the round-17 u1 change): the
-        // materialization folds into the δ probe / count that
+        // LAZY, like u1: the materialization folds into the δ probe / count that
         // immediately consumes u, instead of paying a dedicated
         // synchronization job per round
         .localCheckpoint(false)
@@ -854,7 +576,7 @@ object Similarity {
     * |probes|·beam·2k candidate vectors by id, and nothing grows with
     * corpus size except the pre-built graph itself.
     *
-    * Entry set = HIERARCHICAL (round-11 verdict #3): a coarse sampled
+    * Entry set = HIERARCHICAL: a coarse sampled
     * top layer — every `entryStride`-th id — is scored against the
     * probe first, and its per-probe top-`beam` nodes seed the base
     * walk. The previous design (one global min-id node per SRP bucket)
@@ -888,23 +610,22 @@ object Similarity {
     * Shared with the oracle SQL so both engines sample identically. */
   val GraphEntryStride: Int = 4
 
-  /** Entry-layer non-emptiness verdicts — keyed (corpus plan, stride)
+  /** Entry-layer non-emptiness checks — keyed (corpus plan, stride)
     * for stride layers and (layer plan, corpus plan) for custom entry
     * layers, since the effective entry set depends on both — see the
     * guard in [[graphSearchOn]]. The key is the plan
     * itself (structural equality), NOT its 32-bit hashCode: a hash
     * collision on an Int key would silently skip the very fail-fast
-    * this exists to enforce (review finding, round 14). Path-keying
-    * was considered and rejected (round-15 ADVICE follow-up): two
+    * this exists to enforce. Path-keying does not work either: two
     * plans over the SAME files with different filters have different
     * entry layers, so a file-identity key would wrongly share
-    * verdicts. Instead the memo is a SIZE-BOUNDED LRU (64 plans): a
+    * results. Instead the memo is a SIZE-BOUNDED LRU (64 plans): a
     * long-lived JVM searching many distinct corpora no longer pins
     * every canonicalized plan — and, for LocalRelation-backed corpora,
     * their row data — forever; eviction merely costs one re-probe.
     * Residual caveat, documented not defended: rewriting the files
     * behind a still-cached path within one JVM reuses the stale
-    * verdict — the guard is per-plan, not per-data. */
+    * result — the guard is per-plan, not per-data. */
   private val checkedEntryLayers = java.util.Collections.synchronizedMap(
     new java.util.LinkedHashMap[
         (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Any),
@@ -919,7 +640,7 @@ object Similarity {
     * of the stride-sampled coarse layer. The stride layer is n/stride
     * rows, so every walk's ENTRY stage scores a corpus-LINEAR candidate
     * set per probe (the graph family's analogue of the exact lexical
-    * serve's full-postings scan, round-15 verdict #1). This layer is
+    * serve's full-postings scan). This layer is
     * the top [[topPerList]] members of each inverted list by cosine to
     * the list's [[coarseCentroids]] centroid — nlists·topPerList rows
     * BY CONSTRUCTION, independent of corpus size (with k-means lists,
@@ -985,7 +706,7 @@ object Similarity {
     // beam < k it fills the k result slots from candidates the narrow
     // frontier already paid to score instead of truncating at `beam`
     val kk = math.max(k, beam)
-    // Each ranked stage explodes (pos, node, SCORE) — round 17: the
+    // Each ranked stage explodes (pos, node, SCORE): the
     // best-seen set carries the hop-time scores, and every aggregation
     // is the id-DEDUPLICATING heap ([[BoundedTopK.topkDedup]] — sound
     // here because the score is a pure function of (probe, node):
@@ -1018,13 +739,13 @@ object Similarity {
     // neighbors" as truth. The probe is one limit-1 job, but it is an
     // invariant of the (corpus, stride) pair, not of the call — repeat
     // searches over the same corpus (upsertGraphIndex runs one per
-    // micro-batch) memoize the verdict instead of re-proving it with a
+    // micro-batch) memoize the result instead of re-proving it with a
     // fresh Spark job each time (canonicalized-plan keying: two reads
     // of the same files share one probe).
     // custom entry layers key on (layer plan, corpus plan) — the
     // EFFECTIVE entry set below depends on both, so a tier rewrite or
     // corpus swap under the same layer re-probes instead of reusing a
-    // stale verdict (r16 ADVICE #2); stride layers derive from the
+    // stale result; stride layers derive from the
     // corpus, so (corpus plan, stride) still identifies them
     val layerKey: (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Any) =
       entryLayer match {
@@ -1032,7 +753,7 @@ object Similarity {
           corpus.queryExecution.logical.canonicalized)
         case None => (corpus.queryExecution.logical.canonicalized, entryStride)
       }
-    // the EFFECTIVE entry set, not the raw layer frame (r16 ADVICE #2):
+    // the EFFECTIVE entry set, not the raw layer frame:
     // topOf inner-joins the layer to the corpus vectors, so a persisted
     // layer whose node ids are absent from the current corpus (stale
     // generation, re-keyed ids) is non-empty yet enters NOWHERE — the
@@ -1045,7 +766,7 @@ object Similarity {
     }
     // get(), not containsKey(): only get() counts as an ACCESS in an
     // access-order LinkedHashMap — containsKey would leave eviction
-    // pure-FIFO and evict the most-re-checked plan first (r15 review)
+    // pure-FIFO and evict the most-re-checked plan first
     if (checkedEntryLayers.get(layerKey) == null) {
       require(!effectiveEntry.isEmpty,
         if (entryLayer.isDefined)
@@ -1068,10 +789,10 @@ object Similarity {
     // co-located equi-join.
     val gSym = g.unionByName(
       g.select(col("__dst").as("__src"), col("__src").as("__dst")))
-    // NO distinct() on the expanded candidate multiset (round 17 —
-    // re-measured for the WALK, distinct from the knnGraph round body's
-    // measured keep): walk candidates repeat with multiplicity bounded
-    // by the frontier's common-neighbor overlap (≤ 2k̄, typically ~2),
+    // NO distinct() on the expanded candidate multiset (measured for
+    // the WALK, unlike the knnGraph round body, which keeps it): walk
+    // candidates repeat with multiplicity bounded by the frontier's
+    // common-neighbor overlap (≤ 2k̄, typically ~2),
     // each duplicate pays one fused single-pass cosine MAP-SIDE, and
     // the dedup happens inside the partial aggregation's per-probe
     // heap ([[BoundedTopK.topkDedup]]) — so the distinct's whole
@@ -1083,8 +804,7 @@ object Similarity {
       frontier.unionByName(
           frontier.join(gSym, frontier("node") === gSym("__src"))
             .select(col("probe_id"), col("__dst").as("node")))
-    // ENTRY SEED WIDTH = max(k, beam), not beam (round 14, the actual
-    // fix behind r13 verdict #3's low-beam recall ask): a walk seeded
+    // ENTRY SEED WIDTH = max(k, beam), not beam: a walk seeded
     // with only `beam` < k entry nodes structurally caps recall@k — the
     // k result slots are filled from a trajectory that never had k
     // independent starting regions (measured at sf0.01: beam-4
@@ -1110,10 +830,9 @@ object Similarity {
     // checkpoint is |probes|·kk rows — arrival-batch-sized state, the
     // same footprint the frontier already is.
     // every materialized stage is remembered so the FINAL checkpoint
-    // can free them (round 18 — r17 ADVICE #3: the serve used to return
-    // a frame rooted at every stage's pinned blocks, which accumulated
-    // across streaming/replay micro-batches until GC + ContextCleaner
-    // caught up)
+    // can free them (a frame rooted at every stage's pinned blocks
+    // accumulates across streaming/replay micro-batches until GC +
+    // ContextCleaner catch up)
     val stages = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def materialize(df: DataFrame): DataFrame = {
       if (captureWalkPlans)
@@ -1150,7 +869,7 @@ object Similarity {
       case None => best
     }
     // the RESULT is materialized too, and every intermediate stage is
-    // then unpersisted (round 18 — r17 ADVICE #3): the returned frame
+    // then unpersisted: the returned frame
     // roots at ONE checkpoint of ≤ |probes|·k fixed-width rows instead
     // of pinning every stage for its lifetime. Callers that drop the
     // result after consuming it can free that last checkpoint with
@@ -1257,7 +976,7 @@ object Similarity {
     * caller), quadratic if abused as a bulk re-index. Bulk re-indexing
     * is [[compactGraphIndex]]'s job (one NN-Descent rebuild), not a
     * giant upsert. At deployment scale pass `entryLayer` — the
-    * PERSISTED once-per-generation cluster-head layer (round 16; built
+    * PERSISTED once-per-generation cluster-head layer (built
     * by [[clusterEntryLayer]] at tier-build time, like the graph
     * itself — recomputing it per arrival would re-pay the full-corpus
     * centroid pass it exists to avoid): entry cost per arrival drops
@@ -1373,185 +1092,6 @@ object Similarity {
     fire
   }
 
-  /** Completion marker for the PQ tier, written strictly AFTER both PQ
-    * artifacts (codebooks + codes) — the [[IndexCompleteMarker]]
-    * discipline applied to the tier: a crash between the two writes
-    * must read as "no PQ tier", never as a codebook serving stale
-    * codes. */
-  /** "_R" = residual codes (round 13): renaming the marker makes every
-    * pre-residual tier read as "no PQ tier", so a cached tier built on
-    * raw-vector codes can never serve against the residual oracle. */
-  val PqCompleteMarker = "_GRAFT_PQ_COMPLETE_R"
-
-  /** The marker's CONTENT is a codec + geometry fingerprint (round 13):
-    * an existence-only gate lets a tier built with a different (mSub,
-    * subDim, ks) — or by a since-changed codec — serve forever, because
-    * the tier root is keyed by the CORPUS identity, not by how the
-    * codes were cut (observed live: a geometry re-cut left an old
-    * 4×16-d tier marker-valid and every persisted-tier answer wrong
-    * while the in-query twin was green). [[pqTierServes]] treats any
-    * content mismatch — including the empty content of pre-fingerprint
-    * markers — as "no PQ tier". The graph tier solves the same problem
-    * positionally (its params are baked into the ROOT path); the PQ
-    * tier lives inside the IVF index root it serves, so the fingerprint
-    * rides in the marker instead. */
-  def pqFingerprint(mSub: Int, subDim: Int, ks: Int): String =
-    s"ivfadc:$mSub:$subDim:$ks"
-
-  /** The PQ tier inside the IVF index root at `indexPath`; its marker
-    * carries [[pqFingerprint]]. */
-  def pqTier(spark: org.apache.spark.sql.SparkSession, indexPath: String): Tier =
-    new Tier(spark, indexPath, PqCompleteMarker)
-
-  /** True iff a complete PQ tier with exactly this codec + geometry is
-    * present at `indexPath`. */
-  def pqTierServes(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                   mSub: Int, subDim: Int, ks: Int): Boolean =
-    pqTier(spark, indexPath).serves(pqFingerprint(mSub, subDim, ks))
-
-  /** Persist the PQ tier BESIDE a built IVF index (the production
-    * composition [[knnIvfPq]] derives in-query): codebooks as plain
-    * parquet (mSub·ks rows) and the per-vector codes HIVE-PARTITIONED
-    * BY the inverted-list id — the ADC scan then inherits exactly the
-    * directory pruning the index's vector lists get, while reading
-    * mSub small ints per vector instead of the vectors. Training cost
-    * is paid once per index lifetime (same [[pqTrain]] deterministic
-    * trajectory, so the tier's content is oracle-checkable
-    * bit-for-bit). Returns the codebooks as re-read from the tier. */
-  def buildPqTier(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                  mSub: Int = 4, subDim: Int = 16, ks: Int = 8,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  listCol: String = "label"): DataFrame = {
-    val ivf = ivfTier(spark, indexPath)
-    ivf.require("buildPqTier")
-    pqTier(spark, indexPath).rewrite(pqFingerprint(mSub, subDim, ks)) {
-      val lists = ivf.read("lists")
-        .select(col(idCol), col(vecCol), col(listCol))
-      // residual PQ (the knnIvfPq discipline): codes quantize
-      // x − μ_list(x) against the index's own persisted centroids
-      val cent = ivf.read("centroids")
-      val rlists = lists
-        .join(broadcast(cent), listCol)
-        .select(col(idCol),
-          zip_with(col(vecCol), col("__centroid"),
-            (a, b) => a.cast("double") - b).as("__r"))
-      val (cb, codes) = pqTrain(rlists, mSub, subDim, ks, idCol, "__r")
-      // codebooks and codes are independent writes to disjoint paths
-      // (both frames hang off pqTrain's checkpointed subvector table),
-      // so they overlap; the marker lands strictly after both
-      graft.core.Par.run(
-        () => cb.write.mode("overwrite").parquet(s"$indexPath/pq_codebooks"),
-        () => codes.join(lists.select(col(idCol), col(listCol)), idCol)
-          .write.mode("overwrite").partitionBy(listCol)
-          .parquet(s"$indexPath/pq_codes"))
-    }
-    pqTier(spark, indexPath).read("pq_codebooks")
-  }
-
-  /** IVF-PQ search against the PERSISTED index + PQ tier — identical
-    * semantics (and oracle) to the in-query [[knnIvfPq]], but query
-    * time pays NO training and NO vector reads until re-rank:
-    *  - routing reads the 2-file centroid parquet (broadcast);
-    *  - the ADC stage scans ONLY the probed lists' code directories
-    *    (the broadcast (probe, list, LUT) frame sits on the build side,
-    *    so dynamic partition pruning skips unselected `pq_codes`
-    *    directories) and touches mSub ints per candidate;
-    *  - the re-rank vector fetch is the same partition-pruned `lists`
-    *    read as [[knnIvfIndexed]], joined to the ≤ k·candMult winners.
-    * At 100 TB this is the serving shape: codes tier in RAM, vector
-    * tier on disk, touched k·candMult rows per probe. */
-  def knnIvfPqIndexed(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                      probes: DataFrame, k: Int, nprobe: Int = 2,
-                      candMult: Int = 3,
-                      idCol: String = "vec_id", vecCol: String = "embedding",
-                      listCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    // the marker's geometry is not checked here: it is read from the
-    // tier's own codebooks below
-    val pq = pqTier(spark, indexPath)
-    require(pq.marked, s"knnIvfPqIndexed: no complete PQ tier at $indexPath")
-    // staleness guard: the codes tier is built from the BASE lists, so
-    // probing it while live delta generations exist would silently miss
-    // every upserted vector (and serve superseded copies of re-upserted
-    // ids). Refusing is the honest contract: compact the deltas into
-    // the base (compactIvfIndex) and rebuild the tier, or probe the
-    // vector tier (knnIvfUpserted) until then.
-    val ivf = ivfTier(spark, indexPath)
-    require(ivf.gens.isEmpty,
-      s"knnIvfPqIndexed: live delta generations at $indexPath — the PQ " +
-        "codes tier predates them; compactIvfIndex + buildPqTier first " +
-        "(or probe knnIvfUpserted)")
-    val cent = ivf.read("centroids")
-    val cb = pq.read("pq_codebooks")
-    val pv = probes.select(col(idCol).as("probe_id"),
-      transform(col(vecCol), x => x.cast("double")).as("__pv"))
-    val probed = pv
-      .crossJoin(broadcast(cent))
-      .groupBy("probe_id")
-      .agg(BoundedTopK.topk(
-        cosine(col("__pv"), col("__centroid")), col(listCol), nprobe).as("__top"))
-      .select(col("probe_id"), explode(col("__top")).as("__t"))
-      .select(col("probe_id"), col("__t.id").as(listCol))
-    // tier geometry (mSub, subDim) comes from the persisted codebooks —
-    // one 2-column lookup over the mSub·ks-row table, so a caller can
-    // never probe with a mismatched split
-    val geom = cb.agg(max(col("__m")), max(size(col("__cent")))).head
-    val psub = pqSubvectors(
-      probes.select(col(idCol).as("probe_id"), col(vecCol)),
-      geom.getInt(0) + 1, geom.getInt(1), "probe_id", vecCol)
-    val lut = psub.join(broadcast(cb), "__m")
-      .select(col("probe_id"), col("__m"), col("__code"),
-        aggregate(
-          zip_with(col("__s"), col("__cent"),
-            (a, b) => (a * b).cast(DecimalType(28, 12))),
-          lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 12)),
-          (acc, x) => (acc + x).cast(DecimalType(38, 12))).as("__w"))
-    // the exact ⟨probe, list-centroid⟩ residual-decomposition term
-    // (see knnIvfPq) — |probes|·nprobe rows, broadcast
-    val ip0 = probed
-      .join(broadcast(cent), listCol)
-      .join(pv, "probe_id")
-      .select(col("probe_id"), col(listCol),
-        aggregate(
-          zip_with(col("__pv"), col("__centroid"),
-            (a, b) => (a * b).cast(DecimalType(28, 12))),
-          lit(java.math.BigDecimal.ZERO).cast(DecimalType(38, 12)),
-          (acc, x) => (acc + x).cast(DecimalType(38, 12))).as("__w0"))
-    // (probe, probed-list, LUT-entry) — |probes|·nprobe·mSub·ks rows,
-    // broadcast: its list column drives directory pruning of the codes
-    // scan, its (m, code) legs resolve each candidate's ADC terms
-    val probedLut = probed.join(lut, "probe_id")
-    val codes = pq.read("pq_codes")
-    val cand = codes
-      .join(broadcast(probedLut), Seq(listCol, "__m", "__code"))
-      .filter(col(idCol) =!= col("probe_id"))
-      .join(broadcast(ip0), Seq("probe_id", listCol))
-      .groupBy(col("probe_id"), col(idCol))
-      .agg((sum(col("__w")) + max(col("__w0"))).as("__adc"))
-      .groupBy(col("probe_id"))
-      .agg(BoundedTopK.topk(
-        col("__adc").cast("double"), col(idCol), k * candMult).as("__nn"))
-      .select(col("probe_id"), explode(col("__nn")).as("__n"))
-      .select(col("probe_id"), col("__n.id").as("neighbor_id"))
-    // re-rank fetch: restrict the vector read to the probed lists first
-    // (broadcast list-id join → partition pruning, the knnIvfIndexed
-    // shape), then resolve the ≤ k·candMult winners by id
-    val fetch = ivf.read("lists")
-      .select(col(idCol).as("neighbor_id"), col(vecCol), col(listCol))
-      .join(broadcast(probed.select(listCol).distinct()), listCol)
-      .select(col("neighbor_id"),
-        transform(col(vecCol), x => x.cast("double")).as("__v"))
-    cand.join(fetch, "neighbor_id")
-      .join(pv, "probe_id")
-      .select(col("probe_id"), col("neighbor_id"),
-        cosine(col("__v"), col("__pv")).as("cos_sim"))
-      .groupBy("probe_id")
-      .agg(BoundedTopK.topk(col("cos_sim"), col("neighbor_id"), k).as("__nn"))
-      .select(col("probe_id"), explode(col("__nn")).as("__n"))
-      .select(col("probe_id"), col("__n.id").as("neighbor_id"),
-        col("__n.score").as("cos_sim"))
-  }
-
   /** IVF search over an UPSERTED index — base lists ∪ live delta
     * generations, original (never retrained) centroids. This is the read
     * side of the LSM maintenance story: a probe sees vectors added by
@@ -1616,17 +1156,17 @@ object Similarity {
     * read), not a half-committed directory that probes serve as valid. */
   val DeltaCompleteMarker = "_GRAFT_DELTA_COMPLETE"
 
-  /** Incremental index maintenance (round-6 verdict #8 — the missing
-    * half of the build-once story): assign a batch of NEW vectors to the
+  /** Incremental index maintenance (the other half of the build-once
+    * story): assign a batch of NEW vectors to the
     * EXISTING centroids and persist them as a new delta GENERATION
     * (`lists_delta/gen=N/`, hive-partitioned by list id like the base
     * lists, completion-marked after the commit). The base segment is
     * never rewritten and the centroids are never retrained — this is the
-    * LSM shape of index maintenance: generations ACCUMULATE (round-7
-    * verdict #1 — a second distinct batch lands beside the first, not
-    * over it), probes read base ∪ all live generations with the same
-    * partition pruning, and [[compactIvfIndex]] folds them back into a
-    * retrained base when drift crosses the re-cluster bar.
+    * LSM shape of index maintenance: generations ACCUMULATE (a second
+    * distinct batch lands beside the first, not over it), probes read
+    * base ∪ all live generations with the same partition pruning, and
+    * [[compactIvfIndex]] folds them back into a retrained base when
+    * drift crosses the re-cluster bar.
     *
     * Semantics per call:
     *  - an EMPTY batch is a no-op: nothing to add, prior generations
@@ -1696,8 +1236,8 @@ object Similarity {
     }
   }
 
-  /** COMPACTION — the LSM fold that answers a tripped `recluster` flag
-    * (round-7 verdict #2): merge base ∪ live delta (delta wins on id,
+  /** COMPACTION — the LSM fold that answers a tripped `recluster` flag:
+    * merge base ∪ live delta (delta wins on id,
     * exactly the frame [[knnIvfUpserted]] serves), rebuild the index
     * over the merged corpus with [[buildIvfIndex]] (per-list centroids
     * RETRAIN — the means now include the delta vectors, each under its
@@ -1728,7 +1268,7 @@ object Similarity {
         tier.read("centroids")
       case Some(d) =>
         // EAGER checkpoint instead of a staging parquet round-trip
-        // (round 18 — the [[compactGraphIndex]] discipline): the merged
+        // (the [[compactGraphIndex]] discipline): the merged
         // frame reads from `lists`, which [[buildIvfIndex]] overwrites,
         // so it must be materialized first — but in memory, not as a
         // full disk write + re-read of the corpus (the old
@@ -1955,7 +1495,7 @@ object Similarity {
     val assigned = kmeans(corpus, k, iters, idCol, vecCol)
     // referenced THREE times (both self-join sides + the final spine):
     // without truncation each reference re-runs the whole iterative
-    // kmeans assignment — lazy-checkpoint (round 18, the annRecall rule)
+    // kmeans assignment — lazy-checkpoint
     val v = corpus.select(col(idCol), col(vecCol), norm(col(vecCol)).as("__n"))
       .join(assigned, idCol)
       .localCheckpoint(false)

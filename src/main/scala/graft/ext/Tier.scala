@@ -45,11 +45,6 @@ final class Tier(spark: SparkSession, val root: String, marker: String,
 
   private def markerPath = new Path(s"$root/$marker")
 
-  /** True iff the marker is present, whatever fingerprint it carries —
-    * for readers that take their parameters from the tier's own
-    * artifacts. */
-  def marked: Boolean = fs.exists(markerPath)
-
   /** True iff the marker is present AND carries exactly `fingerprint`. */
   def serves(fingerprint: String = ""): Boolean = {
     val f = fs

@@ -68,53 +68,6 @@ object SimilarityQueries {
 
   private val NProbeLists = 2
 
-  /** IVF × int8 composed search ([[Similarity.knnIvfQuantized]]): list
-    * pruning then integer-dot coarse scan then exact re-rank — the two
-    * pruning axes the standalone `knn_ivf` / `knn_quantized` queries
-    * exercise separately, in one pipeline. */
-  def knnIvfQuantizedQ(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    finish(Similarity.knnIvfQuantized(e, probes(spark, dir), K,
-      nprobe = NProbeLists, candMult = CandMult))
-  }
-
-  /** IVF-PQ composed search ([[Similarity.knnIvfPq]], round 11): coarse
-    * list routing, then Asymmetric Distance Computation over the
-    * per-subspace PQ codes (vectors untouched until re-rank), then exact
-    * cosine re-rank — the third real-ANN-index axis alongside `knn_ivf`
-    * (partition pruning) and `knn_ivf_quantized` (scalar quantization).
-    * Fully hash-checked: the oracle replays the entire deterministic
-    * trajectory — per-subspace Lloyd codebooks (exact-decimal distance
-    * sums and means), code assignment, ADC LUT sums, both rank stages. */
-  def knnIvfPqQ(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(spark, dir)
-    finish(Similarity.knnIvfPq(e, probes(spark, dir), K,
-      nprobe = NProbeLists, mSub = PqM, subDim = PqSubDim, ks = PqKs,
-      candMult = CandMult))
-  }
-
-  private val PqM = 8
-  private val PqSubDim = 8
-  private val PqKs = 16
-
-  /** IVF-PQ against the PERSISTED index + PQ tier
-    * ([[Similarity.knnIvfPqIndexed]]): builds the tier beside the index
-    * if missing (marker-gated, deterministic content), then probes pay
-    * no training, prune the code directories to the probed lists, and
-    * read vectors only for the re-rank winners. Must serve IDENTICALLY
-    * to [[knnIvfPqQ]] — the shared oracle hash-proves it. */
-  def annIndexPqQ(spark: SparkSession, dir: String): DataFrame = {
-    val path = ensureIvfIndex(spark, dir)
-    // fingerprint-gated (not existence-gated): a tier cut with an older
-    // geometry or codec must rebuild, not serve — see
-    // [[Similarity.pqTierServes]]
-    if (!Similarity.pqTierServes(spark, path, PqM, PqSubDim, PqKs))
-      Similarity.buildPqTier(spark, path,
-        mSub = PqM, subDim = PqSubDim, ks = PqKs)
-    finish(Similarity.knnIvfPqIndexed(spark, path, probes(spark, dir), K,
-      nprobe = NProbeLists, candMult = CandMult))
-  }
-
   /** Distributed kNN-GRAPH construction ([[Similarity.knnGraph]] —
     * deterministic NN-Descent): every vector's top-[[GraphK]] after
     * [[GraphRounds]] neighbor-of-neighbor refinement rounds over a
@@ -137,10 +90,10 @@ object SimilarityQueries {
     * still new when the round budget ends). */
   private val DeltaTermPct = 250
 
-  /** NN-DESCENT δ-TERMINATION (round 16 — r15 verdict #2, the paper's
-    * Algorithm 2 stop rule): build with `deltaPct` = [[DeltaTermPct]],
-    * which provably halts before round 2's refinement — the result
-    * must be EXACTLY the round-1 graph, and the reported
+  /** NN-DESCENT δ-TERMINATION (the paper's Algorithm 2 stop rule):
+    * build with `deltaPct` = [[DeltaTermPct]], which provably halts
+    * before the second round's refinement — the result must be EXACTLY
+    * the first-round graph, and the reported
     * `n_new_edges` (what the integer δ comparison ran on) must equal
     * the oracle's own |sym(g1) \ sym(g0)| set difference. Both the
     * branch taken AND the counting are therefore hash-gated; the
@@ -214,8 +167,8 @@ object SimilarityQueries {
     * one: the stride layer is n/[[Similarity.GraphEntryStride]] rows,
     * so the walk's entry stage scores a corpus-linear candidate set
     * per probe — the graph family's last corpus-linear serving arm
-    * (the analogue of the exact lexical serve's full-postings scan,
-    * round-15 verdict #1). The cluster-head layer is
+    * (the analogue of the exact lexical serve's full-postings scan).
+    * The cluster-head layer is
     * nlists·[[ClusterHeads]] rows by construction, so at 100 TB the
     * entry stage scores O(nlists) candidates (O(√n) with k-means
     * lists) while hops stay beam-bounded. Recall cost of the coarser
@@ -228,7 +181,7 @@ object SimilarityQueries {
   }
 
   /** The cluster-head entry layer as a ONCE-PER-GENERATION persisted
-    * artifact (round-16 review: [[Similarity.clusterEntryLayer]] runs a
+    * artifact ([[Similarity.clusterEntryLayer]] runs a
     * full-corpus centroid aggregation + top-k cut, so recomputing it per
     * serve/arrival re-pays exactly the corpus-linear work the bounded
     * layer exists to remove — the layer is a build-time cost, like the
@@ -240,7 +193,7 @@ object SimilarityQueries {
     * cut the old way. The persisted rows are the deterministic layer
     * verbatim, so readers are hash-identical to the recompute form.
     *
-    * STALENESS CONTRACT (r16 verdict #5, stated not implied): the layer
+    * STALENESS CONTRACT (stated, not implied): the layer
     * is keyed to the BASE corpus generation. When the GRAPH tier
     * upserts, arrivals do not enter the layer — they are reachable only
     * via graph hops from base-corpus entry heads (exactly Lucene's
@@ -269,8 +222,8 @@ object SimilarityQueries {
   private def tierEntryLayer(spark: SparkSession, dir: String): DataFrame =
     entryTier(spark, ensureEntryTier(spark, dir)).read("layer")
 
-  /** THE shared full-corpus graph tier (round-14 amortization, r13
-    * verdict #1): one marker-gated [[Similarity.buildGraphIndex]] root
+  /** THE shared full-corpus graph tier (build amortization): one
+    * marker-gated [[Similarity.buildGraphIndex]] root
     * per corpus generation ([[TierRoots]] keying), built by whichever
     * graph-family READER runs first and reused by every other — the
     * NN-Descent build is a once-per-generation cost in production, so
@@ -299,7 +252,7 @@ object SimilarityQueries {
     * shared tier's edges AND vectors — must serve IDENTICALLY to
     * [[graphSearchQ]] (which walks the same edges against the live
     * corpus table); the shared oracle hash-proves it (the
-    * `ann_index_pq` / `knn_ivf_pq` twin discipline). */
+    * `knn_ivf` / `knn_ivf_indexed` twin discipline). */
   def annIndexGraphQ(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureGraphTier(spark, dir)
     finish(Similarity.graphSearchIndexed(spark, path, probes(spark, dir), K,
@@ -442,13 +395,10 @@ object SimilarityQueries {
 
   /** The beam grid for [[annGraphBeamSweep]] (public so the spec drives
     * the same points). Widths below [[K]] bound the WALK, not the
-    * result — the best-seen re-rank still returns K rows (round 13;
-    * before it, sub-K beams truncated the result and capped beam-4
-    * recall@10 at 0.4 structurally), and the walk is SEEDED at the
-    * result width max(K, beam) (round 14; before it, sub-K beams
-    * started from fewer entry regions than result slots and capped
-    * beam-4 recall@10 at 0.64 — now 0.88/0.88/0.96 at beams 4/8/16,
-    * sf0.01). */
+    * result — the best-seen re-rank still returns K rows, and the walk
+    * is SEEDED at the result width max(K, beam) (a sub-K seed starts
+    * from fewer entry regions than result slots and caps recall);
+    * recall@10 is 0.88/0.88/0.96 at beams 4/8/16, sf0.01. */
   val GraphBeamSweep: Seq[Int] = Seq(4, 8, 16)
 
   /** GRAPH-SEARCH TUNING CURVE — the [[annNprobeSweep]] analogue for
@@ -472,9 +422,9 @@ object SimilarityQueries {
       .localCheckpoint(false)
     val probeIds = p.select(col("vec_id").as("probe_id"))
     // the three walks are INDEPENDENT eager constructions (each runs
-    // hops+1 per-stage materialization jobs) — overlap them (round 19,
-    // guide §2.6): one arm's tiny stage jobs back-fill the scheduling
-    // gaps of another's instead of queueing. Results are per-arm
+    // hops+1 per-stage materialization jobs) — overlap them: one arm's
+    // tiny stage jobs back-fill the scheduling gaps of another's
+    // instead of queueing. Results are per-arm
     // deterministic frames; the union below fixes the output order.
     val sweep = graft.core.Par.seq(GraphBeamSweep.map { b => () =>
       val res = Similarity.graphSearchOn(g, e, p, K, beam = b,
@@ -638,7 +588,7 @@ object SimilarityQueries {
       Tables.embeddings(spark, dir), threshold = SemDedupTau)
       .orderBy("vec_id")
 
-  /** Multi-statement ORACLE PREFIX (r12 gate-cost fix, r11 verdict #1c):
+  /** Multi-statement ORACLE PREFIX (bounds the compare's cost):
     * the NN-Descent graph replay is hoisted out of the per-oracle CTE
     * chains into session-scoped DuckDB temp tables, created once
     * (`IF NOT EXISTS`) by whichever graph-family oracle the compare runs
@@ -655,7 +605,7 @@ object SimilarityQueries {
     *   graft_g2_$key   — the round-2 NN-Descent edge list (src, dst);
     *   graft_gent_$key — the coarse sampled entry layer (ids ≡ 0 mod
     *                     [[Similarity.GraphEntryStride]] — the
-    *                     hierarchical-entry top layer, round 13);
+    *                     hierarchical-entry top layer);
     * plus, when `withXact`, graft_xact_full — the probes' exact top-K
     * ground truth (shared by the recall and sweep oracles). */
   private def graphTempPrefix(key: String, src: String,
@@ -908,8 +858,9 @@ object SimilarityQueries {
       WHERE rk <= $K
       ORDER BY probe_id, cos_sim DESC, neighbor_id"""
 
-  /** ANN QUALITY EVALUATION (round 10): recall@K of the two approximate
-    * searches — IVF list pruning and SRP-LSH bucket pruning — against
+  /** ANN QUALITY EVALUATION: recall@K of the approximate searches —
+    * IVF list pruning, SRP-LSH bucket pruning and its multi-probe form —
+    * against
     * the exact top-K ground truth, per probe and method. This is the
     * measurement every ANN deployment tunes against (nprobe/nlists and
     * band/plane counts trade scan fraction for exactly this number), and
@@ -927,12 +878,11 @@ object SimilarityQueries {
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(spark, dir)
     val p = probes(spark, dir)
-    // the exact ground truth is joined by EVERY method arm (4 here):
+    // the exact ground truth is joined by EVERY method arm (3 here):
     // lazy-checkpoint it so the full-corpus exact kNN computes once and
-    // the 4 arms reuse the ≤ probes·K-row result instead of carrying 4
-    // copies of the subtree through one giant plan (round 18, guide
-    // §2.4 — exchange reuse is runtime-lucky under AQE; the checkpoint
-    // makes the reuse structural and cuts the analyzed plan ~4×)
+    // the arms reuse the ≤ probes·K-row result instead of carrying one
+    // copy of the subtree each through one giant plan (exchange reuse
+    // is runtime-lucky under AQE; the checkpoint makes it structural)
     val exact = Similarity.knnTopKAgg(e, p, K)
       .select(col("probe_id"), col("neighbor_id"))
       .localCheckpoint(false)
@@ -951,9 +901,6 @@ object SimilarityQueries {
             .as("recall_at_k"))
     }
     evalMethod(Similarity.knnIvf(e, p, K, nprobe = NProbeLists), "ivf")
-      .unionByName(evalMethod(Similarity.knnIvfPq(e, p, K,
-        nprobe = NProbeLists, mSub = PqM, subDim = PqSubDim, ks = PqKs,
-        candMult = CandMult), "ivf_pq"))
       .unionByName(evalMethod(Similarity.knnLsh(e, p, K), "lsh"))
       .unionByName(evalMethod(Similarity.knnLshMultiProbe(e, p, K), "lsh_mp"))
       .orderBy("probe_id", "method")
@@ -963,7 +910,7 @@ object SimilarityQueries {
     * labels; public so the spec drives the same points). */
   val NprobeSweep = Seq(1, 2, 4, 8)
 
-  /** IVF TUNING CURVE (round 10): recall@K *and* scanned-corpus
+  /** IVF TUNING CURVE: recall@K *and* scanned-corpus
     * fraction at every nprobe in [[NprobeSweep]] — the two axes of the
     * knob every IVF deployment turns (more lists probed = more recall
     * for a linearly larger scan), measured in ONE pass instead of
@@ -1037,7 +984,7 @@ object SimilarityQueries {
   }
 
   /** Root for persisted index artifacts: ABSOLUTE, anchored to the
-    * system temp root (round-6 verdict #5) — a cwd-relative `target/...`
+    * system temp root — a cwd-relative `target/...`
     * path meant any cwd change silently rebuilt a duplicate index — and
     * KEYED BY THE FIXTURE's (mtime, length), so regenerating the
     * embeddings parquet invalidates the cached index by changing its
@@ -1046,8 +993,8 @@ object SimilarityQueries {
     * provide). Stale generations linger in tmp; they are small and the
     * OS owns that lifecycle.
     *
-    * CONCURRENCY CONTRACT (round-7 verdict #8): one writer per root.
-    * Verify dumps queries CONCURRENTLY since round 12 — single-writer
+    * CONCURRENCY CONTRACT: one writer per root.
+    * Verify dumps queries CONCURRENTLY — single-writer
     * safety for same-root queries now rests on `Verify.tierGroups`,
     * which fuses every query sharing one of these roots into a single
     * sequential work unit (and fails fast if a listed name drifts from
@@ -1168,7 +1115,7 @@ object SimilarityQueries {
     multiIndexPath(dir)
 
   /** TWO sequential DISTINCT upsert batches against the same base index
-    * (round-7 verdict #1 — the accumulation gate): batch A then batch B,
+    * (the accumulation gate): batch A then batch B,
     * each landing as its own delta generation. Returns the maintenance
     * report AFTER BOTH, sharing the single-batch oracle: n_added per
     * list must count the union of both batches, which is exactly what
@@ -1217,13 +1164,13 @@ object SimilarityQueries {
   private def compactIndexPath(dir: String): String =
     indexRoot("graft_ivf_compact", dir)
 
-  /** The full LSM lifecycle as one registered query (round-7 verdict
-    * #2): build base over [0, UpsertSplit) → upsert batch A → upsert
-    * batch B → [[Similarity.compactIvfIndex]] → return the COMPACTED
-    * centroid table exploded to scalar rows. Hash-checked: the
-    * post-compaction centroids are the exact-decimal per-list means of
-    * the MERGED corpus (old split under its labels ∪ new vectors under
-    * their old-centroid-assigned lists), so a compaction that dropped a
+  /** The full LSM lifecycle as one registered query: build base over
+    * [0, UpsertSplit) → upsert batch A → upsert batch B →
+    * [[Similarity.compactIvfIndex]] → return the COMPACTED centroid
+    * table exploded to scalar rows. Hash-checked: the post-compaction
+    * centroids are the exact-decimal per-list means of the MERGED
+    * corpus (old split under its labels ∪ new vectors under their
+    * old-centroid-assigned lists), so a compaction that dropped a
     * generation, double-counted a vector, or re-assigned lists shifts a
     * mean and hash-mismatches. The index root is wiped at entry —
     * compaction mutates the index in place (the base absorbs the deltas
@@ -1291,7 +1238,7 @@ object SimilarityQueries {
       .as[(Long, Array[Float])]
       .collect()
       .sortBy(_._1)
-    // Replay-HARNESS size guard (round-9 verdict #4): this collect only
+    // Replay-HARNESS size guard: this collect only
     // feeds MemoryStream (the fixture slice standing in for a Kafka
     // topic — the operator path under test never collects). The id
     // window bounds it to StreamUpsertCap-UpsertSplit rows only while
@@ -1310,8 +1257,8 @@ object SimilarityQueries {
       nprobe = NProbeLists))
   }
 
-  /** STREAMING maintenance WITH the auto-compaction policy in the loop
-    * (round-11 verdict #5): the same arrival replay as
+  /** STREAMING maintenance WITH the auto-compaction policy in the loop:
+    * the same arrival replay as
     * [[streamAnnUpsertReplay]], but each micro-batch ends with
     * [[Similarity.maybeCompactIvfIndex]] at `maxGens = 2` — the policy
     * must hold OFF after batch 1 (one generation) and FIRE after batch
@@ -1364,7 +1311,7 @@ object SimilarityQueries {
     * probes the batch oracles never exercised. */
   private[queries] val StreamQueryCap = 8
 
-  /** STREAMING ANN SERVING replay (round 10): probe vectors arrive as
+  /** STREAMING ANN SERVING replay: probe vectors arrive as
     * a stream and are answered per micro-batch against the PERSISTED
     * IVF index — the QUERY-side twin of [[streamAnnUpsertReplay]]'s
     * maintenance side, i.e. the vector-search-serving shape (a request
@@ -1547,7 +1494,7 @@ object SimilarityQueries {
   /** Eval split for [[deconSemantic]]: leading ids, the rest is train. */
   private val DeconEvalCap = 50
 
-  /** SEMANTIC DECONTAMINATION (round 10): the embedding-space member
+  /** SEMANTIC DECONTAMINATION: the embedding-space member
     * of the decon family — `dedup_decontaminate` catches verbatim
     * leaks, `decon_ngram_overlap` near-verbatim ones, `decon_bloom`
     * the same at sketch cost; this catches PARAPHRASED test-set
@@ -1612,8 +1559,7 @@ object SimilarityQueries {
     * re-evaluates outer expression references PER ELEMENT, so the
     * unbarriered form recomputed the scale's embedded array_max inside
     * every lambda body — ~64³ flops/row, measured 6.8 s at sf0.1 vs
-    * well under a second barriered (the bandTable lesson, PERF_NOTES
-    * r2 #1). */
+    * well under a second barriered (the `Dedup.bandTable` lesson). */
   def quantizeQ(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(spark, dir)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
@@ -1711,7 +1657,7 @@ object SimilarityQueries {
   private val knnOracle: String = knnOracleWhere("")
 
   // ------------------------------------------------------------------ //
-  //  Distribution-drift monitoring (round 13)                           //
+  //  Distribution-drift monitoring                                      //
   // ------------------------------------------------------------------ //
 
   /** Fixed snapshot windows for the drift monitor: reference
@@ -1804,14 +1750,14 @@ object SimilarityQueries {
   private val RrfC = 60
   /** Top-R drawn from each retrieval list before fusion. */
   private val RrfDepth = 20
-  /** CORPUS-RELATIVE stopword cut (round-15 verdict #1): tokens in
+  /** CORPUS-RELATIVE stopword cut: tokens in
     * more than this percentage of documents drop from the lexical
     * arm — the `max_df` convention, compared in exact integers
-    * (df·100 ≤ pct·n) so both engines cut identically. The round-14
-    * ABSOLUTE cap (df ≤ 100) was the vacuity bug the verdict flagged:
-    * on this fixture's flat 31-token vocabulary it admitted only the
+    * (df·100 ≤ pct·n) so both engines cut identically. An
+    * ABSOLUTE cap (df ≤ 100) is vacuous here:
+    * on this fixture's flat 31-token vocabulary it admits only the
     * one rare token, no probe document contains it, and
-    * `search_bm25_indexed` hash-passed on an EMPTY result. At 80% the
+    * `search_bm25_indexed` would hash-pass on an EMPTY result. At 80% the
     * cut still provably bites (the fixture's most common token sits at
     * df ≈ 0.8·n) while every probe keeps real tokens — and the same
     * fraction means the same thing at 500 docs or 100 TB, which no
@@ -1890,7 +1836,7 @@ object SimilarityQueries {
         round(col("__e.score"), 9).as("rrf_score"))
       .orderBy(col("probe_id"), col("rrf_score").desc, col("cand_id"))
 
-  /** HYBRID SEARCH, BM25 LEXICAL ARM (round-13 verdict #2): the first
+  /** HYBRID SEARCH, BM25 LEXICAL ARM: the first
     * thing a real user asks of a hybrid retriever — Okapi BM25 over the
     * same max-df-cut inverted index, fused with the exact-cosine vector
     * arm by the same RRF. score(q,d) = Σ_t idf(t) · tf·(k1+1) /
@@ -1957,7 +1903,7 @@ object SimilarityQueries {
     .orderBy("probe_id", "rank")
 
   /** BM25 SERVED FROM THE PERSISTED INVERTED-INDEX TIER
-    * ([[graft.ext.Lex]] — round 14, the retrieval family's LSM
+    * ([[graft.ext.Lex]] — the retrieval family's LSM
     * lifecycle): the corpus is tokenized ONCE per generation into
     * marker-gated posting/doc-length fact tables, and query batches
     * probe the persisted tier — at 100 TB the postings are bucketed by
@@ -1975,8 +1921,8 @@ object SimilarityQueries {
       Tables.documents(spark, dir).filter(col("doc_id") < NProbes), MaxDfPct))
   }
 
-  /** BM25 SERVED FROM THE IMPACT-ORDERED PRUNED PREFIXES (round 15 —
-    * the early-termination scale path): candidates come from the
+  /** BM25 SERVED FROM THE IMPACT-ORDERED PRUNED PREFIXES (the
+    * early-termination scale path): candidates come from the
     * persisted top-[[graft.ext.Lex.LexPrunedM]] impact prefix of each
     * posting list (per generation — per-segment pruning, the Lucene
     * shape), so probe cost is BOUNDED per (probe token, generation)
@@ -2016,8 +1962,8 @@ object SimilarityQueries {
       MaxDfPct, topK = RrfDepth))
   }
 
-  /** [[searchBm25Wand]] OVER A MULTI-GENERATION TIER (round 16 — the
-    * registry twin of LexSpec's wand-across-generations proof): the
+  /** [[searchBm25Wand]] OVER A MULTI-GENERATION TIER (the registry
+    * twin of LexSpec's wand-across-generations proof): the
     * WAND bound inputs (per-token max_tf / min_dl) FOLD across the
     * base segment and every delta generation by max/min
     * ([[graft.ext.Lex.lexTierStatsAt]]), the candidate prefixes union
@@ -2097,8 +2043,8 @@ object SimilarityQueries {
     bm25RankCut(Lex.queryLexIndex(spark, path, arrivals, MaxDfPct))
   }
 
-  /** HYBRID RETRIEVAL ENTIRELY FROM PERSISTED TIERS (round 14 — the
-    * RAG serving composition): the BM25 arm reads the [[graft.ext.Lex]]
+  /** HYBRID RETRIEVAL ENTIRELY FROM PERSISTED TIERS (the RAG serving
+    * composition): the BM25 arm reads the [[graft.ext.Lex]]
     * posting tier, the vector arm walks the [[ensureGraphTier]]
     * NN-Descent graph tier ([[Similarity.graphSearchIndexed]] at
     * k = [[RrfDepth]] — same trajectory as the k=10 serve, since the
@@ -2129,8 +2075,8 @@ object SimilarityQueries {
     rrfFuse(textRank, vecRank)
   }
 
-  /** HYBRID RETRIEVAL WITH BOTH ARMS BOUNDED (round 15 — the fully
-    * scale-shaped serving endpoint): the vector arm walks the
+  /** HYBRID RETRIEVAL WITH BOTH ARMS BOUNDED (the fully scale-shaped
+    * serving endpoint): the vector arm walks the
     * persisted NN-Descent graph (bounded beam hops), and the lexical
     * arm serves through [[graft.ext.Lex.queryLexIndexPruned]] —
     * impact-prefix candidate generation (≤ M·|probe tokens| pairs per
@@ -2159,8 +2105,8 @@ object SimilarityQueries {
     rrfFuse(textRank, vecRank)
   }
 
-  /** RETRIEVAL-RECALL EVALUATOR for the hybrid family (round-15
-    * verdict #2 — `ann_recall`'s twin for the serving composition, and
+  /** RETRIEVAL-RECALL EVALUATOR for the hybrid family (`ann_recall`'s
+    * twin for the serving composition, and
     * the query that makes a silently empty retrieval arm impossible to
     * miss): replays [[searchHybridIndexed]]'s exact shape — both arms
     * pure persisted-tier lookups, RRF fusion, top-[[K]] — grades it
@@ -2176,14 +2122,13 @@ object SimilarityQueries {
   def searchRecallQ(spark: SparkSession, dir: String): DataFrame =
     hybridRecallOf(spark, dir, prunedLex = false)
 
-  /** The BOUNDED endpoint's recall evaluator (round 16 — r15 verdict
-    * #3): [[searchHybridPruned]] shipped without a grade; this is the
-    * same evaluator with the lexical arm served from the impact
+  /** The BOUNDED endpoint's recall evaluator: [[searchRecallQ]]'s
+    * evaluator with the lexical arm served from the impact
     * prefixes, so the fused recall@[[K]] and the per-arm hit counts of
     * the fully-bounded composition sit in the registry NEXT TO the
     * exact composition's — the delta between the two IS the price of
-    * bounding the lexical arm, readable per round from CORRECTNESS
-    * artifacts alone. SearchSpec pins both non-vacuity and that the
+    * bounding the lexical arm, readable from the correctness dump
+    * alone. SearchSpec pins both non-vacuity and that the
     * pruned composition's recall stays within a stated delta of the
     * exact one's. */
   def searchHybridPrunedRecall(spark: SparkSession, dir: String): DataFrame =
@@ -2204,7 +2149,7 @@ object SimilarityQueries {
     // each arm's ranked list is referenced TWICE (fused + its per-arm
     // hit flags) — lazy-checkpoint both (≤ probes·RrfDepth rows each)
     // so the lex scoring / graph-walk re-rank compute once instead of
-    // per reference (round 18, the annRecall rule)
+    // per reference (the annRecall rule)
     val textRank = rrfRanksOf(lexScores, "__tr").localCheckpoint(false)
     val vecRank = rrfRanksOf(
       Similarity.graphSearchIndexed(spark, graphPath, probes(spark, dir),
@@ -2607,7 +2552,7 @@ object SimilarityQueries {
              CAST(coalesce(a.lex_only, 0) AS BIGINT) AS lex_only_hits
       FROM gpr p LEFT JOIN agg a ON a.probe_id = p.probe_id
       ORDER BY p.probe_id""")),
-    // the bounded composition's evaluator (r15 verdict #3): identical
+    // the bounded composition's evaluator: identical
     // shape, lexical arm from the impact-prefix replay (pbs) — the
     // recall delta vs search_recall prices bounding the arm
     GQuery("search_hybrid_pruned_recall", searchHybridPrunedRecall, Some(s"""
@@ -2796,56 +2741,6 @@ object SimilarityQueries {
                            AS DECIMAL(18,6))) AS DOUBLE) AS sum_norm
       FROM embeddings GROUP BY 1 ORDER BY 1""")),
     GQuery("knn_ivf", knnIvf, Some(ivfOracle)),
-    // the two ANN pruning axes COMPOSED: centroid routing prunes lists,
-    // int8 integer dot scans the survivors, exact re-rank pays only
-    // k·candMult per probe — hash-checked end to end (integer coarse
-    // scores are exact in both engines)
-    GQuery("knn_ivf_quantized", knnIvfQuantizedQ, Some(s"""
-      WITH $ivfCentroidCtes,
-      cent AS (SELECT label, list(c ORDER BY p) AS centroid FROM centd GROUP BY 1),
-      v AS (SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings),
-      sv AS (SELECT vec_id, label, e,
-               CASE WHEN list_max(list_transform(e, x -> abs(x))) > 0
-                    THEN 127.0 / list_max(list_transform(e, x -> abs(x))) END AS sc
-             FROM v),
-      q AS (SELECT vec_id, label, e,
-              list_transform(e, x -> CAST(round(x * sc) AS INT)) AS qv
-            FROM sv),
-      sel AS (
-        SELECT probe_id, pe, pq, label FROM (
-          SELECT p.vec_id AS probe_id, p.e AS pe, p.qv AS pq, c.label,
-                 row_number() OVER (PARTITION BY p.vec_id
-                   ORDER BY list_cosine_similarity(p.e, c.centroid) DESC,
-                            c.label) AS crk
-          FROM (SELECT * FROM q WHERE vec_id < $NProbes) p, cent c)
-        WHERE crk <= $NProbeLists),
-      coarse AS (
-        SELECT s.probe_id, q.vec_id AS neighbor_id, q.e, s.pe,
-               list_sum(list_transform(range(1, len(q.qv) + 1),
-                 i -> CAST(q.qv[i] AS BIGINT) * s.pq[i])) AS cs
-        FROM sel s JOIN q ON q.label = s.label AND q.vec_id <> s.probe_id),
-      cand AS (
-        SELECT probe_id, neighbor_id, e, pe FROM (
-          SELECT *, row_number() OVER (PARTITION BY probe_id
-                      ORDER BY cs DESC, neighbor_id) AS rk
-          FROM coarse)
-        WHERE rk <= ${K * CandMult})
-      SELECT probe_id, neighbor_id, ROUND(cos_sim, 6) AS cos_sim FROM (
-        SELECT probe_id, neighbor_id,
-               list_cosine_similarity(e, pe) AS cos_sim,
-               row_number() OVER (PARTITION BY probe_id
-                 ORDER BY list_cosine_similarity(e, pe) DESC, neighbor_id) AS rk2
-        FROM cand)
-      WHERE rk2 <= $K
-      ORDER BY probe_id, cos_sim DESC, neighbor_id""")),
-    // IVF-PQ: the full deterministic trajectory replayed in SQL —
-    // subspace split, sorted-limit seeds, one exact-decimal Lloyd round,
-    // code assignment, ADC LUT, both rank stages (each ranked on the
-    // decimal's double cast with id tie-breaks, mirroring the engine)
-    GQuery("knn_ivf_pq", knnIvfPqQ, Some(ivfPqOracle)),
-    // the PERSISTED tier must serve byte-identically to the in-query
-    // derivation — same oracle, the knn_ivf / knn_ivf_indexed pattern
-    GQuery("ann_index_pq", annIndexPqQ, Some(ivfPqOracle)),
     // deterministic NN-Descent kNN graph: the oracle replays the
     // bucket+ring init and both refinement rounds step for step
     GQuery("ann_knn_graph", knnGraphQ, Some(fullGraphOracle)),
@@ -2983,7 +2878,7 @@ object SimilarityQueries {
       ORDER BY p.probe_id"""
     }),
     // the PERSISTED graph tier must serve byte-identically to the
-    // in-query build — same oracle, the ann_index_pq pattern
+    // in-query build — same oracle, the knn_ivf_indexed pattern
     GQuery("ann_index_graph", annIndexGraphQ, Some(graphSearchOracle)),
     // append-only upsert: base graph over [0, split) + delta out-edges
     // from the beam walk — the oracle replays the subset graph and both
@@ -3107,19 +3002,7 @@ object SimilarityQueries {
             WHERE p.vec_id < $NProbes) pe
             ON b.bucket = pe.bucket AND b.vec_id <> pe.probe_id)
         WHERE rk <= $K),
-      $pqChainCtes,
-      ivfpq AS (
-        SELECT probe_id, neighbor_id FROM (
-          SELECT c.probe_id, c.neighbor_id,
-                 row_number() OVER (PARTITION BY c.probe_id
-                   ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], pe.embedding::DOUBLE[]) DESC,
-                            c.neighbor_id) AS rk
-          FROM pqcand c JOIN embeddings e ON e.vec_id = c.neighbor_id
-               JOIN embeddings pe ON pe.vec_id = c.probe_id)
-        WHERE rk <= $K),
       m AS (SELECT probe_id, 'ivf' AS method, neighbor_id FROM ivf
-            UNION ALL
-            SELECT probe_id, 'ivf_pq' AS method, neighbor_id FROM ivfpq
             UNION ALL
             SELECT probe_id, 'lsh' AS method, neighbor_id FROM lsh
             UNION ALL
@@ -3131,8 +3014,8 @@ object SimilarityQueries {
       SELECT pr.probe_id, md.method,
              CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
              CAST(coalesce(h.n_hit, 0) AS DOUBLE) / $K AS recall_at_k
-      FROM pr CROSS JOIN (SELECT 'ivf' AS method UNION ALL SELECT 'ivf_pq'
-                          UNION ALL SELECT 'lsh' UNION ALL SELECT 'lsh_mp') md
+      FROM pr CROSS JOIN (SELECT 'ivf' AS method UNION ALL SELECT 'lsh'
+                          UNION ALL SELECT 'lsh_mp') md
       LEFT JOIN h ON h.probe_id = pr.probe_id AND h.method = md.method
       ORDER BY pr.probe_id, md.method"""
     }),
@@ -3205,7 +3088,7 @@ object SimilarityQueries {
     // centroids, read back from the persisted base+delta segments
     GQuery("ann_index_upsert", annIndexUpsert, Some(upsertReportOracle)),
     // two sequential DISTINCT batches: the report's n_added must count
-    // BOTH generations — the accumulation gate (round-7 verdict #1)
+    // BOTH generations — the accumulation gate
     GQuery("ann_upsert_multi", annUpsertMulti, Some(upsertReportOracle)),
     // build → upsert ×2 → compact: the compacted index's centroid table
     // must equal the exact-decimal means of the merged corpus
@@ -3269,76 +3152,6 @@ object SimilarityQueries {
 
   /** The exact-decimal per-list centroid CTEs, shared by the `knn_ivf`/
     * `knn_ivf_indexed` oracle and the `ann_index_build` content check. */
-  /** Shared IVF-PQ oracle chain (expects `cent` from [[ivfCentroidCtes]]
-    * in scope): per-subspace codebook training (sorted-limit seeds, one
-    * exact-decimal Lloyd round), code assignment, probe routing
-    * (`pqsel`), ADC scoring, and the k·candMult candidate cut
-    * (`pqcand`) — every compare on a decimal's double cast with id
-    * tie-breaks, mirroring [[Similarity.knnIvfPq]] stage for stage.
-    * Reused by the `knn_ivf_pq` oracle and `ann_recall`'s ivf_pq arm. */
-  private lazy val pqChainCtes: String = s"""pqsel AS (
-        SELECT probe_id, label FROM (
-          SELECT p.vec_id AS probe_id, c.label,
-                 row_number() OVER (PARTITION BY p.vec_id
-                   ORDER BY list_cosine_similarity(p.embedding::DOUBLE[], c.centroid) DESC,
-                            c.label) AS crk
-          FROM (SELECT * FROM embeddings WHERE vec_id < $NProbes) p, cent c)
-        WHERE crk <= $NProbeLists),
-      rx AS (SELECT e.vec_id,
-                    list_transform(range(1, len(e.embedding) + 1),
-                      i -> e.embedding[i]::DOUBLE - c.centroid[i]) AS remb
-             FROM embeddings e JOIN cent c USING (label)),
-      sx AS (SELECT vec_id, CAST(m AS INT) AS m,
-                    list_slice(remb, m*$PqSubDim+1, m*$PqSubDim+$PqSubDim) AS s
-             FROM rx, UNNEST(range($PqM)) AS u(m)),
-      px AS (SELECT vec_id, CAST(m AS INT) AS m,
-                    list_transform(list_slice(embedding, m*$PqSubDim+1, m*$PqSubDim+$PqSubDim),
-                      x -> x::DOUBLE) AS s
-             FROM embeddings, UNNEST(range($PqM)) AS u(m)
-             WHERE vec_id < $NProbes),
-      pinit AS (SELECT m, CAST(row_number() OVER (PARTITION BY m ORDER BY vec_id) - 1 AS BIGINT) AS code,
-                       s AS cent
-                FROM sx WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT $PqKs)),
-      d1 AS (SELECT sx.vec_id, sx.m, c.code,
-                    list_sum(list_transform(range(1, ${PqSubDim + 1}),
-                      i -> CAST((sx.s[i]-c.cent[i])*(sx.s[i]-c.cent[i]) AS DECIMAL(28,12)))) AS d2
-             FROM sx JOIN pinit c USING (m)),
-      a1 AS (SELECT vec_id, m, code FROM (
-               SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                        ORDER BY CAST(d2 AS DOUBLE), code) AS rk FROM d1) WHERE rk = 1),
-      upd AS (SELECT m, code, p, CAST(sum(CAST(v AS DECIMAL(28,9))) AS DOUBLE)/count(*) AS c
-              FROM (SELECT a1.m, a1.code, u.p, sx.s[u.p] AS v
-                    FROM sx JOIN a1 USING (vec_id, m), UNNEST(range(1, ${PqSubDim + 1})) AS u(p))
-              GROUP BY 1,2,3),
-      cb AS (SELECT m, code, list(c ORDER BY p) AS cent FROM upd GROUP BY 1,2),
-      dd AS (SELECT sx.vec_id, sx.m, c.code,
-                    list_sum(list_transform(range(1, ${PqSubDim + 1}),
-                      i -> CAST((sx.s[i]-c.cent[i])*(sx.s[i]-c.cent[i]) AS DECIMAL(28,12)))) AS d2
-             FROM sx JOIN cb c USING (m)),
-      pqcodes AS (SELECT vec_id, m, code FROM (
-                  SELECT *, row_number() OVER (PARTITION BY vec_id, m
-                           ORDER BY CAST(d2 AS DOUBLE), code) AS rk FROM dd) WHERE rk = 1),
-      lut AS (SELECT p.vec_id AS probe_id, p.m, c.code,
-                     list_sum(list_transform(range(1, ${PqSubDim + 1}),
-                       i -> CAST(p.s[i]*c.cent[i] AS DECIMAL(28,12)))) AS w
-              FROM px p JOIN cb c USING (m)),
-      ip0 AS (SELECT s.probe_id, s.label,
-                     list_sum(list_transform(range(1, len(c.centroid) + 1),
-                       i -> CAST(pe.embedding[i]::DOUBLE * c.centroid[i] AS DECIMAL(28,12)))) AS w0
-              FROM pqsel s JOIN cent c USING (label)
-                   JOIN embeddings pe ON pe.vec_id = s.probe_id),
-      adc AS (SELECT s.probe_id, e.vec_id AS neighbor_id,
-                     sum(l.w) + max(i.w0) AS adc
-              FROM pqsel s JOIN embeddings e ON e.label = s.label AND e.vec_id <> s.probe_id
-                   JOIN pqcodes k ON k.vec_id = e.vec_id
-                   JOIN lut l ON l.probe_id = s.probe_id AND l.m = k.m AND l.code = k.code
-                   JOIN ip0 i ON i.probe_id = s.probe_id AND i.label = s.label
-              GROUP BY 1,2),
-      pqcand AS (SELECT probe_id, neighbor_id FROM (
-                 SELECT *, row_number() OVER (PARTITION BY probe_id
-                          ORDER BY CAST(adc AS DOUBLE) DESC, neighbor_id) AS rk FROM adc)
-               WHERE rk <= ${K * CandMult})"""
-
   private lazy val ivfCentroidCtes: String = s"""ex AS (
         SELECT label,
                unnest(list_transform(range(1, len(embedding) + 1),
@@ -3378,27 +3191,6 @@ object SimilarityQueries {
   /** The batch IVF search oracle (in-query build and persisted index
     * give the same answer, so two registry queries share it). */
   private lazy val ivfOracle: String = ivfOracleFor(NProbes)
-
-  /** IVF-PQ oracle: the full deterministic trajectory replayed in SQL —
-    * subspace split, sorted-limit seeds, one exact-decimal Lloyd round,
-    * code assignment, ADC LUT, both rank stages (each ranked on the
-    * decimal's double cast with id tie-breaks). Shared by `knn_ivf_pq`
-    * (in-query) and `ann_index_pq` (persisted tier) — the two must
-    * serve identically. */
-  private lazy val ivfPqOracle: String = s"""
-      WITH $ivfCentroidCtes,
-      cent AS (SELECT label, list(c ORDER BY p) AS centroid FROM centd GROUP BY 1),
-      $pqChainCtes
-      SELECT probe_id, neighbor_id, ROUND(cos_sim,6) AS cos_sim FROM (
-        SELECT c.probe_id, c.neighbor_id,
-               list_cosine_similarity(e.embedding::DOUBLE[], pe.embedding::DOUBLE[]) AS cos_sim,
-               row_number() OVER (PARTITION BY c.probe_id
-                 ORDER BY list_cosine_similarity(e.embedding::DOUBLE[], pe.embedding::DOUBLE[]) DESC,
-                          c.neighbor_id) AS rk
-        FROM pqcand c JOIN embeddings e ON e.vec_id = c.neighbor_id
-             JOIN embeddings pe ON pe.vec_id = c.probe_id)
-      WHERE rk <= $K
-      ORDER BY probe_id, cos_sim DESC, neighbor_id"""
 
   /** Shared CTE chain for every upsert-family oracle: old-split
     * centroids (exact-decimal means over vec_id < UpsertSplit) and the

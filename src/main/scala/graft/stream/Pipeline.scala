@@ -30,9 +30,10 @@ object Pipeline {
 
   final case class StreamConfig(
       watermarkDelay: String = "1 minute", // W1 (spark_consumer.py:38)
-      windowLength: String = "1 minute",   // W2 (spark_consumer.py:41)
-      wallClockFallback: Boolean = true,   // W8 (analytical_server.py:26-27)
-      lateToOpenMinute: Boolean = false)   // W6 quirk (analytical_server.py:33-39), default OFF
+      wallClockFallback: Boolean = true)   // W8 (analytical_server.py:26-27)
+
+  /** W2 (spark_consumer.py:41): the tumbling window every aggregate uses. */
+  private val WindowLength = "1 minute"
 
   /** P1-P4 + S1 on the wire column: JSON envelope → (user_id, emoji_type,
     * event_time), invalid rows dropped (the reference 400s them). W8 wall
@@ -54,7 +55,7 @@ object Pipeline {
   def flagship(events: DataFrame, cfg: StreamConfig = StreamConfig()): DataFrame =
     events
       .withWatermark("event_time", cfg.watermarkDelay)
-      .groupBy(window(col("event_time"), cfg.windowLength), col("emoji_type"))
+      .groupBy(window(col("event_time"), WindowLength), col("emoji_type"))
       .agg(count(lit(1)).as("count"))
       .select(
         col("emoji_type"),
@@ -160,19 +161,12 @@ object Pipeline {
   def minuteTotals(events: DataFrame, cfg: StreamConfig = StreamConfig()): DataFrame =
     events
       .withWatermark("event_time", cfg.watermarkDelay)
-      .groupBy(window(col("event_time"), cfg.windowLength))
+      .groupBy(window(col("event_time"), WindowLength))
       .agg(count(lit(1)).as("total_count"))
 
-  /** Full wire→aggregate pipeline, applying the W6 quirk when configured. */
-  def flagshipFromWire(wire: DataFrame, cfg: StreamConfig = StreamConfig()): DataFrame = {
-    val events = parse(wire, cfg)
-    val adjusted =
-      if (cfg.lateToOpenMinute) {
-        import events.sparkSession.implicits._
-        creditLateToOpenMinute(events.as[PEvent]).toDF()
-      } else events
-    flagship(adjusted, cfg)
-  }
+  /** Full wire→aggregate pipeline: [[parse]] then [[flagship]]. */
+  def flagshipFromWire(wire: DataFrame, cfg: StreamConfig = StreamConfig()): DataFrame =
+    flagship(parse(wire, cfg), cfg)
 
   /** Stream-stream interval join: correlate two parsed event streams by
     * user, pairing each left event with right events that follow it
@@ -346,11 +340,12 @@ object Pipeline {
     *
     * Faithful twin: single-key `flatMapGroupsWithState` holding that
     * running max. The reference's accumulator is one Python thread; this
-    * flag reproduces that single-writer semantics and therefore serializes
-    * through one task ON PURPOSE — it exists for byte-parity experiments,
-    * not the 100 TB path (which uses correct event-time assignment, flag
-    * off). Within a micro-batch we approximate Kafka arrival order by
-    * event_time order (the reference's producers emit in timestamp order).
+    * operator reproduces that single-writer semantics and therefore
+    * serializes through one task ON PURPOSE — it exists for byte-parity
+    * experiments, not the 100 TB path (which uses correct event-time
+    * assignment: [[flagshipFromWire]] never applies it). Within a
+    * micro-batch we approximate Kafka arrival order by event_time order
+    * (the reference's producers emit in timestamp order).
     */
   def creditLateToOpenMinute(events: Dataset[PEvent]): Dataset[PEvent] = {
     import events.sparkSession.implicits._

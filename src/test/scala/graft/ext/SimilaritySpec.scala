@@ -150,6 +150,44 @@ class SimilaritySpec extends SparkSpec {
     inCluster.toDouble / pruned.length should be >= 0.9
   }
 
+  test("knnIvf at nprobe < nlists: exactly the brute-force top-k over the members of the probed lists") {
+    // lists independent of the vectors (the sf fixture's `label` shape),
+    // so pruning loses true neighbors and the case is not the trivial
+    // nprobe = nlists one. Any search that ranks a subset of the probed
+    // lists' members can therefore recall no more than knnIvf does.
+    val rng = new scala.util.Random(29)
+    val dim = 16
+    val nLists = 6
+    val corpus = (0L until 60L).map(i =>
+      (i, (i % nLists).toInt, Seq.fill(dim)(rng.nextFloat() - 0.5f)))
+    val corpusDf = corpus.toDF("vec_id", "label", "embedding")
+    val probeIds = 0L until 4L
+    val probesDf = corpusDf.filter(col("vec_id") < probeIds.size)
+      .select("vec_id", "embedding")
+    val (k, nprobe) = (5, 2)
+    def key(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("probe_id"), col("neighbor_id"), round(col("cos_sim"), 9))
+      .as[(Long, Long, Double)].collect().toSet
+    def cos(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).map { case (x, y) => x * y }.sum /
+        math.sqrt(a.map(x => x * x).sum * b.map(x => x * x).sum)
+    // the routing, recomputed on the driver: the nprobe lists whose
+    // centroids are nearest each probe, ties toward the smaller label
+    val cent = Similarity.coarseCentroids(corpusDf)
+      .as[(Int, Seq[Double])].collect().toSeq
+    cent.size shouldBe nLists
+    val expected = probeIds.flatMap { p =>
+      val pv = corpus(p.toInt)._3.map(_.toDouble)
+      val probed = cent.sortBy { case (l, c) => (-cos(pv, c), l) }
+        .take(nprobe).map(_._1)
+      key(Similarity.knnExact(corpusDf.filter(col("label").isin(probed: _*)),
+        probesDf.filter(col("vec_id") === p), k))
+    }.toSet
+    val ivf = key(Similarity.knnIvf(corpusDf, probesDf, k, nprobe))
+    ivf shouldBe expected
+    ivf should not be key(Similarity.knnExact(corpusDf, probesDf, k))
+  }
+
   test("knnIvfIndexed: persisted index answers exactly like the in-query build; probe plan pays no centroid aggregation") {
     val rng = new scala.util.Random(17)
     val dim = 32
@@ -229,98 +267,6 @@ class SimilaritySpec extends SparkSpec {
       maxRatio = 0.25, graphK = 5, graphRounds = 2, dim = dim) shouldBe true
     Similarity.graphDeltaEdges(spark, gPath) shouldBe None
     spark.read.parquet(s"$gPath/vectors").count() shouldBe 30
-  }
-
-  test("residual PQ: on clustered lists, residual codes rank within-cluster while raw codes collapse") {
-    // The IVFADC argument (Jégou et al. 2011 §IV-A), pinned: when lists
-    // ARE clusters (the real IVF assignment), raw-vector PQ spends its
-    // codes re-encoding the cluster mean every member shares, so members
-    // collapse onto identical code tuples and ADC cannot rank within a
-    // list; residual codes encode the within-cluster detail. (On the sf
-    // fixture lists are a random partition of centered noise — centroids
-    // ≈ 0, residual ≡ raw — so THIS planted geometry is where the design
-    // is observable.)
-    val rng = new scala.util.Random(67)
-    val dim = 32
-    val bases = Seq.fill(4)(Array.fill(dim)(rng.nextGaussian().toFloat))
-    val corpus = (for {
-      (b, ci) <- bases.zipWithIndex
-      j <- 0 until 12
-    } yield (ci * 100L + j, ci,
-      b.map(x => x + 0.05f * rng.nextGaussian().toFloat).toSeq))
-      .toDF("vec_id", "label", "embedding")
-    val probesDf = corpus.filter(col("vec_id") % 100 === 0)
-      .select("vec_id", "embedding")
-    // code-collapse contrast, via the public trainer on both frames
-    // examine a cluster whose members did NOT seed the codebook (seeds
-    // are the 8 smallest ids, all from cluster 0)
-    def distinctTuples(codes: org.apache.spark.sql.DataFrame): Long = codes
-      .filter(col("vec_id") >= 300L)
-      .groupBy("vec_id")
-      .agg(array_sort(collect_list(struct(col("__m"), col("__code")))).as("t"))
-      .select("t").distinct().count()
-    val rawTuples = distinctTuples(
-      Similarity.pqTrain(corpus, mSub = 4, subDim = 8, ks = 8)._2)
-    val cent = corpus.groupBy("label")
-      .agg(array(
-        (0 until dim).map(i => avg(col("embedding").getItem(i))): _*).as("c"))
-    val residual = corpus.join(cent, "label")
-      .select(col("vec_id"),
-        zip_with(col("embedding"), col("c"),
-          (a, b) => a.cast("double") - b).as("embedding"))
-    val resTuples = distinctTuples(
-      Similarity.pqTrain(residual, mSub = 4, subDim = 8, ks = 8)._2)
-    withClue(s"raw=$rawTuples res=$resTuples of 12 cluster members: ") {
-      resTuples should be > rawTuples
-      resTuples.toDouble should be >= 8.0 // codes genuinely separate members
-    }
-    // end-to-end: the shipped residual ADC ranks well enough within the
-    // probed cluster that a THIN re-rank margin already recovers the
-    // exact in-cluster answer
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("probe_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val pq = key(Similarity.knnIvfPq(corpus, probesDf, k = 5, nprobe = 1,
-      mSub = 4, subDim = 8, ks = 8, candMult = 2))
-    val exactInList = key(Similarity.knnIvf(corpus, probesDf, k = 5, nprobe = 1))
-    val hit = (pq & exactInList).size.toDouble / exactInList.size
-    withClue(s"residual ADC in-cluster fidelity $hit: ") {
-      hit should be >= 0.9 }
-  }
-
-  test("knnIvfPqIndexed: persisted PQ tier answers exactly like the in-query build; marker gates") {
-    val rng = new scala.util.Random(17)
-    val dim = 32
-    val bases = Seq.fill(5)(Array.fill(dim)(rng.nextGaussian().toFloat))
-    val corpus = for {
-      (b, ci) <- bases.zipWithIndex
-      j <- 0 until 8
-    } yield (ci * 100L + j, ci, b.map(x => x + 0.05f * rng.nextGaussian().toFloat).toSeq)
-    val corpusDf = corpus.toDF("vec_id", "label", "embedding")
-    val probesDf = corpus.filter(_._1 % 100 == 0)
-      .map(t => (t._1, t._3)).toDF("vec_id", "embedding")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("probe_id"), col("neighbor_id"), round(col("cos_sim"), 9))
-      .as[(Long, Long, Double)].collect().toSet
-    val path = s"target/test_pq_index_${System.nanoTime()}"
-    // probing before the tier exists must refuse, not misread
-    Similarity.buildIvfIndex(corpusDf, path)
-    an[IllegalArgumentException] should be thrownBy
-      Similarity.knnIvfPqIndexed(spark, path, probesDf, k = 5)
-    val cb = Similarity.buildPqTier(spark, path, mSub = 4, subDim = 8, ks = 4)
-    cb.count() shouldBe 16 // mSub × ks codebook rows persisted
-    key(Similarity.knnIvfPqIndexed(spark, path, probesDf, k = 5,
-      nprobe = 2, candMult = 2)) shouldBe
-      key(Similarity.knnIvfPq(corpusDf, probesDf, k = 5, nprobe = 2,
-        mSub = 4, subDim = 8, ks = 4, candMult = 2))
-    // the marker's fingerprint gates codec + geometry, not just
-    // existence: the tier just built serves ONLY its own cut; a caller
-    // wanting a different geometry (or a pre-fingerprint empty marker)
-    // must read "no tier" and rebuild
-    Similarity.pqTierServes(spark, path, 4, 8, 4) shouldBe true
-    Similarity.pqTierServes(spark, path, 8, 4, 4) shouldBe false
-    val mk = new java.io.File(s"$path/${Similarity.PqCompleteMarker}")
-    new java.io.FileOutputStream(mk).close() // truncate: legacy marker
-    Similarity.pqTierServes(spark, path, 4, 8, 4) shouldBe false
   }
 
   test("knnGraph: NN-Descent recovers the exact kNN graph on planted clusters; deterministic; rounds improve recall") {
@@ -706,55 +652,6 @@ class SimilaritySpec extends SparkSpec {
     Similarity.graphDeltaEdges(spark, path) shouldBe None
   }
 
-  test("PQ at production geometry (dim 256, mSub 16): codes are 16 small ints; uncut ADC equals brute force") {
-    val rng = new scala.util.Random(41)
-    val corpus = (0L until 80L).map(i =>
-      (i, (i % 4).toInt, Seq.fill(256)(rng.nextFloat() - 0.5f)))
-      .toDF("vec_id", "label", "embedding")
-    val probes = corpus.filter(col("vec_id") < 2).select("vec_id", "embedding")
-    val (cb, codes) = Similarity.pqTrain(corpus, mSub = 16, subDim = 16, ks = 8)
-    cb.count() shouldBe 128 // 16 subspaces × 8 codes
-    codes.groupBy("vec_id").count().select("count").distinct()
-      .as[Long].collect() shouldBe Array(16L) // 16 codes per vector
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("probe_id"), col("neighbor_id"), round(col("cos_sim"), 9))
-      .as[(Long, Long, Double)].collect().toSet
-    // candMult wide enough to keep the whole corpus → the 16-byte code
-    // approximation must be invisible after exact re-rank
-    key(Similarity.knnIvfPq(corpus, probes, k = 5, nprobe = 4,
-      mSub = 16, subDim = 16, ks = 8, candMult = 16)) shouldBe
-      key(Similarity.knnExact(corpus, probes, k = 5))
-  }
-
-  test("knnIvfPqIndexed: refuses a PQ tier that predates live delta generations") {
-    val rng = new scala.util.Random(17)
-    val corpus = (0L until 30L).map(i =>
-      (i, (i % 3).toInt, Seq.fill(16)(rng.nextFloat() - 0.5f)))
-      .toDF("vec_id", "label", "embedding")
-    val probes = corpus.filter(col("vec_id") < 1).select("vec_id", "embedding")
-    val path = s"target/test_pq_stale_${System.nanoTime()}"
-    Similarity.buildIvfIndex(corpus, path)
-    Similarity.buildPqTier(spark, path, mSub = 4, subDim = 4, ks = 4)
-    // sanity: serves before the upsert
-    Similarity.knnIvfPqIndexed(spark, path, probes, k = 3).count() shouldBe 3
-    // an upsert lands a delta generation the codes tier knows nothing
-    // about — probing the tier now would silently miss it
-    Similarity.upsertIvfIndex(spark, path,
-      Seq((99L, Seq.fill(16)(0.1f))).toDF("vec_id", "embedding"))
-      .write.format("noop").mode("overwrite").save()
-    an[IllegalArgumentException] should be thrownBy
-      Similarity.knnIvfPqIndexed(spark, path, probes, k = 3)
-    // compaction folds the delta into the base; a rebuilt tier serves
-    // the upserted vector — probe with ITS embedding under a fresh id,
-    // so the exact re-rank must surface 99 as the top neighbor
-    Similarity.compactIvfIndex(spark, path)
-    Similarity.buildPqTier(spark, path, mSub = 4, subDim = 4, ks = 4)
-    val probe99 = Seq((999L, Seq.fill(16)(0.1f))).toDF("vec_id", "embedding")
-    Similarity.knnIvfPqIndexed(spark, path, probe99, k = 3)
-      .orderBy(col("cos_sim").desc).select("neighbor_id")
-      .as[Long].head() shouldBe 99L
-  }
-
   /** Shared fixture for the upsert-lifecycle tests: 3 planted clusters,
     * 6 base vectors each (ids ci*100+j), plus generators for arrivals
     * near a given cluster. */
@@ -981,56 +878,6 @@ class SimilaritySpec extends SparkSpec {
     run() shouldBe got
   }
 
-  test("pqTrain: deterministic trajectory, codes in range, full codebook coverage") {
-    val rng = new scala.util.Random(31)
-    val df = vecDf((0L until 60L).map(i => i -> Seq.fill(32)(rng.nextFloat() - 0.5f)))
-    val run = () => {
-      val (cb, codes) = Similarity.pqTrain(df, mSub = 4, subDim = 8, ks = 4)
-      (cb.select("__m", "__code").as[(Int, Long)].collect().toSet,
-        codes.as[(Long, Int, Long)].collect().toSet)
-    }
-    val (cbKeys, codes) = run()
-    // every (subspace, code) slot trained; every vector coded in range
-    cbKeys shouldBe (for (m <- 0 until 4; c <- 0L until 4L) yield (m, c)).toSet
-    codes.map(_._1) shouldBe (0L until 60L).toSet
-    codes.foreach { case (_, m, c) =>
-      m should (be >= 0 and be < 4)
-      c should (be >= 0L and be < 4L)
-    }
-    codes.groupBy(t => (t._1, t._2)).values.foreach(_.size shouldBe 1)
-    run() shouldBe ((cbKeys, codes)) // bit-deterministic re-run
-  }
-
-  test("knnIvfPq: uncut ADC candidates re-rank to exact brute force; pruned probing stays in-cluster") {
-    val rng = new scala.util.Random(17)
-    val dim = 32
-    val bases = Seq.fill(5)(Array.fill(dim)(rng.nextGaussian().toFloat))
-    val corpus = for {
-      (b, ci) <- bases.zipWithIndex
-      j <- 0 until 8
-    } yield (ci * 100L + j, ci, b.map(x => x + 0.05f * rng.nextGaussian().toFloat).toSeq)
-    val corpusDf = corpus.toDF("vec_id", "label", "embedding")
-    val probesDf = corpus.filter(_._1 % 100 == 0)
-      .map(t => (t._1, t._3)).toDF("vec_id", "embedding")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("probe_id"), col("neighbor_id"), round(col("cos_sim"), 9))
-      .as[(Long, Long, Double)].collect().toSet
-    // nprobe = nlists + candMult wide enough that the ADC cut keeps the
-    // whole corpus (k·candMult = 40 ≥ |corpus|): the PQ approximation
-    // must then be INVISIBLE — exact re-rank equals brute force
-    key(Similarity.knnIvfPq(corpusDf, probesDf, k = 5, nprobe = 5,
-      mSub = 4, subDim = 8, ks = 4, candMult = 8)) shouldBe
-      key(Similarity.knnExact(corpusDf, probesDf, k = 5))
-    // pruned lists + tight ADC cut: k rows per probe, ≥90% in-cluster —
-    // the PQ codes preserve enough geometry to rank within the lists
-    val pruned = Similarity.knnIvfPq(corpusDf, probesDf, k = 5, nprobe = 2,
-      mSub = 4, subDim = 8, ks = 4, candMult = 2)
-      .select("probe_id", "neighbor_id").as[(Long, Long)].collect()
-    pruned.groupBy(_._1).view.mapValues(_.length).toMap.values.toSet shouldBe Set(5)
-    val inCluster = pruned.count { case (p, n) => n / 100L == p / 100L }
-    inCluster.toDouble / pruned.length should be >= 0.9
-  }
-
   test("int8 quantization: values bounded, reconstruction within 0.5/scale, zero vector null") {
     val rng = new scala.util.Random(21)
     val rows = (0L until 50L).map(i => i -> Seq.fill(64)((rng.nextGaussian() * (i + 1)).toFloat))
@@ -1133,8 +980,8 @@ class SimilaritySpec extends SparkSpec {
     // one row per (probe, method), every probe covered even at zero hits
     rows.map(r => (r._1, r._2)).distinct.size shouldBe rows.size
     rows.groupBy(_._2).view.mapValues(_.map(_._1).sorted.toList).toMap shouldBe
-      Map("ivf" -> List(0L, 1L, 2L, 3L, 4L), "ivf_pq" -> List(0L, 1L, 2L, 3L, 4L),
-        "lsh" -> List(0L, 1L, 2L, 3L, 4L), "lsh_mp" -> List(0L, 1L, 2L, 3L, 4L))
+      Map("ivf" -> List(0L, 1L, 2L, 3L, 4L), "lsh" -> List(0L, 1L, 2L, 3L, 4L),
+        "lsh_mp" -> List(0L, 1L, 2L, 3L, 4L))
     // multi-probe searches a candidate superset of single-probe, so its
     // per-probe hit count dominates (see the monotonicity argument in
     // the planted-cluster test)

@@ -218,18 +218,12 @@ class TierSpec extends SparkSpec {
         }
       } shouldBe 0
     }
-    // the fifth tier: product-quantized codes over an IVF index
-    val pqPath = s"target/test_tier_pq_${System.nanoTime()}"
-    Similarity.buildIvfIndex(ivfBase, pqPath)
-    Similarity.buildPqTier(spark, pqPath, mSub = 2, subDim = 4, ks = 4)
-    val pq = Similarity.pqTier(spark, pqPath)
     // an empty arrival batch lands an empty generation table
     val emptyPath = s"target/test_tier_empty_${System.nanoTime()}"
     Dedup.buildNearDupIndex(spark, emptyPath, ndiKeys, ndiFp)
     Dedup.upsertNearDupIndex(spark, emptyPath, ndiKeys.filter(lit(false)), ndiFp)
     val nd = Dedup.nearDupTier(spark, emptyPath)
     jobsOf {
-      Seq("pq_codebooks", "pq_codes").foreach(t => frames += pq.read(t) -> s"$pqPath/$t")
       frames += nd.genRows(Seq(1), "bands").drop("gen") -> s"${nd.genPath(1)}/bands"
       frames += nd.folded(Seq(1), "bands") -> s"$emptyPath/bands"
     } shouldBe 0

@@ -29,17 +29,6 @@ class PlanSpec extends SparkSpec {
     p should not include "Window"
   }
 
-  test("knn_ivf_quantized: all three rank stages on the bounded heap; list join is an equi-join") {
-    val p = plan(SimilarityQueries.knnIvfQuantizedQ(spark, dir))
-    // routing (nprobe), coarse (k·candMult), re-rank (k) — every stage a
-    // heap aggregate; the corpus×probe pairing keys on the list column,
-    // never a cartesian over the corpus
-    "bounded_top_k".r.findAllIn(p).size should be >= 3
-    p should include("ObjectHashAggregate")
-    p should not include "Window"
-    p should not include "CartesianProduct"
-  }
-
   test("knn_lsh_multiprobe: probe expansion broadcasts, bucket equi-join, no cartesian") {
     val df = SimilarityQueries.knnLshMp(spark, dir)
     df.collect()
@@ -86,18 +75,6 @@ class PlanSpec extends SparkSpec {
     // directory, text-free fixed-width probe rows come from broadcast
     "ReadSchema: struct<vec_id:bigint,embedding:array<float>>".r
       .findFirstIn(p) should not be None
-  }
-
-  test("knn_ivf_pq: every rank stage on the bounded heap; ADC and list joins are equi-joins") {
-    val p = plan(SimilarityQueries.knnIvfPqQ(spark, dir))
-    // routing (nprobe) + 2 codebook argmins + coarse ADC cut + re-rank
-    // all run on the heap aggregate, never window sorts over candidates
-    "bounded_top_k".r.findAllIn(p).size should be >= 4
-    p should not include "CartesianProduct"
-    // the only nested-loop is the broadcast of the tiny centroid /
-    // codebook tables (the knn_ivf pattern); candidate pairing keys on
-    // (list, m, code) equi-joins
-    p should include("BroadcastHashJoin")
   }
 
   test("ann_knn_graph: bucket/two-hop/scoring stages are equi-joins, no corpus cross product") {
@@ -219,23 +196,6 @@ class PlanSpec extends SparkSpec {
     finalStage should include("LeftSemi")
     stagePlans.foreach(_ should not include "CartesianProduct")
     "bounded_top_k".r.findAllIn(finalStage).size should be >= 1
-  }
-
-  test("ann_index_pq: code scan prunes list partitions dynamically and reads codes, not vectors") {
-    val df = SimilarityQueries.annIndexPqQ(spark, dir)
-    df.collect() // drive AQE to the final plan on this same handle
-    val p = plan(df)
-    // the persisted tier replaces PQ training at query time: no Lloyd
-    // update aggregation (posexplode of subvectors) may appear
-    p should not include "posexplode"
-    // both pruned scans carry probe-derived partition filters: the ADC
-    // stage over pq_codes and the re-rank vector fetch over lists
-    "dynamicpruningexpression".r.findAllIn(p).size should be >= 2
-    // the ADC scan reads the code columns only — candidate scoring must
-    // never touch an embedding
-    "ReadSchema: struct<vec_id:bigint,__m:int,__code:bigint>".r
-      .findFirstIn(p) should not be None
-    p should not include "CartesianProduct"
   }
 
   test("ann_index_upsert: assignment never rebuilds centroids — parquet read, broadcast, heap argmax") {
