@@ -125,7 +125,7 @@ object Layout {
       min(col(colB).cast("long")), max(col(colB).cast("long"))).head
     val (loA, hiA, loB, hiB) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     val maxRank = (1L << bits) - 1
-    // rank in DOUBLE space (round-9 advice): the integer form
+    // rank in DOUBLE space: the integer form
     // (col - lo) * maxRank overflows for key ranges wider than
     // Long.MaxValue/65535 (~1.4e14, e.g. epoch-micros-derived ids),
     // silently garbling the Morton keys — rows survive but the

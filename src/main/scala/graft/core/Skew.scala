@@ -29,9 +29,8 @@ object Skew {
     saltedFact.join(saltedDim, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** The DECISION half of the advisor story (round-13 verdict #6 —
-    * `skew_advisor` measures, this turns the measurement into a plan
-    * choice): the salt factor that would level the table's HOTTEST key
+  /** The DECISION half of the advisor story (`skew_advisor` measures,
+    * this turns the measurement into a plan choice): the salt factor that would level the table's HOTTEST key
     * across `parts` reducers — ceil(maxKeyCount · parts / total), the
     * same integer arithmetic the advisor reports per key. 1 means no
     * key exceeds its fair 1/parts share and the plain plan is already
@@ -39,7 +38,7 @@ object Skew {
     * [[saltedJoin]]. Cost: one partial-aggregated count shuffle (keys,
     * not rows, cross the wire) collapsed to a 1-row max/total — the
     * bounded 1-row-collect class; at 100 TB you run this once per
-    * (table, key) and cache the verdict alongside the table stats. */
+    * (table, key) and cache the factor alongside the table stats. */
   def adviseSaltFactor(df: DataFrame, key: String, parts: Int = 32): Int = {
     val row = df.groupBy(col(key)).agg(count(lit(1)).as("__cnt"))
       .agg(max(col("__cnt")).as("__max"), sum(col("__cnt")).as("__total"))

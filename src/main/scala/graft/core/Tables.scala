@@ -19,19 +19,17 @@ object Tables {
     * defensively because the driver may call `SparkEntry.entry`/`queries`
     * with a session it built itself.
     *
-    * GLOBAL EFFECT (documented per round-1 advice): while set, any other
-    * nanos-timestamp parquet read in the same session yields raw longs
-    * instead of timestamps. The driver testdata has exactly one nanos
+    * GLOBAL EFFECT: while set, any other nanos-timestamp parquet read in
+    * the same session yields raw longs instead of timestamps. The driver testdata has exactly one nanos
     * column (`events.ts`), so this is safe here; idempotent thereafter.
     */
   val nanosAsLongConf: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
 
   /** Normalize `events.ts` to the engine's microsecond TimestampType,
     * dispatching on the dtype the parquet scan actually produced — the
-    * driver has shipped two fixture generations (r8 verdict: the
-    * regenerated testdata switched `ts` from TIMESTAMP(NANOS) to
-    * TIMESTAMP(MICROS)/NTZ, and the unconditional nanos decode broke all
-    * 33 events queries):
+    * fixture exists in two generations, with `ts` as TIMESTAMP(NANOS) or
+    * as TIMESTAMP(MICROS)/NTZ, and an unconditional nanos decode breaks
+    * every events query on the second:
     *  - LongType (nanos read as legacy long): truncate with integer
     *    division (double division would lose precision above 2^53 ns);
     *    matches DuckDB's TIMESTAMP_NS → µs truncation exactly.

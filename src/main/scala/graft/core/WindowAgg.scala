@@ -46,8 +46,11 @@ object WindowAgg {
     * The horizon is fixed when the frame is built: building runs the
     * max-minute aggregate once, and every later action filters against
     * that constant. A file-backed frame already snapshots its file
-    * listing the same way; rebuild the frame to move the horizon. Over
-    * empty input the max is null, so the filter keeps no rows.
+    * listing the same way. `serve.TimeSeries` goes one step further for
+    * such a frame's count frames: each is collected on its first read
+    * and later reads answer from those rows with no Spark job. Rebuild
+    * the frame to move both the horizon and the dashboard's answer.
+    * Over empty input the max is null, so the filter keeps no rows.
     */
   def retained(df: DataFrame, tsCol: String = "ts",
                minutes: Int = Schemas.retentionMinutes): DataFrame = {

@@ -33,7 +33,7 @@ class TopKHeap(val k: Int) {
 }
 
 /** [[TopKHeap]] with AT MOST ONE ENTRY PER ID — the walk's dedup-free
-  * aggregation (round 17): SOUND ONLY when the score is a pure function
+  * aggregation: SOUND ONLY when the score is a pure function
   * of (group, id), so every duplicate of an id carries the identical
   * score and "skip if present" equals "distinct() then heap". The id
   * set tracks evictions, so memory stays O(k). See

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity — the FUSED form of the
-  * composition `Similarity.cosine` shipped since round 3:
+  * composition `Similarity.cosine`:
   *
   * {{{
   *   val d = graft_dot(a, b)                         // Σ ā·b̄, L-to-R from 0.0

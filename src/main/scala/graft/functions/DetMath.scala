@@ -1,8 +1,8 @@
 package graft.functions
 
-/** Cross-engine DETERMINISTIC transcendental math, as SQL text (round
-  * 14, ADVICE r13 #1): the oracle gate compares hashes, and hashes of
-  * libm outputs are not a cross-engine contract — JVM `Math.log` and
+/** Cross-engine DETERMINISTIC transcendental math, as SQL text: the
+  * oracle gate compares hashes, and hashes of libm outputs are not a
+  * cross-engine contract — JVM `Math.log` and
   * DuckDB's C `log` may legally differ in the last ulp, and a 1-ulp
   * divergence that lands near a 6-dp rounding boundary flips a gate
   * nondeterministically. IEEE-754 `+ − × ÷` and `floor` on identical
@@ -33,11 +33,11 @@ package graft.functions
 object DetMath {
 
   /** ln 2, correctly rounded to double — in E-NOTATION, which BOTH
-    * engines' parsers type as DOUBLE (round-15 ADVICE fix: the plain
-    * decimal form parsed as DECIMAL in Spark, so `k * Ln2` with a
-    * BIGINT `k` was an exact decimal product rounded ONCE, while
-    * DuckDB's DOUBLE floor computed fl(k · fl(Ln2)) — a 1-ulp
-    * divergence reachable at k ∈ {33, 35, 51}, exactly the hash-gate
+    * engines' parsers type as DOUBLE (a plain decimal form parses as
+    * DECIMAL in Spark, so `k * Ln2` with a BIGINT `k` would be an exact
+    * decimal product rounded ONCE, while DuckDB's DOUBLE floor computes
+    * fl(k · fl(Ln2)) — a 1-ulp divergence reachable at k ∈
+    * {33, 35, 51}, exactly the hash-gate
     * hazard class this object exists to eliminate). E-notation keeps
     * every use a plain double multiply/divide in both engines. */
   val Ln2 = "6.931471805599453E-1"
@@ -100,19 +100,18 @@ object DetMath {
     * [0, 64·ln2 ≈ 44.36) — the nll/idf range. 2^k is assembled by the
     * same binary decomposition (exact power-of-two factors multiply
     * exactly); k itself comes from one exact FLOOR. Two cross-engine
-    * disciplines (round-15 ADVICE):
+    * disciplines:
     *  - `k` is explicitly CAST to DOUBLE before the k·ln2 product —
     *    Spark's FLOOR yields BIGINT where DuckDB's yields DOUBLE, and
-    *    with [[Ln2]] in E-notation both engines now compute the SAME
-    *    single double multiply fl(k · Ln2) (the old decimal-typed Ln2
-    *    made Spark round an exact decimal product once instead — 1 ulp
+    *    with [[Ln2]] in E-notation both engines compute the SAME
+    *    single double multiply fl(k · Ln2) (a decimal-typed Ln2 would
+    *    make Spark round an exact decimal product once instead — 1 ulp
     *    off DuckDB at k ∈ {33, 35, 51});
     *  - the domain is GUARDED, not documented, AT BOTH ENDS of the
-    *    ladder (k < 0 added round 16 — round-15 ADVICE #1): k > 63
-    *    exceeds the 2^k assembly and would be silently wrong by
-    *    2^(k−63); k < 0 would need a DIVIDING ladder it doesn't have
-    *    and was silently wrong by 2^|k| for x < −ln2/2. Both read as
-    *    NULL — a loud downstream failure instead of a silent
+    *    ladder: k > 63 exceeds the 2^k assembly and would be silently
+    *    wrong by 2^(k−63); k < 0 would need a DIVIDING ladder it
+    *    doesn't have and would be silently wrong by 2^|k| for
+    *    x < −ln2/2. Both read as NULL — a loud downstream failure instead of a silent
     *    factor-of-2^m error. k = 0 (x ∈ [−ln2/2, 0)) needs no ladder
     *    and stays a finite Taylor value, bit-equal to the native
     *    [[DetMathExpr.detExp]] twin (DetMathSpec's negative grid). */

@@ -6,9 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputT
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** NATIVE EXPRESSION TWIN of the [[DetMath]] step chains (round 15 —
-  * r14 verdict #6, generalized): the SQL chains are ~20–40 dependent
-  * steps, and because most steps reference their predecessor twice
+/** NATIVE EXPRESSION TWIN of the [[DetMath]] step chains: the SQL
+  * chains are ~20–40 dependent steps, and because most steps reference their predecessor twice
   * Spark cannot collapse the projection ladder — every DetMath query
   * paid a 20–40-Project-deep plan in analysis, optimization and
   * codegen size, per chain, regardless of row count. These expressions
@@ -97,12 +96,12 @@ object DetMathOps {
   * are only exact inside that domain, and the engine's own callers are
   * in-domain by construction — but the SQL surface is not, so
   * out-of-domain inputs must read as NULL, never as a plausible
-  * series truncation (r15 second-pass review). */
+  * series truncation. */
 case class DetLn(child: Expression) extends UnaryExpression
   with ImplicitCastInputTypes {
-  // analysis-time contract (r15 review): a non-double child gets
-  // Spark's implicit cast — the CAST(... AS DOUBLE) every call site
-  // hand-writes — or a resolution error, never a runtime CCE
+  // analysis-time contract: a non-double child gets Spark's implicit
+  // cast — the CAST(... AS DOUBLE) every call site hand-writes — or a
+  // resolution error, never a runtime CCE
   override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.SqlAbstractDataType] =
     Seq(DoubleType)
   override def dataType: DataType = DoubleType
@@ -130,9 +129,9 @@ case class DetLn(child: Expression) extends UnaryExpression
   * series as a value). */
 case class DetLnSigned(child: Expression) extends UnaryExpression
   with ImplicitCastInputTypes {
-  // analysis-time contract (r15 review): a non-double child gets
-  // Spark's implicit cast — the CAST(... AS DOUBLE) every call site
-  // hand-writes — or a resolution error, never a runtime CCE
+  // analysis-time contract: a non-double child gets Spark's implicit
+  // cast — the CAST(... AS DOUBLE) every call site hand-writes — or a
+  // resolution error, never a runtime CCE
   override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.SqlAbstractDataType] =
     Seq(DoubleType)
   override def dataType: DataType = DoubleType
@@ -161,9 +160,9 @@ case class DetLnSigned(child: Expression) extends UnaryExpression
   * exactly. */
 case class DetExp(child: Expression) extends UnaryExpression
   with ImplicitCastInputTypes {
-  // analysis-time contract (r15 review): a non-double child gets
-  // Spark's implicit cast — the CAST(... AS DOUBLE) every call site
-  // hand-writes — or a resolution error, never a runtime CCE
+  // analysis-time contract: a non-double child gets Spark's implicit
+  // cast — the CAST(... AS DOUBLE) every call site hand-writes — or a
+  // resolution error, never a runtime CCE
   override def inputTypes: Seq[org.apache.spark.sql.GraftColumnBridge.SqlAbstractDataType] =
     Seq(DoubleType)
   override def dataType: DataType = DoubleType
@@ -174,12 +173,12 @@ case class DetExp(child: Expression) extends UnaryExpression
   override def nullSafeEval(x: Any): Any = {
     val xd = x.asInstanceOf[Double]
     val k = math.floor(xd / DetMathOps.Ln2 + 0.5)
-    // BOTH ends guarded ON K — the actual ladder constraint (r16,
-    // round-15 ADVICE #1): k < 0 would need a dividing ladder the 2^k
+    // BOTH ends guarded ON K — the actual ladder constraint: k < 0
+    // would need a dividing ladder the 2^k
     // assembly doesn't have (exp(-1) would silently read ~0.74 instead
     // of 0.37), but k = 0 covers x ∈ [-ln2/2, 0) with no ladder at all
     // — the Taylor series on r = x is exact there, and the SQL chain
-    // returns that finite value, so an x < 0 guard here was a
+    // returns that finite value, so an x < 0 guard here would open a
     // native-vs-chain divergence window. DetMathSpec pins bit-equality
     // (and NULL agreement past -ln2/2) over a negative grid.
     if (k < 0.0 || k > 63.0) null else DetMathOps.expK(xd, k)

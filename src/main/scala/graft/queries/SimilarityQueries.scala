@@ -154,9 +154,11 @@ object SimilarityQueries {
     * top-k ≤ beam over everything visited, so per-probe state stays
     * O(beam) ids at any corpus size. Fully hash-checked: the oracle
     * replays the same graph trajectory plus both hops with id
-    * tie-breaks at every rank. Measured at sf0.01: recall@10 = 0.96 at
-    * beam 20 (0.86 before the round-13 hierarchical-entry +
-    * symmetrized-expansion + GraphK 10→14 re-cut). */
+    * tie-breaks at every rank. Measured recall@10 at beam 20: 0.96 at
+    * sf0.01 (0.86 before the round-13 hierarchical-entry +
+    * symmetrized-expansion + GraphK 10→14 re-cut) and 0.60 at sf0.1
+    * (per probe 0.7/0.4/0.4/0.6/0.9, `ANN_ARMS_pr13.json`): at the same
+    * beam and hops, recall falls with corpus size. */
   def graphSearchQ(spark: SparkSession, dir: String): DataFrame =
     finish(Similarity.graphSearchOn(tierGraph(spark, dir),
       Tables.embeddings(spark, dir), probes(spark, dir), K,
@@ -398,7 +400,8 @@ object SimilarityQueries {
     * result — the best-seen re-rank still returns K rows, and the walk
     * is SEEDED at the result width max(K, beam) (a sub-K seed starts
     * from fewer entry regions than result slots and caps recall);
-    * recall@10 is 0.88/0.88/0.96 at beams 4/8/16, sf0.01. */
+    * recall@10 is 0.88/0.88/0.96 at beams 4/8/16, measured at sf0.01
+    * only. */
   val GraphBeamSweep: Seq[Int] = Seq(4, 8, 16)
 
   /** GRAPH-SEARCH TUNING CURVE — the [[annNprobeSweep]] analogue for

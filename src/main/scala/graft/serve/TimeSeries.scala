@@ -1,7 +1,12 @@
 package graft.serve
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.core.io.JsonStringEncoder
+import com.google.common.collect.MapMaker
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,6 +28,18 @@ import graft.core.Schemas
   * match Spark's `to_json`: keys in UTF-8 byte order, each series ordered
   * by (timestamp, count), strings escaped by Jackson. Minute, key and
   * count must be non-null, and counts integral.
+  *
+  * A count frame whose answer is fixed when it is built is read from a
+  * snapshot: its rows are collected on its first read and kept as long as
+  * the frame instance lives; every later read runs the endpoint's
+  * projection over a local relation of those rows, which Spark folds at
+  * optimization, so it starts no job. A frame is fixed when it is batch,
+  * deterministic, and every leaf is a local relation or a file scan
+  * whose listing was taken when the frame was built (an
+  * `InMemoryFileIndex` outside the catalog), as for
+  * `WindowAgg.retained` over `Tables.events`. To see new files, rebuild
+  * the frame. Any other frame — a memory sink's table (W7), a catalog
+  * table, an RDD — is collected on every read.
   */
 object TimeSeries {
 
@@ -39,6 +56,30 @@ object TimeSeries {
   def windowedToMinute(df: DataFrame, countCol: String = "count"): DataFrame =
     df.groupBy(col("window.start").as("minute"), col("emoji_type"))
       .agg(max(col(countCol)).as("cnt"))
+
+  /** Snapshot of each fixed frame read so far; weak keys compare by
+    * identity, so an entry lives exactly as long as its frame. */
+  private val snapshots: java.util.concurrent.ConcurrentMap[DataFrame, DataFrame] =
+    new MapMaker().weakKeys().makeMap()
+
+  /** Leaves of subqueries count too: a fixed outer plan filtered by a
+    * subquery over a sink's table still moves with the sink. */
+  private def fixed(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    !df.isStreaming && plan.deterministic && plan.collectWithSubqueries {
+      case _: LocalRelation => true
+      case LogicalRelation(r: HadoopFsRelation, _, None, _, _) =>
+        r.location.isInstanceOf[InMemoryFileIndex]
+      case _: LeafNode => false
+    }.forall(identity)
+  }
+
+  /** The frame an endpoint projects: the snapshot of a fixed frame
+    * (taken on its first read), any other frame itself. */
+  private def source(df: DataFrame): DataFrame =
+    if (!fixed(df)) df
+    else snapshots.computeIfAbsent(df,
+      d => d.sparkSession.createDataFrame(d.collect().toSeq.asJava, d.schema))
 
   private def collectRows(df: DataFrame): Array[Row] = {
     val rows = df.collect()
@@ -67,7 +108,7 @@ object TimeSeries {
   /** `/api/emoji-data` (`analytical_server.py:67-81`):
     * `{emoji: [{timestamp, count}…]…}`, series in time order. */
   def emojiDataJson(minuteCounts: DataFrame, typeCol: String = "emoji_type"): String = {
-    val rows = collectRows(minuteCounts.select(
+    val rows = collectRows(source(minuteCounts).select(
       col(typeCol), date_format(col("minute"), isoMinute), col("cnt").cast("long")))
     keyed(rows.groupBy(_.getString(0)))(rs => series(rs.map(r => (r.getString(1), r.getLong(2)))))
   }
@@ -75,7 +116,7 @@ object TimeSeries {
   /** `/api/total-data` (`analytical_server.py:83-94`):
     * `[{timestamp, count}…]` in time order. */
   def totalDataJson(minuteTotals: DataFrame, countCol: String = "total_count"): String =
-    series(collectRows(minuteTotals.select(
+    series(collectRows(source(minuteTotals).select(
         date_format(col("minute"), isoMinute), col(countCol).cast("long")))
       .map(r => (r.getString(0), r.getLong(1))))
 
@@ -84,7 +125,7 @@ object TimeSeries {
     * an empty window totals 0. */
   def statsJson(minuteCounts: DataFrame, typeCol: String = "emoji_type",
                 windowMinutes: Int = Schemas.retentionMinutes): String = {
-    val byType = collectRows(minuteCounts.select(col(typeCol), col("cnt").cast("long")))
+    val byType = collectRows(source(minuteCounts).select(col(typeCol), col("cnt").cast("long")))
       .groupMapReduce(_.getString(0))(_.getLong(1))(_ + _)
     s"""{"total_emojis":${byType.values.sum},"emoji_breakdown":${keyed(byType)(_.toString)},""" +
       s""""window_minutes":$windowMinutes}"""

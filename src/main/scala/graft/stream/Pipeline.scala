@@ -82,8 +82,8 @@ object Pipeline {
         col("last.event_type").as("last_type"),
         col("last.value").as("last_value"))
 
-  /** The BOUNDED-STATE companion of [[latestPerKeyStream]] (round-9
-    * verdict #5): exactly-once-style ingest dedup with a state TTL via
+  /** The BOUNDED-STATE companion of [[latestPerKeyStream]]:
+    * exactly-once-style ingest dedup with a state TTL via
     * `dropDuplicatesWithinWatermark` — the general-key sibling of the
     * envelope-stream [[dedupWithinWatermark]] below, parameterized on
     * key columns and event-time column so the CDC event log can dedup

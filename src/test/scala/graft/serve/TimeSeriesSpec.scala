@@ -10,8 +10,8 @@ import graft.core.{Tables, WindowAgg}
 
 /** Payload-shape parity with the reference's three JSON endpoints
   * (`analytical_server.py:67-109`), asserted on parsed JSON, plus
-  * byte-exact pins of the documents and a guard on the jobs one read
-  * runs. */
+  * byte-exact pins of the documents, a guard on the jobs a read runs,
+  * and the snapshot rule for frames over files. */
 class TimeSeriesSpec extends SparkSpec {
 
   // minute 100: a×2, b×1; minute 101: a×1  (epoch-seconds fixture)
@@ -137,12 +137,23 @@ class TimeSeriesSpec extends SparkSpec {
       an[IllegalArgumentException] should be thrownBy TimeSeries.emojiDataJson(bad)
   }
 
+  /** A retained events table in `dir` and its two count frames. */
+  private def retainedFrames(dir: String): (DataFrame, DataFrame) = {
+    val ret = WindowAgg.retained(Tables.events(spark, dir))
+    (WindowAgg.minuteTypeCounts(ret, "event_type"), WindowAgg.minuteTotals(ret))
+  }
+
+  private def documents(counts: DataFrame, totals: DataFrame): Seq[String] = Seq(
+    TimeSeries.emojiDataJson(counts, "event_type"), TimeSeries.totalDataJson(totals),
+    TimeSeries.statsJson(counts, "event_type"))
+
   test("a dashboard read runs at most 2 jobs; building the retained frame runs 2") {
     // Building runs the max-minute aggregate once: its map stage and its
-    // result stage are one job each under adaptive execution. Each read
-    // is then one collect over the (minute, type) aggregate, the same two
-    // jobs. A horizon resolved lazily, or JSON assembled in Catalyst,
-    // shows up here as extra jobs per read.
+    // result stage are one job each under adaptive execution. The first
+    // read of a frame collects the (minute, type) aggregate, the same two
+    // jobs; every later read projects the snapshot of those rows, which
+    // Spark folds into a local scan. A horizon resolved lazily, JSON
+    // assembled in Catalyst, or a snapshot not kept shows up here as jobs.
     val dir = java.nio.file.Files.createTempDirectory("graft-ts-jobs").toString
     eventsDf((0L until 600L by 7L).map(s => (6000L + s, if (s % 2 == 0) "a" else "b")))
       .write.parquet(s"$dir/events.parquet")
@@ -151,10 +162,53 @@ class TimeSeriesSpec extends SparkSpec {
     jobsOf { ret = WindowAgg.retained(events) } shouldBe 2
     val counts = WindowAgg.minuteTypeCounts(ret, "event_type")
     val totals = WindowAgg.minuteTotals(ret)
-    for (_ <- 0 until 2) { // the first read plans and compiles cold
-      jobsOf(TimeSeries.emojiDataJson(counts, "event_type")) should be <= 2
-      jobsOf(TimeSeries.totalDataJson(totals)) should be <= 2
-      jobsOf(TimeSeries.statsJson(counts, "event_type")) should be <= 2
+    jobsOf(TimeSeries.emojiDataJson(counts, "event_type")) should be <= 2
+    jobsOf(TimeSeries.totalDataJson(totals)) should be <= 2
+    for (_ <- 0 until 2) {
+      jobsOf(TimeSeries.emojiDataJson(counts, "event_type")) shouldBe 0
+      jobsOf(TimeSeries.totalDataJson(totals)) shouldBe 0
+      jobsOf(TimeSeries.statsJson(counts, "event_type")) shouldBe 0
     }
+  }
+
+  test("a catalog table, or a subquery over one, is read afresh on every read") {
+    val table = "ts_catalog_counts"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    spark.sql(s"CREATE TABLE $table (minute TIMESTAMP, emoji_type STRING, cnt BIGINT) USING parquet")
+    try {
+      def insert(secs: Long, cnt: Long): Unit =
+        minuteCounts(Seq((secs, "a", cnt))).write.insertInto(table)
+      insert(6000L, 2L)
+      val direct = spark.table(table)
+      minuteCounts(Seq((6000L, "a", 1L), (6060L, "a", 5L))).createOrReplaceTempView("ts_local_counts")
+      val capped = spark.sql(
+        s"SELECT * FROM ts_local_counts WHERE cnt <= (SELECT max(cnt) FROM $table)")
+      def total(df: DataFrame) =
+        (JsonMethods.parse(TimeSeries.statsJson(df)) \ "total_emojis").values
+      (total(direct), total(capped)) shouldBe ((2L, 1L))
+      insert(6060L, 7L)
+      (total(direct), total(capped)) shouldBe ((9L, 6L))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
+  test("a built frame keeps answering from its file listing; a rebuilt frame sees new files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts-snapshot").toString
+    eventsDf(Seq((6000L, "a"), (6010L, "b"), (6060L, "a")))
+      .write.parquet(s"$dir/events.parquet")
+    val (counts, totals) = retainedFrames(dir)
+    val before = documents(counts, totals)
+    // a second file in the table, in the newest minute
+    eventsDf(Seq((6070L, "a"), (6080L, "b")))
+      .write.mode("append").parquet(s"$dir/events.parquet")
+    documents(counts, totals) shouldBe before
+    val (counts2, totals2) = retainedFrames(dir)
+    documents(counts2, totals2) shouldBe Seq(
+      "{\"a\":[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":1}," +
+        "{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":2}]," +
+        "\"b\":[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":1}," +
+        "{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":1}]}",
+      "[{\"timestamp\":\"1970-01-01T01:40:00\",\"count\":2}," +
+        "{\"timestamp\":\"1970-01-01T01:41:00\",\"count\":3}]",
+      "{\"total_emojis\":5,\"emoji_breakdown\":{\"a\":3,\"b\":2},\"window_minutes\":3}")
   }
 }

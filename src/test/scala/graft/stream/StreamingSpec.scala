@@ -302,6 +302,40 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("serve integration: a re-read of the same sink frame sees a later batch (W7)") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val in = MemoryStream[String]
+    val agg = Pipeline.parse(in.toDF())
+      .withWatermark("event_time", "1 minute")
+      .groupBy(window(col("event_time"), "1 minute"), col("emoji_type"))
+      .agg(count(lit(1)).as("count"))
+    val q = Sinks.memory(agg, "serve_sink_reread", OutputMode.Update())
+    try {
+      in.addData(envelope("u1", "👍", "20:00:05"), envelope("u2", "❤️", "20:01:10"))
+      q.processAllAvailable()
+      // one frame instance, read before and after the next batch: a
+      // memory sink's table is never answered from a snapshot
+      val minuteCounts = graft.serve.TimeSeries.windowedToMinute(spark.table("serve_sink_reread"))
+      val JArray(thumbs1) =
+        JsonMethods.parse(graft.serve.TimeSeries.emojiDataJson(minuteCounts)) \ "👍"
+      thumbs1.map(p => (p \ "count").values) shouldBe List(1L)
+      val stats1 = JsonMethods.parse(graft.serve.TimeSeries.statsJson(minuteCounts))
+      (stats1 \ "total_emojis").values shouldBe 2L
+      in.addData(envelope("u3", "👍", "20:00:40"), envelope("u4", "❤️", "20:01:20"))
+      q.processAllAvailable()
+      var emojiJson = ""
+      jobsOf { emojiJson = graft.serve.TimeSeries.emojiDataJson(minuteCounts) } should be >= 1
+      val JArray(thumbs) = JsonMethods.parse(emojiJson) \ "👍"
+      thumbs.map(p => (p \ "count").values) shouldBe List(2L)
+      var statsJson = ""
+      jobsOf { statsJson = graft.serve.TimeSeries.statsJson(minuteCounts) } should be >= 1
+      val stats2 = JsonMethods.parse(statsJson)
+      (stats2 \ "total_emojis").values shouldBe 4L
+      (stats2 \ "emoji_breakdown" \ "❤️").values shouldBe 2L
+    } finally q.stop()
+  }
+
   test("serve integration: an update-mode sink re-emitting a window counts it once") {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
